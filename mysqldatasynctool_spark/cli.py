@@ -155,7 +155,6 @@ def cmd_migrate_db(args) -> int:
         page_size=cfg.page_size,
         quote=quote,
         resume=getattr(args, "resume", False),
-        bulk=getattr(args, "bulk", False),
     )
     return _report_and_exit(reports, verdict, t0)
 
@@ -486,12 +485,6 @@ def main(argv: list[str] | None = None) -> int:
         "--resume",
         action="store_true",
         help="skip tables whose destination already checksum-matches",
-    )
-    pj.add_argument(
-        "--bulk",
-        action="store_true",
-        help="use the destination's native bulk-load path when supported "
-        "(stage CSV + import procedure); falls back to batched INSERTs",
     )
     pj.add_argument("--src-url", default=None, help="source JDBC URL (else config src)")
     pj.add_argument("--dest-url", default=None, help="dest JDBC URL (else config dest)")

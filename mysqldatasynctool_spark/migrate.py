@@ -1,6 +1,23 @@
 """The migration pipeline — the reference's default command
-(startDataTransfer, /root/reference/cmd/root.go:58-208) as one
-orchestration: discover → plan → copy → verify.
+(startDataTransfer, cmd/root.go:58-208) as one orchestration:
+discover → plan → copy → verify.
+
+Like the reference's single copy loop, both entry points run every
+table through ONE per-table core (``_copy_verify``) and ONE pool and
+verdict tail (``_migrate``). A path (``_Path``) supplies only what
+differs between endpoints: how it reads the source, how it plans that
+read (JDBC only), how it writes the observed frame and which
+destination frame it verifies. Per table the core runs
+
+1. ``resume_check`` (``resume=True`` only): one src ∪ dest checksum
+   job; a match reports the table verified without rewriting it;
+2. ``plan``: the path's read plan;
+3. ``copy``: one Spark job whose partitions are the pages; the source
+   count+checksum ride that scan via ``observe()``; a failed copy is
+   retried once on the path's fallback plan, when it has one;
+4. ``verify``: one checksum job over the destination,
+
+and records each phase's wall in ``TableReport.phases``.
 
 Where the reference runs a goroutine per page and a channel-semaphore
 pool (root.go:104-147), each table here is ONE Spark job whose
@@ -16,8 +33,11 @@ errDataCount analogue, root.go:48-56, counts failed objects).
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from contextlib import contextmanager
+from dataclasses import dataclass, replace
+from numbers import Number
 
 from pyspark.sql import SparkSession
 
@@ -25,32 +45,6 @@ from .catalog import discover_parquet_tables
 from .config import SyncConfig
 from .sources.fixtures import load
 from .sources.sinks import write_parquet
-
-
-def _resume_verdict_row(spark, t: str, read_src, read_dest) -> tuple | None:
-    """src ∪ dest checksum compare in ONE job; None if the dest is
-    unreadable/absent (→ recopy). ``read_src``/``read_dest`` are
-    ``table_name -> DataFrame`` callables, so the parquet and JDBC
-    resume paths share one implementation."""
-    from pyspark.sql import functions as F
-
-    from .operators.compare import table_summary
-
-    try:
-        s, d = (
-            table_summary(read_src(t), t)
-            .withColumn("side", F.lit("src"))
-            .unionByName(
-                table_summary(read_dest(t), t).withColumn("side", F.lit("dest"))
-            )
-            .collect()
-        )
-    except Exception:  # noqa: BLE001 — absent/corrupt dest → recopy
-        return None
-    if s.side != "src":
-        s, d = d, s
-    ok = s.cnt == d.cnt and s.checksum == d.checksum
-    return (t, s.cnt, d.cnt, s.checksum, d.checksum, "YES", "YES" if ok else "NO")
 
 
 def _check_ident(name: str) -> None:
@@ -78,11 +72,151 @@ class TableReport:
     elapsed_s: float
     ok: bool
     error: str | None = None
-    #: wall-time split {"plan": s, "copy": s, "verify": s} — filled by
-    #: migrate_jdbc so a slow table is attributable to source probing,
-    #: the fused read+write action, or the dest verify re-read rather
-    #: than one opaque number (root.go:374,563 batch-tuning anchor)
+    #: wall-time split {"resume_check", "plan", "copy", "verify"} → s,
+    #: so a slow table is attributable to source probing, the fused
+    #: read+write action, or the dest verify re-read rather than one
+    #: opaque number (root.go:374,563 batch-tuning anchor). A failed
+    #: table keeps the phases it reached, the failing one included.
     phases: dict | None = None
+
+
+@dataclass(frozen=True)
+class _Path:
+    """What one migrate path supplies to the shared core. Every
+    callable takes the table name first; a ``None`` plan means one
+    plain full read."""
+
+    #: (table, plan) -> source frame
+    read: Callable
+    #: (observed source frame, table) -> None
+    write: Callable
+    #: (table, copy plan) -> destination frame to verify
+    dest: Callable
+    #: table -> read plan
+    plan: Callable = lambda t: None
+    #: (table, failed plan) -> plan to retry the copy on, or None
+    fallback: Callable = lambda t, plan: None
+    #: table -> None; raises for a name the path must not touch
+    check: Callable = lambda t: None
+
+
+def _resume_verdict_row(path: _Path, t: str) -> tuple | None:
+    """src ∪ dest checksum compare in ONE job; None if the dest is
+    unreadable/absent (→ recopy)."""
+    from pyspark.sql import functions as F
+
+    from .operators.compare import table_summary
+
+    try:
+        s, d = (
+            table_summary(path.read(t, None), t)
+            .withColumn("side", F.lit("src"))
+            .unionByName(
+                table_summary(path.dest(t, None), t).withColumn("side", F.lit("dest"))
+            )
+            .collect()
+        )
+    except Exception:  # noqa: BLE001 — absent/corrupt dest → recopy
+        return None
+    if s.side != "src":
+        s, d = d, s
+    ok = s.cnt == d.cnt and s.checksum == d.checksum
+    return (t, s.cnt, d.cnt, s.checksum, d.checksum, "YES", "YES" if ok else "NO")
+
+
+def _copy_verify(path: _Path, t: str, resume: bool) -> tuple[TableReport, tuple | None]:
+    """Copy and verify one table: (report, verdict row or None)."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from .operators.compare import digest_sum, row_digest_long, table_summary
+
+    t0 = time.monotonic()
+    phases: dict[str, float] = {}
+
+    @contextmanager
+    def timed(phase: str):
+        ts = time.monotonic()
+        try:
+            yield
+        finally:
+            phases[phase] = round(time.monotonic() - ts, 3)
+
+    def copy(plan, attempt: int):
+        # The SOURCE-side count+checksum piggyback on the copy scan via
+        # observe(): the write action computes them in passing, so each
+        # source row is read exactly once. At 100 TB that one saved
+        # re-scan IS the source-side verification cost. Only the
+        # destination is re-read for verification — that re-read is
+        # the point (it proves what LANDED, not what was sent).
+        df = path.read(t, plan)
+        obs = Observation(f"src_summary_{t}_{attempt}")
+        path.write(
+            df.observe(
+                obs,
+                F.count(F.lit(1)).alias("cnt"),
+                F.coalesce(
+                    digest_sum(row_digest_long(df)),
+                    F.lit(0).cast("decimal(38,0)"),
+                ).alias("checksum"),
+            ),
+            t,
+        )
+        return obs.get["cnt"], obs.get["checksum"]
+
+    try:
+        path.check(t)
+        if resume:
+            with timed("resume_check"):
+                prior = _resume_verdict_row(path, t)
+            if prior is not None and prior[-1] == "YES":
+                # already copied and verified — skip the write (rerun
+                # idempotency at table granularity, the
+                # thousands-of-tables restart story)
+                return TableReport(t, prior[2], time.monotonic() - t0, True, phases=phases), prior
+        with timed("plan"):
+            plan = path.plan(t)
+        with timed("copy"):
+            try:
+                src_cnt, src_sum = copy(plan, 0)
+            except Exception:
+                retry = path.fallback(t, plan)
+                if retry is None:
+                    raise
+                plan = retry
+                src_cnt, src_sum = copy(plan, 1)
+        # dest-side verify INSIDE the copy thread, one job per table:
+        # each table's checksum scan overlaps the remaining tables'
+        # copies instead of running as a second serial phase — at
+        # thousands-of-tables scale (the reference's regime)
+        # verification disappears into the copy wall-clock. The dest
+        # count doubles as the report row count (no separate count()).
+        with timed("verify"):
+            d = table_summary(path.dest(t, plan), t).collect()[0]
+        ok = src_cnt == d.cnt and src_sum == d.checksum
+        vrow = (t, src_cnt, d.cnt, src_sum, d.checksum, "YES", "YES" if ok else "NO")
+        return TableReport(t, d.cnt, time.monotonic() - t0, True, phases=phases), vrow
+    except Exception as exc:  # noqa: BLE001 — per-object failure accounting
+        return TableReport(t, 0, time.monotonic() - t0, False, str(exc), phases=phases), None
+
+
+def _migrate(
+    spark: SparkSession, tables, cfg: SyncConfig, resume: bool, path: _Path
+) -> tuple[list[TableReport], object]:
+    """Run every non-excluded table through ``_copy_verify`` and build
+    the verdict frame over the tables that reached verification."""
+    from .operators.compare import VERDICT_SCHEMA
+
+    excluded = set(cfg.exclude)
+    todo = [t for t in tables if t not in excluded]
+    # maxParallel bounds how many table copy+verify JOBS are in flight
+    # at once (reference root.go:104-147); submission order is
+    # preserved in the report list regardless of completion order
+    with ThreadPoolExecutor(max_workers=min(cfg.max_parallel, max(1, len(todo)))) as pool:
+        results = list(pool.map(lambda t: _copy_verify(path, t, resume), todo))
+    vrows = [v for _, v in results if v is not None]
+    verdict = spark.createDataFrame(vrows, VERDICT_SCHEMA).orderBy("table_name")
+    return [r for r, _ in results], verdict
 
 
 def migrate_directory(
@@ -94,12 +228,13 @@ def migrate_directory(
     resume: bool = False,
     versioned: bool = False,
 ) -> tuple[list[TableReport], object]:
-    """Parquet→parquet migration over the fixture layout, exercising
-    the same phases as the JDBC path (which swaps load/write_parquet
-    for jdbc.read_table/sinks.write_jdbc):
+    """Parquet→parquet migration over the fixture layout, through the
+    same per-table core as the JDBC path:
 
     1. catalog discovery + exclusion        (ops #1-#2)
-    2. partition planning per PK            (ops #3-#6)
+    2. no partition planning: parquet scans are already split by
+       file/rowgroup, so sampling boundaries would be a pure-waste
+       shuffle (the JDBC path is where plans matter)
     3. copy, one Spark job per table        (ops #9, #11-#12)
     4. count+checksum verification          (op #14, upgraded)
 
@@ -119,133 +254,26 @@ def migrate_directory(
 
     Returns (per-table reports, verdict DataFrame).
     """
-    from pyspark.sql import functions as F
+    from .sources.files import read_versioned, write_versioned
 
-    cfg = cfg or SyncConfig()
-    discovered = tables or discover_parquet_tables(src_dir)
-    todo = [t for t in discovered if t not in set(cfg.exclude)]
+    def dest_path(t: str) -> str:
+        return f"{dest_dir}/{t}.parquet"
 
-    from pyspark.sql import Observation
-
-    from .operators.compare import digest_sum, row_digest_long, table_summary
-
-    def _read_dest(tt: str):
+    def write(observed, t: str) -> None:
         if versioned:
-            from .sources.files import read_versioned
+            write_versioned(observed, dest_path(t))
+        else:
+            write_parquet(observed, dest_path(t))
 
-            return read_versioned(spark, f"{dest_dir}/{tt}.parquet")
-        return load(spark, dest_dir, tt)
+    def read_dest(t: str, plan):
+        if versioned:
+            return read_versioned(spark, dest_path(t))
+        return load(spark, dest_dir, t)
 
-    def verdict_row(t: str) -> tuple | None:
-        return _resume_verdict_row(
-            spark,
-            t,
-            lambda tt: load(spark, src_dir, tt),
-            _read_dest,
-        )
-
-    def copy_one(t: str) -> tuple[TableReport, tuple | None]:
-        # same per-phase wall-time split migrate_jdbc reports, so a
-        # slow table (or a slow ROUND — r6's bench moved +23% on this
-        # path with no code change) is attributable to the fused
-        # scan+write action vs the dest verify re-read, not one
-        # opaque number
-        t0 = time.monotonic()
-        phases: dict[str, float] = {}
-        try:
-            if resume:
-                prior = verdict_row(t)
-                phases["resume_check"] = round(time.monotonic() - t0, 3)
-                if prior is not None and prior[-1] == "YES":
-                    # already copied and verified — skip the write
-                    return (
-                        TableReport(
-                            t,
-                            prior[2],
-                            time.monotonic() - t0,
-                            True,
-                            phases=phases,
-                        ),
-                        prior,
-                    )
-            df = load(spark, src_dir, t)
-            # No partition planning here: parquet scans are already
-            # split by file/rowgroup. The JDBC path is where plans
-            # matter — jdbc.read_table(plan=plan_table(..., pk,
-            # boundaries=sample_boundaries(...))) as exercised by
-            # tests/test_jdbc_roundtrip.py; sampling boundaries for a
-            # parquet copy would be a pure-waste shuffle.
-            #
-            # The SOURCE-side count+checksum piggybacks on the copy
-            # scan via observe(): the write action computes them in
-            # passing, so the source is scanned exactly once per
-            # table. At 100 TB that one saved re-scan IS the
-            # source-side verification cost.
-            obs = Observation(f"src_summary_{t}")
-            observed = df.observe(
-                obs,
-                F.count(F.lit(1)).alias("cnt"),
-                F.coalesce(
-                    digest_sum(row_digest_long(df)),
-                    F.lit(0).cast("decimal(38,0)"),
-                ).alias("checksum"),
-            )
-            t_copy = time.monotonic()
-            if versioned:
-                from .sources.files import write_versioned
-
-                write_versioned(observed, f"{dest_dir}/{t}.parquet")
-            else:
-                write_parquet(observed, f"{dest_dir}/{t}.parquet")
-            src_cnt, src_sum = obs.get["cnt"], obs.get["checksum"]
-            phases["copy"] = round(time.monotonic() - t_copy, 3)
-            # dest-side verify INSIDE the copy thread, one job per
-            # table: each table's checksum scan overlaps the remaining
-            # tables' copies instead of running as a second serial
-            # phase — at thousands-of-tables scale (the reference's
-            # regime) verification disappears into the copy
-            # wall-clock. The dest count doubles as the report row
-            # count (no separate count() job).
-            t_verify = time.monotonic()
-            d = table_summary(_read_dest(t), t).collect()[0]
-            phases["verify"] = round(time.monotonic() - t_verify, 3)
-            ok = src_cnt == d.cnt and src_sum == d.checksum
-            vrow = (
-                t,
-                src_cnt,
-                d.cnt,
-                src_sum,
-                d.checksum,
-                "YES",
-                "YES" if ok else "NO",
-            )
-            return (
-                TableReport(t, d.cnt, time.monotonic() - t0, True, phases=phases),
-                vrow,
-            )
-        except Exception as exc:  # noqa: BLE001 — per-object failure accounting
-            return (
-                TableReport(
-                    t, 0, time.monotonic() - t0, False, str(exc), phases=phases
-                ),
-                None,
-            )
-
-    # maxParallel bounds how many table copy+verify JOBS are in flight
-    # at once (reference root.go:104-147); submission order is
-    # preserved in the report list regardless of completion order
-    with ThreadPoolExecutor(max_workers=min(cfg.max_parallel, max(1, len(todo)))) as pool:
-        results = list(pool.map(copy_one, todo))
-    reports = [r for r, _ in results]
-    vrows = [v for _, v in results if v is not None]
-
-    schema = (
-        "table_name string, src_cnt long, dest_cnt long, "
-        "src_checksum decimal(38,0), dest_checksum decimal(38,0), "
-        "dest_is_exist string, is_ok string"
+    path = _Path(read=lambda t, plan: load(spark, src_dir, t), write=write, dest=read_dest)
+    return _migrate(
+        spark, tables or discover_parquet_tables(src_dir), cfg or SyncConfig(), resume, path
     )
-    verdict = spark.createDataFrame(vrows, schema).orderBy("table_name")
-    return reports, verdict
 
 
 def jsonify_nested(df):
@@ -270,7 +298,6 @@ def migrate_jdbc(
     page_size: int = 20_000,
     quote: str = '"',
     resume: bool = False,
-    bulk: bool = False,
 ) -> tuple[list[TableReport], object]:
     """DB→DB migration — the reference's actual job
     (root.go:375-507): plan partitions from the source PK, read each
@@ -288,229 +315,129 @@ def migrate_jdbc(
     ``quote`` wraps PK identifiers inside composite predicates for the
     target dialect ('"' for Derby/ANSI, '`' for MySQL).
 
-    Scale note: this is the same phase structure as migrate_directory
-    but with JDBC endpoints; numPartitions bounds per-table connection
+    Scale note: this is the same per-table core as migrate_directory
+    with JDBC endpoints; numPartitions bounds per-table connection
     concurrency exactly like the reference's channel semaphore
-    (root.go:104-147). Verification re-reads both sides through JDBC —
-    at the reference's thousands-of-tables regime each verify job
-    overlaps other tables' copies via the thread pool.
+    (root.go:104-147). Verification re-reads the destination through
+    JDBC — at the reference's thousands-of-tables regime each verify
+    job overlaps other tables' copies via the thread pool.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql import Observation
-
-    from .operators.compare import digest_sum, row_digest_long, table_summary
     from .plans.partitioning import plan_table, sample_boundaries
     from .sources.jdbc import read_table
     from .sources.sinks import write_jdbc
 
     cfg = cfg or SyncConfig()
-    todo = [t for t in pk_map if t not in set(cfg.exclude)]
 
-    def jdbc_verdict_row(t: str) -> tuple | None:
-        return _resume_verdict_row(
-            spark,
+    def build_plan(t: str):
+        pk = pk_map[t]
+        # Tier 1 — numeric-LEADING PK (r18: previously single PK
+        # only): one COUNT/MIN/MAX on pk[0] pushed down to the source
+        # → JDBC range partitions on the leading column. Range
+        # partitions on a non-unique leading member tile the keyspace
+        # exactly like the composite boundary predicates, for one
+        # 1-row probe instead of the sampling path's two full narrow
+        # scans (measured: lineitem plan phase 1.31 s → ~0.1 s). The
+        # probe itself can fail on the PK's SQL type (Derby refuses
+        # MIN on CLOB), which only means this FAST path is
+        # unavailable, not that the table can't be paged.
+        if pk:
+            q = quote
+            try:
+                stats = read_table(
+                    spark,
+                    src,
+                    t,
+                    # aliases quoted: unquoted identifiers are upcased by
+                    # ANSI databases, which would break Row access. The
+                    # table name itself stays unquoted on purpose —
+                    # Spark's own dbtable path interpolates it raw, so
+                    # quoting here would resolve to a DIFFERENT
+                    # (case-sensitive) identifier than every other scan
+                    # of the same table; _check_ident guards injection.
+                    custom_sql=(
+                        f'SELECT COUNT(*) AS {q}c{q}, '
+                        f'MIN({q}{pk[0]}{q}) AS {q}lo{q}, '
+                        f'MAX({q}{pk[0]}{q}) AS {q}hi{q} FROM {t}'
+                    ),
+                ).collect()[0]
+            except Exception:  # noqa: BLE001 — degrade to tier 2
+                stats = None
+            if (
+                stats is not None
+                and isinstance(stats.lo, Number)
+                and not isinstance(stats.lo, bool)
+            ):
+                return plan_table(
+                    t,
+                    pk,
+                    page_size=page_size,
+                    max_parallel=cfg.max_parallel,
+                    row_count=stats.c,
+                    pk_min=stats.lo,
+                    pk_max=stats.hi,
+                    range_on_leading=True,
+                )
+            # Tier 2 — any PK (incl. single string/date/uuid, or an
+            # empty table): lexicographic boundary predicates work for
+            # every orderable type — the reference likewise pages
+            # every PK type (root.go:347-371).
+            return plan_table(
+                t,
+                pk,
+                page_size=page_size,
+                max_parallel=cfg.max_parallel,
+                boundaries=sample_boundaries(
+                    read_table(spark, src, t).select(*pk), pk, page_size
+                ),
+                quote=quote,
+            )
+        # Tier 3 — no PK: single full-scan partition (root.go:341-345).
+        return plan_table(t, [], page_size, cfg.max_parallel)
+
+    def single_scan(t: str, plan):
+        # a partitioned read can fail only at EXECUTION time (e.g. the
+        # dialect can't compare the PK type inside boundary predicates
+        # — Derby CLOB). truncate=True makes the retry idempotent;
+        # degrade to one full scan rather than failing the table.
+        if plan.mode == "single":
+            return None
+        return plan_table(t, [], page_size, cfg.max_parallel)
+
+    def read_dest(t: str, plan):
+        # Verify-read plan (r18): the writer-created dest table has no
+        # PK index, so EVERY partitioned verify read pays one full dest
+        # scan per partition server-side — which is why the r14-era
+        # 30-partition verify measured SLOWER than the single
+        # connection (2.4 s → 2.8 s, 30× the dest I/O). But the
+        # single-connection read serializes the expensive part —
+        # per-row JDBC materialization + the row-digest md5 — on one
+        # core. A SMALL range fan-out is the sweet spot: k partitions
+        # cost k cheap page-cached server scans and buy k-way parallel
+        # conversion+digest. k=4 measured 2.9 s → ~1.1 s on the bench
+        # lineitem verify; only applied when the copy plan was
+        # range-mode and actually multi-page (small tables keep the
+        # single connection).
+        vplan = None
+        if plan is not None and plan.mode == "range" and plan.num_partitions > 1:
+            vplan = replace(plan, num_partitions=min(4, plan.num_partitions))
+        return read_table(spark, dest, t, plan=vplan)
+
+    def write(observed, t: str) -> None:
+        write_jdbc(
+            observed,
+            dest,
             t,
-            lambda tt: read_table(spark, src, tt),
-            lambda tt: read_table(spark, dest, tt),
+            batch_row_size=cfg.batch_row_size,
+            truncate=True,
+            max_parallel=cfg.max_parallel,
         )
 
-    def copy_one(t: str) -> tuple[TableReport, tuple | None]:
-        from numbers import Number
-
-        t0 = time.monotonic()
-        try:
-            pk = pk_map[t]
-            _check_ident(t)
-            if resume:
-                prior = jdbc_verdict_row(t)
-                if prior is not None and prior[-1] == "YES":
-                    # already copied and verified — skip the write
-                    # (rerun idempotency at table granularity, the
-                    # thousands-of-tables restart story)
-                    return (
-                        TableReport(t, prior[2], time.monotonic() - t0, True),
-                        prior,
-                    )
-            def build_plan():
-                # Tier 1 — numeric-LEADING PK (r18: previously single
-                # PK only): one COUNT/MIN/MAX on pk[0] pushed down to
-                # the source → JDBC range partitions on the leading
-                # column. Range partitions on a non-unique leading
-                # member tile the keyspace exactly like the composite
-                # boundary predicates, for one 1-row probe instead of
-                # the sampling path's two full narrow scans (measured:
-                # lineitem plan phase 1.31 s → ~0.1 s). The probe
-                # itself can fail on the PK's SQL type (Derby refuses
-                # MIN on CLOB), which only means this FAST path is
-                # unavailable, not that the table can't be paged.
-                if pk:
-                    q = quote
-                    try:
-                        stats = read_table(
-                            spark,
-                            src,
-                            t,
-                            # aliases quoted: unquoted identifiers are
-                            # upcased by ANSI databases, which would
-                            # break Row access. The table name itself
-                            # stays unquoted on purpose — Spark's own
-                            # dbtable path interpolates it raw, so
-                            # quoting here would resolve to a DIFFERENT
-                            # (case-sensitive) identifier than every
-                            # other scan of the same table;
-                            # _check_ident guards injection.
-                            custom_sql=(
-                                f'SELECT COUNT(*) AS {q}c{q}, '
-                                f'MIN({q}{pk[0]}{q}) AS {q}lo{q}, '
-                                f'MAX({q}{pk[0]}{q}) AS {q}hi{q} FROM {t}'
-                            ),
-                        ).collect()[0]
-                    except Exception:  # noqa: BLE001 — degrade to tier 2
-                        stats = None
-                    if (
-                        stats is not None
-                        and isinstance(stats.lo, Number)
-                        and not isinstance(stats.lo, bool)
-                    ):
-                        return plan_table(
-                            t,
-                            pk,
-                            page_size=page_size,
-                            max_parallel=cfg.max_parallel,
-                            row_count=stats.c,
-                            pk_min=stats.lo,
-                            pk_max=stats.hi,
-                            range_on_leading=True,
-                        )
-                # Tier 2 — any PK (incl. single string/date/uuid, or an
-                # empty table): lexicographic boundary predicates work
-                # for every orderable type — the reference likewise
-                # pages every PK type (root.go:347-371).
-                if pk:
-                    return plan_table(
-                        t,
-                        pk,
-                        page_size=page_size,
-                        max_parallel=cfg.max_parallel,
-                        boundaries=sample_boundaries(
-                            read_table(spark, src, t).select(*pk), pk, page_size
-                        ),
-                        quote=quote,
-                    )
-                # Tier 3 — no PK: single full-scan partition
-                # (root.go:341-345).
-                return plan_table(t, [], page_size, cfg.max_parallel)
-
-            def copy_with(plan, attempt: int):
-                df = read_table(spark, src, t, plan=plan)
-                # Source count+checksum piggyback on the copy scan via
-                # observe() (same single-scan contract as
-                # migrate_directory): each source row crosses JDBC
-                # exactly once. Only the destination is re-read for
-                # verification — that re-read is the point (it proves
-                # what LANDED, not what was sent).
-                obs = Observation(f"jdbc_src_summary_{t}_{attempt}")
-                observed = df.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("cnt"),
-                    F.coalesce(
-                        digest_sum(row_digest_long(df)),
-                    F.lit(0).cast("decimal(38,0)"),
-                    ).alias("checksum"),
-                )
-                from .sources.sinks import bulk_load, supports_bulk_load
-
-                if bulk and supports_bulk_load(dest, observed):
-                    # OPT-IN native bulk-load path (stage CSV + import
-                    # procedure — the LOAD DATA INFILE pattern); the
-                    # source Observation rides the staging action, and
-                    # ddl_df=df keeps the zero-row DDL write from
-                    # claiming the metrics. Content-checksum verify
-                    # below guards the format round-trip; any bulk
-                    # failure falls back to the batched-INSERT path.
-                    # Opt-in, not default: on a same-disk embedded pair
-                    # the extra CSV materialization eats the import's
-                    # win (measured ~12s vs ~10s insert path for 600k
-                    # rows); the pattern pays off when the import
-                    # procedure beats row INSERTs by more than the
-                    # staging cost (LOAD DATA against a real server).
-                    try:
-                        bulk_load(observed, dest, t, truncate=True, ddl_df=df)
-                        return obs.get["cnt"], obs.get["checksum"]
-                    except Exception:  # noqa: BLE001 — degrade to JDBC
-                        pass
-                write_jdbc(
-                    observed,
-                    dest,
-                    t,
-                    batch_row_size=cfg.batch_row_size,
-                    truncate=True,
-                    max_parallel=cfg.max_parallel,
-                )
-                return obs.get["cnt"], obs.get["checksum"]
-
-            phases: dict[str, float] = {}
-            tp = time.monotonic()
-            plan = build_plan()
-            phases["plan"] = round(time.monotonic() - tp, 3)
-            tc = time.monotonic()
-            try:
-                src_cnt, src_sum = copy_with(plan, 0)
-            except Exception:
-                if plan.mode == "single":
-                    raise
-                # a partitioned read can fail only at EXECUTION time
-                # (e.g. the dialect can't compare the PK type inside
-                # boundary predicates — Derby CLOB). truncate=True makes
-                # the retry idempotent; degrade to one full scan rather
-                # than failing the table.
-                plan = plan_table(t, [], page_size, cfg.max_parallel)
-                src_cnt, src_sum = copy_with(plan, 1)
-            phases["copy"] = round(time.monotonic() - tc, 3)
-            tv = time.monotonic()
-            # Verify-read plan (r18): the writer-created dest table has
-            # no PK index, so EVERY partitioned verify read pays one
-            # full dest scan per partition server-side — which is why
-            # the r14-era 30-partition verify measured SLOWER than the
-            # single connection (2.4 s → 2.8 s, 30× the dest I/O). But
-            # the single-connection read serializes the expensive part
-            # — per-row JDBC materialization + the row-digest md5 — on
-            # one core. A SMALL range fan-out is the sweet spot: k
-            # partitions cost k cheap page-cached server scans and buy
-            # k-way parallel conversion+digest. k=4 measured 2.9 s →
-            # ~1.1 s on the bench lineitem verify; only applied when
-            # the copy plan was range-mode and actually multi-page
-            # (small tables keep the single connection). On a dest
-            # WITH a PK index (reference-created DDL), reuse the full
-            # copy plan instead — the scans then prune.
-            vplan = None
-            if plan.mode == "range" and plan.num_partitions > 1:
-                from dataclasses import replace as _dc_replace
-
-                vplan = _dc_replace(
-                    plan, num_partitions=min(4, plan.num_partitions)
-                )
-            d = table_summary(
-                read_table(spark, dest, t, plan=vplan), t
-            ).collect()[0]
-            phases["verify"] = round(time.monotonic() - tv, 3)
-            ok = src_cnt == d.cnt and src_sum == d.checksum
-            vrow = (t, src_cnt, d.cnt, src_sum, d.checksum, "YES", "YES" if ok else "NO")
-            return (
-                TableReport(t, d.cnt, time.monotonic() - t0, True, phases=phases),
-                vrow,
-            )
-        except Exception as exc:  # noqa: BLE001 — per-object failure accounting
-            return TableReport(t, 0, time.monotonic() - t0, False, str(exc)), None
-
-    with ThreadPoolExecutor(max_workers=min(cfg.max_parallel, max(1, len(todo)))) as pool:
-        results = list(pool.map(copy_one, todo))
-    reports = [r for r, _ in results]
-    vrows = [v for _, v in results if v is not None]
-    schema = (
-        "table_name string, src_cnt long, dest_cnt long, "
-        "src_checksum decimal(38,0), dest_checksum decimal(38,0), "
-        "dest_is_exist string, is_ok string"
+    path = _Path(
+        read=lambda t, plan: read_table(spark, src, t, plan=plan),
+        write=write,
+        dest=read_dest,
+        plan=build_plan,
+        fallback=single_scan,
+        check=_check_ident,
     )
-    verdict = spark.createDataFrame(vrows, schema).orderBy("table_name")
-    return reports, verdict
+    return _migrate(spark, pk_map, cfg, resume, path)

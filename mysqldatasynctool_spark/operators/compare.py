@@ -33,6 +33,14 @@ from ..sources.fixtures import load
 
 NULL_SENTINEL = "\\N"
 
+#: the per-table verdict row of compareDb and of both migrate paths
+#: (the reference's compare report columns plus the two checksums)
+VERDICT_SCHEMA = (
+    "table_name string, src_cnt long, dest_cnt long, "
+    "src_checksum decimal(38,0), dest_checksum decimal(38,0), "
+    "dest_is_exist string, is_ok string"
+)
+
 
 def _norm_col(name: str, dtype: str):
     c = F.col(name)
@@ -134,12 +142,7 @@ def compare_tables(
     if not src_tables:
         # zero tables copied (empty source / all failed): report an
         # empty verdict rather than crashing the run summary
-        return spark.createDataFrame(
-            [],
-            "table_name string, src_cnt long, dest_cnt long, "
-            "src_checksum decimal(38,0), dest_checksum decimal(38,0), "
-            "dest_is_exist string, is_ok string",
-        )
+        return spark.createDataFrame([], VERDICT_SCHEMA)
     src = reduce(
         DataFrame.unionByName,
         [table_summary(df, t) for t, df in src_tables.items()],

@@ -41,30 +41,13 @@ def read_table(
         # engine sizing must precede the JVM's first embedded boot —
         # a read can be the first Derby touch (see tune_embedded_derby)
         tune_embedded_derby()
-    src = f"({custom_sql}) q" if custom_sql else table
-    if plan is None or plan.mode == "single":
-        # the single-connection full scan is exactly where streaming
-        # fetch matters most — without it Connector/J materializes the
-        # whole result set in executor memory
-        return spark.read.jdbc(
-            endpoint.jdbc_url,
-            src,
-            properties={**endpoint.jdbc_properties, "fetchsize": str(fetch_size)},
-        )
-    if plan.mode == "range":
-        return spark.read.jdbc(
-            endpoint.jdbc_url,
-            src,
-            column=plan.partition_column,
-            lowerBound=plan.lower_bound,
-            upperBound=plan.upper_bound,
-            numPartitions=plan.num_partitions,
-            properties={**endpoint.jdbc_properties, "fetchsize": str(fetch_size)},
-        )
+    # the single-connection full scan is exactly where streaming fetch
+    # matters most — without it Connector/J materializes the whole
+    # result set in executor memory; every plan mode sets it
     return spark.read.jdbc(
         endpoint.jdbc_url,
-        src,
-        predicates=list(plan.predicates),
+        f"({custom_sql}) q" if custom_sql else table,
+        **(plan.jdbc_read_options() if plan is not None else {}),
         properties={**endpoint.jdbc_properties, "fetchsize": str(fetch_size)},
     )
 

@@ -111,87 +111,6 @@ def tune_embedded_derby() -> None:
     )
 
 
-def supports_bulk_load(endpoint: Endpoint, df: DataFrame) -> bool:
-    """True when the destination exposes a native bulk-load interface
-    this engine has an adapter for AND the frame is representable in
-    the staging format.
-
-    Adapters: embedded Derby (SYSCS_UTIL.SYSCS_IMPORT_TABLE — the only
-    one testable in this sandbox). The MySQL analogue is LOAD DATA
-    [LOCAL] INFILE; same stage-then-import shape, needs a live server
-    to validate, so it stays on the JDBC batched-INSERT path here.
-    Binary columns are not CSV-stageable → JDBC path.
-    """
-    if not _is_embedded_derby(endpoint):
-        return False
-    return all(not dt.startswith("binary") for _, dt in df.dtypes)
-
-
-def bulk_load(
-    df: DataFrame,
-    endpoint: Endpoint,
-    table: str,
-    truncate: bool = True,
-    ddl_df: DataFrame | None = None,
-) -> None:
-    """Native bulk-load fast path: stage CSV in parallel, then call the
-    destination's import procedure — the LOAD DATA INFILE / COPY
-    pattern every production migrator reaches for once row-INSERT
-    throughput becomes the bottleneck.
-
-    Measured (600k-row lineitem into embedded Derby, sf0.1): parallel
-    CSV stage + sequential SYSCS_IMPORT_TABLE ≈ stage 1-4 s + import
-    3.5 s vs ~8-10 s for the batched-INSERT path — and the content
-    checksum verify in migrate_jdbc guards the format round-trip
-    (quotes are RFC-doubled; NULL = unquoted empty, empty string =
-    quoted empty; timestamps in Derby's literal format).
-
-    The table is created/truncated through the same JDBC-writer DDL
-    path as write_jdbc (zero-row overwrite), then each staged part
-    file imports in INSERT mode.
-
-    ``ddl_df``: frame to derive the zero-row DDL write from. Callers
-    piggybacking an Observation on ``df`` MUST pass the un-observed
-    frame here — a Spark Observation is claimed by the FIRST action
-    that touches it, and the limit(0) DDL action would otherwise
-    record zero rows as the source summary.
-    """
-    import glob as _glob
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    spark = df.sparkSession
-    staging = _tempfile.mkdtemp(prefix=f"bulk_{table}_")
-    try:
-        (
-            df.write.mode("overwrite")
-            .option("header", "false")
-            .option("nullValue", "")
-            .option("quote", '"')
-            .option("escape", '"')
-            .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSS")
-            .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSS")
-            .csv(staging)
-        )
-        write_jdbc((ddl_df if ddl_df is not None else df).limit(0), endpoint, table, truncate=truncate)
-        conn = spark._jvm.java.sql.DriverManager.getConnection(endpoint.jdbc_url)
-        try:
-            cs = conn.prepareCall("CALL SYSCS_UTIL.SYSCS_IMPORT_TABLE(?,?,?,?,?,?,?)")
-            for path in sorted(_glob.glob(f"{staging}/part-*.csv")):
-                cs.setString(1, "APP")
-                cs.setString(2, table.upper())
-                cs.setString(3, path)
-                cs.setNull(4, 1)  # default column delimiter ','
-                cs.setNull(5, 1)  # default character delimiter '"'
-                cs.setString(6, "UTF-8")
-                cs.setShort(7, 0)  # INSERT mode — table just truncated
-                cs.execute()
-        finally:
-            conn.close()
-    finally:
-        _shutil.rmtree(staging, ignore_errors=True)
-
-
 def writer_parallelism(endpoint: Endpoint, requested: int | None) -> int | None:
     """Writer concurrency matched to what the destination can absorb.
 
@@ -206,10 +125,7 @@ def writer_parallelism(endpoint: Endpoint, requested: int | None) -> int | None:
     Embedded Derby is ``jdbc:derby:<path>`` (no ``//host``); the
     client/server form ``jdbc:derby://host`` keeps parallel writers.
     """
-    url = endpoint.jdbc_url
-    if url.startswith("jdbc:derby:") and not url.startswith("jdbc:derby://"):
-        return 1
-    return requested
+    return 1 if _is_embedded_derby(endpoint) else requested
 
 
 def write_jdbc(

@@ -31,7 +31,7 @@ from mysqldatasynctool_spark.plans.partitioning import (
 from mysqldatasynctool_spark.sources.fixtures import load
 from mysqldatasynctool_spark.sources.sinks import effective_batch_size
 from mysqldatasynctool_spark.typemap import mysql_to_catalyst, schema_from_mysql
-from tests.conftest import assert_matches_oracle
+from tests.conftest import SF_SMALL, assert_matches_oracle
 
 SF = "/root/testdata/sf0.01"
 
@@ -264,24 +264,41 @@ def test_migrate_directory_roundtrip(spark, tmp_path):
     assert all(r.src_cnt == r.dest_cnt for r in rows.values())
 
 
-def test_migrate_per_table_failure_isolated(spark, tmp_path):
+@pytest.mark.parametrize("path", ["directory", "jdbc"])
+def test_migrate_per_table_failure_isolated(spark, tmp_path, path):
     """A table that fails to read must be reported failed without
     sinking the run (the reference's errDataCount semantics,
-    root.go:48-56): other tables still copy and verify."""
-    dest = str(tmp_path / "dest")
-    reports, verdict = migrate_directory(
-        spark,
-        "/root/testdata/sf0.001",
-        dest,
-        tables=["region", "no_such_table", "nation"],
-    )
+    root.go:48-56): other tables still copy and verify, on both
+    paths."""
+    tables = ["region", "no_such_table", "nation"]
+    if path == "directory":
+        reports, verdict = migrate_directory(spark, SF_SMALL, str(tmp_path / "dest"), tables=tables)
+    else:
+        from mysqldatasynctool_spark.config import Endpoint
+        from mysqldatasynctool_spark.migrate import migrate_jdbc
+        from mysqldatasynctool_spark.sources.sinks import write_jdbc
+
+        src, dest = (
+            Endpoint(
+                url_override=f"jdbc:derby:{tmp_path}/{side};create=true",
+                driver="org.apache.derby.iapi.jdbc.AutoloadedDriver",
+            )
+            for side in ("src", "dest")
+        )
+        for t in ("region", "nation"):
+            write_jdbc(load(spark, SF_SMALL, t), src, t, truncate=True)
+        # no_such_table is absent from the Derby source
+        pk_map = {"region": ["r_regionkey"], "no_such_table": ["id"], "nation": ["n_nationkey"]}
+        reports, verdict = migrate_jdbc(spark, src, dest, pk_map)
     by_table = {r.table: r for r in reports}
+    assert [r.table for r in reports] == tables
     assert by_table["region"].ok and by_table["nation"].ok
     bad = by_table["no_such_table"]
     assert not bad.ok and bad.error and bad.rows == 0
-    vrows = {r.table_name for r in verdict.collect()}
-    assert vrows == {"region", "nation"}, "verdict covers only copied tables"
-    assert all(r.is_ok == "YES" for r in verdict.collect())
+    assert bad.phases, "a failed table keeps the phases it reached"
+    rows = verdict.collect()
+    assert {r.table_name for r in rows} == {"region", "nation"}, "verdict covers only copied tables"
+    assert all(r.is_ok == "YES" for r in rows)
 
 
 def test_migrate_resume_skips_verified_tables(spark, tmp_path):

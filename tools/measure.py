@@ -1,20 +1,22 @@
-"""Round-19 optimization harness: isolate + time named registry queries
-with the noop sink (guide §1.4) and dump their formatted plans
-(guide §7.2) into plans/r19/.
+"""Optimization harness: isolate + time named registry queries with the
+noop sink (guide §1.4) and dump their formatted plans (guide §7.2).
 
 Usage:
-    python tools/r19_measure.py time  q1_pricing_summary dedup_minhash_lsh ...
-    python tools/r19_measure.py plan  before q1_pricing_summary ...
-    python tools/r19_measure.py plan  after  q1_pricing_summary ...
+    python tools/measure.py time q1_pricing_summary dedup_minhash_lsh ...
+    python tools/measure.py plan --out-dir plans/r20 before q1_pricing_summary ...
+    python tools/measure.py plan --out-dir plans/r20 after  q1_pricing_summary ...
 
 `time` prints per-query walls (warmup + 3 timed noop runs, median) with
 the same cache hygiene as bench.py. `plan <tag>` writes
-plans/r19/<name>_<tag>.txt with explain("formatted") — the committed
-evidence the optimization round's claims are checked against.
+<out-dir>/<name>_<tag>.txt with explain("formatted") — the committed
+evidence an optimization round's claims are checked against. The name
+HEADLINE stands for bench.py's headline queries.
 """
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
 import sys
 import time
@@ -29,9 +31,6 @@ from mysqldatasynctool_spark.operators import (  # noqa: E402
 from mysqldatasynctool_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PLANS_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r19"
-)
 
 
 def _median(xs):
@@ -40,38 +39,48 @@ def _median(xs):
     return s[m] if len(s) % 2 else round((s[m - 1] + s[m]) / 2, 3)
 
 
+def _args():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    sub = ap.add_subparsers(dest="mode", required=True)
+    pt = sub.add_parser("time", help="time each query with the noop sink")
+    pt.add_argument("names", nargs="+")
+    pp = sub.add_parser("plan", help="write each query's formatted plan")
+    pp.add_argument("--out-dir", required=True, help="directory the plan files go to")
+    pp.add_argument("tag", help="file-name suffix, e.g. before / after")
+    pp.add_argument("names", nargs="+")
+    return ap.parse_args()
+
+
 def main() -> None:
-    mode = sys.argv[1]
-    if mode == "plan":
-        tag, names = sys.argv[2], sys.argv[3:]
-    else:
-        tag, names = "", sys.argv[2:]
-    spark = get_spark(app_name="r19_measure")
+    args = _args()
+    spark = get_spark(app_name="measure")
     queries, _ = collect_registry()
+    names = args.names
     if names == ["HEADLINE"]:
         from bench import HEADLINE
 
         names = [n for n in HEADLINE if n in queries]
-    os.makedirs(PLANS_DIR, exist_ok=True)
+    if args.mode == "plan":
+        os.makedirs(args.out_dir, exist_ok=True)
     out = {}
     for name in names:
         spark.catalog.clearCache()
         teardown_caches()
         reset_trained_state()
         fn = queries[name]
-        if mode == "plan":
+        if args.mode == "plan":
             df = fn(spark, SF_DIR)
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"
                 )
             )
-            path = os.path.join(PLANS_DIR, f"{name}_{tag}.txt")
+            path = os.path.join(args.out_dir, f"{name}_{args.tag}.txt")
             with open(path, "w") as f:
                 f.write(plan)
             print(f"wrote {path}")
             continue
-        spark.sparkContext.setJobDescription(f"r19:{name}")
+        spark.sparkContext.setJobDescription(f"measure:{name}")
         runs = []
         for i in range(4):  # run 0 = warmup/cold, kept visible
             t0 = time.monotonic()
@@ -79,10 +88,8 @@ def main() -> None:
             runs.append(round(time.monotonic() - t0, 3))
         out[name] = {"cold": runs[0], "steady": _median(runs[1:]), "runs": runs}
         print(f"{name}: steady={out[name]['steady']} runs={runs}", flush=True)
-    if mode == "time":
-        import json
-
-        print("R19_MEASURE: " + json.dumps(out))
+    if args.mode == "time":
+        print("MEASURE: " + json.dumps(out))
     spark.stop()
 
 
