@@ -7,19 +7,32 @@ Prints ONE JSON line:
 
 Each query executes its FULL plan into the noop sink (no driver
 collect, no result materialization cost) — wall time measures the
-distributed pipeline, which is what scales.
+distributed pipeline, which is what scales. The two migrate rows
+(parquet directory and JDBC DB-to-DB copy + verify) and the scale
+sweep are timed by the same loop, `time_entry`.
+
+Recall studies beyond fixture scale are not part of this run: the
+LSH and ANN stress scripts in tools/ run them, and
+tools/stress_record.py merges their output into a committed
+STRESS_r{N}.json record.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from mysqldatasynctool_spark.operators import collect_registry
+from mysqldatasynctool_spark.operators import (
+    collect_registry,
+    reset_trained_state,
+    teardown_caches,
+)
 from mysqldatasynctool_spark.plans import executed_plan_metrics
 from mysqldatasynctool_spark.session import get_spark
 
@@ -267,95 +280,6 @@ def select_unburst_runs(
     return kept, rejected
 
 
-#: the scan-heavy TPC-H headline block the layout A/B measures — the
-#: entries whose walls are bounded by parquet scan parallelism
-LAYOUT_AB_QUERIES = [
-    "q1_pricing_summary",
-    "q1_pricing_summary_fast",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q7_volume_shipping",
-    "q18_large_volume_customers",
-    "q21_waiting_supplier",
-]
-
-#: 20k rows/group ≈ 30 groups for sf0.1 lineitem — enough tasks to
-#: feed 32 cores without per-group overhead dominating at fixture scale
-LAYOUT_AB_ROW_GROUP = 20_000
-
-
-def _layout_ab_block(spark, queries, sf_dir: str, median_fn) -> dict:
-    """Measure the single-row-group fixture tax (r16 verdict item 3):
-    rewrite the TPC-H tables with bounded row groups into a temp copy,
-    layoutProbe-verify both layouts, and time the 7-query headline
-    block on each with runs interleaved A,B,A,B (same-box, same-
-    minute — a disk drift lands on both sides). Returns the per-query
-    walls + ratios; the caller records them as ``layout_ab`` so
-    cross-round totals stop silently absorbing a layout artifact of
-    the driver's fixtures."""
-    import shutil as _sh
-    import tempfile as _tf
-
-    import pyarrow.parquet as _pq
-
-    from mysqldatasynctool_spark.sources.files import (
-        parquet_scan_parallelism,
-    )
-
-    tables = [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-    ]
-    copy_dir = _tf.mkdtemp(prefix="bench_layout_ab_")
-    try:
-        for t in tables:
-            _pq.write_table(
-                _pq.read_table(os.path.join(sf_dir, f"{t}.parquet")),
-                os.path.join(copy_dir, f"{t}.parquet"),
-                row_group_size=LAYOUT_AB_ROW_GROUP,
-            )
-        probe = {
-            tag: parquet_scan_parallelism(
-                os.path.join(d, "lineitem.parquet"), target_parallelism=32
-            )
-            for tag, d in (("driver", sf_dir), ("bounded", copy_dir))
-        }
-        per_q: dict[str, dict] = {}
-        for name in LAYOUT_AB_QUERIES:
-            spark.catalog.clearCache()
-            walls: dict[str, list[float]] = {"driver": [], "bounded": []}
-            for _ in range(3):
-                for tag, d in (("driver", sf_dir), ("bounded", copy_dir)):
-                    t0 = time.monotonic()
-                    queries[name](spark, d).write.mode("overwrite").format(
-                        "noop"
-                    ).save()
-                    walls[tag].append(round(time.monotonic() - t0, 3))
-            dm = median_fn(walls["driver"])
-            bm = median_fn(walls["bounded"])
-            per_q[name] = {
-                "driver_rg1": dm,
-                "bounded_rg20k": bm,
-                "ratio": round(dm / max(bm, 1e-9), 2),
-                "runs_driver": walls["driver"],
-                "runs_bounded": walls["bounded"],
-            }
-        ratios = sorted(q["ratio"] for q in per_q.values())
-        return {
-            "row_group_size": LAYOUT_AB_ROW_GROUP,
-            "lineitem_layout": probe,
-            "queries": per_q,
-            "median_ratio": ratios[len(ratios) // 2],
-        }
-    finally:
-        _sh.rmtree(copy_dir, ignore_errors=True)
-
-
 def _io_probe() -> float:
     """Fixed-work disk calibration: median-of-3 of `_io_probe_once`.
     Recorded at the START and END of every bench run and once per
@@ -450,6 +374,143 @@ def _env_class(
     }
 
 
+def _median(xs: list[float]) -> float:
+    s = sorted(xs)
+    m = len(s) // 2
+    return s[m] if len(s) % 2 else round((s[m - 1] + s[m]) / 2, 3)
+
+
+#: trained-ANN rows: cold (first call trains / repopulates caches)
+#: vs steady (median of the cached-call repeats) — records the
+#: amortization as a fact instead of a runs-array inference
+#: (r11 verdict item 7)
+COLD_STEADY = {
+    "similarity_ivfpq_topk",
+    "similarity_ivf_pandas",
+    "similarity_cluster_topics",
+    "similarity_incremental_index",
+    "pipeline_cluster_balanced_sample",
+}
+
+
+def time_entry(name: str, action, spark=None, cold_steady: bool | None = None) -> dict:
+    """Time one bench row: the one measurement loop behind every wall
+    bench.py records (headline queries, both migrate rows, the scale
+    sweep) and behind ``tools/measure.py time``. ``action`` is a
+    zero-argument callable doing one complete run of the row.
+
+    - Cache hygiene first when a ``spark`` is given (never between a
+      row's own runs — within-row reuse is the amortization being
+      measured): no row inherits another family's persisted frames.
+      Cold-steady rows also drop the trained driver state, or every
+      ANN row after the first (the family shares cache_key=sf_dir)
+      would report a train-free "cold".
+    - One CPU and one disk probe value (median of 3 samples each)
+      before the runs: the per-row attribution evidence of
+      ``probe_by_query`` / ``io_probe_by_query`` and the env verdict.
+    - 3 runs (4 for cold-steady rows, which need >=3 STEADY samples),
+      each bracketed by disk probes, then adaptively up to 6 (7) runs
+      while fewer than 3 runs survive the burst filter or the kept
+      median still reads >2x the fastest kept run (the host CPU-steal
+      spikes of r12).
+    - The statistic: the median of the runs `select_unburst_runs`
+      keeps. Cold-steady rows (``cold_steady``, default: ``name`` in
+      COLD_STEADY) drop run 0, the training-inclusive cold run, before
+      the filter sees it — cold > 2x steady is the expected shape, not
+      a burst — and report it as ``cold``.
+
+    Returns ``cpu_probe``/``io_probe`` and, on success, ``wall`` (the
+    statistic), ``stat`` (its label), ``runs``, ``kept`` (indices into
+    ``runs``), ``io_brackets`` (per-run [pre, post] disk samples) and,
+    when the filter dropped runs, ``burst_rejection``. A raising
+    action costs only this row: the result carries ``failed`` (the
+    error) and no timing.
+    """
+    cold = name in COLD_STEADY if cold_steady is None else cold_steady
+    res: dict = {}
+    runs: list[float] = []
+    # io samples between consecutive runs: run i is bracketed by
+    # samples i and i+1; the newest pre-run probe sample seeds the chain
+    samples: list[float] = []
+
+    def _timed_run() -> None:
+        t0 = time.monotonic()
+        action()
+        runs.append(round(time.monotonic() - t0, 3))
+        samples.append(_io_probe_once())
+
+    def _stat_view() -> tuple[int, list[float], list[list[float]]]:
+        off = 1 if cold else 0
+        brs = [[samples[i], samples[i + 1]] for i in range(off, len(runs))]
+        return off, runs[off:], brs
+
+    try:
+        if spark is not None:
+            spark.catalog.clearCache()
+            teardown_caches()
+            if cold:
+                reset_trained_state()
+        res["cpu_probe"] = sorted(_cpu_probe_once() for _ in range(3))[1]
+        io_samples = [_io_probe_once() for _ in range(3)]
+        res["io_probe"] = sorted(io_samples)[1]
+        samples.append(io_samples[-1])
+        for _ in range(4 if cold else 3):
+            _timed_run()
+        while len(runs) < (7 if cold else 6):
+            off, walls, brs = _stat_view()
+            kept, _rej = select_unburst_runs(walls, brs, io_probe_baseline())
+            kw = [walls[i] for i in kept]
+            if len(kw) >= 3 and _median(kw) <= 2 * min(kw):
+                break
+            _timed_run()
+    except Exception as exc:  # noqa: BLE001 — isolate per row
+        res["failed"] = f"{type(exc).__name__}: {exc}"[:300]
+        return res
+    off, walls, brs = _stat_view()
+    kept, rej = select_unburst_runs(walls, brs, io_probe_baseline())
+    stat = "steady_median_excl_cold_run0" if cold else "median"
+    if rej:
+        rej_abs = [i + off for i in rej]  # indices into `runs`
+        stat += f"_excl_burst_runs{rej_abs}".replace(" ", "")
+        res["burst_rejection"] = {
+            "rejected_runs": rej_abs,
+            "rejected_walls": [runs[i] for i in rej_abs],
+            "io_baseline": io_probe_baseline(),
+            "threshold_x": 2.0,
+            "reason": "io_bracket>2x_idle_baseline",
+        }
+    res.update(
+        wall=_median([walls[i] for i in kept]),
+        stat=stat,
+        runs=runs,
+        kept=[i + off for i in kept],
+        io_brackets=[[samples[i], samples[i + 1]] for i in range(len(runs))],
+    )
+    if cold:
+        res["cold"] = runs[0]
+    return res
+
+
+def _failed_objects(reports, verdict) -> int:
+    """Tables one migrate call left unverified or failed outright."""
+    return sum(1 for r in verdict.collect() if r.is_ok != "YES") + sum(
+        1 for r in reports if not r.ok
+    )
+
+
+def _drop_derby(spark, path: str) -> None:
+    """Shut one embedded Derby database down and delete its files.
+    Derby reports a clean shutdown by raising, so the error is the
+    expected outcome."""
+    try:
+        spark._jvm.java.sql.DriverManager.getConnection(
+            f"jdbc:derby:{path};shutdown=true"
+        )
+    except Exception:  # noqa: BLE001 — see docstring
+        pass
+    shutil.rmtree(path, ignore_errors=True)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace("sf", "")
@@ -469,60 +530,39 @@ def main() -> None:
 
     queries = {**queries, "q1_pricing_summary_fast": q1_pricing_summary_fast_raw}
 
-    #: query name -> error string; a broken query must cost its own
-    #: row here, never the whole round's record (round 4 lost ALL
+    def _noop_write(name: str, d: str):
+        return lambda: queries[name](spark, d).write.mode("overwrite").format(
+            "noop"
+        ).save()
+
+    #: row name -> error string; a broken row must cost its own
+    #: entry here, never the whole round's record (round 4 lost ALL
     #: numbers to one AnalysisException before this isolation existed)
     failed: dict[str, str] = {}
 
     # JVM/codegen warmup outside the timed region
     try:
-        queries["q1_pricing_summary"](spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
+        _noop_write("q1_pricing_summary", sf_dir)()
     except Exception as exc:  # noqa: BLE001 — warmup is best-effort
         failed["_warmup"] = f"{type(exc).__name__}: {exc}"[:300]
 
-    # MEDIAN-of-3 per query (r11 verdict item 1): single runs on this
-    # box swing ±2x (GC / page-cache noise), and the old best-of-2
-    # with an adaptive third run could not DISAMBIGUATE a uniform
-    # ~1.8x session-contention inflation from a real plan regression
-    # (r11's driver record read +30.7% for exactly that reason). The
-    # median of three is robust to one outlier in either direction
-    # and is an honest central estimate, not a lucky minimum; every
-    # raw run stays in `runs` so any recorded number remains
-    # attributable after the fact.
-    from mysqldatasynctool_spark.operators import (
-        reset_trained_state,
-        teardown_caches,
-    )
-
-    def _median(xs: list[float]) -> float:
-        s = sorted(xs)
-        m = len(s) // 2
-        return s[m] if len(s) % 2 else round((s[m - 1] + s[m]) / 2, 3)
-
+    # every row below is timed by time_entry: burst-filtered MEDIAN of
+    # 3-6 runs (r11 verdict item 1: single runs on this box swing ±2x,
+    # and a lucky minimum cannot tell a uniform contention inflation
+    # from a plan regression); every raw run stays in `runs` so any
+    # recorded number remains attributable after the fact
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
-    #: metric -> {table -> {"plan"/"copy"/"verify": sec}} (best run)
+    #: metric -> {table -> {"plan"/"copy"/"verify": sec}} (kept run
+    #: nearest the median)
     phase_split: dict[str, dict] = {}
-    #: trained-ANN rows: cold (first call trains / repopulates caches)
-    #: vs steady (median of the cached-call repeats) — records the
-    #: amortization as a fact instead of a runs-array inference
-    #: (r11 verdict item 7)
-    COLD_STEADY = {
-        "similarity_ivfpq_topk",
-        "similarity_ivf_pandas",
-        "similarity_cluster_topics",
-        "similarity_incremental_index",
-        "pipeline_cluster_balanced_sample",
-    }
     cold_steady: dict[str, dict] = {}
     #: per-entry statistic overrides (COLD_STEADY rows report the
     #: steady median; everything else uses the top-level query_stat)
     stat_by_query: dict[str, str] = {}
-    #: per-query box-speed sample taken just before each query's runs
+    #: per-row box-speed sample taken just before each row's runs
     probe_by_query: dict[str, float] = {}
-    #: per-query DISK-speed sample, same placement — the r15 drift sat
+    #: per-row DISK-speed sample, same placement — the r15 drift sat
     #: in I/O-heavy entries on a flat CPU probe; this is the evidence
     #: channel that can see it
     io_probe_by_query: dict[str, float] = {}
@@ -544,116 +584,34 @@ def main() -> None:
     #: throughput per round (streaming/observe.py over the metrics
     #: pass's run) — the stream twin of plan_metrics_by_query
     streaming_state_by_query: dict[str, dict] = {}
+
+    def _time(name: str, action) -> dict | None:
+        """time_entry one record row and file its result into the
+        record's channels; None when the row failed."""
+        res = time_entry(name, action, spark)
+        if "cpu_probe" in res:
+            probe_by_query[name] = res["cpu_probe"]
+            io_probe_by_query[name] = res["io_probe"]
+        if "failed" in res:
+            failed[name] = res["failed"]
+            return None
+        timings[name] = res["wall"]
+        all_runs[name] = res["runs"]
+        io_bracket_by_run[name] = res["io_brackets"]
+        if res["stat"] != "median":
+            stat_by_query[name] = res["stat"]
+        if "burst_rejection" in res:
+            burst_rejections[name] = res["burst_rejection"]
+        if "cold" in res:
+            cold_steady[name] = {"cold": res["cold"], "steady": res["wall"]}
+        return res
+
+    from mysqldatasynctool_spark.operators import streamruns
+    from mysqldatasynctool_spark.streaming.observe import progress_report
+
     for name in HEADLINE:
-        # cache hygiene BETWEEN queries (never between a query's own
-        # runs — within-query reuse is the amortization being
-        # measured): no headline row may inherit another family's
-        # persisted frames or pay their storage-memory pressure
-        spark.catalog.clearCache()
-        teardown_caches()
-        if name in COLD_STEADY:
-            # true cold (r12 advice): teardown_caches deliberately
-            # keeps the driver-side trained dicts, and the whole ANN
-            # family shares cache_key=sf_dir — without this reset
-            # every COLD_STEADY entry after the first reports a
-            # train-free "cold" and the amortization rows are
-            # incomparable across entries
-            reset_trained_state()
-        # median-of-3 (r12 advice): one noisy 0.12 s sample could tag
-        # a genuine plan regression as a box burst; three samples cost
-        # ~0.35 s/query and make the attribution trustworthy
-        probe_by_query[name] = sorted(_cpu_probe_once() for _ in range(3))[1]
-        io_samples = [_io_probe_once() for _ in range(3)]
-        io_probe_by_query[name] = sorted(io_samples)[1]
-        runs: list[float] = []
-        # per-RUN disk brackets (r16 verdict item 1): sample the io
-        # probe between consecutive runs so every wall sample carries
-        # (pre, post) disk evidence; the newest pre-query sample seeds
-        # the chain, so N runs cost N extra probe samples, not 2N
-        bracket_samples: list[float] = [io_samples[-1]]
-        # COLD_STEADY rows need >=3 STEADY samples: with 3 total runs
-        # "steady" degenerates to a 2-sample MEAN, and one host burst
-        # poisons it — r12's committed ivfpq steady 11.65 s was
-        # exactly mean(18.2 burst, 5.1) while the query's honest
-        # steady state measures ~3.3 s on an idle box (r12 verdict
-        # item 1; runs [7.624, 5.093, 18.2] in BENCH_LOCAL_r12)
-        base_runs = 4 if name in COLD_STEADY else 3
-
-        def _timed_run() -> None:
-            t0 = time.monotonic()
-            queries[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            runs.append(round(time.monotonic() - t0, 3))
-            bracket_samples.append(_io_probe_once())
-
-        # the statistic's view of the runs: COLD_STEADY drops run0
-        # (the training-inclusive cold sample, reported separately in
-        # ann_cold_vs_steady) BEFORE any burst logic sees it — cold >
-        # 2x steady is the expected amortization shape, not a burst
-        def _stat_view() -> tuple[int, list[float], list[list[float]]]:
-            off = 1 if name in COLD_STEADY else 0
-            walls = runs[off:]
-            brs = [
-                [bracket_samples[i], bracket_samples[i + 1]]
-                for i in range(off, len(runs))
-            ]
-            return off, walls, brs
-
-        try:
-            for _ in range(base_runs):
-                _timed_run()
-            # bounded adaptive extension, now TWO-criteria (r16 verdict
-            # item 1): keep adding samples (max 6/7 total) while either
-            # (a) the burst filter has rejected below 3 kept samples —
-            # the "re-run" half of reject-or-re-run — or (b) the median
-            # of the KEPT set still reads >2x its fastest run (the
-            # 5-20x host CPU-steal spikes the r12-era extension caught;
-            # judged burst-filtered so a rejected 22 s outlier no
-            # longer burns extension samples twice).
-            while len(runs) < (7 if name in COLD_STEADY else 6):
-                off, walls, brs = _stat_view()
-                kept, _rej = select_unburst_runs(
-                    walls, brs, io_probe_baseline()
-                )
-                kw = [walls[i] for i in kept]
-                if len(kw) >= 3 and _median(kw) <= 2 * min(kw):
-                    break
-                _timed_run()
-        except Exception as exc:  # noqa: BLE001 — isolate per query
-            failed[name] = f"{type(exc).__name__}: {exc}"[:300]
+        if _time(name, _noop_write(name, sf_dir)) is None:
             continue
-        all_runs[name] = runs
-        off, walls, brs = _stat_view()
-        io_bracket_by_run[name] = [
-            [bracket_samples[i], bracket_samples[i + 1]]
-            for i in range(len(runs))
-        ]
-        kept, rej = select_unburst_runs(walls, brs, io_probe_baseline())
-        kept_walls = [walls[i] for i in kept]
-        # COLD_STEADY headline medians EXCLUDE runs[0] (r13 advice) and
-        # both modes now EXCLUDE burst-rejected samples (r16 verdict
-        # item 1). stat_by_query records the per-entry statistic so
-        # cross-round comparisons know exactly what each number is.
-        timings[name] = _median(kept_walls)
-        stat = "steady_median_excl_cold_run0" if name in COLD_STEADY else "median"
-        if rej:
-            rej_abs = [i + off for i in rej]  # indices into `runs`
-            stat += f"_excl_burst_runs{rej_abs}".replace(" ", "")
-            burst_rejections[name] = {
-                "rejected_runs": rej_abs,
-                "rejected_walls": [runs[i] for i in rej_abs],
-                "io_baseline": io_probe_baseline(),
-                "threshold_x": 2.0,
-                "reason": "io_bracket>2x_idle_baseline",
-            }
-        if name in COLD_STEADY or rej:
-            stat_by_query[name] = stat
-        if name in COLD_STEADY:
-            cold_steady[name] = {
-                "cold": runs[0],
-                "steady": _median(kept_walls),
-            }
         # ONE untimed execution of the df's OWN plan instance to read
         # its SQL metrics (the timed noop writes execute a separate
         # write QueryExecution whose accumulators we can't reach from
@@ -667,8 +625,6 @@ def main() -> None:
         # the capture list on entry, so a metrics-pass failure after
         # that clear would otherwise erase evidence that already
         # existed (r17 review finding)
-        from mysqldatasynctool_spark.operators import streamruns
-
         prog_snapshot = list(streamruns.RUN_PROGRESS.get(name) or [])
         try:
             mdf = queries[name](spark, sf_dir)
@@ -690,141 +646,61 @@ def main() -> None:
         # warning). Prefer the metrics pass's fresh capture; fall back
         # to the final timed run's snapshot.
         try:
-            from mysqldatasynctool_spark.streaming.observe import (
-                progress_report,
-            )
-
             prog = streamruns.RUN_PROGRESS.get(name) or prog_snapshot
             if prog:
                 streaming_state_by_query[name] = progress_report(prog)
         except Exception:  # noqa: BLE001 — supplementary
             pass
-    # release the last family's caches before the migrate blocks
-    spark.catalog.clearCache()
-    teardown_caches()
 
-    # Index-artifact lifecycle demo (r13 verdict item 5): train once,
-    # save the parquet index, then cold-start a "restarted driver"
-    # (reset_trained_state wipes dicts AND persisted frames — the
-    # in-process stand-in for a fresh driver, whose bit-identity to a
-    # real fresh process is unit-proven) from the artifact and time the
-    # first query. Prediction: load skips the 3 Lloyd/codebook training
-    # scans; the first call still pays ONE assignment+encode scan to
-    # rebuild the persisted frames, so cold_with_artifact ≈ the r12
-    # steady shape (~3 s), far under the ~13 s train-inclusive cold.
-    try:
-        import shutil as _sh
-        import tempfile as _tf
+    # the reference's core job, two rows: full-DB copy + checksum
+    # verification (BASELINE.md "TableData" + "compareDb" phases in one
+    # number), over parquet directories and over real JDBC. Each run
+    # is one migrate call into a fresh destination plus its verdict
+    # count and the destination's removal; the first run additionally
+    # pays one-time digest codegen for every table schema.
+    from mysqldatasynctool_spark.config import Endpoint
+    from mysqldatasynctool_spark.migrate import (
+        jsonify_nested,
+        migrate_directory,
+        migrate_jdbc,
+    )
+    from mysqldatasynctool_spark.sources.fixtures import load
+    from mysqldatasynctool_spark.sources.sinks import write_jdbc
 
-        from mysqldatasynctool_spark.operators import similarity as _S
-
-        reset_trained_state()
-        t0 = time.monotonic()
-        queries["similarity_ivfpq_topk"](spark, sf_dir).write.mode(
-            "overwrite"
-        ).format("noop").save()
-        train_cold = round(time.monotonic() - t0, 3)
-        adir = _tf.mkdtemp(prefix="bench_annidx_")
-        try:
-            apath = os.path.join(adir, "index")
-            fpath = os.path.join(adir, "frames")
-            n_idx_rows = _S.save_trained_index(spark, apath)
-            frame_counts = _S.save_index_frames(spark, fpath, sf_dir)
-            # knobs-only restart: centroids/codebooks load from the
-            # KB-scale artifact; the first query still pays ONE
-            # assignment + encode scan to rebuild the frames
-            reset_trained_state()  # driver-restart stand-in
-            spark.catalog.clearCache()
-            t1 = time.monotonic()
-            _S.load_trained_index(spark, apath)
-            queries["similarity_ivfpq_topk"](spark, sf_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            cwk = round(time.monotonic() - t1, 3)
-            # full-index restart (r14): frames too — the FAISS
-            # index-file story complete; first query ≈ steady cost
-            reset_trained_state()
-            spark.catalog.clearCache()
-            t2 = time.monotonic()
-            _S.load_trained_index(spark, apath)
-            _S.load_index_frames(spark, fpath)
-            queries["similarity_ivfpq_topk"](spark, sf_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            cwa = round(time.monotonic() - t2, 3)
-        finally:
-            _sh.rmtree(adir, ignore_errors=True)
-        cold_steady.setdefault("similarity_ivfpq_topk", {}).update(
-            {
-                "cold_with_artifact": cwa,
-                "cold_with_knobs_only_artifact": cwk,
-                "cold_with_artifact_train_cold": train_cold,
-                "index_artifact_rows": n_idx_rows,
-                "index_frame_rows": frame_counts,
-            }
-        )
-        spark.catalog.clearCache()
-        teardown_caches()
-    except Exception as exc:  # noqa: BLE001 — lifecycle row is additive
-        failed["_ann_artifact"] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # the reference's core job: full-DB copy + checksum verification
-    # (BASELINE.md "TableData" + "compareDb" phases in one number)
-    import shutil
-    import tempfile
-
-    from mysqldatasynctool_spark.migrate import migrate_directory
-
-    # best-of-3 (queries are best-of-2): this one metric swung
-    # [7.91, 11.85] in r3 — the extra run separates steady-state from
-    # GC/page-cache outliers. Fresh dest each run; the first run
-    # additionally pays one-time digest-codegen for every table schema.
     n_bad = 0
-    try:
-        runs = []
-        dir_phases = []
-        # per-run disk sample for the migrate blocks too (r17: the one
-        # entry class WITHOUT the io channel regressed 1.8x on uniform
-        # per-table phase inflation — environment by every other
-        # signal, but unattributable in-record without this)
-        mig_io: list[float] = []
-        for _ in range(3):
-            mig_io.append(_io_probe_once())
-            dest = tempfile.mkdtemp(prefix="bench_migrate_")
-            t0 = time.monotonic()
-            elapsed = None
-            try:
-                reports, verdict = migrate_directory(spark, sf_dir, dest)
-                # reassigned (not +=) per run: both runs see the same
-                # data, so the failure state is identical — summing
-                # would double it
-                n_bad = sum(1 for r in verdict.collect() if r.is_ok != "YES") + sum(
-                    1 for r in reports if not r.ok
-                )
-                # stop the clock BEFORE cleanup: rmtree of an sf-sized
-                # parquet copy is FS noise, not migration work, and
-                # timing it breaks comparability with prior rounds
-                elapsed = round(time.monotonic() - t0, 3)
-            finally:
-                # a crashed run must not leave a partial sf-sized
-                # parquet copy in /tmp
-                shutil.rmtree(dest, ignore_errors=True)
-            runs.append(elapsed)
-            dir_phases.append({r.table: r.phases for r in reports if r.phases})
-        all_runs["migrate_full_db_with_verify"] = runs
-        timings["migrate_full_db_with_verify"] = min(runs)
-        io_probe_by_query["migrate_full_db_with_verify"] = sorted(mig_io)[
-            len(mig_io) // 2
-        ]
-        # per-table copy/verify wall-time from the BEST run — r6 moved
-        # +23% on this metric with no code change; the split makes any
-        # future drift attributable (fused scan+write vs verify
-        # re-read) instead of an opaque total
-        phase_split["migrate_full_db_with_verify"] = dir_phases[
-            runs.index(min(runs))
-        ]
-    except Exception as exc:  # noqa: BLE001
-        failed["migrate_full_db_with_verify"] = f"{type(exc).__name__}: {exc}"[:300]
+
+    def _migrate_row(name: str, migrate_once) -> int:
+        """Time one migrate row. ``migrate_once(i)`` runs the i-th
+        migrate call and returns (reports, failed-object count). The
+        per-table phase split and the failed-object count come from
+        the kept run nearest the median — r6 moved +23% on this metric
+        with no code change; the split makes any drift attributable
+        (fused scan+write vs verify re-read) instead of an opaque
+        total."""
+        per_run: list[tuple[dict, int]] = []
+
+        def action() -> None:
+            reports, bad = migrate_once(len(per_run))
+            per_run.append(({r.table: r.phases for r in reports if r.phases}, bad))
+
+        res = _time(name, action)
+        if res is None:
+            return 0
+        best = min(res["kept"], key=lambda i: abs(res["runs"][i] - res["wall"]))
+        phase_split[name] = per_run[best][0]
+        return per_run[best][1]
+
+    def _directory_once(_i: int):
+        dest = tempfile.mkdtemp(prefix="bench_migrate_")
+        try:
+            reports, verdict = migrate_directory(spark, sf_dir, dest)
+            return reports, _failed_objects(reports, verdict)
+        finally:
+            # a crashed run must not leave a partial sf-sized parquet
+            # copy in /tmp
+            shutil.rmtree(dest, ignore_errors=True)
+
+    n_bad += _migrate_row("migrate_full_db_with_verify", _directory_once)
 
     # DB→DB through REAL JDBC (embedded Derby) — the reference's
     # actual job shape (root.go:375-507): plan partitions from the
@@ -832,11 +708,6 @@ def main() -> None:
     # verify both sides. One table per plan mode: range (orders,
     # single numeric PK), composite boundary predicates (lineitem),
     # tiny dim (region). Source seeding is setup, not timed.
-    from mysqldatasynctool_spark.config import Endpoint
-    from mysqldatasynctool_spark.migrate import jsonify_nested, migrate_jdbc
-    from mysqldatasynctool_spark.sources.fixtures import load
-    from mysqldatasynctool_spark.sources.sinks import write_jdbc
-
     drv = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
     jdbc_tables = {
         "orders": ["o_orderkey"],
@@ -850,184 +721,33 @@ def main() -> None:
         )
         for t in jdbc_tables:
             write_jdbc(jsonify_nested(load(spark, sf_dir, t)), src_ep, t, truncate=True)
-        runs = []
-        run_phases = []
-        jdbc_bad = 0
-        mig_io = []
-        for i in range(3):
-            # unconditional 3 runs (r12: the adaptive skip saved ~15 s
-            # but left the headline metric resting on 2 samples — a
-            # [18.2s, 14.5s] burst pair recorded 14.5 where the third
-            # sample lands ~12.5; same 3-sample floor as the directory
-            # migrate)
-            mig_io.append(_io_probe_once())
-            dest_ep = Endpoint(
-                url_override=f"jdbc:derby:{derby_root}/dest{i};create=true", driver=drv
-            )
-            t0 = time.monotonic()
-            reports, verdict = migrate_jdbc(spark, src_ep, dest_ep, jdbc_tables)
-            # reassigned per run, not accumulated — both runs migrate
-            # the same tables, so += would count one failure twice
-            jdbc_bad = sum(1 for r in verdict.collect() if r.is_ok != "YES") + sum(
-                1 for r in reports if not r.ok
-            )
-            runs.append(round(time.monotonic() - t0, 3))
-            run_phases.append({r.table: r.phases for r in reports if r.phases})
-        n_bad += jdbc_bad
-        all_runs["migrate_jdbc_db_to_db"] = runs
-        timings["migrate_jdbc_db_to_db"] = min(runs)
-        io_probe_by_query["migrate_jdbc_db_to_db"] = sorted(mig_io)[
-            len(mig_io) // 2
-        ]
-        # per-table plan/copy/verify wall-time from the BEST run:
-        # attributes the residual gap vs the reference (read-side vs
-        # Derby's serialized embedded writes) instead of assuming it
-        phase_split["migrate_jdbc_db_to_db"] = run_phases[runs.index(min(runs))]
-    except Exception as exc:  # noqa: BLE001
+
+        def _jdbc_once(i: int):
+            path = f"{derby_root}/dest{i}"
+            dest_ep = Endpoint(url_override=f"jdbc:derby:{path};create=true", driver=drv)
+            try:
+                reports, verdict = migrate_jdbc(spark, src_ep, dest_ep, jdbc_tables)
+                return reports, _failed_objects(reports, verdict)
+            finally:
+                _drop_derby(spark, path)
+
+        n_bad += _migrate_row("migrate_jdbc_db_to_db", _jdbc_once)
+    except Exception as exc:  # noqa: BLE001 — seeding failed
         failed["migrate_jdbc_db_to_db"] = f"{type(exc).__name__}: {exc}"[:300]
     finally:
         # seeded Derby DBs are hundreds of MB at sf0.1 — never orphan
         # them on a failed run
         shutil.rmtree(derby_root, ignore_errors=True)
 
-    # Layout A/B (r16 verdict item 3): the driver's sf0.1 fixtures are
-    # SINGLE-row-group parquet files (the repo's own layoutProbe proves
-    # it), so every scan in the headline TPC-H block runs on ONE task
-    # of 32 — the same pathology the r16 stress fix removed from the
-    # builder's corpora. Quantify the tax instead of absorbing it:
-    # rewrite a bounded-row-group (20k) copy of the TPC-H tables, run
-    # the 7-query headline block on BOTH layouts with runs interleaved
-    # A,B,A,B,... (so a disk drift mid-block contaminates both sides
-    # equally), and record both walls per query. Correctness/oracle
-    # checks stay on the driver fixtures untouched; the headline
-    # timings above also stay on the driver layout so the cross-round
-    # series remains comparable — this block makes the tax a recorded
-    # fact with a footnote, not a silent divisor.
-    layout_ab = None
-    try:
-        layout_ab = _layout_ab_block(spark, queries, sf_dir, _median)
-        spark.catalog.clearCache()
-        teardown_caches()
-    except Exception as exc:  # noqa: BLE001 — evidence block is additive
-        failed["_layout_ab"] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # the LSH quality numbers at THIS scale, recorded per round next
-    # to the timings — a banding change that speeds LSH up by losing
-    # recall shows up here, not just as a faster row
-    recall_row = None
-    try:
-        recall_row = {
-            k: (float(v) if v is not None else None)
-            for k, v in queries["dedup_lsh_recall_report"](spark, sf_dir)
-            .collect()[0]
-            .asDict()
-            .items()
-        }
-    except Exception as exc:  # noqa: BLE001 — quality row is additive
-        failed["_recall_report"] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # LSH recall at 10x the largest fixture (seeded synthetic corpus,
-    # planted near-dups with exact generation-time Jaccard): validates
-    # the banding parameters beyond fixture scale and pins measured
-    # recall against the b-band/r-row theory curve (VERDICT r7 item 6;
-    # this harness is what exposed the r7 affine-family recall gap)
-    # tools/ on sys.path for BOTH stress blocks below (r10 advice: the
-    # x30 import silently relied on this running inside the x10 try)
-    sys.path.insert(
-        0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools")
-    )
-    recall_10x = None
-    try:
-        from lsh_stress import run_stress
-
-        recall_10x = run_stress(spark, sf_dir, factor=10, seed=8)
-    except Exception as exc:  # noqa: BLE001 — quality row is additive
-        failed["_recall_10x"] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # x30 extension (r8 verdict carry-over): one seed at 3x the x10
-    # corpus (150 k docs at sf0.1) — checks the recall == theory match
-    # holds as bucket occupancy triples, at ~linear extra cost
-    recall_30x = None
-    try:
-        from lsh_stress import run_stress as _run_stress_30
-
-        recall_30x = _run_stress_30(spark, sf_dir, factor=30, seed=8)
-    except Exception as exc:  # noqa: BLE001 — quality row is additive
-        failed["_recall_30x"] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # x100 extension (r13 verdict item 3): the one scale point the
-    # 100 TB story had not stressed — 500 k docs / 200 k vectors at
-    # sf0.1. The √N-cells/fixed-probes and banding-theory predictions
-    # say recall holds within a few points of x30 while wall grows
-    # ~linearly; measured r14 (idle box): LSH 0.970 vs 0.9744 theory
-    # at 149 s, ivfpq 0.775 / multiprobe-LSH 0.978 at ~11 min
-    # (training a 200 k-vector index dominates). ENV-GATED
-    # (SPARK_GRAFT_STRESS_100X=1) because the ANN side alone would
-    # double the per-round bench wall; the builder's end-of-round
-    # bench runs WITH the flag so the committed BENCH_LOCAL record
-    # carries the blocks — the per-round regression gates stay the
-    # unconditional x10/x30 blocks above.
-    stress_100x = os.environ.get("SPARK_GRAFT_STRESS_100X") == "1"
-    recall_100x = None
-    if stress_100x:
-        try:
-            from lsh_stress import run_stress as _run_stress_100
-
-            recall_100x = _run_stress_100(spark, sf_dir, factor=100, seed=8)
-        except Exception as exc:  # noqa: BLE001 — quality row is additive
-            failed["_recall_100x"] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # ANN recall at 10x the largest fixture (r10 verdict item 3: the
-    # similarity mirror of the LSH stress — planted near neighbors +
-    # exact generation-time truth, so the Lloyd-training recall gains
-    # are regression-gated beyond fixture scale)
-    ann_10x = None
-    try:
-        from ann_stress import run_stress_ann
-
-        ann_10x = run_stress_ann(spark, sf_dir, factor=10, seed=8)
-    except Exception as exc:  # noqa: BLE001 — quality row is additive
-        failed["_ann_recall_10x"] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # x100 ANN extension (r13 verdict item 3): 200 k vectors — the
-    # trained IVF-PQ funnel + multiprobe LSH at 100x the fixture
-    # (same env gate as the LSH x100 block above)
-    ann_100x = None
-    if stress_100x:
-        try:
-            from ann_stress import run_stress_ann as _run_ann_100
-
-            ann_100x = _run_ann_100(spark, sf_dir, factor=100, seed=8)
-        except Exception as exc:  # noqa: BLE001 — quality row is additive
-            failed["_ann_recall_100x"] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # x300 ANN extension (r15 verdict item 6): 600 k vectors — one
-    # more octave past the x100 point that validated the derived
-    # probe/shortlist budgets (0.852 at x10 -> 0.8783 at x100). If
-    # the policy scales, recall holds >= ~0.85 here while the
-    # per-query budgets grow sub-linearly in N (probes ~ 13% of
-    # ~sqrt(N) cells). Own env gate (SPARK_GRAFT_STRESS_300X=1):
-    # training a 600 k-vector index dominates and would multiply the
-    # round's bench wall; run standalone via
-    # `python tools/ann_stress.py 300 8` when adjudicating.
-    ann_300x = None
-    if os.environ.get("SPARK_GRAFT_STRESS_300X") == "1":
-        try:
-            from ann_stress import run_stress_ann as _run_ann_300
-
-            ann_300x = _run_ann_300(spark, sf_dir, factor=300, seed=8)
-        except Exception as exc:  # noqa: BLE001 — quality row is additive
-            failed["_ann_recall_300x"] = f"{type(exc).__name__}: {exc}"[:300]
-
-    # Wall-vs-SF scaling evidence (r11): one timed run of each
-    # representative operator at the two SMALLER fixtures, recorded
-    # next to its sf0.1 best — the judge-facing check that plans cost
-    # what their shape claims as data grows 10x/100x. ratio_01 is
+    # Wall-vs-SF scaling evidence (r11): each representative operator
+    # timed at the two SMALLER fixtures, recorded next to its sf0.1
+    # number — the judge-facing check that plans cost what their shape
+    # claims as data grows 10x/100x. ratio_01 is
     # wall(sf0.1)/wall(sf0.01): ~1 reads fixed-cost-dominated at test
     # scale, <= ~10 reads linear; a superlinear ratio is the tripwire.
     # Picked to cover the distinct plan families: scan-agg, banded
     # LSH dedup, the trained ANN funnel (per-SF training cached inside
-    # the run, as in production), heavy text agg, stateful
+    # the row's first run, as in production), heavy text agg, stateful
     # sessionization, and the composed pipeline.
     SCALE_SWEEP = [
         "q1_pricing_summary",
@@ -1038,29 +758,20 @@ def main() -> None:
         "pipeline_global_shuffle",
     ]
     scale_sweep: dict = {}
-    try:
-        for name in SCALE_SWEEP:
-            if name not in timings:
-                continue
-            row = {"sf0.1": timings[name]}
-            for small in ("0.001", "0.01"):
-                sd = sf_dir.rstrip("/").rsplit("/", 1)[0] + f"/sf{small}"
-                # best-of-2, same discipline as the headline numbers:
-                # the first run pays one-time per-SF costs the sf0.1
-                # side has already amortized (ANN training caches,
-                # codegen) — the comparable number is the warm scan
-                walls = []
-                for _ in range(2):
-                    t0 = time.time()
-                    queries[name](spark, sd).write.mode("overwrite").format(
-                        "noop"
-                    ).save()
-                    walls.append(round(time.time() - t0, 3))
-                row[f"sf{small}"] = min(walls)
+    for name in SCALE_SWEEP:
+        if name not in timings:
+            continue
+        row = {"sf0.1": timings[name]}
+        for small in ("0.001", "0.01"):
+            sd = sf_dir.rstrip("/").rsplit("/", 1)[0] + f"/sf{small}"
+            res = time_entry(f"{name}@sf{small}", _noop_write(name, sd), spark)
+            if "failed" in res:
+                failed["_scale_sweep"] = res["failed"]
+                break
+            row[f"sf{small}"] = res["wall"]
+        else:
             row["ratio_01"] = round(row["sf0.1"] / max(row["sf0.01"], 1e-9), 2)
             scale_sweep[name] = row
-    except Exception as exc:  # noqa: BLE001 — evidence row is additive
-        failed["_scale_sweep"] = f"{type(exc).__name__}: {exc}"[:300]
 
     cpu_probe_bracket = {"start": probe_start, "end": _cpu_probe()}
     io_probe_bracket = {"start": io_probe_start, "end": _io_probe()}
@@ -1072,7 +783,7 @@ def main() -> None:
         # a round with ANY failed headline metric must not publish a
         # comparable-looking total: the missing query's time would make
         # the sum DROP, reading as a speedup. Per-query timings stay.
-        # (underscore-keyed failures — _warmup, _recall_report — are
+        # (underscore-keyed failures — _warmup, _scale_sweep — are
         # not timed metrics, so they alone don't null it.)
         "value": (
             round(sum(timings.values()), 3)
@@ -1090,38 +801,32 @@ def main() -> None:
         # File-record metadata only — the stdout contract line is
         # unchanged.
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        # each query number is the MEDIAN of its burst-KEPT runs (r17
-        # discipline change: runs whose io-probe bracket exceeded 2x
-        # the run's typical probe level are excluded, and the adaptive
-        # extension re-runs to >=3 kept samples, capped at 6/7 — the
-        # label below changes so bench_compare prints its
-        # statistic-changed note at the r16→r17 boundary; r12-r16
-        # records were plain medians of 3-5). The migrate blocks stay
-        # best-of-N because their first run pays one-time setup.
-        # Per-run wall times behind every number, so a regression in
-        # the headline metric is distinguishable from single-run box
-        # noise without re-running the whole suite.
+        # every row's number, the migrate rows included, is the MEDIAN
+        # of its burst-KEPT runs (time_entry: runs whose io-probe
+        # bracket exceeded 2x the run's typical probe level are
+        # excluded, and the adaptive extension re-runs to >=3 kept
+        # samples, capped at 6/7). Per-run wall times behind every
+        # number, so a regression in the headline metric is
+        # distinguishable from single-run box noise without re-running
+        # the whole suite.
         "runs": all_runs,
         "query_stat": "burst_filtered_median_adaptive_to_6",
         # per-entry overrides: COLD_STEADY rows exclude the cold run
         # from their headline median (r13 advice — the label travels
         # with the record so cross-round tooling reads the right stat)
         "stat_by_query": stat_by_query,
-        # (the r14→r15 `value_old_stat_definition` transition aid is
-        # dropped as scheduled — r13-era totals remain comparable via
-        # stat_by_query + runs in the committed BENCH_LOCAL records)
         # box-speed calibration bracketing the run (see _cpu_probe):
         # compare this across rounds BEFORE reading per-query deltas
         "cpu_probe": cpu_probe_bracket,
         # disk-speed calibration, same bracket discipline (see
         # _io_probe — closes the r15 attribution gap)
         "io_probe": io_probe_bracket,
-        # one sample per query, taken just before its runs — the
+        # one sample per row, taken just before its runs — the
         # burst-attribution evidence bench_compare reads when flagging
         "probe_by_query": probe_by_query,
         "io_probe_by_query": io_probe_by_query,
         # per-run disk brackets + the rejections the statistic made
-        # from them (r16 verdict item 1): every headline number is now
+        # from them (r16 verdict item 1): every recorded number is
         # attributable to the exact samples it kept and dropped
         "io_bracket_by_run": io_bracket_by_run,
         "io_probe_baseline": io_probe_baseline(),
@@ -1142,34 +847,8 @@ def main() -> None:
         out["phase_split"] = phase_split
     if cold_steady:
         out["ann_cold_vs_steady"] = cold_steady
-    if recall_row:
-        out["lsh_recall"] = recall_row
-    if recall_10x:
-        out["lsh_recall_10x"] = recall_10x
-    if recall_30x:
-        out["lsh_recall_30x"] = recall_30x
-    if recall_100x:
-        out["lsh_recall_100x"] = recall_100x
-    if ann_10x:
-        out["ann_recall_10x"] = ann_10x
-    if ann_100x:
-        out["ann_recall_100x"] = ann_100x
-    if ann_300x:
-        out["ann_recall_300x"] = ann_300x
     if scale_sweep:
         out["scale_sweep"] = scale_sweep
-    if layout_ab:
-        out["layout_ab"] = layout_ab
-        if layout_ab.get("median_ratio", 0) >= 2:
-            # the tax is LARGE: flag the headline so cross-round
-            # totals are read layout-aware (r16 verdict item 3)
-            out["headline_layout_footnote"] = (
-                "driver sf fixtures are single-row-group parquet; the "
-                "TPC-H headline entries measured "
-                f"{layout_ab['median_ratio']}x slower on that layout "
-                f"than on a bounded-{LAYOUT_AB_ROW_GROUP}-row-group "
-                "rewrite of the same data (see layout_ab)"
-            )
     if n_bad:
         # failure count lives OUTSIDE the summed timings dict so it
         # can't corrupt the wall-clock headline metric

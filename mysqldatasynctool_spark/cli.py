@@ -19,6 +19,7 @@ The run report mirrors the reference's gotable summary
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
@@ -110,27 +111,29 @@ def _require_full_endpoints(args) -> None:
         )
 
 
+def _endpoints(args, cfg: SyncConfig):
+    """The (src, dest) JDBC endpoints: each ``--src-url``/``--dest-url``
+    flag overrides its config side (same fallback rule for migrateDb
+    and compareDb — never a silent localhost default)."""
+    from .config import Endpoint
+
+    _require_full_endpoints(args)
+    return tuple(
+        Endpoint(url_override=url, driver=args.driver) if url else side
+        for url, side in ((args.src_url, cfg.src), (args.dest_url, cfg.dest))
+    )
+
+
 def cmd_migrate_db(args) -> int:
     """DB→DB over real JDBC — the reference's actual job
     (root.go:375-507). PKs come from --pk-map when given (required for
     databases without MySQL's information_schema, e.g. Derby), else
     from live information_schema discovery on the source."""
     from .catalog import discover_jdbc_pks
-    from .config import Endpoint
     from .migrate import migrate_jdbc
 
-    _require_full_endpoints(args)
     cfg = load_config(args.config) if args.config else SyncConfig()
-    src = (
-        Endpoint(url_override=args.src_url, driver=args.driver)
-        if args.src_url
-        else cfg.src
-    )
-    dest = (
-        Endpoint(url_override=args.dest_url, driver=args.driver)
-        if args.dest_url
-        else cfg.dest
-    )
+    src, dest = _endpoints(args, cfg)
     spark = get_spark(app_name="migrateDb")
     t0 = time.monotonic()
     pk_map = (
@@ -138,14 +141,6 @@ def cmd_migrate_db(args) -> int:
         if args.pk_map
         else discover_jdbc_pks(spark, src, exclude=tuple(cfg.exclude))
     )
-    quote = args.quote
-    if quote is None:
-        # infer from the dialect: backtick for MySQL (whose default
-        # sql_mode treats "double-quoted" tokens as string LITERALS —
-        # an ANSI quote there silently degrades every table to an
-        # unpartitioned full scan), double-quote for ANSI databases
-        blob = f"{src.jdbc_url} {getattr(src, 'driver', '')}".lower()
-        quote = "`" if "mysql" in blob else '"'
     reports, verdict = migrate_jdbc(
         spark,
         src,
@@ -153,7 +148,6 @@ def cmd_migrate_db(args) -> int:
         pk_map,
         cfg=cfg,
         page_size=cfg.page_size,
-        quote=quote,
         resume=getattr(args, "resume", False),
     )
     return _report_and_exit(reports, verdict, t0)
@@ -180,22 +174,11 @@ def cmd_compare(args) -> int:
         # override the config endpoint side-by-side (same fallback rule
         # as migrateDb) — never a silent localhost default.
         from .catalog import discover_jdbc_pks
-        from .config import Endpoint
         from .ddl import _is_missing_table_error
         from .migrate import _check_ident
         from .sources.jdbc import read_table
 
-        _require_full_endpoints(args)
-        src_ep = (
-            Endpoint(url_override=args.src_url, driver=args.driver)
-            if args.src_url
-            else cfg.src
-        )
-        dest_ep = (
-            Endpoint(url_override=args.dest_url, driver=args.driver)
-            if args.dest_url
-            else cfg.dest
-        )
+        src_ep, dest_ep = _endpoints(args, cfg)
         tables = (
             [t.strip() for t in args.tables.split(",") if t.strip()]
             if args.tables
@@ -224,14 +207,13 @@ def cmd_compare(args) -> int:
         if t not in set(cfg.exclude)
     ]
     src = {t: load(spark, args.src_dir, t) for t in tables}
-    dest = {}
-    for t in tables:
-        try:
-            d = load(spark, args.dest_dir, t)
-            d.schema  # force resolution → missing table raises here
-            dest[t] = d
-        except Exception:
-            pass  # missing on dest → DestIsExist=NO (compare.go:122-126)
+    # ONLY a missing path means DestIsExist=NO (compare.go:122-126); a
+    # corrupt or unreadable dest table must surface, as in JDBC mode
+    dest = {
+        t: load(spark, args.dest_dir, t)
+        for t in tables
+        if os.path.exists(os.path.join(args.dest_dir, f"{t}.parquet"))
+    }
     return _compare_report(spark, src, dest)
 
 
@@ -498,12 +480,6 @@ def main(argv: list[str] | None = None) -> int:
         default=None,
         help="explicit PKs: 'orders=o_orderkey;lineitem=l_orderkey+l_linenumber'"
         " (omit to discover from the source's information_schema)",
-    )
-    pj.add_argument(
-        "--quote",
-        default=None,
-        help="identifier quote for generated predicates; default infers "
-        "from the source dialect ('`' for MySQL URLs/drivers, '\"' ANSI)",
     )
     pj.add_argument("--config", default=None, help="reference-format YAML config")
 

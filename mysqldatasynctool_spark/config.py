@@ -53,6 +53,15 @@ class Endpoint:
         )
 
     @property
+    def ident_quote(self) -> str:
+        """Identifier quote of this endpoint's dialect: a backtick for
+        MySQL, whose default sql_mode reads "double-quoted" tokens as
+        string LITERALS (a generated predicate would then silently
+        degrade every table to one unpartitioned scan), the ANSI
+        double quote for everything else (Derby)."""
+        return "`" if self.jdbc_url.startswith("jdbc:mysql:") else '"'
+
+    @property
     def jdbc_properties(self) -> dict[str, str]:
         props = {"driver": self.driver}
         if self.username:

@@ -67,6 +67,21 @@ from pyspark.sql import functions as F
 _SPLIT = 1_000_000
 
 
+def _dec(col, scale: int = 2, prec: int = 22) -> Column:
+    """Exact-decimal view of a (possibly noisy) double column.
+
+    Per-row double→decimal rounding is deterministic and identical in
+    Spark and DuckDB; summing decimals is exact and order-independent,
+    which makes aggregate results hash-comparable across engines.
+    Aggregation sites SUM through :func:`dec_sum` and its siblings
+    instead (same value and dtype, no per-row BigDecimal); ``_dec``
+    remains for per-row decimal VIEWS (joins, comparisons) and the
+    incremental unbounded-preceding window sums, where a per-row
+    reconstruct would cost more than the one decimal add it saves.
+    """
+    return col.cast(f"decimal({prec},{scale})")
+
+
 def unscaled_long(x: Column, scale: int = 2) -> Column:
     """The unscaled long of ``CAST(x AS DECIMAL(_, scale))`` — i.e.
     the exact integer ``round_half_up(x · 10^scale)`` — computed in

@@ -296,7 +296,6 @@ def migrate_jdbc(
     pk_map: dict[str, list[str]],
     cfg: SyncConfig | None = None,
     page_size: int = 20_000,
-    quote: str = '"',
     resume: bool = False,
 ) -> tuple[list[TableReport], object]:
     """DB→DB migration — the reference's actual job
@@ -312,8 +311,8 @@ def migrate_jdbc(
       PK sample (``sample_boundaries``);
     - no PK → single full-scan partition.
 
-    ``quote`` wraps PK identifiers inside composite predicates for the
-    target dialect ('"' for Derby/ANSI, '`' for MySQL).
+    PK identifiers inside generated SQL are quoted with the source
+    dialect's ``src.ident_quote`` ('"' for Derby/ANSI, '`' for MySQL).
 
     Scale note: this is the same per-table core as migrate_directory
     with JDBC endpoints; numPartitions bounds per-table connection
@@ -327,6 +326,7 @@ def migrate_jdbc(
     from .sources.sinks import write_jdbc
 
     cfg = cfg or SyncConfig()
+    q = src.ident_quote
 
     def build_plan(t: str):
         pk = pk_map[t]
@@ -341,7 +341,6 @@ def migrate_jdbc(
         # MIN on CLOB), which only means this FAST path is
         # unavailable, not that the table can't be paged.
         if pk:
-            q = quote
             try:
                 stats = read_table(
                     spark,
@@ -389,7 +388,7 @@ def migrate_jdbc(
                 boundaries=sample_boundaries(
                     read_table(spark, src, t).select(*pk), pk, page_size
                 ),
-                quote=quote,
+                quote=q,
             )
         # Tier 3 — no PK: single full-scan partition (root.go:341-345).
         return plan_table(t, [], page_size, cfg.max_parallel)

@@ -16,12 +16,6 @@ from ..sources.fixtures import load
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
 
-def _dec(col, scale: int = 2, prec: int = 22):
-    # r18: aggregation sites sum via functions.fastdec (unscaled-long
-    # fast path, value/dtype-identical — proof in fastdec's docstring)
-    return col.cast(f"decimal({prec},{scale})")
-
-
 def pivot_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: order counts by status × priority, priorities widened to
     columns (explicit value list — never value-discovery at scale)."""

@@ -81,19 +81,10 @@ def _norm_col(name: str, dtype: str):
     return F.coalesce(e, F.lit(NULL_SENTINEL))
 
 
-def row_digest(df: DataFrame) -> F.Column:
-    """60-bit per-row digest over all scalar columns (the shared
-    md5-low-60 idiom, functions/hashing.py; widened to DECIMAL(38,0)
-    so a full-table SUM cannot overflow)."""
-    repr_col = F.concat_ws("|", *[_norm_col(n, t) for n, t in df.dtypes])
-    return md5_low60(repr_col).cast("decimal(38,0)")
-
-
-
 def row_digest_long(df: DataFrame) -> F.Column:
-    """The raw 60-bit long digest (pre-DECIMAL form of
-    :func:`row_digest`) — what the r18 fast checksum sums accumulate.
-    """
+    """60-bit per-row digest over all scalar columns, as a long (the
+    shared md5-low-60 idiom, functions/hashing.py). Checksums sum it
+    exactly through :func:`digest_sum`."""
     repr_col = F.concat_ws("|", *[_norm_col(n, t) for n, t in df.dtypes])
     return md5_low60(repr_col)
 
@@ -382,8 +373,8 @@ def migration_row_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full-outer join, which this row-level report genuinely needs).
     # Kept: the classic two-frame derivation.
     dest = _drifted_orders(src)
-    s = src.select(F.col("o_orderkey").alias("pk"), row_digest(src).alias("sd"))
-    d = dest.select(F.col("o_orderkey").alias("pk"), row_digest(dest).alias("dd"))
+    s = src.select(F.col("o_orderkey").alias("pk"), row_digest_long(src).alias("sd"))
+    d = dest.select(F.col("o_orderkey").alias("pk"), row_digest_long(dest).alias("dd"))
     status = (
         F.when(F.col("sd").isNull(), "added")
         .when(F.col("dd").isNull(), "removed")

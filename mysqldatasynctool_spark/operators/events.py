@@ -19,17 +19,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.fastdec import dec_sum, dec_sum_over_bounded, unscaled_long
+from ..functions.fastdec import _dec, dec_sum, dec_sum_over_bounded, unscaled_long
 from ..sources.fixtures import load
-
-
-def _dec(col, scale: int = 2, prec: int = 22):
-    # r18: aggregation sites sum via functions.fastdec (unscaled-long
-    # fast path, value/dtype-identical — see fastdec's proof); _dec
-    # stays for per-row views and the incremental (unbounded-preceding)
-    # window sums where a per-row reconstruct would cost more than the
-    # one BigDecimal add it saves.
-    return col.cast(f"decimal({prec},{scale})")
 
 
 def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,24 +27,6 @@ from ..functions.fastdec import dec_sum
 from ..sources.fixtures import load
 
 
-def _dec(col, scale: int = 2, prec: int = 22):
-    """Exact-decimal view of a (possibly noisy) double column.
-
-    Per-row double→decimal rounding is deterministic and identical in
-    Spark and DuckDB; summing decimals is exact and order-independent,
-    which makes aggregate results hash-comparable across engines.
-
-    r18 (optimization round): aggregation sites now SUM through
-    ``functions.fastdec.dec_sum`` — the unscaled-long fast path that
-    computes the identical decimal sum (value and dtype) without the
-    per-row BigDecimal cast/add; see fastdec's module docstring for
-    the equivalence proof and OPTIMIZATION_r18.md for before/after
-    measurements. ``_dec`` remains for per-row decimal VIEWS (joins,
-    comparisons) where no aggregation amortizes a rewrite.
-    """
-    return col.cast(f"decimal({prec},{scale})")
-
-
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-style pricing summary (flagship).
 

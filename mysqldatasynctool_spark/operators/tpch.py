@@ -41,15 +41,6 @@ from ..functions.fastdec import dec_min, dec_sum, dec_sum_when
 from ..sources.fixtures import load
 
 
-def _dec(col, scale: int = 2, prec: int = 22):
-    """Exact-decimal view of a noisy double column (see relational._dec).
-
-    r18: aggregation sites sum via functions.fastdec (unscaled-long
-    fast path, value/dtype-identical — proof in fastdec's docstring).
-    """
-    return col.cast(f"decimal({prec},{scale})")
-
-
 def _rev():
     """Net revenue expression (built lazily: F.col needs a live session)."""
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))

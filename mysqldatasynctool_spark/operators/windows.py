@@ -23,17 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.fastdec import dec_sum, dec_sum_over
+from ..functions.fastdec import _dec, dec_sum, dec_sum_over
 from ..sources.fixtures import load
-
-
-def _dec(col, scale: int = 2, prec: int = 22):
-    # r18: group aggregates and SLIDING/RANGE frames sum via
-    # functions.fastdec (unscaled-long fast path, value/dtype-identical
-    # — proof there); incremental unbounded-preceding running sums keep
-    # the decimal accumulator (one add per row already; a per-row
-    # reconstruct would cost more than it saves).
-    return col.cast(f"decimal({prec},{scale})")
 
 
 def scale_safe_row_number(df: DataFrame, bucket, within_order, out: str = "rn") -> DataFrame:

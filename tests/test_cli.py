@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from mysqldatasynctool_spark.cli import main
+from tests.conftest import SF_SMALL
 
 
 def test_version(capsys):
@@ -33,6 +34,13 @@ def test_migrate_and_compare_roundtrip(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert rc == 1
     assert "failed items" in out and "NO" in out
+
+    # a dest table that exists but is not readable parquet is an error,
+    # never a DestIsExist=NO row
+    with open(f"{dest}/region.parquet", "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    with pytest.raises(Exception):
+        main(["compareDb", "--src-dir", SF_SMALL, "--dest-dir", dest])
 
 
 def test_create_table_ddl(capsys):

@@ -71,6 +71,22 @@ exclude:
     assert "jdbc:mysql://h1:3306/d" in cfg.src.jdbc_url
 
 
+def test_endpoint_ident_quote_follows_url_dialect():
+    """Generated JDBC SQL quotes identifiers in the source's dialect:
+    MySQL reads "double-quoted" tokens as string literals, so a MySQL
+    URL (the default endpoint or an override) gets the backtick; Derby
+    and other ANSI databases get the double quote."""
+    from mysqldatasynctool_spark.config import Endpoint
+
+    assert Endpoint().ident_quote == "`"
+    assert Endpoint(url_override="jdbc:mysql://db:3306/shop").ident_quote == "`"
+    derby = Endpoint(
+        url_override="jdbc:derby:/tmp/x;create=true",
+        driver="org.apache.derby.iapi.jdbc.AutoloadedDriver",
+    )
+    assert derby.ident_quote == '"'
+
+
 # --- typemap --------------------------------------------------------------
 
 

@@ -119,9 +119,13 @@ def test_full_scan_check_survives_truncated_location():
 
 
 def test_trained_index_artifact_cli_lifecycle(spark, tmp_path):
-    """The ops lifecycle the bench cold_with_artifact number measures:
-    train -> save -> full reset (driver-restart stand-in) -> load ->
-    query WITHOUT retraining, same rows (r13 verdict item 5)."""
+    """The trained-index artifact lifecycle: train -> save -> full
+    reset (driver-restart stand-in) -> load -> query WITHOUT
+    retraining, same rows (r13 verdict item 5). bench.py no longer
+    times it (its cold_with_artifact walls are on record in
+    BENCH_LOCAL_r13-r20); this test is the lifecycle's check, and
+    recall numbers live in the STRESS_r{N}.json records, not in the
+    bench JSON."""
     from mysqldatasynctool_spark.operators import similarity as S
 
     S.reset_trained_state()

@@ -1,7 +1,7 @@
 """Round-17 units: the burst-aware bench statistic (r16 verdict
 item 1 — the probes recorded disk bursts, the median now USES them),
-its bench_compare consumption, and the layout/serving/scan items of
-the r16 brief."""
+its bench_compare consumption, the shared bench timing loop, and the
+serving/scan items of the r16 brief."""
 
 from __future__ import annotations
 
@@ -95,6 +95,63 @@ def test_io_probe_baseline_is_running_median():
     bench._IO_SAMPLES.append(0.014)
     assert bench.io_probe_baseline() == 0.014
     bench._IO_SAMPLES.clear()
+
+
+def test_time_entry_statistic_failure_and_cold_steady(monkeypatch):
+    """bench.time_entry — the one loop behind every bench wall and
+    `tools/measure.py time` — driven with stub actions and stub probes
+    (no Spark): the statistic is the median of the runs the burst
+    filter keeps, a raising action lands in ``failed`` with no timing,
+    and a COLD_STEADY row drops run 0 from the statistic."""
+    import time as _time
+
+    import bench
+
+    monkeypatch.setattr(bench, "_IO_SAMPLES", [])
+    monkeypatch.setattr(bench, "_cpu_probe_once", lambda: 0.1)
+    io_seq: list[float] = []
+
+    def _io():
+        v = io_seq.pop(0) if io_seq else 0.01
+        bench._IO_SAMPLES.append(v)
+        return v
+
+    monkeypatch.setattr(bench, "_io_probe_once", _io)
+
+    def sleeper(walls):
+        it = iter(walls)
+        return lambda: _time.sleep(next(it, walls[-1]))
+
+    # 3 pre-run probe samples, then one after each run: the burst
+    # sample after run 2 brackets runs 2 and 3, so both are rejected
+    # and the loop extends until 3 clean runs are kept
+    io_seq[:] = [0.01, 0.01, 0.01, 0.01, 0.01, 0.5]
+    res = bench.time_entry("plain", sleeper([0.05, 0.07, 0.3, 0.3, 0.06]))
+    assert res["burst_rejection"]["rejected_runs"] == [2, 3]
+    assert res["stat"] == "median_excl_burst_runs[2,3]"
+    assert {0, 1, 4} <= set(res["kept"]) and not {2, 3} & set(res["kept"])
+    assert res["wall"] == bench._median([res["runs"][i] for i in res["kept"]])
+    assert res["wall"] < 0.3
+    assert len(res["io_brackets"]) == len(res["runs"])
+    assert res["cpu_probe"] == 0.1 and "cold" not in res
+
+    def boom():
+        raise RuntimeError("boom")
+
+    res = bench.time_entry("broken", boom)
+    assert res["failed"] == "RuntimeError: boom"
+    assert "wall" not in res and "runs" not in res
+
+    assert "similarity_ivfpq_topk" in bench.COLD_STEADY
+    res = bench.time_entry(
+        "similarity_ivfpq_topk", sleeper([0.4, 0.05, 0.06, 0.05])
+    )
+    assert len(res["runs"]) >= 4
+    assert res["cold"] == res["runs"][0] >= 0.4
+    assert 0 not in res["kept"]
+    assert res["wall"] == bench._median([res["runs"][i] for i in res["kept"]])
+    assert res["wall"] < 0.4
+    assert res["stat"] == "steady_median_excl_cold_run0"
 
 
 # ---------------------------------------------------------------- #
@@ -328,45 +385,6 @@ def test_adc_codebook_drift_raises_loudly(spark, tmp_path):
     S.load_trained_index  # noqa: B018 — dicts already trained above
     with _pytest.raises(Exception, match="codebook/codes drift"):
         S.ivfpq_search_artifact(spark, path, qv).collect()
-
-
-def test_layout_ab_block_measures_both_layouts(spark, monkeypatch, tmp_path):
-    """r16 verdict item 3: the layout A/B must rewrite bounded-row-
-    group copies (layoutProbe-verified), time each query on BOTH
-    layouts, and report per-query walls + ratios. Mechanics tested
-    with cheap stand-in queries; the real 7-query block runs inside
-    bench.py each round."""
-    import bench
-    from tests.conftest import SF_SMALL
-
-    def _q(s, d):
-        return s.read.parquet(f"{d}/lineitem.parquet").groupBy().count()
-
-    monkeypatch.setattr(bench, "LAYOUT_AB_QUERIES", ["qx", "qy"])
-    monkeypatch.setattr(bench, "LAYOUT_AB_ROW_GROUP", 1_000)
-
-    def med(xs):
-        s = sorted(xs)
-        m = len(s) // 2
-        return s[m] if len(s) % 2 else round((s[m - 1] + s[m]) / 2, 3)
-
-    r = bench._layout_ab_block(spark, {"qx": _q, "qy": _q}, SF_SMALL, med)
-    assert r["row_group_size"] == 1_000
-    # sf0.001 lineitem = 6000 rows -> 6 groups in the bounded copy
-    assert r["lineitem_layout"]["driver"]["row_groups"] == 1
-    assert r["lineitem_layout"]["bounded"]["row_groups"] == 6
-    assert r["lineitem_layout"]["bounded"]["max_scan_tasks"] == 6
-    for q in ("qx", "qy"):
-        row = r["queries"][q]
-        assert row["driver_rg1"] > 0 and row["bounded_rg20k"] > 0
-        assert len(row["runs_driver"]) == len(row["runs_bounded"]) == 3
-        assert row["ratio"] > 0
-    assert r["median_ratio"] > 0
-    # the temp copy is cleaned up
-    import glob as _glob
-    import tempfile as _tf
-
-    assert not _glob.glob(os.path.join(_tf.gettempdir(), "bench_layout_ab_*"))
 
 
 def test_scan_parallelism_sampling_mode(tmp_path):

@@ -29,13 +29,15 @@ Scored methods: ``similarity_ivfpq_topk`` (the trained-funnel capstone)
 and ``similarity_lsh_multiprobe`` (the multi-table production LSH) —
 the two entries r11 gates at ≥ 0.70 / ≥ 0.60 recall@5.
 
-Standalone: python tools/ann_stress.py [factor] [seed]
-From bench.py: run_stress_ann(spark, sf_dir, factor, seed) → dict
-recorded as ``ann_recall_10x`` next to ``lsh_recall_10x``.
+Standalone: python tools/ann_stress.py [factor] [seed] > out.json
+prints the report as JSON; ``python tools/stress_record.py --no-ann
+ann_recall_10x=out.json`` merges it into the committed STRESS record
+(tools/stress_record.py [factor] [seed] runs it in-process instead).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
@@ -210,7 +212,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="ann_stress")
     try:
-        print(run_stress_ann(spark, sf_dir, factor=factor, seed=seed))
+        print(json.dumps(run_stress_ann(spark, sf_dir, factor=factor, seed=seed)))
         return 0
     finally:
         spark.stop()

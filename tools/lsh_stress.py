@@ -30,12 +30,14 @@ without adding information; the statistical knob there (probe
 schedule vs recall) is instead tracked by
 similarity_ann_recall_report.
 
-Standalone: python tools/lsh_stress.py [factor] [seed]
-From bench.py: build_stress_corpus(...) → (dir, planted_truth_pairs).
+Standalone: python tools/lsh_stress.py [factor] [seed] > out.json
+prints the report as JSON; ``python tools/stress_record.py --no-ann
+lsh_recall_10x=out.json`` merges it into the committed STRESS record.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
@@ -216,7 +218,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="lsh_stress")
     try:
-        print(run_stress(spark, sf_dir, factor=factor, seed=seed))
+        print(json.dumps(run_stress(spark, sf_dir, factor=factor, seed=seed)))
         return 0
     finally:
         spark.stop()

@@ -6,11 +6,13 @@ Usage:
     python tools/measure.py plan --out-dir plans/r20 before q1_pricing_summary ...
     python tools/measure.py plan --out-dir plans/r20 after  q1_pricing_summary ...
 
-`time` prints per-query walls (warmup + 3 timed noop runs, median) with
-the same cache hygiene as bench.py. `plan <tag>` writes
-<out-dir>/<name>_<tag>.txt with explain("formatted") — the committed
-evidence an optimization round's claims are checked against. The name
-HEADLINE stands for bench.py's headline queries.
+`time` times each query with bench.py's own loop (`bench.time_entry`:
+cache hygiene, probes, burst-filtered median) in cold-steady mode: run
+0 is `cold`, `steady` is the median of the kept later runs, and `runs`
+lists them all. `plan <tag>` writes <out-dir>/<name>_<tag>.txt with
+explain("formatted") — the committed evidence an optimization round's
+claims are checked against. The name HEADLINE stands for bench.py's
+headline queries.
 """
 
 from __future__ import annotations
@@ -19,10 +21,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from mysqldatasynctool_spark.operators import (  # noqa: E402
     collect_registry,
     reset_trained_state,
@@ -31,12 +33,6 @@ from mysqldatasynctool_spark.operators import (  # noqa: E402
 from mysqldatasynctool_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _median(xs):
-    s = sorted(xs)
-    m = len(s) // 2
-    return s[m] if len(s) % 2 else round((s[m - 1] + s[m]) / 2, 3)
 
 
 def _args():
@@ -57,37 +53,40 @@ def main() -> None:
     queries, _ = collect_registry()
     names = args.names
     if names == ["HEADLINE"]:
-        from bench import HEADLINE
-
-        names = [n for n in HEADLINE if n in queries]
+        names = [n for n in bench.HEADLINE if n in queries]
     if args.mode == "plan":
         os.makedirs(args.out_dir, exist_ok=True)
     out = {}
     for name in names:
+        fn = queries[name]
+        if args.mode == "time":
+            spark.sparkContext.setJobDescription(f"measure:{name}")
+            res = bench.time_entry(
+                name,
+                lambda: fn(spark, SF_DIR).write.mode("overwrite").format("noop").save(),
+                spark,
+                cold_steady=True,
+            )
+            out[name] = (
+                {"failed": res["failed"]}
+                if "failed" in res
+                else {"cold": res["cold"], "steady": res["wall"], "runs": res["runs"]}
+            )
+            print(f"{name}: {out[name]}", flush=True)
+            continue
         spark.catalog.clearCache()
         teardown_caches()
         reset_trained_state()
-        fn = queries[name]
-        if args.mode == "plan":
-            df = fn(spark, SF_DIR)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
+        df = fn(spark, SF_DIR)
+        plan = df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
             )
-            path = os.path.join(args.out_dir, f"{name}_{args.tag}.txt")
-            with open(path, "w") as f:
-                f.write(plan)
-            print(f"wrote {path}")
-            continue
-        spark.sparkContext.setJobDescription(f"measure:{name}")
-        runs = []
-        for i in range(4):  # run 0 = warmup/cold, kept visible
-            t0 = time.monotonic()
-            fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-            runs.append(round(time.monotonic() - t0, 3))
-        out[name] = {"cold": runs[0], "steady": _median(runs[1:]), "runs": runs}
-        print(f"{name}: steady={out[name]['steady']} runs={runs}", flush=True)
+        )
+        path = os.path.join(args.out_dir, f"{name}_{args.tag}.txt")
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"wrote {path}")
     if args.mode == "time":
         print("MEASURE: " + json.dumps(out))
     spark.stop()

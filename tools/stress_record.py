@@ -1,13 +1,14 @@
-"""Committed stress record (r16 verdict item 4): the ×300 ANN stress
-existed behind SPARK_GRAFT_STRESS_300X but no committed record carried
-it — the 0.8842 recall lived only in CHANGELOG prose. This runner
+"""Committed stress record (r16 verdict item 4), the one home of the
+beyond-fixture recall studies (bench.py does not run them): the ×300
+ANN recall once lived only in CHANGELOG prose. This runner
 executes the ANN stress at a given factor BRACKETED by the bench
 cpu/io probes (so a reader can verify the box was quiet) and persists
 ``STRESS_r{N}.json`` at the repo root.
 
 Usage: python tools/stress_record.py [factor] [seed]   (default 300 8)
 Optionally merges extra blocks from files named on argv as
-``key=path.json`` (e.g. ``anomaly_skew_isolated=/tmp/skew.json``).
+``key=path.json`` (e.g. ``anomaly_skew_isolated=/tmp/skew.json``, or
+``lsh_recall_10x=/tmp/lsh.json`` from ``tools/lsh_stress.py 10 8``).
 
 ``--no-ann`` (r18): skip the ANN rerun and carry forward the newest
 committed ``ann_recall_*`` block by reference — for rounds whose stress
