@@ -4,13 +4,16 @@ create.go:17-30, version.go:14-26):
 
     python -m mysqldatasynctool_spark migrate    --config cfg.yml
     python -m mysqldatasynctool_spark compareDb  --config cfg.yml
-    python -m mysqldatasynctool_spark createTable --config cfg.yml [-t]
+    python -m mysqldatasynctool_spark createTable --src-dir DIR [-t]
     python -m mysqldatasynctool_spark version
 
-Backends: ``--src-dir/--dest-dir`` run against parquet directories
-(fixtures/lakehouse staging); when the YAML carries real MySQL
-endpoints and a JDBC driver jar is on the classpath, the same commands
-drive sources/jdbc.py + sources/sinks.py instead.
+The endpoints pick the engine path, never the verb (``_endpoints``):
+with ``--src-dir/--dest-dir``, migrate and compareDb run against
+parquet directories; otherwise they drive sources/jdbc.py +
+sources/sinks.py between the config's ``src``/``dest`` databases,
+either side overridable by ``--src-url``/``--dest-url`` (a MySQL
+endpoint needs the Connector/J jar on the classpath). createTable
+reads parquet schemas from ``--src-dir``.
 
 The run report mirrors the reference's gotable summary
 (Object/BeginTime/EndTime/FailedTotal/ElapsedTime, root.go:161-207).
@@ -49,7 +52,7 @@ def _print_report(title: str, rows: list[tuple], headers: tuple[str, ...]) -> No
 
 
 def _report_and_exit(reports, verdict, t0: float) -> int:
-    """Shared run-report tail for migrate/migrateDb (the reference's
+    """migrate's run-report tail (the reference's
     gotable summary + verification verdict + failed-object count)."""
     rows = [
         (r.table, r.rows, f"{r.elapsed_s:.3f}s", "OK" if r.ok else f"FAILED: {r.error}")
@@ -69,19 +72,56 @@ def _report_and_exit(reports, verdict, t0: float) -> int:
     return 1 if failed else 0
 
 
-def cmd_migrate(args) -> int:
+def _endpoints(p: argparse.ArgumentParser, args) -> tuple:
+    """The one rule for which engine path ``migrate`` and ``compareDb``
+    take: the endpoints pick it, never the verb.
+
+    - ``--src-dir`` given: parquet directories; ``--dest-dir`` is then
+      required;
+    - otherwise JDBC: each side from ``--src-url``/``--dest-url``,
+      falling back to the config's ``src``/``dest``. Without a config
+      both URLs are required, so no run ever dials the
+      ``localhost:3306`` default of an unnamed side.
+
+    A flag of the other mode is refused, never silently ignored.
+    Returns (cfg, src, dest): directory paths or JDBC Endpoints.
+    """
+    from .config import Endpoint
+
     cfg = load_config(args.config) if args.config else SyncConfig()
-    spark = get_spark(app_name="migrate")
-    t0 = time.monotonic()
-    reports, verdict = migrate_directory(
-        spark,
-        args.src_dir,
-        args.dest_dir,
-        cfg=cfg,
-        resume=getattr(args, "resume", False),
-        versioned=getattr(args, "versioned", False),
+    cmd = args.command
+    jdbc_only = [
+        flag
+        for flag, given in (
+            ("--src-url", args.src_url),
+            ("--dest-url", args.dest_url),
+            ("--pk-map", getattr(args, "pk_map", None)),
+            ("--tables", getattr(args, "tables", None)),
+        )
+        if given
+    ]
+    if args.src_dir:
+        if jdbc_only:
+            p.error(f"{cmd}: {jdbc_only[0]} is for JDBC endpoints, not --src-dir")
+        if not args.dest_dir:
+            p.error(f"{cmd}: --src-dir needs --dest-dir")
+        return cfg, args.src_dir, args.dest_dir
+    if args.dest_dir:
+        p.error(f"{cmd}: --dest-dir needs --src-dir")
+    if getattr(args, "versioned", False):
+        p.error(f"{cmd}: --versioned writes parquet snapshots; it needs --src-dir")
+    missing = [f for f, url in (("--src-url", args.src_url), ("--dest-url", args.dest_url)) if not url]
+    if missing and not args.config:
+        p.error(
+            f"{cmd}: {' and '.join(missing)} required without --config "
+            "(or --src-dir/--dest-dir for parquet directories); "
+            "refusing the localhost default"
+        )
+    src, dest = (
+        Endpoint(url_override=url, driver=args.driver) if url else side
+        for url, side in ((args.src_url, cfg.src), (args.dest_url, cfg.dest))
     )
-    return _report_and_exit(reports, verdict, t0)
+    return cfg, src, dest
 
 
 def _parse_pk_map(spec: str) -> dict[str, list[str]]:
@@ -94,67 +134,84 @@ def _parse_pk_map(spec: str) -> dict[str, list[str]]:
     return out
 
 
-def _require_full_endpoints(args) -> None:
-    """JDBC mode with only ONE of --src-url/--dest-url and no config
-    file would make the other side SyncConfig()'s default Endpoint —
-    localhost:3306 MySQL, empty database. That silent fallback turns a
-    typo into a compare/migrate against a database the user never
-    named; fail loudly instead (the config file is the only legitimate
-    source for the unspecified side)."""
-    src_url = getattr(args, "src_url", None)
-    dest_url = getattr(args, "dest_url", None)
-    if (bool(src_url) ^ bool(dest_url)) and not args.config:
-        missing = "--dest-url" if src_url else "--src-url"
-        raise SystemExit(
-            f"JDBC mode: {missing} is required (or pass --config with "
-            "the other endpoint); refusing the localhost default"
-        )
-
-
-def _endpoints(args, cfg: SyncConfig):
-    """The (src, dest) JDBC endpoints: each ``--src-url``/``--dest-url``
-    flag overrides its config side (same fallback rule for migrateDb
-    and compareDb — never a silent localhost default)."""
-    from .config import Endpoint
-
-    _require_full_endpoints(args)
-    return tuple(
-        Endpoint(url_override=url, driver=args.driver) if url else side
-        for url, side in ((args.src_url, cfg.src), (args.dest_url, cfg.dest))
-    )
-
-
-def cmd_migrate_db(args) -> int:
-    """DB→DB over real JDBC — the reference's actual job
-    (root.go:375-507). PKs come from --pk-map when given (required for
-    databases without MySQL's information_schema, e.g. Derby), else
-    from live information_schema discovery on the source."""
+def _jdbc_tables(spark, args, cfg: SyncConfig, src) -> dict[str, list[str]]:
+    """The JDBC table set of both verbs, table → PK columns: from
+    ``--pk-map`` (migrate) or ``--tables`` (compareDb, PKs unused),
+    else live information_schema discovery on the source (MySQL
+    sources; databases without it, e.g. Derby, pass the flag). Minus
+    ``cfg.exclude``; every name must pass ``_check_ident``."""
     from .catalog import discover_jdbc_pks
+    from .migrate import _check_ident
+
+    if getattr(args, "pk_map", None):
+        pk_map = _parse_pk_map(args.pk_map)
+    elif getattr(args, "tables", None):
+        pk_map = {t.strip(): [] for t in args.tables.split(",") if t.strip()}
+    else:
+        pk_map = discover_jdbc_pks(spark, src, exclude=tuple(cfg.exclude))
+    pk_map = {t: pk for t, pk in pk_map.items() if t not in cfg.exclude}
+    for t in pk_map:
+        _check_ident(t)
+    return pk_map
+
+
+def cmd_migrate(args) -> int:
+    """Copy the source into the destination, then verify — the
+    reference's default command (root.go:58-208), between parquet
+    directories or JDBC databases as ``_endpoints`` decides. JDBC PKs
+    come from --pk-map, else from the source's information_schema."""
     from .migrate import migrate_jdbc
 
-    cfg = load_config(args.config) if args.config else SyncConfig()
-    src, dest = _endpoints(args, cfg)
-    spark = get_spark(app_name="migrateDb")
+    spark = get_spark(app_name="migrate")
     t0 = time.monotonic()
-    pk_map = (
-        _parse_pk_map(args.pk_map)
-        if args.pk_map
-        else discover_jdbc_pks(spark, src, exclude=tuple(cfg.exclude))
-    )
-    reports, verdict = migrate_jdbc(
-        spark,
-        src,
-        dest,
-        pk_map,
-        cfg=cfg,
-        page_size=cfg.page_size,
-        resume=getattr(args, "resume", False),
-    )
+    if args.src_dir:
+        reports, verdict = migrate_directory(
+            spark, args.src, args.dest, cfg=args.cfg, resume=args.resume, versioned=args.versioned
+        )
+    else:
+        reports, verdict = migrate_jdbc(
+            spark,
+            args.src,
+            args.dest,
+            _jdbc_tables(spark, args, args.cfg, args.src),
+            cfg=args.cfg,
+            page_size=args.cfg.page_size,
+            resume=args.resume,
+        )
     return _report_and_exit(reports, verdict, t0)
 
 
-def _compare_report(spark, src: dict, dest: dict) -> int:
-    """Shared compareDb tail: verdict → report(s) → exit code."""
+def cmd_compare(args) -> int:
+    """Count+checksum compare of every source table against the
+    destination (compare.go:19-27), over the endpoints ``_endpoints``
+    picked. Only a missing destination table reads DestIsExist=NO
+    (compare.go:122-126); an unreadable one, or an auth/connectivity/
+    driver failure, surfaces as an error."""
+    cfg = args.cfg
+    spark = get_spark(app_name="compareDb")
+    if args.src_dir:
+        tables = [t for t in discover_parquet_tables(args.src) if t not in set(cfg.exclude)]
+        src = {t: load(spark, args.src, t) for t in tables}
+        dest = {
+            t: load(spark, args.dest, t)
+            for t in tables
+            if os.path.exists(os.path.join(args.dest, f"{t}.parquet"))
+        }
+    else:
+        from .ddl import _is_missing_table_error
+        from .sources.jdbc import read_table
+
+        tables = _jdbc_tables(spark, args, cfg, args.src)
+        src = {t: read_table(spark, args.src, t) for t in tables}
+        dest = {}
+        for t in tables:
+            try:
+                d = read_table(spark, args.dest, t)
+                d.schema  # force resolution → missing table raises here
+                dest[t] = d
+            except Exception as exc:
+                if not _is_missing_table_error(exc):
+                    raise
     verdict = compare_tables(spark, src, dest)
     rows = [tuple(r) for r in verdict.collect()]
     _print_report("compareDb", rows, tuple(verdict.columns))
@@ -162,60 +219,6 @@ def _compare_report(spark, src: dict, dest: dict) -> int:
     if bad:
         _print_report("compareDb failed items", bad, tuple(verdict.columns))
     return 1 if bad else 0
-
-
-def cmd_compare(args) -> int:
-    cfg = load_config(args.config) if args.config else SyncConfig()
-    spark = get_spark(app_name="compareDb")
-    if getattr(args, "src_url", None) or getattr(args, "dest_url", None):
-        # JDBC mode — the reference's actual compareDb (two live
-        # databases, compare.go:19-27). Table list from --tables or
-        # live information_schema discovery (MySQL sources). URL flags
-        # override the config endpoint side-by-side (same fallback rule
-        # as migrateDb) — never a silent localhost default.
-        from .catalog import discover_jdbc_pks
-        from .ddl import _is_missing_table_error
-        from .migrate import _check_ident
-        from .sources.jdbc import read_table
-
-        src_ep, dest_ep = _endpoints(args, cfg)
-        tables = (
-            [t.strip() for t in args.tables.split(",") if t.strip()]
-            if args.tables
-            else sorted(discover_jdbc_pks(spark, src_ep, tuple(cfg.exclude)))
-        )
-        for t in tables:
-            _check_ident(t)
-        src = {t: read_table(spark, src_ep, t) for t in tables}
-        dest = {}
-        for t in tables:
-            try:
-                d = read_table(spark, dest_ep, t)
-                d.schema  # force resolution → missing table raises here
-                dest[t] = d
-            except Exception as exc:
-                # ONLY missing-table means DestIsExist=NO
-                # (compare.go:122-126); auth/connectivity/driver
-                # failures must surface, not read as 'all tables
-                # missing on dest'
-                if not _is_missing_table_error(exc):
-                    raise
-        return _compare_report(spark, src, dest)
-    tables = [
-        t
-        for t in discover_parquet_tables(args.src_dir)
-        if t not in set(cfg.exclude)
-    ]
-    src = {t: load(spark, args.src_dir, t) for t in tables}
-    # ONLY a missing path means DestIsExist=NO (compare.go:122-126); a
-    # corrupt or unreadable dest table must surface, as in JDBC mode
-    dest = {
-        t: load(spark, args.dest_dir, t)
-        for t in tables
-        if os.path.exists(os.path.join(args.dest_dir, f"{t}.parquet"))
-    }
-    return _compare_report(spark, src, dest)
-
 
 def cmd_create_table(args) -> int:
     cfg = load_config(args.config) if args.config else SyncConfig()
@@ -443,11 +446,24 @@ def main(argv: list[str] | None = None) -> int:
 
     common = {
         "--config": dict(default=None, help="reference-format YAML config"),
-        "--src-dir": dict(default="/root/testdata/sf0.001", help="source parquet dir"),
-        "--dest-dir": dict(default="/tmp/mysqldatasynctool_spark_dest", help="dest parquet dir"),
+        "--src-dir": dict(default=None, help="source parquet dir (directory mode)"),
+        "--dest-dir": dict(default=None, help="dest parquet dir (directory mode)"),
+    }
+    jdbc = {
+        "--src-url": dict(default=None, help="source JDBC URL (else config src)"),
+        "--dest-url": dict(default=None, help="dest JDBC URL (else config dest)"),
+        "--driver": dict(
+            default="com.mysql.cj.jdbc.Driver",
+            help="JDBC driver class for --src-url/--dest-url",
+        ),
     }
 
-    pm = sub.add_parser("migrate", help="full migration (the reference's default command)")
+    pm = sub.add_parser(
+        "migrate",
+        help="copy + verify the source into the destination (the "
+        "reference's default command): parquet dirs with --src-dir, "
+        "else JDBC from --config/--src-url/--dest-url",
+    )
     pm.add_argument(
         "--resume",
         action="store_true",
@@ -457,44 +473,20 @@ def main(argv: list[str] | None = None) -> int:
         "--versioned",
         action="store_true",
         help="write each table as a new immutable snapshot version "
-        "(atomic manifest publish; time travel + rollback)",
+        "(atomic manifest publish; time travel + rollback; --src-dir only)",
     )
-    pj = sub.add_parser(
-        "migrateDb",
-        help="DB-to-DB migration over JDBC (the reference's real job shape)",
-    )
-    pj.add_argument(
-        "--resume",
-        action="store_true",
-        help="skip tables whose destination already checksum-matches",
-    )
-    pj.add_argument("--src-url", default=None, help="source JDBC URL (else config src)")
-    pj.add_argument("--dest-url", default=None, help="dest JDBC URL (else config dest)")
-    pj.add_argument(
-        "--driver",
-        default="com.mysql.cj.jdbc.Driver",
-        help="JDBC driver class for --src-url/--dest-url endpoints",
-    )
-    pj.add_argument(
+    pm.add_argument(
         "--pk-map",
         default=None,
-        help="explicit PKs: 'orders=o_orderkey;lineitem=l_orderkey+l_linenumber'"
+        help="JDBC PKs: 'orders=o_orderkey;lineitem=l_orderkey+l_linenumber'"
         " (omit to discover from the source's information_schema)",
     )
-    pj.add_argument("--config", default=None, help="reference-format YAML config")
 
     pc = sub.add_parser("compareDb", help="count+checksum compare of src vs dest")
-    pc.add_argument("--src-url", default=None, help="source JDBC URL (JDBC mode)")
-    pc.add_argument("--dest-url", default=None, help="dest JDBC URL (JDBC mode)")
-    pc.add_argument(
-        "--driver",
-        default="com.mysql.cj.jdbc.Driver",
-        help="JDBC driver class for --src-url/--dest-url",
-    )
     pc.add_argument(
         "--tables",
         default=None,
-        help="comma-separated table list for JDBC mode (omit to discover "
+        help="comma-separated JDBC table list (omit to discover "
         "from the source's information_schema)",
     )
     pt = sub.add_parser("createTable", help="emit DDL replication statements")
@@ -580,6 +572,9 @@ def main(argv: list[str] | None = None) -> int:
     for sp in (pm, pc, pt):
         for flag, kw in common.items():
             sp.add_argument(flag, **kw)
+    for sp in (pm, pc):
+        for flag, kw in jdbc.items():
+            sp.add_argument(flag, **kw)
 
     args = p.parse_args(argv)
     if getattr(args, "config", None):
@@ -587,6 +582,10 @@ def main(argv: list[str] | None = None) -> int:
 
         if not os.path.isfile(args.config):
             p.error(f"config file not found: {args.config}")
+    if args.command in ("migrate", "compareDb"):
+        args.cfg, args.src, args.dest = _endpoints(p, args)
+    if args.command == "createTable" and not args.src_dir:
+        p.error("createTable: --src-dir is required (it reads parquet schemas)")
     if args.command == "query" and not (args.list or args.name):
         p.error("query: give a NAME or --list")
     if args.command == "planVolume" and not (args.sql or args.name):
@@ -599,7 +598,6 @@ def main(argv: list[str] | None = None) -> int:
         p.error("planVolume: --project-to-bytes must be positive")
     return {
         "migrate": cmd_migrate,
-        "migrateDb": cmd_migrate_db,
         "compareDb": cmd_compare,
         "createTable": cmd_create_table,
         "query": cmd_query,

@@ -7,8 +7,11 @@ example.yml:1-23). Key mapping into Spark (SURVEY.md §1.3):
 - ``pageSize``      → rows per read partition (JDBC partitioned scan)
 - ``maxParallel``   → ``numPartitions`` bound / writer parallelism
 - ``batchRowSize``  → JDBC writer ``batchsize``
-- ``tables``        → custom-SQL passthrough per table (``-s`` mode)
 - ``exclude``       → catalog exclusion filter (NOT IN)
+
+``tables`` (per-table custom SQL) is read by the reference's ``-s``
+mode only (root.go:95-96), which is not supported here: a config
+carrying the key loads, and the key is ignored.
 """
 
 from __future__ import annotations
@@ -78,7 +81,6 @@ class SyncConfig:
     page_size: int = 100_000  # example.yml:13
     max_parallel: int = 30  # example.yml:14
     batch_row_size: int = 1000  # example.yml:15; root.go:563 "sweet spot"
-    tables: dict[str, str] = field(default_factory=dict)  # table -> custom SQL
     exclude: tuple[str, ...] = ()
 
     def __post_init__(self):
@@ -104,13 +106,6 @@ def load_config(path: str) -> SyncConfig:
         raise RuntimeError("PyYAML not available")
     with open(path) as f:
         raw = yaml.safe_load(f) or {}
-    tables_raw = raw.get("tables") or {}
-    # reference format: table -> list with one custom-SQL string
-    # (example.yml:16-20, consumed at root.go:95-96)
-    tables = {
-        t: (sqls[0] if isinstance(sqls, list) and sqls else f"select * from {t}")
-        for t, sqls in tables_raw.items()
-    }
     exclude_raw = raw.get("exclude") or ()
     if isinstance(exclude_raw, str):
         # viper reads the reference's unindented block as one string
@@ -123,6 +118,5 @@ def load_config(path: str) -> SyncConfig:
         page_size=int(raw.get("pageSize", 100_000)),
         max_parallel=int(raw.get("maxParallel", 30)),
         batch_row_size=int(raw.get("batchRowSize", 1000)),
-        tables=tables,
         exclude=exclude,
     )

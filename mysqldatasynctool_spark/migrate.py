@@ -9,8 +9,9 @@ differs between endpoints: how it reads the source, how it plans that
 read (JDBC only), how it writes the observed frame and which
 destination frame it verifies. Per table the core runs
 
-1. ``resume_check`` (``resume=True`` only): one src ∪ dest checksum
-   job; a match reports the table verified without rewriting it;
+1. ``resume_check`` (``resume=True`` only): the ``compare_tables``
+   verdict of source and destination; a match reports the table
+   verified without rewriting it;
 2. ``plan``: the path's read plan;
 3. ``copy``: one Spark job whose partitions are the pages; the source
    count+checksum ride that scan via ``observe()``; a failed copy is
@@ -101,27 +102,15 @@ class _Path:
 
 
 def _resume_verdict_row(path: _Path, t: str) -> tuple | None:
-    """src ∪ dest checksum compare in ONE job; None if the dest is
+    """The table's ``compare_tables`` verdict row; None if the dest is
     unreadable/absent (→ recopy)."""
-    from pyspark.sql import functions as F
-
-    from .operators.compare import table_summary
+    from .operators.compare import compare_tables
 
     try:
-        s, d = (
-            table_summary(path.read(t, None), t)
-            .withColumn("side", F.lit("src"))
-            .unionByName(
-                table_summary(path.dest(t, None), t).withColumn("side", F.lit("dest"))
-            )
-            .collect()
-        )
+        src = path.read(t, None)
+        return tuple(compare_tables(src.sparkSession, {t: src}, {t: path.dest(t, None)}).collect()[0])
     except Exception:  # noqa: BLE001 — absent/corrupt dest → recopy
         return None
-    if s.side != "src":
-        s, d = d, s
-    ok = s.cnt == d.cnt and s.checksum == d.checksum
-    return (t, s.cnt, d.cnt, s.checksum, d.checksum, "YES", "YES" if ok else "NO")
 
 
 def _copy_verify(path: _Path, t: str, resume: bool) -> tuple[TableReport, tuple | None]:
@@ -271,9 +260,9 @@ def migrate_directory(
         return load(spark, dest_dir, t)
 
     path = _Path(read=lambda t, plan: load(spark, src_dir, t), write=write, dest=read_dest)
-    return _migrate(
-        spark, tables or discover_parquet_tables(src_dir), cfg or SyncConfig(), resume, path
-    )
+    if tables is None:
+        tables = discover_parquet_tables(src_dir)
+    return _migrate(spark, tables, cfg or SyncConfig(), resume, path)
 
 
 def jsonify_nested(df):
@@ -304,11 +293,11 @@ def migrate_jdbc(
     then checksum-verify both sides.
 
     Plan selection per table (plans/partitioning.plan_table):
-    - single numeric PK → range partitions from one COUNT/MIN/MAX
-      aggregate PUSHED DOWN to the source (a 1-row result, not a scan
-      into Spark);
-    - composite PK → lexicographic boundary predicates from a bounded
-      PK sample (``sample_boundaries``);
+    - numeric leading PK → range partitions on it from one
+      COUNT/MIN/MAX aggregate PUSHED DOWN to the source (a 1-row
+      result, not a scan into Spark);
+    - any other PK (or an empty table) → lexicographic boundary
+      predicates from a bounded PK sample (``sample_boundaries``);
     - no PK → single full-scan partition.
 
     PK identifiers inside generated SQL are quoted with the source
@@ -330,16 +319,13 @@ def migrate_jdbc(
 
     def build_plan(t: str):
         pk = pk_map[t]
-        # Tier 1 — numeric-LEADING PK (r18: previously single PK
-        # only): one COUNT/MIN/MAX on pk[0] pushed down to the source
-        # → JDBC range partitions on the leading column. Range
-        # partitions on a non-unique leading member tile the keyspace
-        # exactly like the composite boundary predicates, for one
-        # 1-row probe instead of the sampling path's two full narrow
-        # scans (measured: lineitem plan phase 1.31 s → ~0.1 s). The
-        # probe itself can fail on the PK's SQL type (Derby refuses
-        # MIN on CLOB), which only means this FAST path is
-        # unavailable, not that the table can't be paged.
+        # Tier 1 — numeric-LEADING PK: one COUNT/MIN/MAX on pk[0]
+        # pushed down to the source → JDBC range partitions on the
+        # leading column (measured: lineitem plan phase 1.31 s → ~0.1 s
+        # against boundary sampling). The probe itself can fail on the
+        # PK's SQL type (Derby refuses MIN on CLOB), which only means
+        # this FAST path is unavailable, not that the table can't be
+        # paged.
         if pk:
             try:
                 stats = read_table(
@@ -374,7 +360,6 @@ def migrate_jdbc(
                     row_count=stats.c,
                     pk_min=stats.lo,
                     pk_max=stats.hi,
-                    range_on_leading=True,
                 )
             # Tier 2 — any PK (incl. single string/date/uuid, or an
             # empty table): lexicographic boundary predicates work for

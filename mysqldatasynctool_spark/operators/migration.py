@@ -549,41 +549,35 @@ MAX_PARALLEL = 30
 
 def migration_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The partition PLANNER's decision surface as a queryable report —
-    one row per catalog table with the strategy ``plans/partitioning.
-    plan_table`` would pick and the numbers that drive it: mode
-    (``range`` for a single numeric PK, ``predicates`` for a composite
-    PK — the reference's deferred-join pagination analogue,
-    root.go:341-357), row count, page count
-    (``ceil(rows/pageSize)``), the clamped partition count
-    (``clamp(pages, 1, maxParallel)``), and the PK range bounds the
-    JDBC reader would use. Previously this logic was pytest-gated
-    only (test_plan_table_modes); this entry puts the same arithmetic
-    under the driver's cross-engine hash-compare.
-
-    All integer arithmetic; bounds are MIN/MAX of the leading PK
-    column (reported for composite tables too — the boundary-probe
-    anchor — with mode still ``predicates``). Note (r18): the RUNTIME
-    planner additionally fast-paths numeric-LEADING composite keys to
-    range mode (``plan_table(range_on_leading=True)``, see its
-    docstring); this report keeps the classic decision surface — its
-    oracle-pinned output predates the fast path — and the bounds it
-    reports are exactly the probe that fast path uses.
+    one row per catalog table with the strategy the JDBC migrate path
+    picks through ``plans/partitioning.plan_table`` and the numbers
+    that drive it: mode (``range`` when the leading PK column is
+    numeric and the table non-empty — migrate_jdbc's tier 1 —, else
+    ``predicates``, the reference's deferred-join pagination analogue,
+    root.go:341-357), row count, page count (``ceil(rows/pageSize)``),
+    the clamped partition count (``clamp(pages, 1, maxParallel)``), and
+    the leading-PK range bounds the JDBC reader uses. This puts the
+    planner's arithmetic under the driver's cross-engine hash-compare.
 
     100 TB: each row is one metadata-cheap aggregate (count + min/max
     over a single indexed/sorted column); the union is 10 tiny
     1-row frames. This is exactly the planning query a scheduler runs
     BEFORE touching data.
     """
+    from pyspark.sql.types import NumericType
+
     out = None
     for t, pks in FIXTURE_PRIMARY_KEYS.items():
         df = load(spark, sf_dir, t)
         lead_pk = pks[0]
-        mode = "predicates" if len(pks) > 1 else "range"
+        numeric = isinstance(df.schema[lead_pk].dataType, NumericType)
         n = F.count("*")
         pages = F.ceil(n / F.lit(PAGE_SIZE))
         row = df.agg(
             F.lit(t).alias("tbl"),
-            F.lit(mode).alias("mode"),
+            F.when(F.lit(numeric) & F.min(lead_pk).isNotNull(), "range")
+            .otherwise("predicates")
+            .alias("mode"),
             F.lit("+".join(pks)).alias("pk"),
             n.alias("n_rows"),
             pages.alias("n_pages"),
@@ -597,13 +591,19 @@ def migration_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("tbl")
 
 
+#: DuckDB's numeric type names as ``typeof`` prints them
+_DUCKDB_NUMERIC = "^(U?(TINYINT|SMALLINT|INTEGER|BIGINT|HUGEINT)|FLOAT|DOUBLE|DECIMAL.*)$"
+
+
 def _partition_advisor_oracle() -> str:
     selects = []
     for t, pks in sorted(FIXTURE_PRIMARY_KEYS.items()):
         lead_pk = pks[0]
-        mode = "predicates" if len(pks) > 1 else "range"
         selects.append(
-            f"SELECT '{t}' AS tbl, '{mode}' AS mode, '{'+'.join(pks)}' AS pk,\n"
+            f"SELECT '{t}' AS tbl,\n"
+            f"  CASE WHEN regexp_matches(typeof(MIN({lead_pk})), '{_DUCKDB_NUMERIC}')\n"
+            f"        AND MIN({lead_pk}) IS NOT NULL THEN 'range' ELSE 'predicates' END AS mode,\n"
+            f"  '{'+'.join(pks)}' AS pk,\n"
             f"  COUNT(*) AS n_rows,\n"
             f"  CAST(CEIL(COUNT(*) / {PAGE_SIZE}.0) AS BIGINT) AS n_pages,\n"
             f"  CAST(LEAST(GREATEST(CEIL(COUNT(*) / {PAGE_SIZE}.0), 1), {MAX_PARALLEL}) AS BIGINT) AS num_partitions,\n"

@@ -1603,22 +1603,24 @@ sel(qid, rank, vec_id, mmr_score, sel_ids) AS (
     FROM cand
   ) WHERE rn = 1
   UNION ALL
-  SELECT s.qid, s.rank + 1, pick.vec_id, pick.score,
-         list_append(s.sel_ids, pick.vec_id)
-  FROM sel s, LATERAL (
-    SELECT vec_id, score FROM (
-      SELECT c.vec_id,
-             {MMR_LAMBDA} * c.rel - {1.0 - MMR_LAMBDA} * (
-               SELECT MAX(t.sim) FROM simt t
-               WHERE t.qid = c.qid AND t.ia = c.vec_id
+  -- one windowed pick per step over a plain join: the same step as a
+  -- LATERAL (... ORDER BY ... LIMIT 1) with a correlated MAX gave
+  -- run-to-run different picks on multi-threaded DuckDB 1.0
+  SELECT qid, rank + 1, vec_id, score, list_append(sel_ids, vec_id) FROM (
+    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
+                                 ORDER BY FLOOR(score * 1000000000.0) DESC,
+                                          vec_id ASC) AS rn
+    FROM (
+      SELECT s.qid, s.rank, s.sel_ids, c.vec_id,
+             {MMR_LAMBDA} * c.rel - {1.0 - MMR_LAMBDA} * MAX(t.sim) AS score
+      FROM sel s
+      JOIN cand c ON c.qid = s.qid AND NOT list_contains(s.sel_ids, c.vec_id)
+      JOIN simt t ON t.qid = c.qid AND t.ia = c.vec_id
                  AND list_contains(s.sel_ids, t.ib)
-             ) AS score
-      FROM cand c
-      WHERE c.qid = s.qid AND NOT list_contains(s.sel_ids, c.vec_id)
-    ) ORDER BY FLOOR(score * 1000000000.0) DESC, vec_id ASC
-    LIMIT 1
-  ) pick
-  WHERE s.rank < {MMR_K}
+      WHERE s.rank < {MMR_K}
+      GROUP BY s.qid, s.rank, s.sel_ids, c.vec_id, c.rel
+    )
+  ) WHERE rn = 1
 )
 SELECT qid, CAST(rank AS INT) AS rank, vec_id,
        ROUND(mmr_score, 6) AS mmr_score

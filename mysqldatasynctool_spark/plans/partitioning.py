@@ -167,35 +167,27 @@ def plan_table(
     pk_max: int | None = None,
     boundaries: list[tuple] | None = None,
     quote: str = "",
-    range_on_leading: bool = False,
 ) -> PartitionPlan:
     """Choose a partitioning strategy for one table.
 
     Decision tree (reference parity → Spark mechanism):
-    - no PK           → single full-scan partition (root.go:341-345)
-    - 1 numeric PK    → range partitioning (JDBC bounds); partition
-                        count = clamp(ceil(rows/page_size), 1,
-                        max_parallel) — pageSize and maxParallel keep
-                        their reference meanings (example.yml:13-14)
-    - composite PK    → boundary predicates (root.go:347-357 analogue)
+    - no PK             → single full-scan partition (root.go:341-345)
+    - ``pk_min/pk_max`` → range partitioning on the leading PK column
+                          (JDBC bounds); partition count =
+                          clamp(ceil(rows/page_size), 1, max_parallel) —
+                          pageSize and maxParallel keep their reference
+                          meanings (example.yml:13-14)
+    - otherwise         → boundary predicates (root.go:347-357 analogue)
 
-    r18 fast path (``range_on_leading=True``, opt-in): serve COMPOSITE
-    keys whose first member is numeric from the range tier too — range
-    partitions on a non-unique leading column tile the keyspace just
-    as completely (every row falls in exactly one range), and the one
-    pushed-down COUNT/MIN/MAX replaces the boundary-sampling path's
-    two full narrow scans of the source (measured on the bench
-    lineitem chain: plan phase 1.31 s → ~0.1 s). Opt-in rather than
-    default so the classic decision surface — which
-    ``migration_partition_advisor`` reports and its oracle pins —
-    stays exactly what this function computes without the flag.
+    The caller passes bounds when the leading PK column is numeric.
+    Range partitions on a non-unique leading member of a composite key
+    tile the keyspace as completely as the boundary predicates (every
+    row falls in exactly one range), for one pushed-down
+    COUNT/MIN/MAX instead of the boundary sampler's two narrow scans.
     """
     if not pk_cols:
         return PartitionPlan(table=table, mode="single")
-    use_range = pk_min is not None and pk_max is not None and (
-        len(pk_cols) == 1 or range_on_leading
-    )
-    if use_range:
+    if pk_min is not None and pk_max is not None:
         n_pages = max(1, -(-(row_count or 0) // page_size))
         return PartitionPlan(
             table=table,

@@ -50,6 +50,11 @@ def test_create_table_ddl(capsys):
     assert "CREATE TABLE `lineitem`" in out
     assert "PRIMARY KEY (`l_orderkey`, `l_linenumber`)" in out
 
+    with pytest.raises(SystemExit) as e:
+        main(["createTable", "-t"])
+    assert e.value.code == 2
+    assert "--src-dir" in capsys.readouterr().err
+
 
 def test_missing_config_clean_error(capsys):
     with pytest.raises(SystemExit) as e:
@@ -58,10 +63,13 @@ def test_missing_config_clean_error(capsys):
     assert "config file not found" in capsys.readouterr().err
 
 
-def test_cli_migrate_db_jdbc(spark, tmp_path, capsys):
-    """migrateDb end-to-end through real JDBC (Derby), explicit
-    --pk-map (Derby has no MySQL information_schema): both tables land
-    verified YES and the exit code is 0."""
+def test_cli_migrate_db_jdbc(spark, tmp_path, capsys, monkeypatch):
+    """migrate between two databases through real JDBC (Derby),
+    explicit --pk-map (Derby has no MySQL information_schema): both
+    tables land verified YES and the exit code is 0. A config naming
+    only MySQL endpoints takes the JDBC path too: without the MySQL
+    driver jar it fails on the driver class, and it writes no
+    parquet."""
     from mysqldatasynctool_spark.cli import main
     from mysqldatasynctool_spark.config import Endpoint
     from mysqldatasynctool_spark.sources.fixtures import load
@@ -76,7 +84,7 @@ def test_cli_migrate_db_jdbc(spark, tmp_path, capsys):
 
     rc = main(
         [
-            "migrateDb",
+            "migrate",
             "--src-url", src_url,
             "--dest-url", dest_url,
             "--driver", drv,
@@ -87,6 +95,16 @@ def test_cli_migrate_db_jdbc(spark, tmp_path, capsys):
     assert rc == 0
     assert "failed objects: 0" in out
     assert "region" in out and "nation" in out
+
+    cfg = tmp_path / "mysql.yml"
+    cfg.write_text(
+        "src:\n  host: 127.0.0.1\n  port: 1\n  database: s\n"
+        "dest:\n  host: 127.0.0.1\n  port: 1\n  database: d\n"
+    )
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(Exception, match="com.mysql.cj.jdbc.Driver"):
+        main(["migrate", "--config", str(cfg)])
+    assert not list(tmp_path.rglob("*.parquet"))
 
 
 def test_cli_pk_map_parse():
@@ -99,22 +117,29 @@ def test_cli_pk_map_parse():
     assert _parse_pk_map("nopk=") == {"nopk": []}
 
 
-def test_discover_jdbc_pks_grouping():
-    """The grouped PK scan must reassemble composite keys in ordinal
-    order and give PK-less tables an empty entry (full-scan tier) —
-    verified driver-side on the row shape the information_schema
-    query returns (no MySQL in this sandbox)."""
-    rows = [
-        ("lineitem", "l_linenumber", 2),
-        ("lineitem", "l_orderkey", 1),
-        ("orders", "o_orderkey", 1),
-    ]
-    by_table = {}
-    for r in sorted(rows, key=lambda r: (r[0], r[2])):
-        by_table.setdefault(r[0], []).append(r[1])
-    tables = ["lineitem", "orders", "no_pk_log"]
-    pk_map = {t: by_table.get(t, []) for t in tables}
-    assert pk_map == {
+def test_discover_jdbc_pks_grouping(monkeypatch):
+    """discover_jdbc_pks reassembles composite keys in ordinal order
+    (not name order) and gives PK-less tables an empty entry (full-scan
+    tier), from the row shapes the two information_schema queries
+    return (the JDBC read is stubbed, so no MySQL server is needed)."""
+    from types import SimpleNamespace
+
+    from mysqldatasynctool_spark.catalog import catalog_scan_sql, discover_jdbc_pks
+    from mysqldatasynctool_spark.sources import jdbc
+
+    def read_table(spark, endpoint, table, custom_sql=None):
+        if custom_sql == catalog_scan_sql(()):
+            rows = [("lineitem",), ("orders",), ("no_pk_log",)]
+        else:
+            rows = [
+                ("lineitem", "l_orderkey", 1),
+                ("orders", "o_orderkey", 1),
+                ("lineitem", "l_linenumber", 2),
+            ]
+        return SimpleNamespace(collect=lambda: rows)
+
+    monkeypatch.setattr(jdbc, "read_table", read_table)
+    assert discover_jdbc_pks(None, None) == {
         "lineitem": ["l_orderkey", "l_linenumber"],
         "orders": ["o_orderkey"],
         "no_pk_log": [],
@@ -157,15 +182,30 @@ def test_cli_compare_db_jdbc(spark, tmp_path, capsys):
     assert "NO" in capsys.readouterr().out
 
 
-def test_jdbc_mode_refuses_half_specified_endpoints():
-    """One URL flag + no config file must be a hard error, never a
-    silent localhost:3306 default for the unnamed side."""
-    with pytest.raises(SystemExit) as e:
-        main(["migrateDb", "--src-url", "jdbc:derby:memory:x;create=true"])
-    assert "--dest-url" in str(e.value)
-    with pytest.raises(SystemExit) as e:
-        main(["compareDb", "--dest-url", "jdbc:derby:memory:x;create=true"])
-    assert "--src-url" in str(e.value)
+def test_jdbc_mode_refuses_half_specified_endpoints(capsys):
+    """The endpoints pick the path, and a run that names too few of
+    them, or mixes the two modes' flags, is refused before any work:
+    never a silent localhost:3306 default for an unnamed side, never a
+    fixture directory, never an ignored flag."""
+    url = "jdbc:derby:memory:x;create=true"
+
+    def refused(argv) -> str:
+        with pytest.raises(SystemExit) as e:
+            main(argv)
+        assert e.value.code == 2
+        return capsys.readouterr().err
+
+    assert "--dest-url" in refused(["migrate", "--src-url", url])
+    assert "--src-url" in refused(["compareDb", "--dest-url", url])
+    err = refused(["migrate"])
+    assert "--src-dir" in err and "--config" in err and "--src-url" in err
+    assert "--dest-dir" in refused(["migrate", "--src-dir", "/x"])
+    assert "--src-dir" in refused(["compareDb", "--dest-dir", "/x"])
+    # a flag of the other mode
+    assert "--versioned" in refused(["migrate", "--versioned", "--src-url", url, "--dest-url", url])
+    assert "--pk-map" in refused(["migrate", "--src-dir", "/x", "--dest-dir", "/y", "--pk-map", "t=id"])
+    assert "--tables" in refused(["compareDb", "--src-dir", "/x", "--dest-dir", "/y", "--tables", "t"])
+    assert "--src-url" in refused(["migrate", "--src-dir", "/x", "--dest-dir", "/y", "--src-url", url])
 
 
 def test_cli_query_list_and_run(spark, tmp_path, capsys):

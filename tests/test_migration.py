@@ -65,7 +65,6 @@ exclude:
     cfg = load_config(str(p))
     assert cfg.src.host == "h1" and cfg.dest.host == "h2"
     assert cfg.page_size == 5000 and cfg.batch_row_size == 500
-    assert cfg.tables == {"t1": "select * from t1 where x > 0"}
     # the reference's unindented exclude block parses as one string
     assert cfg.exclude == ("log1", "log2")
     assert "jdbc:mysql://h1:3306/d" in cfg.src.jdbc_url
@@ -278,6 +277,10 @@ def test_migrate_directory_roundtrip(spark, tmp_path):
     assert set(rows) == {"region", "nation", "orders", "lineitem", "events"}
     assert all(r.is_ok == "YES" for r in rows.values())
     assert all(r.src_cnt == r.dest_cnt for r in rows.values())
+
+    # an explicit empty table list migrates nothing, not every table
+    reports, verdict = migrate_directory(spark, "/root/testdata/sf0.001", str(tmp_path / "none"), tables=[])
+    assert reports == [] and verdict.count() == 0
 
 
 @pytest.mark.parametrize("path", ["directory", "jdbc"])
