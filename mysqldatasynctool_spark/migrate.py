@@ -9,14 +9,15 @@ differs between endpoints: how it reads the source, how it plans that
 read (JDBC only), how it writes the observed frame and which
 destination frame it verifies. Per table the core runs
 
-1. ``resume_check`` (``resume=True`` only): the ``compare_tables``
-   verdict of source and destination; a match reports the table
-   verified without rewriting it;
+1. ``resume_check`` (``resume=True`` only): the verdict of one
+   summary scan of the source and one of the destination; a match
+   reports the table verified without rewriting it;
 2. ``plan``: the path's read plan;
 3. ``copy``: one Spark job whose partitions are the pages; the source
-   count+checksum ride that scan via ``observe()``; a failed copy is
-   retried once on the path's fallback plan, when it has one;
-4. ``verify``: one checksum job over the destination,
+   count+checksum are observed on that scan; a failed copy is retried
+   once on the path's fallback plan, when it has one;
+4. ``verify``: one job, a ``noop`` scan of the re-read destination
+   that observes the same count+checksum,
 
 and records each phase's wall in ``TableReport.phases``.
 
@@ -91,7 +92,8 @@ class _Path:
     read: Callable
     #: (observed source frame, table) -> None
     write: Callable
-    #: (table, copy plan) -> destination frame to verify
+    #: (table, copy plan, schema) -> destination frame to verify; a
+    #: ``None`` schema means the one found at the destination
     dest: Callable
     #: table -> read plan
     plan: Callable = lambda t: None
@@ -101,25 +103,20 @@ class _Path:
     check: Callable = lambda t: None
 
 
-def _resume_verdict_row(path: _Path, t: str) -> tuple | None:
-    """The table's ``compare_tables`` verdict row; None if the dest is
-    unreadable/absent (→ recopy)."""
-    from .operators.compare import compare_tables
+def _summarize(
+    df, t: str, write: Callable = lambda df, t: df.write.format("noop").mode("overwrite").save()
+) -> tuple:
+    """(cnt, checksum) of ``df``, observed while ``write`` runs over
+    it: the one scan of a copy, or a ``noop`` scan of a verify."""
+    from .operators.compare import table_summary
 
-    try:
-        src = path.read(t, None)
-        return tuple(compare_tables(src.sparkSession, {t: src}, {t: path.dest(t, None)}).collect()[0])
-    except Exception:  # noqa: BLE001 — absent/corrupt dest → recopy
-        return None
+    observed, obs = table_summary(df, t)
+    write(observed, t)
+    return obs.get["cnt"], obs.get["checksum"]
 
 
 def _copy_verify(path: _Path, t: str, resume: bool) -> tuple[TableReport, tuple | None]:
     """Copy and verify one table: (report, verdict row or None)."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    from .operators.compare import digest_sum, row_digest_long, table_summary
-
     t0 = time.monotonic()
     phases: dict[str, float] = {}
 
@@ -131,7 +128,7 @@ def _copy_verify(path: _Path, t: str, resume: bool) -> tuple[TableReport, tuple 
         finally:
             phases[phase] = round(time.monotonic() - ts, 3)
 
-    def copy(plan, attempt: int):
+    def copy(plan):
         # The SOURCE-side count+checksum piggyback on the copy scan via
         # observe(): the write action computes them in passing, so each
         # source row is read exactly once. At 100 TB that one saved
@@ -139,52 +136,46 @@ def _copy_verify(path: _Path, t: str, resume: bool) -> tuple[TableReport, tuple 
         # destination is re-read for verification — that re-read is
         # the point (it proves what LANDED, not what was sent).
         df = path.read(t, plan)
-        obs = Observation(f"src_summary_{t}_{attempt}")
-        path.write(
-            df.observe(
-                obs,
-                F.count(F.lit(1)).alias("cnt"),
-                F.coalesce(
-                    digest_sum(row_digest_long(df)),
-                    F.lit(0).cast("decimal(38,0)"),
-                ).alias("checksum"),
-            ),
-            t,
-        )
-        return obs.get["cnt"], obs.get["checksum"]
+        return df.schema, _summarize(df, t, path.write)
 
     try:
         path.check(t)
+        src = dest = None
         if resume:
             with timed("resume_check"):
-                prior = _resume_verdict_row(path, t)
-            if prior is not None and prior[-1] == "YES":
-                # already copied and verified — skip the write (rerun
-                # idempotency at table granularity, the
-                # thousands-of-tables restart story)
-                return TableReport(t, prior[2], time.monotonic() - t0, True, phases=phases), prior
-        with timed("plan"):
-            plan = path.plan(t)
-        with timed("copy"):
-            try:
-                src_cnt, src_sum = copy(plan, 0)
-            except Exception:
-                retry = path.fallback(t, plan)
-                if retry is None:
-                    raise
-                plan = retry
-                src_cnt, src_sum = copy(plan, 1)
-        # dest-side verify INSIDE the copy thread, one job per table:
-        # each table's checksum scan overlaps the remaining tables'
-        # copies instead of running as a second serial phase — at
-        # thousands-of-tables scale (the reference's regime)
-        # verification disappears into the copy wall-clock. The dest
-        # count doubles as the report row count (no separate count()).
-        with timed("verify"):
-            d = table_summary(path.dest(t, plan), t).collect()[0]
-        ok = src_cnt == d.cnt and src_sum == d.checksum
-        vrow = (t, src_cnt, d.cnt, src_sum, d.checksum, "YES", "YES" if ok else "NO")
-        return TableReport(t, d.cnt, time.monotonic() - t0, True, phases=phases), vrow
+                # the dest is read with the schema found there: a prior
+                # run may have written another, and today's source schema
+                # would hide a column the source has since dropped
+                try:
+                    dest = _summarize(path.dest(t, None, None), t)
+                    src = _summarize(path.read(t, None), t)
+                except Exception:  # noqa: BLE001 — absent/corrupt dest → recopy
+                    pass
+        # a verified destination is not rewritten (rerun idempotency at
+        # table granularity, the thousands-of-tables restart story)
+        if src is None or src != dest:
+            with timed("plan"):
+                plan = path.plan(t)
+            with timed("copy"):
+                try:
+                    schema, src = copy(plan)
+                except Exception:
+                    retry = path.fallback(t, plan)
+                    if retry is None:
+                        raise
+                    plan = retry
+                    schema, src = copy(plan)
+            # dest-side verify INSIDE the copy thread, one noop scan of
+            # the dest read with the schema just written (no inference
+            # job): each table's verify overlaps the remaining tables'
+            # copies instead of running as a second serial phase — at
+            # thousands-of-tables scale (the reference's regime)
+            # verification disappears into the copy wall-clock. The dest
+            # count doubles as the report row count.
+            with timed("verify"):
+                dest = _summarize(path.dest(t, plan, schema), t)
+        vrow = (t, src[0], dest[0], src[1], dest[1], "YES", "YES" if src == dest else "NO")
+        return TableReport(t, dest[0], time.monotonic() - t0, True, phases=phases), vrow
     except Exception as exc:  # noqa: BLE001 — per-object failure accounting
         return TableReport(t, 0, time.monotonic() - t0, False, str(exc), phases=phases), None
 
@@ -203,8 +194,8 @@ def _migrate(
     # preserved in the report list regardless of completion order
     with ThreadPoolExecutor(max_workers=min(cfg.max_parallel, max(1, len(todo)))) as pool:
         results = list(pool.map(lambda t: _copy_verify(path, t, resume), todo))
-    vrows = [v for _, v in results if v is not None]
-    verdict = spark.createDataFrame(vrows, VERDICT_SCHEMA).orderBy("table_name")
+    # sorted in Python: orderBy on a few local rows costs Spark jobs
+    verdict = spark.createDataFrame(sorted(v for _, v in results if v is not None), VERDICT_SCHEMA)
     return [r for r, _ in results], verdict
 
 
@@ -254,10 +245,11 @@ def migrate_directory(
         else:
             write_parquet(observed, dest_path(t))
 
-    def read_dest(t: str, plan):
+    def read_dest(t: str, plan, schema):
         if versioned:
             return read_versioned(spark, dest_path(t))
-        return load(spark, dest_dir, t)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(dest_path(t))
 
     path = _Path(read=lambda t, plan: load(spark, src_dir, t), write=write, dest=read_dest)
     if tables is None:
@@ -387,7 +379,7 @@ def migrate_jdbc(
             return None
         return plan_table(t, [], page_size, cfg.max_parallel)
 
-    def read_dest(t: str, plan):
+    def read_dest(t: str, plan, schema):
         # Verify-read plan (r18): the writer-created dest table has no
         # PK index, so EVERY partitioned verify read pays one full dest
         # scan per partition server-side — which is why the r14-era
@@ -400,7 +392,8 @@ def migrate_jdbc(
         # conversion+digest. k=4 measured 2.9 s → ~1.1 s on the bench
         # lineitem verify; only applied when the copy plan was
         # range-mode and actually multi-page (small tables keep the
-        # single connection).
+        # single connection). ``schema`` is unused: JDBC resolves the
+        # dest schema without a Spark job.
         vplan = None
         if plan is not None and plan.mode == "range" and plan.num_partitions > 1:
             vplan = replace(plan, num_partitions=min(4, plan.num_partitions))

@@ -22,9 +22,10 @@ compare had the same cost but far weaker guarantees.
 
 from __future__ import annotations
 
+import uuid
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.fastdec import dec_sum as _fast_dec_sum
@@ -109,15 +110,21 @@ def digest_sum(d: F.Column) -> F.Column:
     return total.cast("decimal(38,0)")
 
 
-def table_summary(df: DataFrame, table: str) -> DataFrame:
-    """One row: (table_name, cnt, checksum)."""
-    return df.select(row_digest_long(df).alias("d")).agg(
-        F.lit(table).alias("table_name"),
+def _summary_cols(d: F.Column) -> list[F.Column]:
+    """(cnt, checksum) aggregates over a row-digest column."""
+    return [
         F.count("*").alias("cnt"),
-        F.coalesce(digest_sum(F.col("d")), F.lit(0).cast("decimal(38,0)")).alias(
-            "checksum"
-        ),
-    )
+        F.coalesce(digest_sum(d), F.lit(0).cast("decimal(38,0)")).alias("checksum"),
+    ]
+
+
+def table_summary(df: DataFrame, table: str) -> tuple[DataFrame, Observation]:
+    """``df`` with its (cnt, checksum) observed, and the Observation
+    holding them once an action has run over the returned frame: the
+    summary rides that action's scan (one job, no shuffle). The name is
+    unique per call, so concurrent queries never share an observation."""
+    obs = Observation(f"{table}_summary_{uuid.uuid4().hex}")
+    return df.observe(obs, *_summary_cols(row_digest_long(df))), obs
 
 
 def compare_tables(
@@ -134,24 +141,23 @@ def compare_tables(
         # zero tables copied (empty source / all failed): report an
         # empty verdict rather than crashing the run summary
         return spark.createDataFrame([], VERDICT_SCHEMA)
-    src = reduce(
-        DataFrame.unionByName,
-        [table_summary(df, t) for t, df in src_tables.items()],
-    ).select(
-        "table_name",
-        F.col("cnt").alias("src_cnt"),
-        F.col("checksum").alias("src_checksum"),
-    )
-    if dest_tables:
-        dest = reduce(
-            DataFrame.unionByName,
-            [table_summary(df, t) for t, df in dest_tables.items()],
-        ).select(
+
+    def summaries(tables: dict[str, DataFrame], side: str) -> DataFrame:
+        rows = [
+            df.select(row_digest_long(df).alias("d")).agg(
+                F.lit(t).alias("table_name"), *_summary_cols(F.col("d"))
+            )
+            for t, df in tables.items()
+        ]
+        return reduce(DataFrame.unionByName, rows).select(
             "table_name",
-            F.col("cnt").alias("dest_cnt"),
-            F.col("checksum").alias("dest_checksum"),
+            F.col("cnt").alias(f"{side}_cnt"),
+            F.col("checksum").alias(f"{side}_checksum"),
         )
-        joined = src.join(dest, "table_name", "full_outer")
+
+    src = summaries(src_tables, "src")
+    if dest_tables:
+        joined = src.join(summaries(dest_tables, "dest"), "table_name", "full_outer")
     else:
         joined = src.withColumn("dest_cnt", F.lit(None).cast("long")).withColumn(
             "dest_checksum", F.lit(None).cast("decimal(38,0)")

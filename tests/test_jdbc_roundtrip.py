@@ -248,7 +248,7 @@ def test_migrate_jdbc_string_pk_varchar_pages(spark, tmp_path_factory):
 
 def test_migrate_jdbc_resume_skips_verified(spark, tmp_path_factory):
     """resume=True: a rerun re-verifies each destination table via one
-    src-union-dest checksum job and SKIPS the write when it matches —
+    summary scan of each side and SKIPS the write when they match —
     same idempotency contract as migrate_directory's --resume."""
     import time as _time
 

@@ -283,6 +283,24 @@ def test_migrate_directory_roundtrip(spark, tmp_path):
     assert reports == [] and verdict.count() == 0
 
 
+def _derby_pair(spark, tmp_path, tables):
+    """Embedded-Derby (src, dest) endpoints, with ``tables`` of the
+    sf0.001 fixtures written to the source."""
+    from mysqldatasynctool_spark.config import Endpoint
+    from mysqldatasynctool_spark.sources.sinks import write_jdbc
+
+    src, dest = (
+        Endpoint(
+            url_override=f"jdbc:derby:{tmp_path}/{side};create=true",
+            driver="org.apache.derby.iapi.jdbc.AutoloadedDriver",
+        )
+        for side in ("src", "dest")
+    )
+    for t in tables:
+        write_jdbc(load(spark, SF_SMALL, t), src, t, truncate=True)
+    return src, dest
+
+
 @pytest.mark.parametrize("path", ["directory", "jdbc"])
 def test_migrate_per_table_failure_isolated(spark, tmp_path, path):
     """A table that fails to read must be reported failed without
@@ -293,19 +311,9 @@ def test_migrate_per_table_failure_isolated(spark, tmp_path, path):
     if path == "directory":
         reports, verdict = migrate_directory(spark, SF_SMALL, str(tmp_path / "dest"), tables=tables)
     else:
-        from mysqldatasynctool_spark.config import Endpoint
         from mysqldatasynctool_spark.migrate import migrate_jdbc
-        from mysqldatasynctool_spark.sources.sinks import write_jdbc
 
-        src, dest = (
-            Endpoint(
-                url_override=f"jdbc:derby:{tmp_path}/{side};create=true",
-                driver="org.apache.derby.iapi.jdbc.AutoloadedDriver",
-            )
-            for side in ("src", "dest")
-        )
-        for t in ("region", "nation"):
-            write_jdbc(load(spark, SF_SMALL, t), src, t, truncate=True)
+        src, dest = _derby_pair(spark, tmp_path, ("region", "nation"))
         # no_such_table is absent from the Derby source
         pk_map = {"region": ["r_regionkey"], "no_such_table": ["id"], "nation": ["n_nationkey"]}
         reports, verdict = migrate_jdbc(spark, src, dest, pk_map)
@@ -354,6 +362,90 @@ def test_migrate_resume_skips_verified_tables(spark, tmp_path):
     for t in ["region", "nation"]:
         assert mtimes(t) == before[t], f"{t} was rewritten on resume"
     assert os.path.isdir(f"{dest}/orders.parquet"), "missing table not restored"
+
+    # a dest a prior run wrote with a column the source no longer has is
+    # recopied: resume must read the dest with the schema found there
+    shutil.rmtree(f"{dest}/nation.parquet")
+    nation = load(spark, "/root/testdata/sf0.001", "nation")
+    nation.withColumn("dropped", F.lit("x")).write.parquet(f"{dest}/nation.parquet")
+    migrate_directory(spark, "/root/testdata/sf0.001", dest, tables=["nation"], resume=True)
+    assert spark.read.parquet(f"{dest}/nation.parquet").columns == nation.columns
+
+
+@pytest.mark.parametrize("path", ["directory", "jdbc"])
+def test_migrate_verify_detects_bad_landing(spark, tmp_path, monkeypatch, path):
+    """The verify must checksum what LANDED, not what was sent: a sink
+    that corrupts one cell of nation on its way out keeps the source
+    summary intact (it is observed below the corruption), so only a
+    verify that re-reads the destination turns nation red."""
+    from mysqldatasynctool_spark import migrate as mig
+
+    def corrupt(df, table):
+        if table != "nation":
+            return df
+        return df.withColumn(
+            "n_name", F.when(F.col("n_nationkey") == 3, F.lit("XX")).otherwise(F.col("n_name"))
+        )
+
+    tables = ["region", "nation"]
+    if path == "directory":
+        real = mig.write_parquet
+
+        def bad_write(df, p, **kw):  # dest paths are <dest_dir>/<table>.parquet
+            real(corrupt(df, os.path.basename(p).removesuffix(".parquet")), p, **kw)
+
+        monkeypatch.setattr(mig, "write_parquet", bad_write)
+        reports, verdict = migrate_directory(spark, SF_SMALL, str(tmp_path / "dest"), tables=tables)
+    else:
+        import mysqldatasynctool_spark.sources.sinks as sinks_mod
+
+        src, dest = _derby_pair(spark, tmp_path, tables)
+        real = sinks_mod.write_jdbc
+        monkeypatch.setattr(
+            sinks_mod, "write_jdbc", lambda df, ep, t, **kw: real(corrupt(df, t), ep, t, **kw)
+        )
+        reports, verdict = mig.migrate_jdbc(
+            spark, src, dest, {"region": ["r_regionkey"], "nation": ["n_nationkey"]}
+        )
+    rows = {r.table_name: r for r in verdict.collect()}
+    by_table = {r.table: r for r in reports}
+    assert rows["nation"].is_ok == "NO"
+    assert rows["nation"].src_cnt == rows["nation"].dest_cnt == 25
+    assert rows["nation"].src_checksum != rows["nation"].dest_checksum
+    assert rows["region"].is_ok == "YES"
+    for t in tables:
+        assert by_table[t].ok and by_table[t].rows == rows[t].dest_cnt
+
+
+def test_migrate_directory_jobs_per_table(spark, tmp_path):
+    """A parquet migrate runs at most 3 Spark jobs per table (source
+    schema inference, the copy that observes the source summary, the
+    noop verify scan that observes the destination's) plus 1 per call.
+    Tables are copied on pool threads, which do not inherit a job
+    group, so the count is the gap between the ids of two tagged probe
+    jobs (job ids are global and monotonic)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def probe() -> int:
+        tag = f"probe_{uuid.uuid4().hex}"
+        sc.setJobGroup(tag, tag)
+        try:
+            spark.range(1).collect()
+        finally:
+            sc._jsc.clearJobGroup()
+        return max(sc.statusTracker().getJobIdsForGroup(tag))
+
+    tables = ["region", "nation", "customer", "orders"]
+    before = probe()
+    reports, verdict = migrate_directory(spark, SF_SMALL, str(tmp_path / "dest"), tables=tables)
+    rows = verdict.collect()
+    jobs = probe() - before - 1
+    assert all(r.ok for r in reports)
+    assert [r.table_name for r in rows] == sorted(tables)
+    assert all(r.is_ok == "YES" for r in rows)
+    assert jobs <= 3 * len(tables) + 1, jobs
 
 
 def test_compare_detects_corruption_and_missing(spark, tmp_path):
