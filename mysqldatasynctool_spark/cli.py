@@ -375,71 +375,6 @@ def cmd_plan_volume(args) -> int:
     return 0
 
 
-def cmd_ann_index(args) -> int:
-    """Ops lifecycle for the trained-ANN parquet index artifact
-    (VERDICT r13 item 5's user-facing path): ``save`` trains (if
-    needed) and persists; ``load`` restores a fresh process's driver
-    state from the artifact so the first query skips the 3
-    Lloyd/codebook training scans. The artifact is version-gated on
-    every training knob — a mismatch refuses to load."""
-    from .operators import similarity as S
-    from .session import get_spark
-
-    import os.path
-
-    spark = get_spark(app_name=f"annIndex:{args.action}")
-    frames_path = f"{args.path}.frames"
-    if args.action == "save":
-        # ensure trained state exists for this dataset (trains once;
-        # no-op when the session already trained on sf_dir)
-        S.similarity_ivfpq_topk(spark, args.sf_dir).write.mode(
-            "overwrite"
-        ).format("noop").save()
-        n = S.save_trained_index(spark, args.path)
-        print(f"saved {n} index rows to {args.path}")
-        if args.frames:
-            counts = S.save_index_frames(spark, frames_path, args.sf_dir)
-            print(
-                f"saved index frames to {frames_path} "
-                f"(assign={counts['assign']}, codes={counts['codes']})"
-            )
-    else:
-        n = S.load_trained_index(spark, args.path)
-        print(f"loaded {n} index rows from {args.path}")
-        if os.path.isdir(frames_path):
-            meta = S.load_index_frames(spark, frames_path)
-            print(
-                f"loaded index frames from {frames_path} "
-                f"(dataset {meta['sf_dir']}, probes {meta['probes']})"
-            )
-        if args.smoke:
-            # refuse a smoke run whose --sf-dir is NOT a dataset the
-            # artifact was trained on (r14 advice): the trained dicts
-            # and frames are keyed by sf_dir, so a mismatched smoke
-            # would cache-miss and silently RETRAIN the whole index —
-            # the exact trap the artifact exists to prevent.
-            trained = {
-                r.cache_key
-                for r in spark.read.parquet(args.path)
-                .select("cache_key")
-                .distinct()
-                .collect()
-            }
-            if args.sf_dir not in trained:
-                print(
-                    f"annIndex load --smoke: --sf-dir {args.sf_dir!r} is "
-                    f"not among the artifact's trained datasets "
-                    f"{sorted(trained)} — a smoke query against it would "
-                    "silently retrain from scratch; pass the artifact's "
-                    "own sf_dir",
-                    file=sys.stderr,
-                )
-                return 2
-            rows = S.similarity_ivfpq_topk(spark, args.sf_dir).count()
-            print(f"smoke query over loaded index: {rows} rows")
-    return 0
-
-
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="mysqldatasynctool_spark")
     sub = p.add_subparsers(dest="command", required=True)
@@ -501,29 +436,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     pq.add_argument("--out", default=None, help="write result parquet here instead of showing")
     pq.add_argument("--limit", type=int, default=20, help="rows to show without --out")
-    pa = sub.add_parser(
-        "annIndex",
-        help="save/load the trained-ANN parquet index artifact "
-        "(driver-restart without retraining)",
-    )
-    pa.add_argument("action", choices=("save", "load"))
-    pa.add_argument("path", help="artifact parquet path")
-    pa.add_argument(
-        "--sf-dir", default="/root/testdata/sf0.001", help="dataset dir"
-    )
-    pa.add_argument(
-        "--smoke",
-        action="store_true",
-        help="after load, run one query over the restored index",
-    )
-    pa.add_argument(
-        "--frames",
-        action="store_true",
-        help="on save, also persist the per-vector assignment/code "
-        "frames to PATH.frames (the inverted-lists half of the index; "
-        "corpus-proportional size). load picks PATH.frames up "
-        "automatically when present.",
-    )
     pl = sub.add_parser(
         "layoutProbe",
         help="footer-only parquet scan-parallelism preflight "
@@ -601,7 +513,6 @@ def main(argv: list[str] | None = None) -> int:
         "compareDb": cmd_compare,
         "createTable": cmd_create_table,
         "query": cmd_query,
-        "annIndex": cmd_ann_index,
         "planVolume": cmd_plan_volume,
         "layoutProbe": cmd_layout_probe,
         "version": cmd_version,

@@ -2047,27 +2047,17 @@ def _ivfpq_shortlist(n_cells: int) -> int:
     return max(IVFPQ_SHORTLIST_MIN, (9 * k + 3) // 4)
 
 
-#: memo of the TRAINED CELL COUNT per dataset — the single primitive
-#: both query-time budgets (probes, shortlist) derive from. Filled by
-#: training, restored by load_index_frames from artifact meta (so a
-#: frames-only load never retrains just to learn its own budgets).
-#: Cleared by reset_trained_state; kept by teardown_persisted_caches
-#: (same lifetime as the trained dicts it derives from).
-_EFFECTIVE_NCELLS: dict = {}
-
-
 def ivfpq_probes_for(sf_dir: str) -> int:
     """The effective probe budget for a dataset this process has
-    trained (or artifact-loaded) an index for. Raises if no index
-    state exists — callers that want training should run
-    similarity_ivfpq_topk first."""
-    k = _EFFECTIVE_NCELLS.get(sf_dir)
-    if k is None:
+    trained an index for. Raises if no index state exists — callers
+    that want training should run similarity_ivfpq_topk first."""
+    cents = _TRAINED_CENTS.get((sf_dir, LLOYD_ITERS))
+    if cents is None:
         raise ValueError(
             f"no trained index state for {sf_dir!r} — run "
-            "similarity_ivfpq_topk (or load an artifact) first"
+            "similarity_ivfpq_topk first"
         )
-    return _ivfpq_probes(k)
+    return _ivfpq_probes(len(cents))
 
 
 #: per-process cache of trained PQ codebooks, keyed by (sf_dir, iters)
@@ -2125,546 +2115,8 @@ def reset_trained_state() -> int:
     n = len(_TRAINED_CENTS) + len(_TRAINED_CB)
     _TRAINED_CENTS.clear()
     _TRAINED_CB.clear()
-    _EFFECTIVE_NCELLS.clear()
-    _SERVING_CENT_CACHE.clear()
     teardown_persisted_caches()
     return n
-
-
-#: artifact format version — bumped whenever the trained-state layout
-#: or any knob that changes training output moves, so a stale on-disk
-#: index can never be silently loaded under different semantics
-def _index_version() -> str:
-    return (
-        f"v1:LLOYD{LLOYD_ITERS}:CB{CB_LLOYD_ITERS}"
-        f":PQ{PQ_BLOCKS}x{PQ_BLOCK_DIM}:{IVF_SEED_SALT}{CB_SEED_SALT}"
-    )
-
-
-def save_trained_index(spark: SparkSession, path: str) -> int:
-    """Persist the driver-side trained ANN state (IVF centroids +
-    per-block PQ codebooks) as a parquet artifact (r12 verdict item
-    7): on a real cluster the ``_TRAINED_CENTS``/``_TRAINED_CB``
-    dicts die with the driver process, and a restart would silently
-    RETRAIN — 3 corpus scans each and, for an incremental-ingest
-    caller that lost its base centroids, a semantic divergence. The
-    FAISS story writes an index file; this is that file, Spark-native.
-
-    Layout: one row per centroid/codeword —
-    ``(version, kind, cache_key, iters, block, pos, cid, vec)`` where
-    ``pos`` is the row's position in its list/matrix so reassembly is
-    ORDER-EXACT (code index = matrix row), not sort-reconstructed.
-    Training is deterministic (md5-rank seeding + DECIMAL-exact Lloyd
-    updates), so the artifact is reproducible: saving, restarting and
-    loading yields bit-identical state to retraining. Returns the
-    number of rows written. Queries() never call this — it is an ops
-    API; the dicts stay the in-process source of truth."""
-    from pyspark.sql import types as T
-
-    ver = _index_version()
-    rows = []
-    for (ck, iters), cents in _TRAINED_CENTS.items():
-        for pos, (cid, cv) in enumerate(cents):
-            rows.append(
-                (
-                    ver,
-                    "ivf",
-                    str(ck),
-                    int(iters),
-                    -1,
-                    pos,
-                    int(cid),
-                    [float(x) for x in cv],
-                )
-            )
-    for (ck, iters), blocks in _TRAINED_CB.items():
-        for b, (ids, mat) in enumerate(blocks):
-            for pos, cid in enumerate(ids):
-                rows.append(
-                    (
-                        ver,
-                        "pq",
-                        str(ck),
-                        int(iters),
-                        b,
-                        pos,
-                        int(cid),
-                        [float(x) for x in mat[pos]],
-                    )
-                )
-    if not rows:
-        # writing an empty artifact would arm the silent-retrain trap
-        # on the load side (r13 advice): fail at save time, where the
-        # caller can see training never ran
-        raise ValueError(
-            "no trained ANN state to save — run a training query "
-            "(e.g. similarity_ivfpq_topk) before save_trained_index"
-        )
-    schema = T.StructType(
-        [
-            T.StructField("version", T.StringType()),
-            T.StructField("kind", T.StringType()),
-            T.StructField("cache_key", T.StringType()),
-            T.StructField("iters", T.IntegerType()),
-            T.StructField("block", T.IntegerType()),
-            T.StructField("pos", T.IntegerType()),
-            T.StructField("cid", T.LongType()),
-            T.StructField("vec", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    # bounded by construction: ≤4096 centroids + PQ_BLOCKS×256
-    # codewords per trained dataset — KBs-to-MBs, one parquet file
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return len(rows)
-
-
-def load_trained_index(spark: SparkSession, path: str) -> int:
-    """Load a ``save_trained_index`` artifact back into the driver
-    dicts, REPLACING any in-process trained state for the keys it
-    carries. Refuses (ValueError) an artifact whose version string
-    does not match the current knobs — a silently-loaded index
-    trained under different LLOYD_ITERS/PQ geometry would break the
-    oracle contract. Returns the number of rows loaded.
-
-    In-process dict keys are ``(sf_dir, iters)`` tuples; the artifact
-    stores the two components as columns and reassembly re-keys on
-    them, so a fresh process must load with the same sf_dir paths it
-    will query with — same contract as the in-process dicts."""
-    import numpy as np
-
-    ver = _index_version()
-    rows = spark.read.parquet(path).collect()
-    if not rows:
-        # an empty artifact would pass the version gate VACUOUSLY,
-        # return 0, and the next query call would silently retrain —
-        # the exact failure this artifact exists to prevent (r13
-        # advice). Refuse loudly instead.
-        raise ValueError(
-            f"trained-index artifact at {path!r} contains zero rows — "
-            "nothing was saved (was save_trained_index called before "
-            "training?); retrain and re-save"
-        )
-    bad = {r.version for r in rows if r.version != ver}
-    if bad:
-        raise ValueError(
-            f"trained-index version mismatch: artifact {sorted(bad)} "
-            f"vs current {ver!r} — retrain or rebuild the artifact"
-        )
-    by_key: dict = {}
-    for r in rows:
-        by_key.setdefault((r.kind, r.cache_key, r.iters), []).append(r)
-    n = 0
-    for (kind, ck_s, iters), rs in by_key.items():
-        ck = (ck_s, int(iters))
-        if kind == "ivf":
-            rs.sort(key=lambda r: r.pos)
-            _TRAINED_CENTS[ck] = [(int(r.cid), list(r.vec)) for r in rs]
-            # the REPLACE contract extends to the serving-path matrix
-            # cache (r17 review): a rebuilt index with the SAME cell
-            # count under the same key would pass the length guard in
-            # _serving_probe_cells and serve stale centroids
-            _SERVING_CENT_CACHE.pop(ck, None)
-            # the trained cell count IS len(centroids): restore the
-            # budget primitive here too (r15 advice — previously only
-            # load_index_frames populated it, so a dicts-only load
-            # still raised in ivfpq_probes_for despite the error
-            # message suggesting an artifact load as the fix)
-            _EFFECTIVE_NCELLS[ck_s] = len(rs)
-        else:
-            blocks: dict[int, list] = {}
-            for r in rs:
-                blocks.setdefault(r.block, []).append(r)
-            out = []
-            for b in sorted(blocks):
-                brs = sorted(blocks[b], key=lambda r: r.pos)
-                ids = [int(r.cid) for r in brs]
-                mat = np.array([list(r.vec) for r in brs], dtype=np.float64)
-                out.append((ids, mat))
-            _TRAINED_CB[ck] = out
-        n += len(rs)
-    return n
-
-
-def save_index_frames(spark: SparkSession, path: str, sf_dir: str) -> dict:
-    """Persist the PER-VECTOR index frames — the coarse-cell assignment
-    (``vec_id, v, vnorm, cells``) and the PQ codes (``vec_id,
-    code0..``) — for one dataset. This is the inverted-lists half of
-    the FAISS index file: ``save_trained_index`` stores only the
-    KB-scale centroids/codebooks, so a restarted driver that loads it
-    still pays one full assignment + encode scan before its first
-    query (measured: cold_with_artifact 5.6 s vs steady 2.1 s at
-    sf0.1). With the frames persisted too, a cold start restores the
-    whole index state from parquet and the first query runs at steady
-    cost.
-
-    Layout (r15, VERDICT r14 item 4): ``{path}/meta`` (1 row: version,
-    sf_dir, probes, blocks, n_cells), ``{path}/assign`` and
-    ``{path}/codes`` both PARTITIONED BY THE COARSE CELL
-    (``cell=<cid>/`` directories, one file per cell via a repartition
-    on the key) — the inverted-list layout a real IVF index ships: a
-    steady query serving one vector needs only its ~probes probed
-    cells' lists, and the partitioned layout lets
-    ``read_index_cells`` prune to exactly those files (partition
-    filters in the scan, not a full-artifact read). Size is
-    corpus-proportional BY DESIGN; at 100 TB this artifact is the
-    index you'd keep on object storage next to the corpus. Returns
-    {"assign": n, "codes": n}.
-
-    Requires the frames to exist in the in-process cache (i.e. the
-    training query ran this session); raises otherwise — same
-    loudness contract as save_trained_index."""
-    cents = _TRAINED_CENTS.get((sf_dir, LLOYD_ITERS))
-    probes = _ivfpq_probes(len(cents)) if cents else None
-    pkey = (sf_dir, probes)
-    ckey = (sf_dir, "pq_codes")
-    assign = _PERSISTED_WITH_CELLS.get(pkey)
-    codes = _PERSISTED_WITH_CELLS.get(ckey)
-    if probes is None or cents is None or assign is None or codes is None:
-        raise ValueError(
-            "no materialized index frames for "
-            f"{sf_dir!r} (run similarity_ivfpq_topk first) — refusing "
-            "to write a partial frame artifact"
-        )
-    meta = spark.createDataFrame(
-        [(_index_version(), sf_dir, probes, PQ_BLOCKS, len(cents))],
-        "version string, sf_dir string, probes int, blocks int, n_cells int",
-    )
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    # the partition key is each vector's ASSIGNMENT cell (cells[0]);
-    # repartition-on-key first so every cell directory holds ONE file
-    # (without it each of the frame's partitions writes a sliver into
-    # every cell directory — the classic partitionBy small-file trap)
-    assign.withColumn("cell", F.element_at("cells", 1)).repartition(
-        "cell"
-    ).write.partitionBy("cell").mode("overwrite").parquet(f"{path}/assign")
-    codes.join(
-        assign.select("vec_id", F.element_at("cells", 1).alias("cell")),
-        "vec_id",
-    ).repartition("cell").write.partitionBy("cell").mode(
-        "overwrite"
-    ).parquet(f"{path}/codes")
-    return {
-        "assign": spark.read.parquet(f"{path}/assign").count(),
-        "codes": spark.read.parquet(f"{path}/codes").count(),
-    }
-
-
-#: canonical column orders the artifact read paths restore, so a
-#: loaded frame is schema-identical to the one training builds
-_ASSIGN_COLS = ("vec_id", "v", "vnorm", "cells")
-
-
-def _codes_cols() -> list:
-    return ["vec_id"] + [f"code{b}" for b in range(PQ_BLOCKS)]
-
-
-#: explicit read schemas for the frame artifact (payload + the `cell`
-#: partition column, LONG — cell ids are seeded vec_ids, unbounded at
-#: scale): passing them skips per-file footer schema inference on the
-#: cell-partitioned layout, which at n_cells files was the measurable
-#: chunk of the cold-restore gap (frames-load 0.49 s → ~0.3 s at sf0.1)
-_ASSIGN_READ_SCHEMA = (
-    "vec_id long, v array<double>, vnorm double, cells array<long>, cell long"
-)
-
-
-def _codes_read_schema() -> str:
-    return (
-        "vec_id long, "
-        + ", ".join(f"code{b} long" for b in range(PQ_BLOCKS))
-        + ", cell long"
-    )
-
-
-def _validate_frames_meta(spark: SparkSession, path: str):
-    """Read + GATE a ``save_index_frames`` meta block: exactly one
-    row, version/knob match, cell-partitioned layout (n_cells), and
-    the artifact's assigned probe count equal to what the CURRENT
-    policy derives from its own n_cells. Shared by
-    ``load_index_frames`` and ``ivfpq_search_artifact`` (r15 advice:
-    the serving path read meta WITHOUT these gates, so a
-    stale-policy/stale-version artifact served directly would
-    silently use budgets the current policy derives from its
-    n_cells). Returns the validated meta Row."""
-    metas = spark.read.parquet(f"{path}/meta").collect()
-    if len(metas) != 1:
-        raise ValueError(
-            f"frame artifact at {path!r} has {len(metas)} meta rows — "
-            "expected exactly 1; rebuild with save_index_frames"
-        )
-    m = metas[0]
-    ver = _index_version()
-    # gate via asDict(), never bare attribute access (r16 advice): a
-    # meta block missing `version`/`blocks`/`probes` must produce THIS
-    # descriptive ValueError, not a raw AttributeError from the
-    # condition itself
-    md = m.asDict()
-    if (
-        md.get("version") != ver
-        or "n_cells" not in md
-        or "probes" not in md
-        or "sf_dir" not in md
-        or md.get("blocks") != PQ_BLOCKS
-    ):
-        raise ValueError(
-            "index-frame artifact mismatch: "
-            f"artifact (version={md.get('version')!r}, "
-            f"blocks={md.get('blocks')}, "
-            f"meta columns={sorted(md)}) vs current "
-            f"(version={ver!r}, blocks={PQ_BLOCKS}, cell-partitioned "
-            "layout with n_cells) — retrain or rebuild the artifact"
-        )
-    # knob gate under the r15 DERIVED probe policy: the expected probe
-    # count is recomputed from the artifact's OWN trained cell count —
-    # stale-policy artifacts still refuse loudly, and the gate needs
-    # no retraining to evaluate (the whole point of the artifact)
-    expected = _ivfpq_probes(int(m.n_cells))
-    if int(m.probes) != expected:
-        raise ValueError(
-            "index-frame artifact probe-policy mismatch: artifact "
-            f"assigned with probes={int(m.probes)} but the current "
-            f"policy derives probes={expected} from its n_cells="
-            f"{int(m.n_cells)} — rebuild the artifact"
-        )
-    return m
-
-
-def read_index_cells(spark: SparkSession, path: str, cells: list) -> dict:
-    """PROBE-PRUNED read of a ``save_index_frames`` artifact: return
-    the assign/codes frames RESTRICTED to ``cells`` (a query's probed
-    cell ids), reading only those cells' partition directories — the
-    steady-state serving path at scale. The returned plans carry the
-    cell predicate as a PARTITION filter (pinned in CI), so a 100 TB
-    artifact answers a probes-cell query by listing ~probes
-    directories instead of scanning the corpus-sized frame.
-
-    Returns {"assign": DataFrame, "codes": DataFrame} (lazy, not
-    persisted, not installed into the process cache — a pruned subset
-    must never masquerade as the full index; use
-    ``load_index_frames`` to restore the cache)."""
-    cell_list = [int(c) for c in cells]
-    assign = (
-        spark.read.schema(_ASSIGN_READ_SCHEMA)
-        .parquet(f"{path}/assign")
-        .filter(F.col("cell").isin(cell_list))
-        .select(*_ASSIGN_COLS)
-    )
-    codes = (
-        spark.read.schema(_codes_read_schema())
-        .parquet(f"{path}/codes")
-        .filter(F.col("cell").isin(cell_list))
-        .select(*_codes_cols())
-    )
-    return {"assign": assign, "codes": codes}
-
-
-#: per-trained-index centroid matrix + exact norms for the serving
-#: path, keyed like `_TRAINED_CENTS` — converting 100k Python-list
-#: centroids to an array and folding their `_seq_norm`s costs ~1 s,
-#: which must be paid ONCE per loaded index (like training), never
-#: per query. Cleared with the trained dicts in reset_trained_state.
-_SERVING_CENT_CACHE: dict = {}
-
-
-def _serving_probe_cells(
-    cents: list, qv: list, qnorm: float, probes: int, cache_key=None
-) -> list:
-    """Driver-side probe-cell selection for the artifact serving path:
-    ONE numpy matmul over the cid-ascending trained centroid list +
-    stable argsort(-sims) — the same decision `_assign_cells` makes
-    executor-side, under the same rounding-robust contract (r16
-    verdict item 3: the previous per-centroid pure-Python folds were
-    O(n_cells·dim) interpreted driver work per query — tens of
-    millions of float ops at the ~√N cell count of a 10¹⁰-vector
-    index). The list→matrix conversion and the exact-contract
-    `_seq_norm` folds are one-time per index (``cache_key``, the same
-    key the trained dicts live under); the per-query residual is the
-    matmul + argsort — measured ~15 ms at 10⁵ cells × 32 dims vs
-    ~480 ms for the pure-Python fold loop (~2.3 s one-time build). The stable sort makes
-    float-equal cosines tie-break by ascending cid, identical to the
-    old (sim, -cid) descending sort. CI pins cell-pick identity to
-    the fold reference on the fixture panel."""
-    import numpy as np
-
-    cached = _SERVING_CENT_CACHE.get(cache_key) if cache_key else None
-    if cached is not None and cached[2] == len(cents):
-        cent_mat, cent_norms, _n = cached
-    else:
-        cent_mat = np.array([cv for _, cv in cents], dtype=np.float64)
-        cent_norms = np.array([_seq_norm(cv) for _, cv in cents])
-        if cache_key:
-            _SERVING_CENT_CACHE[cache_key] = (cent_mat, cent_norms, len(cents))
-    sims = (cent_mat @ np.array(qv, dtype=np.float64)) / (qnorm * cent_norms)
-    order = np.argsort(-sims, kind="stable")[: max(1, min(probes, len(cents)))]
-    return [cents[int(i)][0] for i in order]
-
-
-def ivfpq_search_artifact(
-    spark: SparkSession,
-    path: str,
-    query_vec: list,
-    top_k: int = TOP_K,
-    exclude_id: int | None = None,
-) -> DataFrame:
-    """Single-query IVF-PQ search SERVED FROM the cell-partitioned
-    frame artifact — the steady-state path the r15 layout exists for:
-    probe selection and the ADC distance table are driver-side
-    (centroids/codebooks are KB-scale), the corpus-sized work reads
-    ONLY the query's probed cells' partition directories via
-    ``read_index_cells`` (~probes files of a corpus-scale artifact),
-    and the cluster does one bounded ADC scan + exact re-rank.
-
-    Requires the trained dicts in-process (``load_trained_index``
-    first — the ``annIndex load`` CLI does both halves). Returns
-    (neighbor_id, cosine, rank) — for a panel vector with
-    ``exclude_id`` set, row-identical to that query's slice of
-    ``similarity_ivfpq_topk`` (CI-pinned).
-
-    Numeric discipline: every driver-side float mirrors the
-    executor-side decomposition — sequential-fold dot products (pure
-    Python, bit-equal to ``_dot``/DuckDB), the same
-    ``qq + cc − 2·qc`` ADC terms, left-associated block sum — so the
-    shortlist boundary agrees with the registry operator's.
-
-    100 TB: the probed-cell read is O(probes/n_cells) of the index;
-    the ADC scan is linear in those cells' vectors; the re-rank is
-    O(shortlist). Nothing corpus-sized reaches the driver."""
-    m = _validate_frames_meta(spark, path)
-    cents = _TRAINED_CENTS.get((m.sf_dir, LLOYD_ITERS))
-    cb = _TRAINED_CB.get((m.sf_dir, CB_LLOYD_ITERS))
-    if cents is None or cb is None:
-        raise ValueError(
-            f"no trained dicts for {m.sf_dir!r} — load_trained_index first"
-        )
-    n_cells = int(m.n_cells)
-    probes = _ivfpq_probes(n_cells)
-    shortlist = _ivfpq_shortlist(n_cells)
-
-    def _seq_dot(a, b) -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
-    qv = [float(x) for x in query_vec]
-    qnorm = _seq_norm(qv)
-    cells = _serving_probe_cells(
-        cents, qv, qnorm, probes, cache_key=(m.sf_dir, LLOYD_ITERS)
-    )
-
-    frames = read_index_cells(spark, path, cells)
-    nv = [x / qnorm for x in qv]
-    # ADC distance table as a BROADCAST frame joined per block — the
-    # same physical shape as the registry operator's multi-query path
-    # (r15 verdict: the previous 2048-literal create_map plan tree was
-    # fine at 8×256 but its analysis cost grows with the codebook;
-    # a broadcast hash join's plan size is constant). Driver-side d2
-    # stays the sequential-fold qb·qb + c·c − 2·qb·c decomposition;
-    # the per-row ADC total is the left-associated block sum, so the
-    # shortlist boundary is bit-identical to the literal-map form.
-    dt_rows = []
-    for b, (ids, mat) in enumerate(cb):
-        qb = nv[b * PQ_BLOCK_DIM : (b + 1) * PQ_BLOCK_DIM]
-        qq = _seq_dot(qb, qb)
-        for k in range(len(ids)):
-            c = [float(x) for x in mat[k]]
-            d2 = qq + _seq_dot(c, c) - 2.0 * _seq_dot(qb, c)
-            dt_rows.append((b, int(ids[k]), d2))
-    dtab = spark.createDataFrame(dt_rows, "block int, cid long, d2 double")
-    cand = frames["codes"]
-    adc = None
-    for b in range(PQ_BLOCKS):
-        db = F.broadcast(
-            dtab.filter(F.col("block") == b).select(
-                F.col("cid").alias(f"code{b}"), F.col("d2").alias(f"d2_{b}")
-            )
-        )
-        # LEFT join (r16 advice): the distance table covers every
-        # codebook id, so an unmatched codes row means codebook/codes
-        # drift inside the artifact — under the old inner join it
-        # silently VANISHED from the shortlist; now its null d2
-        # propagates into `adc` and raises loudly below
-        cand = cand.join(db, f"code{b}", "left")
-        adc = F.col(f"d2_{b}") if adc is None else adc + F.col(f"d2_{b}")
-    # raise_error folded into the consumed expression (not a separate
-    # assert column Catalyst could prune away with the projection)
-    adc_checked = F.when(adc.isNotNull(), adc).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "IVF-PQ serving: codes row (vec_id="
-                ),
-                F.col("vec_id").cast("string"),
-                F.lit(
-                    ") carries a code absent from the codebook — "
-                    "codebook/codes drift inside the artifact; rebuild "
-                    "with save_index_frames"
-                ),
-            )
-        )
-    )
-    cand = cand.select("vec_id", adc_checked.alias("adc"))
-    if exclude_id is not None:
-        cand = cand.filter(F.col("vec_id") != int(exclude_id))
-    short = cand.orderBy(F.asc("adc"), F.asc("vec_id")).limit(shortlist)
-    qcol = F.array(*[F.lit(x) for x in qv])
-    rerank = (
-        short.join(frames["assign"].select("vec_id", "v", "vnorm"), "vec_id")
-        .withColumn(
-            "cosine",
-            F.round(_dot(qcol, F.col("v")) / (F.lit(qnorm) * F.col("vnorm")), 6),
-        )
-        .select(F.col("vec_id").alias("neighbor_id"), "cosine")
-    )
-    return (
-        rerank.orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-        .limit(top_k)
-        .withColumn(
-            "rank",
-            F.row_number().over(
-                W.orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-            ),
-        )
-    )
-
-
-def load_index_frames(spark: SparkSession, path: str) -> dict:
-    """Load a ``save_index_frames`` artifact back into the per-vector
-    frame cache, REPLACING any in-process frames for its dataset.
-    Version- and knob-gated like ``load_trained_index``: a frame set
-    assigned under different probes/blocks/training knobs refuses to
-    load. The loaded frames are persisted (memory/disk) exactly like
-    the frames the training path builds, so the next
-    ``similarity_ivfpq_topk`` call reuses them and runs zero
-    assignment/encode scans."""
-    m = _validate_frames_meta(spark, path)
-    pkey = (m.sf_dir, int(m.probes))
-    ckey = (m.sf_dir, "pq_codes")
-    # release any stale in-process frames for the keys before replacing
-    for k in (pkey, ckey):
-        prev = _PERSISTED_WITH_CELLS.pop(k, None)
-        if prev is not None:
-            prev.unpersist()
-    # restore the exact in-process frame shapes (the partition column
-    # is layout, not payload — selected away, original column order)
-    assign = (
-        spark.read.schema(_ASSIGN_READ_SCHEMA)
-        .parquet(f"{path}/assign")
-        .select(*_ASSIGN_COLS)
-        .persist()
-    )
-    codes = (
-        spark.read.schema(_codes_read_schema())
-        .parquet(f"{path}/codes")
-        .select(*_codes_cols())
-        .persist()
-    )
-    _PERSISTED_WITH_CELLS[pkey] = assign
-    _PERSISTED_WITH_CELLS[ckey] = codes
-    _EFFECTIVE_NCELLS[m.sf_dir] = int(m.n_cells)
-    return {"sf_dir": m.sf_dir, "probes": int(m.probes)}
 
 
 def _pq_train_blocks(
@@ -2915,13 +2367,13 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # teardown_persisted_caches() releases them between bench entries.
     #
     # probe budget derives from the TRAINED cell count (r15 — see
-    # _ivfpq_probes): the memo makes a frames-only artifact load
-    # query-ready without retraining; a cold call trains here (the
-    # training would have happened two lines down regardless).
-    n_cells = _EFFECTIVE_NCELLS.get(sf_dir)
-    if n_cells is None:
-        n_cells = len(_trained_cents(spark, emb, n=_n(), cache_key=sf_dir))
-        _EFFECTIVE_NCELLS[sf_dir] = n_cells
+    # _ivfpq_probes): a cold call trains here (the training would have
+    # happened two lines down regardless); a warm call reads the cached
+    # centroids without sizing the corpus.
+    ivf_cents = _TRAINED_CENTS.get((sf_dir, LLOYD_ITERS))
+    if ivf_cents is None:
+        ivf_cents = _trained_cents(spark, emb, n=_n(), cache_key=sf_dir)
+    n_cells = len(ivf_cents)
     probes = _ivfpq_probes(n_cells)
     shortlist = _ivfpq_shortlist(n_cells)
     pkey = (sf_dir, probes)

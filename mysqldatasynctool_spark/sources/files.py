@@ -199,8 +199,7 @@ def parquet_scan_parallelism(
 
     Accepts a single ``.parquet`` file or a directory tree — the walk
     is RECURSIVE, so hive-partitioned layouts (``cell=3/part-0.
-    parquet``, ``date=.../...``) like this repo's own cell-partitioned
-    index artifact are probed, not rejected. Returns ``{files,
+    parquet``, ``date=.../...``) are probed, not rejected. Returns ``{files,
     row_groups, rows, bytes, max_scan_tasks, bounded}`` where
     ``max_scan_tasks = row_groups`` and ``bounded`` flags a layout
     that cannot feed ``target_parallelism`` tasks. Raises

@@ -36,16 +36,7 @@ HEAVY_FILES = {
 }
 HEAVY_TESTS = {
     # (file, test name with parametrization) — measured ≥ ~8 s
-    "test_round17_ops.py::test_load_trained_index_invalidates_serving_cache",
-    "test_round17_ops.py::test_adc_codebook_drift_raises_loudly",
-    "test_round17_ops.py::test_frames_meta_missing_column_refuses_descriptively",
-    "test_round17_ops.py::test_serving_probe_cells_matches_fold_reference",
     "test_round17_ops.py::test_sliding_distinct_sketch_merge_matches_exact",
-    "test_round15_ops.py::test_index_frames_cell_partitioned_roundtrip",
-    "test_round15_ops.py::test_index_frames_refuse_stale_probe_policy",
-    "test_round15_ops.py::test_ivfpq_search_artifact_matches_registry",
-    "test_round15_ops.py::test_ivfpq_search_artifact_refuses_stale_meta",
-    "test_round15_ops.py::test_load_trained_index_restores_probe_budgets",
     "test_round15_ops.py::test_anomaly_salted_matches_unsalted",
     "test_streaming_state_contract.py::test_stream_stream_join_evicts_state",
     "test_streaming_state_contract.py::test_dedup_within_watermark_evicts_state",
@@ -70,15 +61,8 @@ HEAVY_TESTS = {
     "test_streaming.py::test_stream_stream_funnel_join_matches_batch_twin",
     "test_streaming.py::test_cdc_merge_stream_matches_batch_merge",
     "test_streaming.py::test_cdc_merge_stream_checkpoint_recovery",
-    "test_round13_ops.py::test_trained_index_artifact_roundtrip_bit_identical",
-    "test_round13_ops.py::test_trained_index_artifact_fresh_process_bit_identical",
     "test_round13_ops.py::test_ivfpq_reuses_persisted_index_frames",
-    "test_cli.py::test_cli_ann_index_save_load_smoke",
-    "test_cli.py::test_cli_ann_index_smoke_refuses_mismatched_sf_dir",
     "test_cli.py::test_migrate_and_compare_roundtrip",
-    "test_round14_ops.py::test_index_frames_roundtrip_skips_rebuild",
-    "test_round14_ops.py::test_index_frames_refuse_mismatched_knobs",
-    "test_round14_ops.py::test_trained_index_artifact_cli_lifecycle",
     "test_round2_ops.py::test_clusters_consistent_with_pairs",
     "test_round2_ops.py::test_ivf_multiprobe_recall_not_worse",
     "test_round7_ops.py::test_markov_rows_sum_to_one",

@@ -228,60 +228,6 @@ def test_cli_query_unknown_suggests(capsys):
     assert "did you mean" in err and "q1_pricing_summary" in err
 
 
-def test_cli_ann_index_save_load_smoke(spark, tmp_path, capsys):
-    """The ops lifecycle the artifact exists for (VERDICT r13 item 5):
-    `annIndex save` trains + persists, a reset stands in for a driver
-    restart, `annIndex load --smoke` restores the trained dicts from
-    the artifact and answers a query WITHOUT retraining."""
-    from mysqldatasynctool_spark import cli
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    path = str(tmp_path / "ann_index")
-    sf = "/root/testdata/sf0.001"
-    assert cli.main(["annIndex", "save", path, "--sf-dir", sf, "--frames"]) == 0
-    out = capsys.readouterr().out
-    assert "saved" in out and "index rows" in out
-    assert "saved index frames" in out
-
-    S.reset_trained_state()  # driver-restart stand-in
-    assert not S._TRAINED_CENTS and not S._TRAINED_CB
-    assert cli.main(["annIndex", "load", path, "--sf-dir", sf, "--smoke"]) == 0
-    out = capsys.readouterr().out
-    assert "loaded" in out and "smoke query over loaded index" in out
-    assert "loaded index frames" in out
-    # the load restored trained state AND the per-vector frames for
-    # the dataset (no retrain, no assignment/encode rebuild)
-    assert any(k[0] == sf for k in S._TRAINED_CENTS)
-    assert (sf, S.ivfpq_probes_for(sf)) in S._PERSISTED_WITH_CELLS
-    assert (sf, "pq_codes") in S._PERSISTED_WITH_CELLS
-
-
-def test_cli_ann_index_smoke_refuses_mismatched_sf_dir(spark, tmp_path, capsys):
-    """`annIndex load --smoke` against an sf_dir the artifact was NOT
-    trained on must refuse (exit 2), not silently retrain the whole
-    index under the caller's feet (r14 advice)."""
-    from mysqldatasynctool_spark import cli
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    path = str(tmp_path / "ann_index_mismatch")
-    sf = "/root/testdata/sf0.001"
-    other = "/root/testdata/sf0.01"
-    # save_trained_index persists EVERY trained dataset in the process
-    # dicts; start clean so the artifact holds only `sf` and the
-    # mismatch below is a genuine mismatch regardless of test order
-    S.reset_trained_state()
-    assert cli.main(["annIndex", "save", path, "--sf-dir", sf]) == 0
-    capsys.readouterr()
-
-    S.reset_trained_state()
-    rc = cli.main(["annIndex", "load", path, "--sf-dir", other, "--smoke"])
-    captured = capsys.readouterr()
-    assert rc == 2
-    assert "not among the artifact's trained datasets" in captured.err
-    # the refusal fired BEFORE any retraining happened for `other`
-    assert not any(k[0] == other for k in S._TRAINED_CENTS)
-
-
 def test_cli_layout_probe(capsys, tmp_path):
     """layoutProbe prints one JSON report per path (footer-only, no
     Spark) and exits 2 when any path has no parquet data."""

@@ -37,3 +37,41 @@ def test_oracles_are_resolved_sql():
         assert re.search(r"\bSELECT\b", sql, re.I), f"{name}: not SQL"
         leftover = re.findall(r"\{[A-Za-z_][A-Za-z_0-9]*\}", sql)
         assert not leftover, f"{name}: uninterpolated placeholders {leftover}"
+
+
+def test_heavy_tier_names_exist():
+    """Every conftest HEAVY_FILES/HEAVY_TESTS entry names a test that
+    exists. A renamed heavy test otherwise drops silently into the
+    default tier, and its old entry stays behind doing nothing."""
+    import ast
+    import os
+
+    from mysqldatasynctool_spark.operators import collect_registry
+    from tests.conftest import HEAVY_FILES, HEAVY_TESTS
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    queries, _ = collect_registry()
+    defs: dict = {}
+
+    def functions(fname):
+        if fname not in defs:
+            path = os.path.join(here, fname)
+            if not os.path.isfile(path):
+                defs[fname] = None
+            else:
+                with open(path) as f:
+                    tree = ast.parse(f.read(), fname)
+                defs[fname] = {
+                    n.name for n in tree.body if isinstance(n, ast.FunctionDef)
+                }
+        return defs[fname]
+
+    stale = [f for f in HEAVY_FILES if functions(f) is None]
+    for entry in HEAVY_TESTS:
+        fname, test = entry.split("::")
+        func, _, param = test.partition("[")
+        if func not in (functions(fname) or ()):
+            stale.append(entry)
+        elif func == "test_matches_oracle" and param[:-1] not in queries:
+            stale.append(entry)
+    assert not stale, f"stale heavy-tier entries: {sorted(stale)}"

@@ -1,163 +1,11 @@
-"""Round-13 additions: trained-ANN artifact persistence, MMR degenerate
+"""Round-13 additions: persisted ANN index-frame reuse, MMR degenerate
 -input degradation, bench compact-line size budget."""
 
 from __future__ import annotations
 
 import json
 
-import pytest
-
 from tests.conftest import SF_SMALL
-
-
-def test_trained_index_artifact_roundtrip_bit_identical(spark, tmp_path):
-    """save_trained_index -> reset_trained_state -> load_trained_index
-    must reproduce the driver-side trained state BIT-identically (r12
-    verdict item 7: on a real cluster a driver restart would silently
-    retrain; the artifact is the FAISS index-file analogue). Training
-    is deterministic, so the loaded state must equal the retrained
-    state float-for-float — and a query run on the loaded state must
-    equal the retrained run row-for-row."""
-    import numpy as np
-
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    S.reset_trained_state()
-    # populate both dicts via the production entry (trains IVF cells
-    # AND the PQ codebook under cache_key=sf_dir)
-    retrained = [
-        tuple(r)
-        for r in S.similarity_ivfpq_topk(spark, SF_SMALL).collect()
-    ]
-    assert (SF_SMALL, S.LLOYD_ITERS) in S._TRAINED_CENTS
-    assert any(k[0] == SF_SMALL for k in S._TRAINED_CB)
-    snap_cents = {k: [(c, list(v)) for c, v in vs] for k, vs in S._TRAINED_CENTS.items()}
-    snap_cb = {
-        k: [(list(ids), mat.copy()) for ids, mat in blocks]
-        for k, blocks in S._TRAINED_CB.items()
-    }
-
-    path = str(tmp_path / "trained_index")
-    n_saved = S.save_trained_index(spark, path)
-    assert n_saved > 0
-
-    dropped = S.reset_trained_state()
-    assert dropped >= 2
-    assert not S._TRAINED_CENTS and not S._TRAINED_CB
-
-    n_loaded = S.load_trained_index(spark, path)
-    assert n_loaded == n_saved
-    assert set(S._TRAINED_CENTS) == set(snap_cents)
-    for k, vs in snap_cents.items():
-        got = S._TRAINED_CENTS[k]
-        assert [c for c, _ in got] == [c for c, _ in vs]
-        for (_, a), (_, b) in zip(got, vs):
-            assert list(a) == list(b)  # exact float equality
-    assert set(S._TRAINED_CB) == set(snap_cb)
-    for k, blocks in snap_cb.items():
-        got = S._TRAINED_CB[k]
-        assert len(got) == len(blocks)
-        for (gids, gmat), (ids, mat) in zip(got, blocks):
-            assert gids == ids
-            assert np.array_equal(gmat, mat)
-
-    # the query on LOADED state must reproduce the retrained run
-    reloaded = [
-        tuple(r)
-        for r in S.similarity_ivfpq_topk(spark, SF_SMALL).collect()
-    ]
-    assert reloaded == retrained
-
-
-def test_trained_index_artifact_fresh_process_bit_identical(spark, tmp_path):
-    """The literal driver-restart scenario (r12 verdict item 7): a
-    FRESH python process with its own SparkSession loads the artifact
-    and must hold bit-identical trained state — floats compared via
-    repr, which round-trips doubles exactly."""
-    import subprocess
-    import sys as _sys
-
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    if (SF_SMALL, S.LLOYD_ITERS) not in S._TRAINED_CENTS or not any(
-        k[0] == SF_SMALL for k in S._TRAINED_CB
-    ):
-        S.similarity_ivfpq_topk(spark, SF_SMALL).count()
-    path = str(tmp_path / "restart_index")
-    S.save_trained_index(spark, path)
-
-    def snapshot(cents, cb):
-        return {
-            "cents": {
-                repr(k): [(c, [repr(x) for x in v]) for c, v in vs]
-                for k, vs in cents.items()
-            },
-            "cb": {
-                repr(k): [
-                    (list(ids), [[repr(x) for x in row] for row in mat])
-                    for ids, mat in blocks
-                ]
-                for k, blocks in cb.items()
-            },
-        }
-
-    mine = json.dumps(snapshot(S._TRAINED_CENTS, S._TRAINED_CB), sort_keys=True)
-    (tmp_path / "parent.json").write_text(mine)
-
-    child = f"""
-import json, sys
-sys.path.insert(0, {repr(str(__import__('os').path.dirname(__import__('os').path.dirname(__import__('os').path.abspath(__file__)))))})
-from mysqldatasynctool_spark.session import get_spark
-from mysqldatasynctool_spark.operators import similarity as S
-spark = get_spark(app_name="artifact-restart", master="local[4]", shuffle_partitions=4)
-assert not S._TRAINED_CENTS and not S._TRAINED_CB
-S.load_trained_index(spark, {path!r})
-def snapshot(cents, cb):
-    return {{
-        "cents": {{repr(k): [(c, [repr(x) for x in v]) for c, v in vs]
-                   for k, vs in cents.items()}},
-        "cb": {{repr(k): [(list(ids), [[repr(x) for x in row] for row in mat])
-                 for ids, mat in blocks] for k, blocks in cb.items()}},
-    }}
-open({repr(str(tmp_path / "child.json"))}, "w").write(
-    json.dumps(snapshot(S._TRAINED_CENTS, S._TRAINED_CB), sort_keys=True))
-spark.stop()
-"""
-    subprocess.run(
-        [_sys.executable, "-c", child], check=True, timeout=300, cwd="/tmp"
-    )
-    theirs = (tmp_path / "child.json").read_text()
-    # fresh-process state must cover every key this process trained
-    # for SF_SMALL and match it float-for-float; this process may
-    # additionally hold other datasets' training (session fixture)
-    mine_d, theirs_d = json.loads(mine), json.loads(theirs)
-    for kind in ("cents", "cb"):
-        for k, v in theirs_d[kind].items():
-            assert mine_d[kind][k] == v
-        assert any(SF_SMALL in k for k in theirs_d[kind])
-
-
-def test_trained_index_artifact_version_gate(spark, tmp_path):
-    """An artifact written under different knobs must be REFUSED, not
-    silently loaded: a stale index trained under other LLOYD_ITERS /
-    PQ geometry would break the oracle contract."""
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    if not S._TRAINED_CENTS:
-        S._assign_cells(
-            spark, S._vecs(spark, SF_SMALL), probes=1, cache_key=SF_SMALL
-        )
-    path = str(tmp_path / "stale_index")
-    S.save_trained_index(spark, path)
-    # rewrite with a corrupted version string
-    df = spark.read.parquet(path)
-    from pyspark.sql import functions as F
-
-    df.withColumn("version", F.lit("v0:other-knobs")).write.mode(
-        "overwrite"
-    ).parquet(str(tmp_path / "stale_index2"))
-    with pytest.raises(ValueError, match="version mismatch"):
-        S.load_trained_index(spark, str(tmp_path / "stale_index2"))
 
 
 def test_mmr_degenerate_candidates_lose_not_raise(spark):

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from tests.conftest import SF_DIR, SF_SMALL
 
 
@@ -117,6 +119,7 @@ def test_ivfpq_probe_policy():
     indexes (every fixture), coverage rules at scale, clamped to the
     cell count; pure integer arithmetic so the oracle's in-SQL twin
     is bit-equal at any k."""
+    from mysqldatasynctool_spark.operators import similarity as S
     from mysqldatasynctool_spark.operators.similarity import _ivfpq_probes
 
     assert _ivfpq_probes(1) == 1
@@ -131,79 +134,17 @@ def test_ivfpq_probe_policy():
     assert vals == sorted(vals)
     assert all(_ivfpq_probes(k) <= k for k in ks)
 
-
-def test_index_frames_cell_partitioned_roundtrip(spark, tmp_path):
-    """r15 artifact layout (VERDICT r14 item 4): assign/codes are
-    written partitioned by coarse cell; a FULL load is bit-identical
-    to the in-process frames, and the probe-pruned read path touches
-    ONLY the requested cells' partition directories (partition
-    filters in the scan, file subset on disk)."""
-    import os
-
-    from tests.conftest import SF_SMALL
-    from mysqldatasynctool_spark.operators import similarity as S
-
+    # the per-dataset lookup derives the budget from the trained
+    # centroid count and raises while no index is trained
+    key = "/no/such/dataset"
     S.reset_trained_state()
-    fresh = [tuple(r) for r in S.similarity_ivfpq_topk(spark, SF_SMALL).collect()]
-    path = str(tmp_path / "frames")
-    counts = S.save_index_frames(spark, path, SF_SMALL)
-    assert counts["assign"] == counts["codes"] > 0
-
-    # layout: hive-style cell=<cid> directories, one file per cell
-    cell_dirs = [d for d in os.listdir(f"{path}/assign") if d.startswith("cell=")]
-    assert len(cell_dirs) > 1
-    probes = S.ivfpq_probes_for(SF_SMALL)
-
-    # full restore: bit-identical query output, frames reused
+    with pytest.raises(ValueError, match="no trained index state"):
+        S.ivfpq_probes_for(key)
+    S._TRAINED_CENTS[(key, S.LLOYD_ITERS)] = [(i, [0.0]) for i in range(100)]
+    assert S.ivfpq_probes_for(key) == _ivfpq_probes(100)
     S.reset_trained_state()
-    meta = S.load_index_frames(spark, path)
-    assert meta["probes"] == probes
-    loaded = [tuple(r) for r in S.similarity_ivfpq_topk(spark, SF_SMALL).collect()]
-    assert loaded == fresh
-
-    # probe-pruned read: only the two requested cells' files are read
-    two = sorted(int(d.split("=", 1)[1]) for d in cell_dirs)[:2]
-    pruned = S.read_index_cells(spark, path, two)
-    plan = _plan(spark, pruned["assign"], "formatted")
-    assert "PartitionFilters" in plan and "cell" in plan
-    rows = pruned["assign"].collect()
-    assert {r.cells[0] for r in rows} == set(two)
-    # the executed scan read EXACTLY the two cells' files — partition
-    # pruning at the file level, not a full read + post-filter
-    # (inputFiles() reflects the pre-pruning analyzed plan, so the
-    # evidence is the scan's numFiles metric after execution)
-    scan = (
-        pruned["assign"]._jdf.queryExecution().executedPlan().collectLeaves().head()
-    )
-    assert scan.metrics().apply("numFiles").value() == 2
-    assert scan.metrics().apply("numPartitions").value() == 2
-    # codes prune too, and join back to exactly the pruned vectors
-    n_assign = pruned["assign"].count()
-    assert pruned["codes"].count() == n_assign
-
-
-def test_index_frames_refuse_stale_probe_policy(spark, tmp_path):
-    """An artifact whose recorded probes disagree with the CURRENT
-    policy applied to its own n_cells must refuse to load."""
-    import pytest as _pytest
-
-    from tests.conftest import SF_SMALL
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    S.reset_trained_state()
-    S.similarity_ivfpq_topk(spark, SF_SMALL).count()
-    path = str(tmp_path / "frames_stale")
-    S.save_index_frames(spark, path, SF_SMALL)
-    # forge a stale-policy meta (probes off by one)
-    metas = spark.read.parquet(f"{path}/meta").collect()
-    m = metas[0]
-    forged = spark.createDataFrame(
-        [(m.version, m.sf_dir, int(m.probes) + 1, m.blocks, m.n_cells)],
-        "version string, sf_dir string, probes int, blocks int, n_cells int",
-    )
-    forged.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    with _pytest.raises(ValueError, match="probe-policy mismatch"):
-        S.load_index_frames(spark, path)
+    with pytest.raises(ValueError, match="no trained index state"):
+        S.ivfpq_probes_for(key)
 
 
 def test_ivfpq_shortlist_policy():
@@ -222,82 +163,3 @@ def test_ivfpq_shortlist_policy():
     ks = [1, 50, 200, 448, 4096]
     vals = [_ivfpq_shortlist(k) for k in ks]
     assert vals == sorted(vals)
-
-
-def test_ivfpq_search_artifact_matches_registry(spark, tmp_path):
-    """The single-query serving path (probe-pruned artifact read +
-    driver-side ADC table) must be ROW-IDENTICAL to the registry
-    operator's slice for the same query — same shortlist boundary,
-    same 6-dp cosines, same ranks — while reading only the query's
-    probed cells."""
-    from tests.conftest import SF_SMALL
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    S.reset_trained_state()
-    full = {}
-    for r in S.similarity_ivfpq_topk(spark, SF_SMALL).collect():
-        full.setdefault(r.qid, []).append((r.neighbor_id, r.cosine, r.rank))
-    path = str(tmp_path / "frames_serve")
-    S.save_index_frames(spark, path, SF_SMALL)
-
-    emb = S._vecs(spark, SF_SMALL)
-    qids = sorted(full)[:3]
-    vecs = {
-        r.vec_id: list(r.v)
-        for r in emb.filter(emb.vec_id.isin([int(q) for q in qids])).collect()
-    }
-    for qid in qids:
-        served = S.ivfpq_search_artifact(spark, path, vecs[qid], exclude_id=qid)
-        got = [(r.neighbor_id, r.cosine, r.rank) for r in served.collect()]
-        assert got == full[qid], f"qid {qid}: {got} != {full[qid]}"
-    # the ADC table rides broadcast hash joins, not a literal map
-    # whose plan tree grows with the codebook (r15 verdict item 4)
-    plan = _plan(spark, served, "formatted")
-    assert "BroadcastHashJoin" in plan
-    assert "map_from" not in plan and "keys: [" not in plan
-
-
-def test_ivfpq_search_artifact_refuses_stale_meta(spark, tmp_path):
-    """The serving path must apply the SAME meta gates as
-    load_index_frames (r15 advice): a stale-policy artifact served
-    directly would silently use budgets derived under the current
-    policy from its n_cells."""
-    import pytest as _pytest
-
-    from tests.conftest import SF_SMALL
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    S.reset_trained_state()
-    S.similarity_ivfpq_topk(spark, SF_SMALL).count()
-    path = str(tmp_path / "frames_serve_stale")
-    S.save_index_frames(spark, path, SF_SMALL)
-    metas = spark.read.parquet(f"{path}/meta").collect()
-    m = metas[0]
-    forged = spark.createDataFrame(
-        [(m.version, m.sf_dir, int(m.probes) + 1, m.blocks, m.n_cells)],
-        "version string, sf_dir string, probes int, blocks int, n_cells int",
-    )
-    forged.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    with _pytest.raises(ValueError, match="probe-policy mismatch"):
-        S.ivfpq_search_artifact(spark, path, [0.0] * 32)
-
-
-def test_load_trained_index_restores_probe_budgets(spark, tmp_path):
-    """load_trained_index alone must restore _EFFECTIVE_NCELLS (r15
-    advice: ivfpq_probes_for's error message promised 'load an
-    artifact' but only load_index_frames populated it)."""
-    from tests.conftest import SF_SMALL
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    S.reset_trained_state()
-    S.similarity_ivfpq_topk(spark, SF_SMALL).count()
-    probes = S.ivfpq_probes_for(SF_SMALL)
-    path = str(tmp_path / "trained_dicts")
-    S.save_trained_index(spark, path)
-    S.reset_trained_state()
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="no trained index state"):
-        S.ivfpq_probes_for(SF_SMALL)
-    S.load_trained_index(spark, path)
-    assert S.ivfpq_probes_for(SF_SMALL) == probes

@@ -56,8 +56,7 @@ def test_parquet_scan_parallelism_probe(tmp_path):
     assert rep["row_groups"] == rep["max_scan_tasks"] == 20
     assert rep["rows"] == 20_000 and not rep["bounded"]
 
-    # hive-partitioned trees are walked recursively (the repo's own
-    # cell-partitioned index artifact is exactly this shape)
+    # hive-partitioned trees are walked recursively
     h = tmp_path / "hive.parquet"
     for c in (0, 1, 2):
         (h / f"cell={c}").mkdir(parents=True)

@@ -1,7 +1,7 @@
 """Round-17 units: the burst-aware bench statistic (r16 verdict
 item 1 — the probes recorded disk bursts, the median now USES them),
 its bench_compare consumption, the shared bench timing loop, and the
-serving/scan items of the r16 brief."""
+scan items of the r16 brief."""
 
 from __future__ import annotations
 
@@ -280,111 +280,8 @@ def test_bench_source_wires_rejection_metadata():
 
 
 # ---------------------------------------------------------------- #
-# serving-path: numpy probe selection + artifact drift hardening    #
+# footer-sampled scan probe and the distinct-count twins            #
 # ---------------------------------------------------------------- #
-
-
-def test_serving_probe_cells_matches_fold_reference(spark):
-    """r16 verdict item 6: the serving path's probe selection is now
-    one numpy matmul + stable argsort; the DECISION (which cells to
-    read) must be identical to the old per-centroid pure-Python fold
-    on the fixture panel — the module's rounding-robust contract."""
-    from tests.conftest import SF_SMALL
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    S.reset_trained_state()
-    S.similarity_ivfpq_topk(spark, SF_SMALL).count()  # trains + caches
-    cents = S._TRAINED_CENTS[(SF_SMALL, S.LLOYD_ITERS)]
-    n_cells = len(cents)
-    probes = S._ivfpq_probes(n_cells)
-
-    def _fold_reference(qv, qnorm, k):
-        def _seq_dot(a, b):
-            acc = 0.0
-            for x, y in zip(a, b):
-                acc = acc + x * y
-            return acc
-
-        sims = [
-            (_seq_dot(qv, cv) / (qnorm * S._seq_norm(cv)), -cid)
-            for cid, cv in cents
-        ]
-        order = sorted(range(len(cents)), key=lambda i: sims[i], reverse=True)
-        return [cents[i][0] for i in order[:k]]
-
-    panel = S._vecs(spark, SF_SMALL).limit(8).collect()
-    assert len(panel) == 8
-    for r in panel:
-        qv = [float(x) for x in r.v]
-        qnorm = S._seq_norm(qv)
-        got = S._serving_probe_cells(cents, qv, qnorm, probes)
-        assert got == _fold_reference(qv, qnorm, probes), r.vec_id
-    # sub-probes ask returns a prefix; degenerate probes clamps to 1
-    qv = [float(x) for x in panel[0].v]
-    qnorm = S._seq_norm(qv)
-    full = S._serving_probe_cells(cents, qv, qnorm, n_cells)
-    assert S._serving_probe_cells(cents, qv, qnorm, 3) == full[:3]
-    assert len(S._serving_probe_cells(cents, qv, qnorm, 0)) == 1
-
-
-def test_frames_meta_missing_column_refuses_descriptively(spark, tmp_path):
-    """r16 advice: a meta block MISSING the `blocks` (or `probes`)
-    column must produce the descriptive artifact-mismatch ValueError,
-    not a raw AttributeError from the gate condition itself."""
-    import pytest as _pytest
-
-    from tests.conftest import SF_SMALL
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    S.reset_trained_state()
-    S.similarity_ivfpq_topk(spark, SF_SMALL).count()
-    path = str(tmp_path / "frames_noblocks")
-    S.save_index_frames(spark, path, SF_SMALL)
-    m = spark.read.parquet(f"{path}/meta").collect()[0]
-    forged = spark.createDataFrame(
-        [(m.version, m.sf_dir, int(m.probes), int(m.n_cells))],
-        "version string, sf_dir string, probes int, n_cells int",
-    )
-    forged.coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
-    with _pytest.raises(ValueError, match="artifact mismatch"):
-        S._validate_frames_meta(spark, path)
-
-
-def test_adc_codebook_drift_raises_loudly(spark, tmp_path):
-    """r16 advice: a codes row whose code is absent from the codebook
-    used to VANISH via the inner ADC join; the left join + raise_error
-    must turn the drift into a loud failure naming the rebuild."""
-    import glob as _glob
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pytest as _pytest
-
-    from tests.conftest import SF_SMALL
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    S.reset_trained_state()
-    S.similarity_ivfpq_topk(spark, SF_SMALL).count()
-    path = str(tmp_path / "frames_drift")
-    S.save_index_frames(spark, path, SF_SMALL)
-    # corrupt ONE cell's codes file: point code0 at an id no codebook
-    # block contains (schema-compatible drift, the silent-vanish case)
-    f = sorted(_glob.glob(f"{path}/codes/cell=*/*.parquet"))[0]
-    t = pq.read_table(f)
-    bad = pa.array([2**40] * t.num_rows, type=t.schema.field("code0").type)
-    t = t.set_column(t.schema.get_field_index("code0"), "code0", bad)
-    pq.write_table(t, f)
-    # drop Hadoop's .crc sidecar — the rewrite must read as VALID
-    # parquet (schema-compatible drift), not as a corrupt file
-    crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    emb = S._vecs(spark, SF_SMALL)
-    qv = [float(x) for x in emb.limit(1).collect()[0].v]
-    S.load_trained_index  # noqa: B018 — dicts already trained above
-    with _pytest.raises(Exception, match="codebook/codes drift"):
-        S.ivfpq_search_artifact(spark, path, qv).collect()
 
 
 def test_scan_parallelism_sampling_mode(tmp_path):
@@ -422,53 +319,6 @@ def test_scan_parallelism_sampling_mode(tmp_path):
     # threshold >= file count -> exact path, no flag
     below = parquet_scan_parallelism(str(d), sample_files=500)
     assert "sampled" not in below and below["row_groups"] == 1000
-
-
-def test_serving_cent_cache_per_index_and_reset():
-    """The serving path's centroid matrix + exact norms are one-time
-    per index (the list->matrix conversion and _seq_norm folds cost
-    seconds at 10^5 cells — per-query would defeat the numpy rewrite):
-    a keyed call populates the cache, a stale-length entry is rebuilt
-    (an index retrained to a different cell count under the same key
-    must not serve the old matrix), and reset_trained_state clears it."""
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    cents = [(i, [float(i), 1.0]) for i in range(8)]
-    qv, qnorm = [1.0, 0.5], S._seq_norm([1.0, 0.5])
-    S._SERVING_CENT_CACHE.clear()
-    a = S._serving_probe_cells(cents, qv, qnorm, 3, cache_key=("k", 3))
-    assert ("k", 3) in S._SERVING_CENT_CACHE
-    assert S._serving_probe_cells(cents, qv, qnorm, 3, cache_key=("k", 3)) == a
-    # stale-length entry (same key, different index) is rebuilt
-    bigger = cents + [(8, [9.0, 9.0])]
-    b = S._serving_probe_cells(bigger, qv, qnorm, 9, cache_key=("k", 3))
-    assert len(b) == 9 and S._SERVING_CENT_CACHE[("k", 3)][2] == 9
-    # unkeyed calls never populate
-    S._SERVING_CENT_CACHE.clear()
-    S._serving_probe_cells(cents, qv, qnorm, 3)
-    assert not S._SERVING_CENT_CACHE
-    S._SERVING_CENT_CACHE[("k", 3)] = ("x", "y", 1)
-    S.reset_trained_state()
-    assert not S._SERVING_CENT_CACHE
-
-
-def test_load_trained_index_invalidates_serving_cache(spark, tmp_path):
-    """r17 review finding: load_trained_index REPLACES the in-process
-    centroids; a same-length serving matrix cached under the same key
-    would pass _serving_probe_cells' length guard and serve stale
-    centroids. The load must pop the serving-cache entry for every
-    IVF key it replaces."""
-    from tests.conftest import SF_SMALL
-    from mysqldatasynctool_spark.operators import similarity as S
-
-    S.reset_trained_state()
-    S.similarity_ivfpq_topk(spark, SF_SMALL).count()
-    path = str(tmp_path / "idx")
-    S.save_trained_index(spark, path)
-    key = (SF_SMALL, S.LLOYD_ITERS)
-    S._SERVING_CENT_CACHE[key] = ("stale-matrix", "stale-norms", 999)
-    S.load_trained_index(spark, path)
-    assert key not in S._SERVING_CENT_CACHE
 
 
 def test_sliding_distinct_sketch_merge_matches_exact(spark):
