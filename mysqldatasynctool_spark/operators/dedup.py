@@ -1090,31 +1090,12 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _semantic_cells_oracle() -> str:
-    # the cell chain is the SQL twin of similarity._assign_cells'
-    # capped md5-rank seeding + Lloyd refinement — shared (via
-    # _lloyd_chain_sql) with SIMILARITY_IVF_ORACLE so all four
-    # _assign_cells consumers stay in lockstep
-    from .similarity import _lloyd_chain_sql
+    # the cell prelude is the SQL twin of similarity._assign_cells,
+    # shared with every single-cell _assign_cells consumer's oracle
+    from .similarity import _cell_assign_prelude_sql
 
     return f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
-),
-{_lloyd_chain_sql()},
-aff AS (
-  SELECT e.vec_id, c.cid,
-         list_dot_product(e.v, c.cv) / (e.vnorm * c.cnorm) AS sim
-  FROM e CROSS JOIN c
-),
-assign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn
-    FROM aff
-  ) WHERE rn = 1
-),
+{_cell_assign_prelude_sql()},
 corpus AS (SELECT e.vec_id, e.v, e.vnorm, a.cell FROM e JOIN assign a USING (vec_id)),
 dropped AS (
   SELECT DISTINCT b.vec_id

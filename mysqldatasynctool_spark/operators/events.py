@@ -15,7 +15,7 @@ size/4 at 100 TB or pre-bucket by the slide and roll up.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -488,34 +488,57 @@ def events_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     blowup on hot users, no unbounded join state). Only a pathological
     single-user skew would need salting + a two-pass merge.
     """
-    ev = load(spark, sf_dir, "events")
-    tagged = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(F.col("event_type") == "click", F.lit(0))
-        .when(F.col("event_type") == "purchase", F.lit(1))
-        .alias("side"),
-    ).filter(F.col("side").isNotNull())
+    purchases = _asof_running(_asof_tagged(spark, sf_dir), ["user_id"])
+    return _asof_result(purchases, F.col("click_ts"))
+
+
+def _asof_tagged(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The as-of join's input: events as (user_id, ts, event_id, side)
+    with clicks on side 0, purchases on side 1 and every other event
+    type dropped."""
+    return (
+        load(spark, sf_dir, "events")
+        .select(
+            "user_id",
+            "ts",
+            "event_id",
+            F.when(F.col("event_type") == "click", F.lit(0))
+            .when(F.col("event_type") == "purchase", F.lit(1))
+            .alias("side"),
+        )
+        .filter(F.col("side").isNotNull())
+    )
+
+
+def _asof_running(tagged: DataFrame, keys: list) -> DataFrame:
+    """The purchases of ``tagged``, each with ``click_ts``: the running
+    ``last(click ts, ignorenulls)`` over a window partitioned by
+    ``keys`` and ordered (ts, side, event_id). Equal timestamps order
+    clicks before purchases, so a same-instant click counts as
+    "at-or-before", matching the oracle's ``c.ts <= p.ts``."""
     w = (
-        W.partitionBy("user_id")
+        W.partitionBy(*keys)
         .orderBy(F.col("ts").asc(), F.col("side").asc(), F.col("event_id").asc())
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     running_click = F.last(
         F.when(F.col("side") == 0, F.col("ts")), ignorenulls=True
     ).over(w)
+    return tagged.withColumn("click_ts", running_click).filter(F.col("side") == 1)
+
+
+def _asof_result(purchases: DataFrame, candidate: Column) -> DataFrame:
+    """The as-of output: each purchase with its ``candidate`` click,
+    NULL when that click is older than the tolerance."""
     # microsecond-exact tolerance: cast("long") floors to whole
     # seconds, which OVER-matches pairs whose true gap is in
     # (tol, tol+1) s — the oracle compares full-precision timestamps,
     # so the filter must too
     fresh_enough = (
-        F.unix_micros(F.col("ts")) - F.unix_micros(F.col("click_ts"))
+        F.unix_micros(F.col("ts")) - F.unix_micros(candidate)
     ) <= ASOF_TOLERANCE_S * 1_000_000
     return (
-        tagged.withColumn("click_ts", running_click)
-        .filter(F.col("side") == 1)
-        .withColumn("click_ts", F.when(fresh_enough, F.col("click_ts")))
+        purchases.withColumn("click_ts", F.when(fresh_enough, candidate))
         .select(
             "user_id",
             F.col("event_id").alias("purchase_id"),
@@ -561,7 +584,11 @@ def events_asof_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
       the PREVIOUS bucket's last click. Because bucket width >=
       tolerance, any in-tolerance click lives in the purchase's own
       or previous bucket — coalesce of the two candidates is exhaustive,
-      and the shared tolerance filter nulls the rest.
+      and the tolerance filter nulls the rest.
+
+    The running pass and the tolerance filter are the unsalted form's
+    own (``_asof_running`` with the bucket as a second window key,
+    ``_asof_result``).
 
     Cost: two exchanges on (user_id, bucket) (the groupBy reuses the
     window's partitioning) + one small equi-join — bounded per-task
@@ -569,31 +596,9 @@ def events_asof_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     all; the pattern mirrors join_skew_salted (relational.py).
     """
     bucket_us = ASOF_TOLERANCE_S * 1_000_000
-    ev = load(spark, sf_dir, "events")
-    tagged = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(F.col("event_type") == "click", F.lit(0))
-        .when(F.col("event_type") == "purchase", F.lit(1))
-        .alias("side"),
-    ).filter(F.col("side").isNotNull())
     # integer `div`, not double `/`: exact at bucket boundaries
-    tagged = tagged.withColumn(
+    tagged = _asof_tagged(spark, sf_dir).withColumn(
         "bucket", F.expr(f"unix_micros(ts) div {bucket_us}L")
-    )
-    w = (
-        W.partitionBy("user_id", "bucket")
-        .orderBy(F.col("ts").asc(), F.col("side").asc(), F.col("event_id").asc())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    running_click = F.last(
-        F.when(F.col("side") == 0, F.col("ts")), ignorenulls=True
-    ).over(w)
-    purchases = (
-        tagged.withColumn("own_click", running_click)
-        .filter(F.col("side") == 1)
-        .select("user_id", "bucket", "event_id", "ts", "own_click")
     )
     bucket_last = (
         tagged.filter(F.col("side") == 0)
@@ -601,20 +606,11 @@ def events_asof_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("ts").alias("prev_click"))
         .select("user_id", (F.col("bucket") + 1).alias("bucket"), "prev_click")
     )
-    joined = purchases.join(bucket_last, ["user_id", "bucket"], "left")
-    candidate = F.coalesce(F.col("own_click"), F.col("prev_click"))
-    fresh_enough = (
-        F.unix_micros(F.col("ts")) - F.unix_micros(candidate)
-    ) <= ASOF_TOLERANCE_S * 1_000_000
-    return (
-        joined.withColumn("click_ts", F.when(fresh_enough, candidate))
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            "click_ts",
-        )
-        .orderBy("user_id", "purchase_id")
+    purchases = _asof_running(tagged, ["user_id", "bucket"]).join(
+        bucket_last, ["user_id", "bucket"], "left"
+    )
+    return _asof_result(
+        purchases, F.coalesce(F.col("click_ts"), F.col("prev_click"))
     )
 
 

@@ -847,30 +847,13 @@ def pipeline_cluster_balanced_sample(
 
 
 def _cluster_balanced_sample_oracle() -> str:
-    # cell chain shared with every _assign_cells consumer (lockstep
-    # via similarity._lloyd_chain_sql); the md5-rank pick mirrors
+    # cell prelude shared with every single-cell _assign_cells
+    # consumer's oracle; the md5-rank pick mirrors
     # PIPELINE_SAMPLE_PER_GROUP_ORACLE
-    from .similarity import _lloyd_chain_sql
+    from .similarity import _cell_assign_prelude_sql
 
     return f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
-),
-{_lloyd_chain_sql()},
-aff AS (
-  SELECT e.vec_id, c.cid,
-         list_dot_product(e.v, c.cv) / (e.vnorm * c.cnorm) AS sim
-  FROM e CROSS JOIN c
-),
-assign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn
-    FROM aff
-  ) WHERE rn = 1
-),
+{_cell_assign_prelude_sql()},
 joined AS (
   SELECT a.cell, d.doc_id, d.source, d.n_chars
   FROM documents d JOIN assign a ON d.doc_id = a.vec_id

@@ -571,8 +571,8 @@ def _lloyd_refine(
     update, provably non-decreasing in mean cosine for a fixed
     assignment). Cells that lose all members drop out.
 
-    Cross-engine determinism: the update is computed with the proven
-    ``mean6`` discipline — unit components rounded to 6 dp (JVM
+    Cross-engine determinism: the update (``_mean_update``) uses the
+    proven ``mean6`` discipline — unit components rounded to 6 dp (JVM
     ``F.round`` of ``v[d]/vnorm`` with the sequential-fold vnorm),
     summed EXACTLY as DECIMAL(18,6), divided and re-rounded at 6 dp —
     so the refined centroid doubles are bit-identical to the DuckDB
@@ -640,24 +640,28 @@ def _lloyd_refine(
                 for d in range(EMBED_DIM)
             ],
         )
-        rows = (
-            units.groupBy("cell")
-            .agg(
-                *[
-                    F.round(
-                        F.sum(f"u{d}").cast("double") / F.count("*"), 6
-                    ).alias(f"m{d}")
-                    for d in range(EMBED_DIM)
-                ]
-            )
-            .collect()
-        )
-        cur = sorted(
-            (int(r["cell"]), [float(r[f"m{d}"]) for d in range(EMBED_DIM)])
-            for r in rows
-        )
+        cur = _mean_update(units, ["cell"], EMBED_DIM)
     src.unpersist()
     return cur
+
+
+def _mean_update(units: DataFrame, keys: list, dim: int) -> list:
+    """The 6-dp DECIMAL-exact Lloyd mean update shared by
+    ``_lloyd_refine`` (keys ``cell``) and ``_pq_train_blocks`` (keys
+    ``block, code``): ``units`` carries the members' ``u0..u{dim-1}``
+    components, already rounded at 6 dp and cast to DECIMAL(18,6), so
+    the per-key sums are EXACT and ``ROUND(SUM(u)/COUNT(*), 6)`` gives
+    the same doubles as the SQL twins' update. Keys that lost all
+    members are absent. Returns ``[(*keys, [m0..])]`` sorted by key."""
+    means = [
+        F.round(F.sum(f"u{d}").cast("double") / F.count("*"), 6).alias(f"m{d}")
+        for d in range(dim)
+    ]
+    rows = units.groupBy(*keys).agg(*means).collect()
+    return sorted(
+        (*(int(r[k]) for k in keys), [float(r[f"m{d}"]) for d in range(dim)])
+        for r in rows
+    )
 
 
 def _lloyd_chain_sql(iters: int = LLOYD_ITERS, out: str = "c") -> str:
@@ -713,6 +717,34 @@ def _lloyd_chain_sql(iters: int = LLOYD_ITERS, out: str = "c") -> str:
         prev = f"ll_c{i}"
     parts.append(f"{out} AS (SELECT cid, cv, cnorm FROM {prev})")
     return ",\n".join(parts)
+
+
+def _cell_assign_prelude_sql() -> str:
+    """The oracle prelude of ``_assign_cells``' single-cell consumers
+    (``similarity_kmeans_step``, ``similarity_cluster_topics``,
+    ``dedup_semantic_cells``, ``pipeline_cluster_balanced_sample``):
+    CTE ``e`` (vec_id, v, vnorm) → the ``_lloyd_chain_sql`` centroids
+    ``c`` → ``aff`` cosines → ``assign`` (vec_id, cell), argmax cosine
+    with ties by ascending cid. Starts with WITH; callers append their
+    own CTEs after a comma."""
+    return f"""WITH e AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
+  FROM embeddings
+),
+{_lloyd_chain_sql()},
+aff AS (
+  SELECT e.vec_id, c.cid,
+         list_dot_product(e.v, c.cv) / (e.vnorm * c.cnorm) AS sim
+  FROM e CROSS JOIN c
+),
+assign AS (
+  SELECT vec_id, cid AS cell FROM (
+    SELECT vec_id, cid,
+           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn
+    FROM aff
+  ) WHERE rn = 1
+)"""
 
 
 #: per-process cache of trained centroids, keyed by (sf_dir, iters):
@@ -1091,24 +1123,7 @@ def similarity_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SIMILARITY_KMEANS_STEP_ORACLE = f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
-),
-{_lloyd_chain_sql()},
-aff AS (
-  SELECT e.vec_id, c.cid,
-         list_dot_product(e.v, c.cv) / (e.vnorm * c.cnorm) AS sim
-  FROM e CROSS JOIN c
-),
-assign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn
-    FROM aff
-  ) WHERE rn = 1
-),
+{_cell_assign_prelude_sql()},
 corpus AS (
   SELECT e.vec_id, e.v, e.vnorm, a.cell FROM e JOIN assign a USING (vec_id)
 ),
@@ -1808,6 +1823,47 @@ ORDER BY method
 PQ_BLOCKS, PQ_BLOCK_DIM = 4, 16
 
 
+def _pq_codes_factory():
+    """Builds ``_pq_codes`` as a closure so cloudpickle ships it to
+    Python workers by value (a module-level function goes by
+    reference, which needs this package importable on executors)."""
+    dim = PQ_BLOCK_DIM
+
+    def _pq_codes(X, blocks):
+        """PQ codes of the rows of ``X``: ``blocks`` is one ``(ids, C)``
+        pair per contiguous ``dim``-wide block, ``ids`` ascending.
+        Each code is the argmin of the decomposed L2 ``xx + cc − 2xc``
+        — the expression the SQL twins replay, so near-tie drift is
+        bounded by float noise on IDENTICAL terms — and ``np.argmin``
+        keeps the first minimum, so ties go to the lowest codeword id.
+        Returns one int64 array of codeword ids per block."""
+        import numpy as np
+
+        codes = []
+        for b, (ids, C) in enumerate(blocks):
+            Xb = X[:, b * dim : (b + 1) * dim]
+            d2 = (Xb * Xb).sum(1)[:, None] + (C * C).sum(1)[None, :] - 2.0 * (Xb @ C.T)
+            codes.append(np.asarray(ids, dtype=np.int64)[np.argmin(d2, axis=1)])
+        return codes
+
+    return _pq_codes
+
+
+_pq_codes = _pq_codes_factory()
+
+
+def _codebook_frame(spark: SparkSession, blocks: list) -> DataFrame:
+    """The literal (block, cid, cvec) codebook frame of ``blocks``
+    (one ``(ids, matrix)`` pair per block) — KB-scale by the codebook
+    cap, so it joins as a broadcast."""
+    rows = [
+        (b, int(ids[k]), [float(x) for x in mat[k]])
+        for b, (ids, mat) in enumerate(blocks)
+        for k in range(len(ids))
+    ]
+    return spark.createDataFrame(rows, "block int, cid long, cvec array<double>")
+
+
 def similarity_pq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization compression audit — the memory workhorse
     of corpus-scale ANN (a 64-dim float64 vector is 512 bytes; its PQ
@@ -1846,51 +1902,26 @@ def similarity_pq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cw_ids = [r.vec_id for r in cents]
     cw = np.array([r.v for r in cents], dtype=np.float64)
     blocks = [
-        cw[:, b * PQ_BLOCK_DIM : (b + 1) * PQ_BLOCK_DIM]
+        (cw_ids, cw[:, b * PQ_BLOCK_DIM : (b + 1) * PQ_BLOCK_DIM])
         for b in range(PQ_BLOCKS)
     ]
-    sc = spark.sparkContext
-    b_ids = sc.broadcast(cw_ids)
-    b_blocks = sc.broadcast(blocks)
+    b_blocks = spark.sparkContext.broadcast(blocks)
 
     def assign(batches):
         import numpy as _np
         import pandas as _pd
 
-        ids, blks = b_ids.value, b_blocks.value
         for pdf in batches:
-            X = _np.stack(pdf["v"].to_numpy())
-            out = {
-                "vec_id": pdf["vec_id"].values,
-                "label": pdf["label"].values,
-                "v": pdf["v"].values,
-            }
-            for b in range(PQ_BLOCKS):
-                Xb = X[:, b * PQ_BLOCK_DIM : (b + 1) * PQ_BLOCK_DIM]
-                C = blks[b]
-                # decomposed form (xx + cc - 2xc): the same expression
-                # the argmin is replayed with SQL-side, so near-tie
-                # drift is bounded by float noise on IDENTICAL terms
-                d2 = (
-                    (Xb * Xb).sum(1)[:, None]
-                    + (C * C).sum(1)[None, :]
-                    - 2.0 * (Xb @ C.T)
-                )
-                code = _np.argmin(d2, axis=1)  # first occurrence = min cid
-                out[f"code{b}"] = [ids[c] for c in code]
+            codes = _pq_codes(_np.stack(pdf["v"].to_numpy()), b_blocks.value)
+            out = {c: pdf[c].values for c in ("vec_id", "label", "v")}
+            out.update((f"code{b}", code) for b, code in enumerate(codes))
             yield _pd.DataFrame(out)
 
     schema = "vec_id long, label long, v array<double>, " + ", ".join(
         f"code{b} long" for b in range(PQ_BLOCKS)
     )
     assigned = emb.select("vec_id", "label", "v").mapInPandas(assign, schema)
-
-    cb_rows = [
-        (b, int(cw_ids[k]), [float(x) for x in blocks[b][k]])
-        for b in range(PQ_BLOCKS)
-        for k in range(len(cw_ids))
-    ]
-    cb = spark.createDataFrame(cb_rows, "block int, cid long, cvec array<double>")
+    cb = _codebook_frame(spark, blocks)
 
     err_total = None
     for b in range(PQ_BLOCKS):
@@ -2132,12 +2163,11 @@ def _pq_train_blocks(
     r10 measured ivfpq recall 0.40 with it, ~0.90 trained).
 
     Per iteration: ONE Arrow pass assigns every normalized vector a
-    code per block (argmin L2 over the block's codewords, ties by
-    ascending codeword id), then ONE union-of-blocks groupBy((block,
-    code)) computes the 6-dp DECIMAL-exact componentwise means — the
-    same cross-engine-exact update discipline as ``_lloyd_refine``.
-    Codewords that lose all members drop out. SQL twin:
-    ``_pq_chain_sql``.
+    code per block (``_pq_codes``: argmin L2, ties by ascending
+    codeword id), then ``_mean_update`` over ONE union-of-blocks
+    groupBy((block, code)) computes the 6-dp DECIMAL-exact
+    componentwise means. Codewords that lose all members drop out.
+    SQL twin: ``_pq_chain_sql``.
 
     100 TB: the broadcast state is ≤ PQ_BLOCKS×256×16 doubles
     (~130 KB); each iteration is one corpus-linear scan plus a
@@ -2158,31 +2188,21 @@ def _pq_train_blocks(
             [[float(x) for x in r.v[b * pd_ : (b + 1) * pd_]] for r in seeds]
         )
         blocks.append((ids, mat))
-    # same per-iteration recompute hazard as _lloyd_refine: nv comes
-    # from the interpreted fold-norm, so cache it across iterations
+    # every iteration re-reads nv, which comes from the interpreted
+    # fold-norm, so cache it across iterations
     if iters > 0:
         normed = normed.persist()
     for _ in range(max(0, iters)):
-        b_state = spark.sparkContext.broadcast(
-            [(ids, mat) for ids, mat in blocks]
-        )
+        b_state = spark.sparkContext.broadcast(blocks)
 
         def _enc(batches):
             import numpy as _np
             import pandas as _pd
 
-            state = b_state.value
             for pdf in batches:
-                X = _np.stack(pdf["nv"].to_numpy())
+                codes = _pq_codes(_np.stack(pdf["nv"].to_numpy()), b_state.value)
                 out = {"nv": pdf["nv"].values}
-                for b, (ids, C) in enumerate(state):
-                    Xb = X[:, b * pd_ : (b + 1) * pd_]
-                    d2 = (
-                        (Xb * Xb).sum(1)[:, None]
-                        + (C * C).sum(1)[None, :]
-                        - 2.0 * (Xb @ C.T)
-                    )
-                    out[f"code{b}"] = [ids[c] for c in _np.argmin(d2, axis=1)]
+                out.update((f"code{b}", code) for b, code in enumerate(codes))
                 yield _pd.DataFrame(out)
 
         coded = normed.select("nv").mapInPandas(
@@ -2206,32 +2226,13 @@ def _pq_train_blocks(
         allb = per_block[0]
         for p in per_block[1:]:
             allb = allb.unionByName(p)
-        rows = (
-            allb.groupBy("block", "code")
-            .agg(
-                *[
-                    F.round(
-                        F.sum(f"u{d}").cast("double") / F.count("*"), 6
-                    ).alias(f"m{d}")
-                    for d in range(pd_)
-                ]
-            )
-            .collect()
-        )
         fresh: dict = {b: [] for b in range(pb_)}
-        for r in rows:
-            fresh[int(r["block"])].append(
-                (int(r["code"]), [float(r[f"m{d}"]) for d in range(pd_)])
-            )
-        blocks = []
-        for b in range(pb_):
-            entries = sorted(fresh[b])
-            blocks.append(
-                (
-                    [cid for cid, _ in entries],
-                    np.array([bv for _, bv in entries]),
-                )
-            )
+        for b, cid, bv in _mean_update(allb, ["block", "code"], pd_):
+            fresh[b].append((cid, bv))
+        blocks = [
+            ([cid for cid, _ in fresh[b]], np.array([bv for _, bv in fresh[b]]))
+            for b in range(pb_)
+        ]
     if iters > 0:
         normed.unpersist()
     if ck:
@@ -2423,25 +2424,16 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             CB_SEED_SALT,
         )
         trained = _pq_train_blocks(spark, normed, cents, cache_key=sf_dir)
-    sc = spark.sparkContext
-    b_blocks = sc.broadcast([(ids, mat) for ids, mat in trained])
+    b_blocks = spark.sparkContext.broadcast(trained)
 
     def encode(batches):
         import numpy as _np
         import pandas as _pd
 
-        state = b_blocks.value
         for pdf in batches:
-            X = _np.stack(pdf["v"].to_numpy())
+            codes = _pq_codes(_np.stack(pdf["v"].to_numpy()), b_blocks.value)
             out = {"vec_id": pdf["vec_id"].values}
-            for b, (ids, C) in enumerate(state):
-                Xb = X[:, b * PQ_BLOCK_DIM : (b + 1) * PQ_BLOCK_DIM]
-                d2 = (
-                    (Xb * Xb).sum(1)[:, None]
-                    + (C * C).sum(1)[None, :]
-                    - 2.0 * (Xb @ C.T)
-                )
-                out[f"code{b}"] = [ids[c] for c in _np.argmin(d2, axis=1)]
+            out.update((f"code{b}", code) for b, code in enumerate(codes))
             yield _pd.DataFrame(out)
 
     # PQ codes are the index's payload state (PQ_BLOCKS longs/vector):
@@ -2477,12 +2469,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_cells = qpanel.select(
         F.col("vec_id").alias("qid"), F.explode("cells").alias("cell")
     )
-    cb_rows = [
-        (b, int(ids[k]), [float(x) for x in mat[k]])
-        for b, (ids, mat) in enumerate(trained)
-        for k in range(len(ids))
-    ]
-    cb = spark.createDataFrame(cb_rows, "block int, cid long, cvec array<double>")
+    cb = _codebook_frame(spark, trained)
     # ADC distance table: query panel x literal codebook grid (tiny),
     # on the NORMALIZED query vector
     qb = F.slice(F.col("qnv"), 1 + F.col("block") * PQ_BLOCK_DIM, PQ_BLOCK_DIM)
@@ -2706,39 +2693,21 @@ def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Float discipline: each reciprocal contribution rounds at 9 dp and
     the ≤2-term total is an EXACT DECIMAL(18,9) sum (uniform with the
     module's sum rule even though 2-term float addition commutes);
-    fused ranking rounds at 6 dp with doc_id tie-breaks. BM25/TF-IDF
-    numerics follow ``text_bm25_topk`` / ``text_tfidf`` to the digit.
+    fused ranking rounds at 6 dp with doc_id tie-breaks. The lexical
+    scores come from the text family's own scorer
+    (``textops.bm25_scores``) and the keywords use ``text_tfidf``'s
+    6-dp TF-IDF rule.
 
-    100 TB shape: the lexical side is the BM25 inverted-index pattern
-    (one tokenize scan → partial-agg tf/df/dl; the query-keyword
-    table is panel×3 rows, broadcast); the semantic side is the
-    bucketed equi-join ANN; fusion is ONE full-outer join of two
-    rank lists whose combined size is panel × (RRF_LEX_TOPK + TOP_K)
-    rows — driver-free and bounded.
+    100 TB shape: the lexical side is ``textops.bm25_index``'s one
+    checkpointed tokenize pass (tf, with df/dl/Σdl derived from it;
+    the query-keyword table is panel×3 rows, broadcast); the semantic
+    side is the bucketed equi-join ANN; fusion is ONE full-outer join
+    of two rank lists whose combined size is panel × (RRF_LEX_TOPK +
+    TOP_K) rows — driver-free and bounded.
     """
-    from ..functions.text import tokens_col
-    from .textops import BM25_B, BM25_K1
+    from .textops import bm25_index, bm25_scores
 
-    docs = load(spark, sf_dir, "documents")
-    n_docs = docs.count()
-    tok = docs.select(
-        "doc_id", F.explode(tokens_col(F.col("text"))).alias("token")
-    )
-    # r19 (VERDICT r18 item 3 — the bm25 TF-first pattern, guide
-    # §2.3/§2.4/§5): ONE tokenize scan → the checkpointed (doc, token)
-    # TF frame; dl/df/Σdl are integer-identical derivations over it
-    # (dl = Σ_token tf, df = COUNT(tf rows) — tf rows ARE the distinct
-    # pairs, Σdl = Σ tf as a 1-row broadcast column). The old shape
-    # tokenized the corpus FOUR times, ran a full DISTINCT exchange of
-    # every token occurrence for df, and collect()ed Σdl on the driver.
-    tf = (
-        tok.groupBy("doc_id", "token")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=True)
-    )
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    sum_dl_df = tf.agg(F.sum("tf").cast("double").alias("sum_dl"))
-    df_ = tf.groupBy("token").agg(F.count("*").alias("df"))
+    tf, df_, n_docs, idf = bm25_index(spark, sf_dir)
     # the query panel's keywords, by the text_tfidf selection rule
     kw_scored = (
         tf.filter(F.col("doc_id") % 50 == 0)
@@ -2756,54 +2725,12 @@ def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     qt = (
         kw_scored.withColumn("rk", F.row_number().over(wkw))
         .filter(F.col("rk") <= RRF_KW_PER_DOC)
-        .select(
-            F.col("doc_id").alias("qid"),
-            "token",
-            F.round(
-                F.log(
-                    (F.lit(float(n_docs)) - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                    + 1.0
-                ),
-                6,
-            ).alias("idf"),
-        )
-    )
-    # dl·N exact in int64, cast once, divided by the Σdl broadcast
-    # scalar — float(Σdl) as a literal and CAST(Σdl AS DOUBLE) as a
-    # column are the same double (counts ≪ 2^53), so norm_len is
-    # bit-identical to the old collect()-literal form (the bm25
-    # equivalence note, verbatim situation).
-    norm_len = (F.col("dl") * F.lit(n_docs)).cast("double") / F.col(
-        "sum_dl"
-    )
-    per_term = (
-        tf.join(F.broadcast(qt), "token")
-        .filter(F.col("doc_id") != F.col("qid"))
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(sum_dl_df))
-        .select(
-            "qid",
-            "doc_id",
-            F.round(
-                F.col("idf")
-                * (F.col("tf").cast("double") * (BM25_K1 + 1.0))
-                / (
-                    F.col("tf").cast("double")
-                    + BM25_K1 * (F.lit(1.0 - BM25_B) + BM25_B * norm_len)
-                ),
-                6,
-            ).alias("score"),
-        )
+        .select(F.col("doc_id").alias("qid"), "token", idf.alias("idf"))
     )
     wl = W.partitionBy("qid").orderBy(F.desc("bm25"), F.asc("doc_id"))
     lex = (
-        per_term.groupBy("qid", "doc_id")
-        .agg(
-            F.round(
-                F.sum(F.col("score").cast("decimal(18,6)")).cast("double"), 6
-            ).alias("bm25")
-        )
+        bm25_scores(tf, n_docs, qt)
+        .filter(F.col("doc_id") != F.col("qid"))
         .withColumn("lex_rank", F.row_number().over(wl))
         .filter(F.col("lex_rank") <= RRF_LEX_TOPK)
         .select("qid", "doc_id", "lex_rank")
@@ -3044,29 +2971,10 @@ def similarity_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_topics_oracle() -> str:
-    # same e/chain/aff/assign prelude as SIMILARITY_IVF_ORACLE and the
-    # dedup_semantic_cells oracle (lockstep via the shared
-    # _lloyd_chain_sql); integer ppm/lift math mirrors the Spark side
-    # expression for expression (div == // floor on non-negatives)
+    # integer ppm/lift math mirrors the Spark side expression for
+    # expression (div == // floor on non-negatives)
     return rf"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
-),
-{_lloyd_chain_sql()},
-aff AS (
-  SELECT e.vec_id, c.cid,
-         list_dot_product(e.v, c.cv) / (e.vnorm * c.cnorm) AS sim
-  FROM e CROSS JOIN c
-),
-assign AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn
-    FROM aff
-  ) WHERE rn = 1
-),
+{_cell_assign_prelude_sql()},
 joined AS (
   SELECT a.cell, d.doc_id, d.text
   FROM documents d JOIN assign a ON d.doc_id = a.vec_id

@@ -9,7 +9,7 @@ the final small aggregations.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text_col, tokens_col
@@ -945,92 +945,65 @@ BM25_N_QUERY_TERMS = 10
 BM25_TOP_DOCS = 10
 
 
-def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 lexical retrieval over the documents corpus — the
-    inverted-index complement to the embedding similarity family (a
-    RAG/data-curation pipeline retrieves lexically AND semantically;
-    the repo had only the semantic half). Self-contained query
-    workload, derived deterministically from the corpus itself: rank
-    the vocabulary by document frequency (ties by token), skip the
-    top BM25_SKIP_TOP quasi-stopwords, and pair the next
-    BM25_N_QUERY_TERMS into 5 two-term disjunctive queries; score
-    docs with the classic BM25 (k1=1.2, b=0.75, Lucene's
-    ln((N−df+0.5)/(df+0.5)+1) idf) and keep the top BM25_TOP_DOCS per
-    query.
+def bm25_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, int, Column]:
+    """The shared BM25 corpus statistics of ``text_bm25_topk`` and the
+    lexical half of ``similarity.similarity_hybrid_rrf``: ONE tokenize
+    scan of ``documents`` → the checkpointed (doc_id, token) TF frame.
+    Returns ``(tf, df, n_docs, idf)``: ``df`` is (token, df) derived
+    from tf, ``n_docs`` the corpus size, and ``idf`` the Lucene idf
+    ``ln((N−df+0.5)/(df+0.5)+1)`` at 6 dp as a Column over a ``df``
+    column, for the caller's query-term table.
 
-    Float discipline (per the module standard): idf and each
-    per-term score round at 6 dp; per-doc totals are EXACT
-    DECIMAL(18,6) sums of the rounded per-term scores, so the
-    summation order across query terms can never matter; ranking
-    ties break on ascending doc_id. The length normalization
-    ``dl·N / Σdl`` is integer×integer cast to double then divided —
-    bit-identical cross-engine.
-
-    100 TB shape (r18): ONE tokenize scan feeds ONE partial-aggregated
-    shuffle (tf keyed (doc, token), reused by every consumer); df, dl
-    and Σdl all derive from the TF frame, so they shuffle tf rows
-    instead of token occurrences and the old full-corpus DISTINCT
-    exchange is gone. Σdl rides a 1-row broadcast column instead of a
-    driver collect. The query-term table is ≤10 rows broadcast, so
-    candidate scoring touches only the matching posting lists (the
-    inverted-index retrieval pattern as joins); the per-query top-k is
-    a bounded window. N is a metadata-cheap scalar aggregate.
+    100 TB shape (r18): the tokenize scan feeds ONE partial-aggregated
+    shuffle (tf keyed (doc, token)), and every consumer aggregates over
+    that IDENTICAL checkpointed subtree. tf IS the distinct (doc,
+    token) set with multiplicities, so every other statistic is an
+    integer-identical derivation over it — df per token = COUNT(tf
+    rows), dl per doc = Σ_token tf, Σdl = Σ tf — and no full-corpus
+    DISTINCT exchange of token occurrences is ever planned. N is a
+    metadata-cheap scalar aggregate.
     """
     docs = load(spark, sf_dir, "documents")
     n_docs = docs.count()
     tok = docs.select(
         "doc_id", F.explode(tokens_col(F.col("text"))).alias("token")
     )
-    # r18 second pass (guide §2.3/§2.4): ONE tokenize scan → the
-    # (doc,token) TF frame; every consumer aggregates over the
-    # IDENTICAL tf subtree, so the token-row exchange is planned once
-    # and AQE serves the other consumers from ReusedExchange. The old
-    # shape tokenized the corpus FOUR times (tf, dl, a Σdl collect()
-    # action, df) and — worst — ran a full DISTINCT exchange of every
-    # token occurrence just to count document frequencies. tf IS the
-    # distinct (doc,token) set with multiplicities, so every other
-    # statistic is an integer-identical derivation over it:
-    #   dl  per doc   = Σ_token tf   (== the old per-doc occurrence count)
-    #   Σdl           = Σ tf  (a 1-row broadcast column now, not a
-    #                          collect — no separate driver action)
-    #   df  per token = COUNT(tf rows) (== the old distinct-pair count)
-    # At scale the dl/df shuffles ship TF rows, not token rows, and
-    # the distinct exchange is gone outright.
     tf = (
         tok.groupBy("doc_id", "token")
         .agg(F.count("*").alias("tf"))
         .localCheckpoint(eager=True)
     )
+    df_ = tf.groupBy("token").agg(F.count("*").alias("df"))
+    idf = F.round(
+        F.log(
+            (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+            + 1.0
+        ),
+        6,
+    )
+    return tf, df_, n_docs, idf
+
+
+def bm25_scores(tf: DataFrame, n_docs: int, qterms: DataFrame) -> DataFrame:
+    """Score every doc holding a query term: ``qterms`` is (qid, token,
+    idf) from the caller; returns (qid, doc_id, bm25, n_terms_hit).
+    Classic BM25 (k1=1.2, b=0.75) per term, rounded at 6 dp; per-doc
+    totals are EXACT DECIMAL(18,6) sums of the rounded per-term
+    scores, so the summation order across query terms can never
+    matter. The length normalization ``dl·N / Σdl`` is exact int64
+    dl·N cast once and divided by Σdl — float(Σdl) as a literal and
+    CAST(Σdl AS DOUBLE) as a column are the same double (counts ≪
+    2^53) — so it is bit-identical cross-engine.
+
+    Shape: tf is scanned twice (dl and Σdl); Σdl rides a 1-row
+    broadcast column instead of a driver collect, and the query-term
+    table is broadcast, so candidate scoring touches only the matching
+    posting lists (the inverted-index retrieval pattern as joins).
+    """
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     sum_dl_df = tf.agg(F.sum("tf").cast("double").alias("sum_dl"))
-    df_ = tf.groupBy("token").agg(F.count("*").alias("df"))
-    # query terms: df ranks BM25_SKIP_TOP+1 .. +N_QUERY_TERMS, paired
-    # in rank order into two-term queries (TakeOrdered head, tiny)
-    head = (
-        df_.orderBy(F.desc("df"), "token")
-        .limit(BM25_SKIP_TOP + BM25_N_QUERY_TERMS)
-        .withColumn(
-            "rk", F.row_number().over(W.orderBy(F.desc("df"), "token"))
-        )
-        .filter(F.col("rk") > BM25_SKIP_TOP)
-    )
-    qterms = head.select(
-        ((F.col("rk") - BM25_SKIP_TOP - 1) / 2).cast("int").alias("qid"),
-        "token",
-        "df",
-        F.round(
-            F.log(
-                (F.lit(float(n_docs)) - F.col("df") + 0.5)
-                / (F.col("df") + 0.5)
-                + 1.0
-            ),
-            6,
-        ).alias("idf"),
-    )
-    # dl·N exact in int64, cast once, divided by the Σdl broadcast
-    # scalar — float(Σdl) as a literal and CAST(Σdl AS DOUBLE) as a
-    # column are the same double (counts ≪ 2^53), so norm_len is
-    # bit-identical to the old collect()-literal form.
     norm_len = (F.col("dl") * F.lit(n_docs)).cast("double") / F.col(
         "sum_dl"
     )
@@ -1052,18 +1025,51 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score"),
         )
     )
-    totals = (
-        per_term.groupBy("qid", "doc_id")
-        .agg(
-            F.round(
-                F.sum(F.col("score").cast("decimal(18,6)")).cast("double"), 6
-            ).alias("bm25"),
-            F.count("*").alias("n_terms_hit"),
+    return per_term.groupBy("qid", "doc_id").agg(
+        F.round(
+            F.sum(F.col("score").cast("decimal(18,6)")).cast("double"), 6
+        ).alias("bm25"),
+        F.count("*").alias("n_terms_hit"),
+    )
+
+
+def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 lexical retrieval over the documents corpus — the
+    inverted-index complement to the embedding similarity family (a
+    RAG/data-curation pipeline retrieves lexically AND semantically;
+    the repo had only the semantic half). Self-contained query
+    workload, derived deterministically from the corpus itself: rank
+    the vocabulary by document frequency (ties by token), skip the
+    top BM25_SKIP_TOP quasi-stopwords, and pair the next
+    BM25_N_QUERY_TERMS into 5 two-term disjunctive queries; score
+    docs with ``bm25_scores`` and keep the top BM25_TOP_DOCS per
+    query, ranking ties broken on ascending doc_id.
+
+    The query-term table is a TakeOrdered head of ≤20 df rows, so the
+    only corpus-scale work is ``bm25_index``'s one tokenize pass; the
+    per-query top-k is a bounded window.
+    """
+    tf, df_, n_docs, idf = bm25_index(spark, sf_dir)
+    # query terms: df ranks BM25_SKIP_TOP+1 .. +N_QUERY_TERMS, paired
+    # in rank order into two-term queries (TakeOrdered head, tiny)
+    head = (
+        df_.orderBy(F.desc("df"), "token")
+        .limit(BM25_SKIP_TOP + BM25_N_QUERY_TERMS)
+        .withColumn(
+            "rk", F.row_number().over(W.orderBy(F.desc("df"), "token"))
         )
+        .filter(F.col("rk") > BM25_SKIP_TOP)
+    )
+    qterms = head.select(
+        ((F.col("rk") - BM25_SKIP_TOP - 1) / 2).cast("int").alias("qid"),
+        "token",
+        "df",
+        idf.alias("idf"),
     )
     w = W.partitionBy("qid").orderBy(F.desc("bm25"), F.asc("doc_id"))
     return (
-        totals.withColumn("rank", F.row_number().over(w))
+        bm25_scores(tf, n_docs, qterms)
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= BM25_TOP_DOCS)
         .select("qid", "doc_id", "bm25", "n_terms_hit", "rank")
         .orderBy("qid", "rank")

@@ -147,6 +147,36 @@ def test_ivfpq_probe_policy():
         S.ivfpq_probes_for(key)
 
 
+def test_pq_codes_ties_go_to_lowest_id():
+    """The shared PQ encoder matches a per-row loop in which exact ties
+    go to the lowest codeword id. Every codeword is duplicated and all
+    values are small integers, so each row's best distance is an exact
+    tie between two ids in both computations."""
+    import numpy as np
+
+    from mysqldatasynctool_spark.operators.similarity import (
+        PQ_BLOCK_DIM,
+        PQ_BLOCKS,
+        _pq_codes,
+    )
+
+    rng = np.random.default_rng(7)
+    X = rng.integers(-3, 4, (40, PQ_BLOCKS * PQ_BLOCK_DIM)).astype(float)
+    blocks = []
+    for _ in range(PQ_BLOCKS):
+        base = rng.integers(-3, 4, (5, PQ_BLOCK_DIM)).astype(float)
+        ids = sorted(rng.choice(1000, 10, replace=False).tolist())
+        blocks.append((ids, np.repeat(base, 2, axis=0)))
+
+    got = _pq_codes(X, blocks)
+    for b, (ids, C) in enumerate(blocks):
+        want = []
+        for x in X[:, b * PQ_BLOCK_DIM : (b + 1) * PQ_BLOCK_DIM].tolist():
+            d2 = [sum((xi - ci) ** 2 for xi, ci in zip(x, c)) for c in C.tolist()]
+            want.append(min(i for i, d in zip(ids, d2) if d == min(d2)))
+        assert got[b].tolist() == want
+
+
 def test_ivfpq_shortlist_policy():
     """shortlist = max(256, ceil(2.25 k)): floor at every fixture
     (<=45 cells -> 256, results unchanged), the measured 1024-point
