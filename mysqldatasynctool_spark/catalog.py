@@ -5,7 +5,10 @@ The reference enumerates base tables from information_schema with an
 appended NOT IN exclusion (/root/reference/cmd/root.go:222-241) and
 looks up PK columns ordered by ordinal position (root.go:327-340).
 Here discovery is pluggable: a parquet directory (fixtures/lakehouse)
-or an information_schema query over JDBC (production MySQL).
+or an information_schema query over JDBC (production MySQL). Exclusion
+is one Python rule, ``exclude_tables``, that each verb applies once to
+what discovery found, whichever discovery it was; ``catalog_scan_sql``
+keeps the reference's NOT IN statement as text.
 """
 
 from __future__ import annotations
@@ -13,8 +16,7 @@ from __future__ import annotations
 import glob
 import os.path
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 #: PKs of the fixture tables (what information_schema.key_column_usage
 #: would report; lineitem is the composite-PK case — FIXTURES.md).
@@ -67,9 +69,7 @@ def all_primary_keys_sql() -> str:
     )
 
 
-def discover_jdbc_pks(
-    spark: SparkSession, endpoint, exclude: tuple[str, ...] = ()
-) -> dict[str, list[str]]:
+def discover_jdbc_pks(spark: SparkSession, endpoint) -> dict[str, list[str]]:
     """Live-source catalog + PK discovery over JDBC — the reference's
     startup sequence (root.go:222-241 discovery, root.go:327-340 PK
     lookup) as exactly TWO pushed-down information_schema queries per
@@ -86,7 +86,7 @@ def discover_jdbc_pks(
     tables = [
         r[0]
         for r in read_table(
-            spark, endpoint, "", custom_sql=catalog_scan_sql(exclude)
+            spark, endpoint, "", custom_sql=catalog_scan_sql()
         ).collect()
     ]
     pk_rows = sorted(
@@ -110,14 +110,8 @@ def discover_parquet_tables(path: str) -> list[str]:
     return sorted(names)
 
 
-def catalog_dataframe(spark: SparkSession, tables: list[str]) -> DataFrame:
-    """The discovered catalog as a (tiny) DataFrame, so exclusion is
-    the same declarative anti-filter the reference's NOT IN was."""
-    return spark.createDataFrame([(t,) for t in tables], "table_name string")
-
-
-def apply_exclusion(catalog: DataFrame, exclude: tuple[str, ...]) -> DataFrame:
-    """NOT IN / anti-semi-join exclusion (root.go:222-232)."""
-    if not exclude:
-        return catalog
-    return catalog.filter(~F.col("table_name").isin(*exclude))
+def exclude_tables(tables, exclude) -> list[str]:
+    """The one exclusion rule of every verb (root.go:222-232's NOT IN):
+    ``tables`` minus the names in ``exclude``, in discovery order."""
+    drop = set(exclude)
+    return [t for t in tables if t not in drop]

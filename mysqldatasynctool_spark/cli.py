@@ -27,7 +27,7 @@ import sys
 import time
 
 from . import __version__
-from .catalog import FIXTURE_PRIMARY_KEYS, discover_parquet_tables
+from .catalog import FIXTURE_PRIMARY_KEYS, discover_parquet_tables, exclude_tables
 from .config import SyncConfig, load_config
 from .ddl import create_table_sql, replication_statements
 from .migrate import migrate_directory
@@ -134,25 +134,18 @@ def _parse_pk_map(spec: str) -> dict[str, list[str]]:
     return out
 
 
-def _jdbc_tables(spark, args, cfg: SyncConfig, src) -> dict[str, list[str]]:
-    """The JDBC table set of both verbs, table → PK columns: from
-    ``--pk-map`` (migrate) or ``--tables`` (compareDb, PKs unused),
-    else live information_schema discovery on the source (MySQL
-    sources; databases without it, e.g. Derby, pass the flag). Minus
-    ``cfg.exclude``; every name must pass ``_check_ident``."""
+def _jdbc_tables(spark, args, src) -> dict[str, list[str]]:
+    """The JDBC table set of both verbs before exclusion, table → PK
+    columns: from ``--pk-map`` (migrate) or ``--tables`` (compareDb,
+    PKs unused), else live information_schema discovery on the source
+    (MySQL sources; databases without it, e.g. Derby, pass the flag)."""
     from .catalog import discover_jdbc_pks
-    from .migrate import _check_ident
 
     if getattr(args, "pk_map", None):
-        pk_map = _parse_pk_map(args.pk_map)
-    elif getattr(args, "tables", None):
-        pk_map = {t.strip(): [] for t in args.tables.split(",") if t.strip()}
-    else:
-        pk_map = discover_jdbc_pks(spark, src, exclude=tuple(cfg.exclude))
-    pk_map = {t: pk for t, pk in pk_map.items() if t not in cfg.exclude}
-    for t in pk_map:
-        _check_ident(t)
-    return pk_map
+        return _parse_pk_map(args.pk_map)
+    if getattr(args, "tables", None):
+        return {t.strip(): [] for t in args.tables.split(",") if t.strip()}
+    return discover_jdbc_pks(spark, src)
 
 
 def cmd_migrate(args) -> int:
@@ -173,7 +166,7 @@ def cmd_migrate(args) -> int:
             spark,
             args.src,
             args.dest,
-            _jdbc_tables(spark, args, args.cfg, args.src),
+            _jdbc_tables(spark, args, args.src),
             cfg=args.cfg,
             page_size=args.cfg.page_size,
             resume=args.resume,
@@ -187,10 +180,12 @@ def cmd_compare(args) -> int:
     picked. Only a missing destination table reads DestIsExist=NO
     (compare.go:122-126); an unreadable one, or an auth/connectivity/
     driver failure, surfaces as an error."""
-    cfg = args.cfg
     spark = get_spark(app_name="compareDb")
+    found = (
+        discover_parquet_tables(args.src) if args.src_dir else _jdbc_tables(spark, args, args.src)
+    )
+    tables = exclude_tables(found, args.cfg.exclude)
     if args.src_dir:
-        tables = [t for t in discover_parquet_tables(args.src) if t not in set(cfg.exclude)]
         src = {t: load(spark, args.src, t) for t in tables}
         dest = {
             t: load(spark, args.dest, t)
@@ -199,9 +194,11 @@ def cmd_compare(args) -> int:
         }
     else:
         from .ddl import _is_missing_table_error
+        from .migrate import _check_ident
         from .sources.jdbc import read_table
 
-        tables = _jdbc_tables(spark, args, cfg, args.src)
+        for t in tables:
+            _check_ident(t)
         src = {t: read_table(spark, args.src, t) for t in tables}
         dest = {}
         for t in tables:
@@ -223,12 +220,7 @@ def cmd_compare(args) -> int:
 def cmd_create_table(args) -> int:
     cfg = load_config(args.config) if args.config else SyncConfig()
     spark = get_spark(app_name="createTable")
-    tables = [
-        t
-        for t in discover_parquet_tables(args.src_dir)
-        if t not in set(cfg.exclude)
-    ]
-    for t in tables:
+    for t in exclude_tables(discover_parquet_tables(args.src_dir), cfg.exclude):
         schema = load(spark, args.src_dir, t).schema
         sql = create_table_sql(t, schema, primary_key=FIXTURE_PRIMARY_KEYS.get(t))
         if args.print_only:

@@ -39,11 +39,10 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, replace
-from numbers import Number
 
 from pyspark.sql import SparkSession
 
-from .catalog import discover_parquet_tables
+from .catalog import discover_parquet_tables, exclude_tables
 from .config import SyncConfig
 from .sources.fixtures import load
 from .sources.sinks import write_parquet
@@ -187,8 +186,7 @@ def _migrate(
     the verdict frame over the tables that reached verification."""
     from .operators.compare import VERDICT_SCHEMA
 
-    excluded = set(cfg.exclude)
-    todo = [t for t in tables if t not in excluded]
+    todo = exclude_tables(tables, cfg.exclude)
     # maxParallel bounds how many table copy+verify JOBS are in flight
     # at once (reference root.go:104-147); submission order is
     # preserved in the report list regardless of completion order
@@ -284,7 +282,7 @@ def migrate_jdbc(
     table through partitioned JDBC, batch-write to the destination,
     then checksum-verify both sides.
 
-    Plan selection per table (plans/partitioning.plan_table):
+    Plan selection per table (plans/partitioning.choose_plan):
     - numeric leading PK → range partitions on it from one
       COUNT/MIN/MAX aggregate PUSHED DOWN to the source (a 1-row
       result, not a scan into Spark);
@@ -302,7 +300,7 @@ def migrate_jdbc(
     JDBC — at the reference's thousands-of-tables regime each verify
     job overlaps other tables' copies via the thread pool.
     """
-    from .plans.partitioning import plan_table, sample_boundaries
+    from .plans.partitioning import choose_plan, plan_table, sample_boundaries
     from .sources.jdbc import read_table
     from .sources.sinks import write_jdbc
 
@@ -311,64 +309,32 @@ def migrate_jdbc(
 
     def build_plan(t: str):
         pk = pk_map[t]
-        # Tier 1 — numeric-LEADING PK: one COUNT/MIN/MAX on pk[0]
-        # pushed down to the source → JDBC range partitions on the
-        # leading column (measured: lineitem plan phase 1.31 s → ~0.1 s
-        # against boundary sampling). The probe itself can fail on the
-        # PK's SQL type (Derby refuses MIN on CLOB), which only means
-        # this FAST path is unavailable, not that the table can't be
-        # paged.
+        stats = None
+        # Tier 1's probe: one COUNT/MIN/MAX on pk[0] pushed down to the
+        # source (measured: lineitem plan phase 1.31 s → ~0.1 s against
+        # boundary sampling). The probe itself can fail on the PK's SQL
+        # type (Derby refuses MIN on CLOB), which only means this FAST
+        # path is unavailable, not that the table can't be paged.
         if pk:
-            try:
-                stats = read_table(
-                    spark,
-                    src,
-                    t,
-                    # aliases quoted: unquoted identifiers are upcased by
-                    # ANSI databases, which would break Row access. The
-                    # table name itself stays unquoted on purpose —
-                    # Spark's own dbtable path interpolates it raw, so
-                    # quoting here would resolve to a DIFFERENT
-                    # (case-sensitive) identifier than every other scan
-                    # of the same table; _check_ident guards injection.
-                    custom_sql=(
-                        f'SELECT COUNT(*) AS {q}c{q}, '
-                        f'MIN({q}{pk[0]}{q}) AS {q}lo{q}, '
-                        f'MAX({q}{pk[0]}{q}) AS {q}hi{q} FROM {t}'
-                    ),
-                ).collect()[0]
-            except Exception:  # noqa: BLE001 — degrade to tier 2
-                stats = None
-            if (
-                stats is not None
-                and isinstance(stats.lo, Number)
-                and not isinstance(stats.lo, bool)
-            ):
-                return plan_table(
-                    t,
-                    pk,
-                    page_size=page_size,
-                    max_parallel=cfg.max_parallel,
-                    row_count=stats.c,
-                    pk_min=stats.lo,
-                    pk_max=stats.hi,
-                )
-            # Tier 2 — any PK (incl. single string/date/uuid, or an
-            # empty table): lexicographic boundary predicates work for
-            # every orderable type — the reference likewise pages
-            # every PK type (root.go:347-371).
-            return plan_table(
-                t,
-                pk,
-                page_size=page_size,
-                max_parallel=cfg.max_parallel,
-                boundaries=sample_boundaries(
-                    read_table(spark, src, t).select(*pk), pk, page_size
-                ),
-                quote=q,
+            # aliases quoted: unquoted identifiers are upcased by ANSI
+            # databases. The table name itself stays unquoted on purpose
+            # — Spark's own dbtable path interpolates it raw, so quoting
+            # here would resolve to a DIFFERENT (case-sensitive)
+            # identifier than every other scan of the same table;
+            # _check_ident guards injection.
+            probe = (
+                f'SELECT COUNT(*) AS {q}c{q}, MIN({q}{pk[0]}{q}) AS {q}lo{q}, '
+                f'MAX({q}{pk[0]}{q}) AS {q}hi{q} FROM {t}'
             )
-        # Tier 3 — no PK: single full-scan partition (root.go:341-345).
-        return plan_table(t, [], page_size, cfg.max_parallel)
+            try:
+                stats = tuple(read_table(spark, src, t, custom_sql=probe).collect()[0])
+            except Exception:  # noqa: BLE001 — degrade to tier 2
+                pass
+        return choose_plan(
+            t, pk, page_size, cfg.max_parallel, stats,
+            lambda: sample_boundaries(read_table(spark, src, t).select(*pk), pk, page_size),
+            quote=q,
+        )
 
     def single_scan(t: str, plan):
         # a partitioned read can fail only at EXECUTION time (e.g. the

@@ -1,15 +1,27 @@
 """Migration-semantics queries — the reference's own operator surface
 (SURVEY.md §2A) expressed as oracle-checkable DataFrame queries over
-the fixtures.
+the fixtures. Where migrate has the operator, the entry runs migrate's
+own function (named in its docstring), so the oracle checks the code a
+migration runs; ``migration_pagination_page``, ``migration_stringify``
+and ``migration_pk_catalog`` pin the reference's own forms.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..catalog import FIXTURE_PRIMARY_KEYS, apply_exclusion, catalog_dataframe
-from ..plans.partitioning import composite_pk_predicates, plan_table
+from ..catalog import FIXTURE_PRIMARY_KEYS, exclude_tables
+from ..config import SyncConfig
+from ..plans.partitioning import (
+    choose_plan,
+    composite_pk_predicates,
+    page_count,
+    plan_table,
+    sample_boundaries,
+)
 from ..sources.fixtures import TABLES, load
 
 PAGE_SIZE = 10_000
@@ -17,11 +29,10 @@ PAGE_SIZE = 10_000
 
 def migration_catalog_exclude(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalog scan + NOT IN exclusion (ops #1-#2, root.go:222-241):
-    discovered fixture tables minus an exclude list."""
-    catalog = catalog_dataframe(spark, list(TABLES))
-    return apply_exclusion(catalog, ("events", "documents", "embeddings")).orderBy(
-        "table_name"
-    )
+    discovered fixture tables minus an exclude list, through
+    ``catalog.exclude_tables``, the rule every verb applies."""
+    kept = exclude_tables(TABLES, ("events", "documents", "embeddings"))
+    return spark.createDataFrame([(t,) for t in sorted(kept)], "table_name string")
 
 
 MIGRATION_CATALOG_EXCLUDE_ORACLE = """
@@ -36,18 +47,25 @@ ORDER BY table_name
 
 def migration_page_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The plan-phase scalar aggregate (op #4, root.go:359-364):
-    ``ceil(count(*)/pageSize) as total_page_num`` per table."""
+    ``ceil(count(*)/pageSize) as total_page_num`` per table, counted over
+    the union of the pages of migrate's tier-2 plan (``plan_table`` over
+    ``sample_boundaries``). The predicates tile the keyspace, so the
+    count is exact unless a page loses or repeats rows.
+
+    NOTE (eager): CONSTRUCTING this frame runs the boundary sampler's
+    jobs."""
     out = None
     for t in ("orders", "lineitem", "customer"):
-        df = (
-            load(spark, sf_dir, t)
-            .agg(
-                F.lit(t).alias("table_name"),
-                F.count("*").alias("row_cnt"),
-                F.ceil(F.count("*") / F.lit(PAGE_SIZE)).alias("total_page_num"),
-            )
+        df, pk = load(spark, sf_dir, t), FIXTURE_PRIMARY_KEYS[t]
+        bounds = sample_boundaries(df, pk, PAGE_SIZE)
+        plan = plan_table(t, pk, PAGE_SIZE, SyncConfig().max_parallel, boundaries=bounds)
+        pages = reduce(DataFrame.unionAll, [df.filter(F.expr(p)) for p in plan.predicates])
+        row = pages.agg(
+            F.lit(t).alias("table_name"),
+            F.count("*").alias("row_cnt"),
+            F.ceil(F.count("*") / F.lit(PAGE_SIZE)).alias("total_page_num"),
         )
-        out = df if out is None else out.unionByName(df)
+        out = row if out is None else out.unionByName(row)
     return out.orderBy("table_name")
 
 
@@ -543,52 +561,43 @@ ORDER BY expectation
 """
 
 
-#: maxParallel default mirrored from config.SyncConfig (example.yml)
-MAX_PARALLEL = 30
-
-
 def migration_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The partition PLANNER's decision surface as a queryable report —
-    one row per catalog table with the strategy the JDBC migrate path
-    picks through ``plans/partitioning.plan_table`` and the numbers
-    that drive it: mode (``range`` when the leading PK column is
-    numeric and the table non-empty — migrate_jdbc's tier 1 —, else
-    ``predicates``, the reference's deferred-join pagination analogue,
-    root.go:341-357), row count, page count (``ceil(rows/pageSize)``),
-    the clamped partition count (``clamp(pages, 1, maxParallel)``), and
-    the leading-PK range bounds the JDBC reader uses. This puts the
-    planner's arithmetic under the driver's cross-engine hash-compare.
+    """The partition PLANNER's decision surface as a queryable report:
+    per catalog table, the plan migrate_jdbc's tier choice
+    (``plans/partitioning.choose_plan``) builds from the leading PK
+    column's ``(count, min, max)`` — mode (``range`` for a numeric
+    minimum, else ``predicates``, root.go:341-357), rows, pages, the
+    partition count and the range bounds — under the driver's
+    cross-engine hash-compare.
 
-    100 TB: each row is one metadata-cheap aggregate (count + min/max
-    over a single indexed/sorted column); the union is 10 tiny
-    1-row frames. This is exactly the planning query a scheduler runs
-    BEFORE touching data.
+    NOTE (eager): CONSTRUCTING this frame runs one collect of the 10
+    ``(count, min, max)`` rows. The union gives the keys one common
+    type, which keeps the fixtures' integer keys numeric; the oracle
+    types each table's key on its own.
     """
-    from pyspark.sql.types import NumericType
-
-    out = None
-    for t, pks in FIXTURE_PRIMARY_KEYS.items():
-        df = load(spark, sf_dir, t)
-        lead_pk = pks[0]
-        numeric = isinstance(df.schema[lead_pk].dataType, NumericType)
-        n = F.count("*")
-        pages = F.ceil(n / F.lit(PAGE_SIZE))
-        row = df.agg(
+    probes = [
+        load(spark, sf_dir, t).agg(
             F.lit(t).alias("tbl"),
-            F.when(F.lit(numeric) & F.min(lead_pk).isNotNull(), "range")
-            .otherwise("predicates")
-            .alias("mode"),
-            F.lit("+".join(pks)).alias("pk"),
-            n.alias("n_rows"),
-            pages.alias("n_pages"),
-            F.least(F.greatest(pages, F.lit(1)), F.lit(MAX_PARALLEL)).alias(
-                "num_partitions"
-            ),
-            F.min(F.col(lead_pk)).cast("long").alias("pk_min"),
-            F.max(F.col(lead_pk)).cast("long").alias("pk_max"),
+            F.count("*").alias("n"),
+            F.min(pks[0]).alias("lo"),
+            F.max(pks[0]).alias("hi"),
         )
-        out = row if out is None else out.unionByName(row)
-    return out.orderBy("tbl")
+        for t, pks in FIXTURE_PRIMARY_KEYS.items()
+    ]
+    rows = []
+    for r in reduce(DataFrame.unionByName, probes).collect():
+        pks = FIXTURE_PRIMARY_KEYS[r.tbl]
+        plan = choose_plan(
+            r.tbl, pks, PAGE_SIZE, SyncConfig().max_parallel, (r.n, r.lo, r.hi), lambda: []
+        )
+        hi = None if plan.upper_bound is None else plan.upper_bound - 1
+        rows.append((r.tbl, plan.mode, "+".join(pks), r.n, page_count(r.n, PAGE_SIZE),
+                     plan.num_partitions, plan.lower_bound, hi))
+    return spark.createDataFrame(
+        sorted(rows),
+        "tbl string, mode string, pk string, n_rows bigint, n_pages bigint, "
+        "num_partitions bigint, pk_min bigint, pk_max bigint",
+    )
 
 
 #: DuckDB's numeric type names as ``typeof`` prints them
@@ -606,7 +615,7 @@ def _partition_advisor_oracle() -> str:
             f"  '{'+'.join(pks)}' AS pk,\n"
             f"  COUNT(*) AS n_rows,\n"
             f"  CAST(CEIL(COUNT(*) / {PAGE_SIZE}.0) AS BIGINT) AS n_pages,\n"
-            f"  CAST(LEAST(GREATEST(CEIL(COUNT(*) / {PAGE_SIZE}.0), 1), {MAX_PARALLEL}) AS BIGINT) AS num_partitions,\n"
+            f"  CAST(LEAST(GREATEST(CEIL(COUNT(*) / {PAGE_SIZE}.0), 1), {SyncConfig().max_parallel}) AS BIGINT) AS num_partitions,\n"
             f"  CAST(MIN({lead_pk}) AS BIGINT) AS pk_min,\n"
             f"  CAST(MAX({lead_pk}) AS BIGINT) AS pk_max\n"
             f"FROM {t}"

@@ -31,7 +31,9 @@ orders of magnitude less data than the table itself.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from numbers import Number
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -157,6 +159,11 @@ def sample_boundaries(
     return [tuples[i] for i in range(stride - 1, len(tuples) - 1, stride)][: n_pages - 1]
 
 
+def page_count(row_count: int, page_size: int) -> int:
+    """``ceil(row_count/page_size)``, root.go:359-364's total_page_num."""
+    return -(-row_count // page_size)
+
+
 def plan_table(
     table: str,
     pk_cols: list[str],
@@ -179,7 +186,7 @@ def plan_table(
                           meanings (example.yml:13-14)
     - otherwise         → boundary predicates (root.go:347-357 analogue)
 
-    The caller passes bounds when the leading PK column is numeric.
+    ``choose_plan`` passes bounds when the leading PK column is numeric.
     Range partitions on a non-unique leading member of a composite key
     tile the keyspace as completely as the boundary predicates (every
     row falls in exactly one range), for one pushed-down
@@ -188,17 +195,32 @@ def plan_table(
     if not pk_cols:
         return PartitionPlan(table=table, mode="single")
     if pk_min is not None and pk_max is not None:
-        n_pages = max(1, -(-(row_count or 0) // page_size))
         return PartitionPlan(
             table=table,
             mode="range",
             partition_column=pk_cols[0],
             lower_bound=pk_min,
             upper_bound=pk_max + 1,
-            num_partitions=min(max(1, n_pages), max_parallel),
+            num_partitions=min(max(1, page_count(row_count or 0, page_size)), max_parallel),
         )
     preds = composite_pk_predicates(pk_cols, boundaries or [], quote=quote)
     return PartitionPlan(table=table, mode="predicates", predicates=tuple(preds))
+
+
+def choose_plan(
+    table: str, pk_cols: list[str], page_size: int, max_parallel: int,
+    stats: tuple | None, boundaries: Callable[[], list[tuple]], quote: str = "",
+) -> PartitionPlan:
+    """The one tier choice, from the leading PK column's ``(count, min,
+    max)`` (``None`` when unprobed): no PK or a non-bool numeric min →
+    ``plan_table``'s single or range plan; anything else (an empty
+    table, a string/date key) → predicates over ``boundaries()``, which
+    is called only then. The reference pages every PK type the same
+    way (root.go:347-371)."""
+    count, lo, hi = stats or (None, None, None)
+    if not pk_cols or (isinstance(lo, Number) and not isinstance(lo, bool)):
+        return plan_table(table, pk_cols, page_size, max_parallel, count, lo, hi)
+    return plan_table(table, pk_cols, page_size, max_parallel, boundaries=boundaries(), quote=quote)
 
 
 def page_queries(table: str, pk_cols: list[str], total_rows: int, page_size: int) -> list[str]:
@@ -208,7 +230,7 @@ def page_queries(table: str, pk_cols: list[str], total_rows: int, page_size: int
     root.go:366-371)."""
     if not pk_cols:
         return [f"select * from `{table}`"]  # root.go:341-345
-    total_pages = -(-total_rows // page_size) if total_rows else 0
+    total_pages = page_count(total_rows, page_size)
     pk_list = ",".join(pk_cols)
     on = " and ".join(f"temp.{c} = t.{c}" for c in pk_cols)  # root.go:347-357
     out = []

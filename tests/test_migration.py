@@ -11,18 +11,14 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mysqldatasynctool_spark.catalog import (
-    apply_exclusion,
-    catalog_dataframe,
-    catalog_scan_sql,
-    primary_key_sql,
-)
-from mysqldatasynctool_spark.config import load_config
+from mysqldatasynctool_spark.catalog import catalog_scan_sql, exclude_tables, primary_key_sql
+from mysqldatasynctool_spark.config import SyncConfig, load_config
 from mysqldatasynctool_spark.ddl import create_table_sql, replicate_ddl, replication_statements
 from mysqldatasynctool_spark.migrate import migrate_directory
 from mysqldatasynctool_spark.operators import compare as cmp_op
 from mysqldatasynctool_spark.operators import migration as mig_op
 from mysqldatasynctool_spark.plans.partitioning import (
+    choose_plan,
     composite_pk_predicates,
     page_queries,
     plan_table,
@@ -133,10 +129,36 @@ def test_catalog_scan_sql_matches_reference_shape():
     assert "ORDER BY ORDINAL_POSITION" in primary_key_sql("t")
 
 
-def test_exclusion_filter(spark):
-    cat = catalog_dataframe(spark, ["a", "b", "c"])
-    kept = {r.table_name for r in apply_exclusion(cat, ("b",)).collect()}
-    assert kept == {"a", "c"}
+def test_exclusion_on_every_verb(spark, tmp_path, capsys):
+    """One rule, ``catalog.exclude_tables``, keeps discovery order and
+    drops the excluded names, and every verb applies it: migrate_directory
+    does not copy an excluded table, parquet compareDb does not compare
+    it and createTable prints no DDL for it."""
+    from mysqldatasynctool_spark.cli import main
+    from mysqldatasynctool_spark.sources.fixtures import TABLES
+
+    assert exclude_tables(["c", "b", "a"], ("b",)) == ["c", "a"]
+    assert exclude_tables(("c", "a"), ()) == ["c", "a"]
+
+    dest = str(tmp_path / "dest")
+    reports, verdict = migrate_directory(
+        spark, SF_SMALL, dest, cfg=SyncConfig(exclude=("region",)), tables=["region", "nation"]
+    )
+    assert [r.table for r in reports] == ["nation"]
+    assert [r.table_name for r in verdict.collect()] == ["nation"]
+    assert sorted(os.listdir(dest)) == ["nation.parquet"]
+
+    # every fixture but nation is excluded: a compareDb that still saw
+    # region (absent at dest) would report DestIsExist=NO and exit 1
+    cfg = tmp_path / "cfg.yml"
+    cfg.write_text("exclude:\n" + "".join(f"  - {t}\n" for t in TABLES if t != "nation"))
+    capsys.readouterr()
+    assert main(["compareDb", "--config", str(cfg), "--src-dir", SF_SMALL, "--dest-dir", dest]) == 0
+    out = capsys.readouterr().out
+    assert "nation" in out and "region" not in out
+    assert main(["createTable", "--config", str(cfg), "--src-dir", SF_SMALL, "-t"]) == 0
+    out = capsys.readouterr().out
+    assert "CREATE TABLE `nation`" in out and out.count("CREATE TABLE") == 1
 
 
 # --- partition planning ---------------------------------------------------
@@ -161,6 +183,8 @@ def test_composite_predicates_tile_keyspace(spark):
 
 
 def test_plan_table_modes():
+    from decimal import Decimal
+
     # no PK → single full scan (root.go:341-345)
     assert plan_table("t", [], 1000, 8).mode == "single"
     # numeric PK → range partitioning, page count honors pageSize
@@ -173,6 +197,47 @@ def test_plan_table_modes():
     # empty table still yields one partition (root.go:367 empty page)
     p3 = plan_table("t", ["a", "b"], 1000, 8, boundaries=[])
     assert p3.mode == "predicates" and p3.predicates == ("1 = 1",)
+
+    # choose_plan, the one tier choice: a non-bool numeric minimum takes
+    # the range tier without sampling, no PK the full scan; anything
+    # else samples boundaries once
+    def never():
+        raise AssertionError("boundaries sampled")
+
+    p = choose_plan("t", ["id"], 1000, 8, (3500, 1, 9999), never)
+    assert p.mode == "range" and p.num_partitions == 4 and p.upper_bound == 10000
+    assert choose_plan("t", ["id"], 1000, 8, (5, Decimal(1), Decimal(9)), never).mode == "range"
+    assert choose_plan("t", [], 1000, 8, None, never).mode == "single"
+    calls = []
+    for stats in (None, (0, None, None), (2, "a", "b"), (2, False, True)):
+        p = choose_plan("t", ["k"], 1000, 8, stats, lambda: calls.append(1) or [("m",)], quote="`")
+        assert p.mode == "predicates" and p.predicates[0] == "NOT ((`k` > 'm'))"
+    assert len(calls) == 4
+
+
+def test_page_count_reads_the_planned_pages(spark, monkeypatch):
+    """migration_page_count counts the rows migrate's tier-2 pages read,
+    so a planner that drops its last page changes its rows (the oracle
+    entry would go red) — the emulation it replaced stayed green."""
+    from mysqldatasynctool_spark.plans import partitioning
+
+    def rows():
+        return sorted(tuple(r) for r in mig_op.migration_page_count(spark, SF).collect())
+
+    exact = [("customer", 1500, 1), ("lineitem", 60000, 6), ("orders", 15000, 2)]
+    assert rows() == exact
+    real = partitioning.composite_pk_predicates
+
+    def drop_last_page(*args, **kwargs):
+        preds = real(*args, **kwargs)
+        return preds[:-1] if len(preds) > 1 else preds
+
+    monkeypatch.setattr(partitioning, "composite_pk_predicates", drop_last_page)
+    mutant = {t: n for t, n, _ in rows()}
+    # customer and orders are sampled as one page each, which stays;
+    # lineitem's six pages lose their last one
+    assert mutant["customer"] == 1500 and mutant["orders"] == 15000
+    assert mutant["lineitem"] < 60000
 
 
 def test_page_queries_reference_parity():

@@ -131,56 +131,16 @@ def test_multiprobe_recall_dominates_single_probe(spark):
         for r in sim.similarity_ann_recall_report(spark, SF).collect()
     }
     assert rep["lsh_multiprobe"].n_found >= rep["lsh_bucketed"].n_found
-    single = {
-        (r.qid, r.neighbor_id)
-        for r in sim.similarity_lsh_bucketed(spark, SF).collect()
-    }
-    multi_cand = {
-        (r.qid, r.neighbor_id)
-        for r in sim.similarity_lsh_multiprobe(spark, SF).collect()
-    }
+    single = sim.similarity_lsh_bucketed(spark, SF).collect()
+    multi = sim.similarity_lsh_multiprobe(spark, SF).collect()
+    assert multi  # non-degenerate
     # the multiprobe TOP-K may displace a single-probe pair only with
     # a better cosine; spot-check via rank-1 rows: the multiprobe
     # rank-1 cosine per query is >= the single-probe rank-1 cosine
-    s1 = {r.qid: r.cosine for r in sim.similarity_lsh_bucketed(spark, SF).collect() if r.rank == 1}
-    m1 = {r.qid: r.cosine for r in sim.similarity_lsh_multiprobe(spark, SF).collect() if r.rank == 1}
+    s1 = {r.qid: r.cosine for r in single if r.rank == 1}
+    m1 = {r.qid: r.cosine for r in multi if r.rank == 1}
     for qid, c in s1.items():
         assert m1[qid] >= c
-    assert multi_cand  # non-degenerate
-
-
-def test_partition_advisor_matches_planner(spark):
-    """The advisor's reported decision must be EXACTLY what
-    plans.partitioning.plan_table chooses given the same inputs —
-    the report is the planner's surface, not a parallel reimpl."""
-    from mysqldatasynctool_spark.catalog import FIXTURE_PRIMARY_KEYS
-    from mysqldatasynctool_spark.operators import migration as mig
-    from mysqldatasynctool_spark.plans.partitioning import plan_table
-
-    rows = {
-        r.tbl: r
-        for r in mig.migration_partition_advisor(spark, SF).collect()
-    }
-    assert set(rows) == set(FIXTURE_PRIMARY_KEYS)
-    for t, pks in FIXTURE_PRIMARY_KEYS.items():
-        r = rows[t]
-        plan = plan_table(
-            t,
-            pks,
-            mig.PAGE_SIZE,
-            mig.MAX_PARALLEL,
-            row_count=r.n_rows,
-            pk_min=r.pk_min,
-            pk_max=r.pk_max,
-        )
-        assert r.mode == plan.mode
-        if plan.mode == "range":
-            assert r.num_partitions == plan.num_partitions
-            assert r.pk_min == plan.lower_bound
-            assert r.pk_max == plan.upper_bound - 1
-        else:
-            assert len(pks) > 1
-        assert r.n_pages == max(1, -(-r.n_rows // mig.PAGE_SIZE))
 
 
 def test_flip_bit_properties(spark):
