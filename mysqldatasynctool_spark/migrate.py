@@ -19,7 +19,10 @@ destination frame it verifies. Per table the core runs
 4. ``verify``: one job, a ``noop`` scan of the re-read destination
    that observes the same count+checksum,
 
-and records each phase's wall in ``TableReport.phases``.
+and records each phase's wall in ``TableReport.phases``. The verdict
+over all tables is a local relation (``compare.verdict_frame``), so a
+call runs only the jobs that move or check rows: collecting its
+verdict runs none.
 
 Where the reference runs a goroutine per page and a channel-semaphore
 pool (root.go:104-147), each table here is ONE Spark job whose
@@ -184,7 +187,7 @@ def _migrate(
 ) -> tuple[list[TableReport], object]:
     """Run every non-excluded table through ``_copy_verify`` and build
     the verdict frame over the tables that reached verification."""
-    from .operators.compare import VERDICT_SCHEMA
+    from .operators.compare import verdict_frame
 
     todo = exclude_tables(tables, cfg.exclude)
     # maxParallel bounds how many table copy+verify JOBS are in flight
@@ -193,7 +196,7 @@ def _migrate(
     with ThreadPoolExecutor(max_workers=min(cfg.max_parallel, max(1, len(todo)))) as pool:
         results = list(pool.map(lambda t: _copy_verify(path, t, resume), todo))
     # sorted in Python: orderBy on a few local rows costs Spark jobs
-    verdict = spark.createDataFrame(sorted(v for _, v in results if v is not None), VERDICT_SCHEMA)
+    verdict = verdict_frame(spark, sorted(v for _, v in results if v is not None))
     return [r for r, _ in results], verdict
 
 
@@ -287,7 +290,9 @@ def migrate_jdbc(
       COUNT/MIN/MAX aggregate PUSHED DOWN to the source (a 1-row
       result, not a scan into Spark);
     - any other PK (or an empty table) → lexicographic boundary
-      predicates from a bounded PK sample (``sample_boundaries``);
+      predicates from a bounded PK sample (``sample_boundaries``),
+      sized by the probe's count, so the sample is the only scan the
+      tier reads into Spark (none for a table of at most one page);
     - no PK → single full-scan partition.
 
     PK identifiers inside generated SQL are quoted with the source
@@ -332,7 +337,7 @@ def migrate_jdbc(
                 pass
         return choose_plan(
             t, pk, page_size, cfg.max_parallel, stats,
-            lambda: sample_boundaries(read_table(spark, src, t).select(*pk), pk, page_size),
+            lambda n: sample_boundaries(read_table(spark, src, t).select(*pk), pk, page_size, n),
             quote=q,
         )
 

@@ -43,6 +43,22 @@ VERDICT_SCHEMA = (
 )
 
 
+def verdict_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """``rows`` (driver-side verdict tuples, in the order given) as a
+    ``VERDICT_SCHEMA`` frame built from an Arrow table. Spark keeps an
+    Arrow table under ``spark.sql.execution.arrow.localRelationThreshold``
+    as a ``LocalRelation``, so collecting the verdict runs no job; a
+    Python list would be parallelized, one job per collect."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(VERDICT_SCHEMA)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist([dict(zip(names, r)) for r in rows], to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
+
+
 def _norm_col(name: str, dtype: str):
     c = F.col(name)
     if dtype in ("double", "float"):
@@ -140,7 +156,7 @@ def compare_tables(
     if not src_tables:
         # zero tables copied (empty source / all failed): report an
         # empty verdict rather than crashing the run summary
-        return spark.createDataFrame([], VERDICT_SCHEMA)
+        return verdict_frame(spark, [])
 
     def summaries(tables: dict[str, DataFrame], side: str) -> DataFrame:
         rows = [

@@ -588,7 +588,7 @@ def migration_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in reduce(DataFrame.unionByName, probes).collect():
         pks = FIXTURE_PRIMARY_KEYS[r.tbl]
         plan = choose_plan(
-            r.tbl, pks, PAGE_SIZE, SyncConfig().max_parallel, (r.n, r.lo, r.hi), lambda: []
+            r.tbl, pks, PAGE_SIZE, SyncConfig().max_parallel, (r.n, r.lo, r.hi), lambda n: []
         )
         hi = None if plan.upper_bound is None else plan.upper_bound - 1
         rows.append((r.tbl, plan.mode, "+".join(pks), r.n, page_count(r.n, PAGE_SIZE),

@@ -130,10 +130,16 @@ MAX_BOUNDARY_SAMPLE = 100_000
 
 
 def sample_boundaries(
-    df: DataFrame, pk_cols: list[str], page_size: int
+    df: DataFrame, pk_cols: list[str], page_size: int, count: int | None = None
 ) -> list[tuple]:
-    """PK boundary tuples at roughly page_size spacing, from a bounded
-    SAMPLE of the narrow PK projection.
+    """PK boundary tuples that cut the table into ``page_count(rows,
+    page_size)`` pages, from a bounded SAMPLE of the narrow PK
+    projection.
+
+    ``count`` is the table's row count when the caller already holds
+    it (migrate_jdbc's pushed-down stats probe); only when it is
+    ``None`` does the sampler count the table itself, one more scan.
+    A table of at most one page needs no boundaries and runs no job.
 
     Distributed-safe by construction: the sample (≤ MAX_BOUNDARY_SAMPLE
     tuples, seed-fixed) is collected and sorted driver-side — never a
@@ -144,8 +150,8 @@ def sample_boundaries(
     balances partition sizes.
     """
     narrow = df.select(*pk_cols)
-    total = narrow.count()
-    if total == 0:
+    total = narrow.count() if count is None else count
+    if total <= page_size:
         return []
     fraction = min(1.0, MAX_BOUNDARY_SAMPLE / total)
     sampled = (
@@ -154,7 +160,7 @@ def sample_boundaries(
         else narrow.collect()
     )
     tuples = sorted(tuple(r) for r in sampled)
-    n_pages = max(1, total // page_size)
+    n_pages = page_count(total, page_size)
     stride = max(1, len(tuples) // n_pages)
     return [tuples[i] for i in range(stride - 1, len(tuples) - 1, stride)][: n_pages - 1]
 
@@ -190,7 +196,7 @@ def plan_table(
     Range partitions on a non-unique leading member of a composite key
     tile the keyspace as completely as the boundary predicates (every
     row falls in exactly one range), for one pushed-down
-    COUNT/MIN/MAX instead of the boundary sampler's two narrow scans.
+    COUNT/MIN/MAX and no boundary-sampling scan.
     """
     if not pk_cols:
         return PartitionPlan(table=table, mode="single")
@@ -209,18 +215,21 @@ def plan_table(
 
 def choose_plan(
     table: str, pk_cols: list[str], page_size: int, max_parallel: int,
-    stats: tuple | None, boundaries: Callable[[], list[tuple]], quote: str = "",
+    stats: tuple | None, boundaries: Callable[[int | None], list[tuple]], quote: str = "",
 ) -> PartitionPlan:
     """The one tier choice, from the leading PK column's ``(count, min,
     max)`` (``None`` when unprobed): no PK or a non-bool numeric min →
     ``plan_table``'s single or range plan; anything else (an empty
-    table, a string/date key) → predicates over ``boundaries()``, which
-    is called only then. The reference pages every PK type the same
-    way (root.go:347-371)."""
+    table, a string/date key) → predicates over ``boundaries(count)``,
+    which is called only then, with the probe's count (``None`` when
+    unprobed) so the sampler need not count the table again. The
+    reference pages every PK type the same way (root.go:347-371)."""
     count, lo, hi = stats or (None, None, None)
     if not pk_cols or (isinstance(lo, Number) and not isinstance(lo, bool)):
         return plan_table(table, pk_cols, page_size, max_parallel, count, lo, hi)
-    return plan_table(table, pk_cols, page_size, max_parallel, boundaries=boundaries(), quote=quote)
+    return plan_table(
+        table, pk_cols, page_size, max_parallel, boundaries=boundaries(count), quote=quote
+    )
 
 
 def page_queries(table: str, pk_cols: list[str], total_rows: int, page_size: int) -> list[str]:

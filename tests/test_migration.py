@@ -182,6 +182,60 @@ def test_composite_predicates_tile_keyspace(spark):
     assert covered == total
 
 
+def _caller_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran on the calling thread)."""
+    import uuid
+
+    from mysqldatasynctool_spark.plans.layout import job_group
+
+    tag = f"caller_{uuid.uuid4().hex}"
+    with job_group(spark, tag):
+        out = fn()
+    return out, len(spark.sparkContext.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_sample_boundaries_pages_with_ceil(spark):
+    """Tier 2 cuts ceil(rows/page_size) pages, like the range tier and
+    root.go:359-364: 15,000 keys at page size 10,000 are 2 pages, so 1
+    boundary (the floor division read them as one page)."""
+    keys = spark.range(15_000).withColumnRenamed("id", "k")
+    assert len(sample_boundaries(keys, ["k"], 10_000)) == 1
+    assert len(sample_boundaries(keys, ["k"], 10_000, 15_000)) == 1
+    assert len(sample_boundaries(keys, ["k"], 5_000)) == 2
+
+
+def test_sample_boundaries_reuses_the_given_count(spark, monkeypatch):
+    """With the caller's row count the sampler never counts the table;
+    a count of at most one page returns no boundaries and runs no job."""
+    from pyspark.sql import DataFrame
+
+    keys = spark.range(15_000).withColumnRenamed("id", "k")
+    counted = sample_boundaries(keys, ["k"], 4_000)
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count called")
+
+    monkeypatch.setattr(DataFrame, "count", no_count)
+    assert sample_boundaries(keys, ["k"], 4_000, 15_000) == counted
+    for n in (0, 1, 4_000):
+        out, jobs = _caller_jobs(spark, lambda: sample_boundaries(keys, ["k"], 4_000, n))
+        assert out == [] and jobs == 0, (n, out, jobs)
+
+
+def test_choose_plan_reuses_the_probe_count(spark):
+    """A string-led probe's count reaches the sampler: the plan equals
+    the one from boundaries sampled with the sampler's own count."""
+    li = load(spark, SF_SMALL, "lineitem")
+    pk, ps = ["l_orderkey", "l_linenumber"], 1_000
+    n = li.count()
+    reused = choose_plan(
+        "lineitem", pk, ps, 8, (n, "a", "z"), lambda c: sample_boundaries(li, pk, ps, c)
+    )
+    counted = plan_table("lineitem", pk, ps, 8, boundaries=sample_boundaries(li, pk, ps))
+    assert reused.mode == "predicates" and len(reused.predicates) > 1
+    assert reused.predicates == counted.predicates
+
+
 def test_plan_table_modes():
     from decimal import Decimal
 
@@ -201,7 +255,7 @@ def test_plan_table_modes():
     # choose_plan, the one tier choice: a non-bool numeric minimum takes
     # the range tier without sampling, no PK the full scan; anything
     # else samples boundaries once
-    def never():
+    def never(count):
         raise AssertionError("boundaries sampled")
 
     p = choose_plan("t", ["id"], 1000, 8, (3500, 1, 9999), never)
@@ -210,9 +264,11 @@ def test_plan_table_modes():
     assert choose_plan("t", [], 1000, 8, None, never).mode == "single"
     calls = []
     for stats in (None, (0, None, None), (2, "a", "b"), (2, False, True)):
-        p = choose_plan("t", ["k"], 1000, 8, stats, lambda: calls.append(1) or [("m",)], quote="`")
+        p = choose_plan("t", ["k"], 1000, 8, stats, lambda n: calls.append(n) or [("m",)], quote="`")
         assert p.mode == "predicates" and p.predicates[0] == "NOT ((`k` > 'm'))"
     assert len(calls) == 4
+    # the probe's count reaches the sampler; an unprobed table has none
+    assert calls == [None, 0, 2, 2]
 
 
 def test_page_count_reads_the_planned_pages(spark, monkeypatch):
@@ -234,10 +290,10 @@ def test_page_count_reads_the_planned_pages(spark, monkeypatch):
 
     monkeypatch.setattr(partitioning, "composite_pk_predicates", drop_last_page)
     mutant = {t: n for t, n, _ in rows()}
-    # customer and orders are sampled as one page each, which stays;
-    # lineitem's six pages lose their last one
-    assert mutant["customer"] == 1500 and mutant["orders"] == 15000
-    assert mutant["lineitem"] < 60000
+    # customer is sampled as one page, which stays; orders' two pages
+    # and lineitem's six lose their last one
+    assert mutant["customer"] == 1500
+    assert mutant["orders"] < 15000 and mutant["lineitem"] < 60000
 
 
 def test_page_queries_reference_parity():
@@ -485,7 +541,8 @@ def test_migrate_verify_detects_bad_landing(spark, tmp_path, monkeypatch, path):
 def test_migrate_directory_jobs_per_table(spark, tmp_path):
     """A parquet migrate runs at most 3 Spark jobs per table (source
     schema inference, the copy that observes the source summary, the
-    noop verify scan that observes the destination's) plus 1 per call.
+    noop verify scan that observes the destination's) and none per
+    call: collecting the verdict runs no job.
     Tables are copied on pool threads, which do not inherit a job
     group, so the count is the gap between the ids of two tagged probe
     jobs (job ids are global and monotonic)."""
@@ -510,7 +567,27 @@ def test_migrate_directory_jobs_per_table(spark, tmp_path):
     assert all(r.ok for r in reports)
     assert [r.table_name for r in rows] == sorted(tables)
     assert all(r.is_ok == "YES" for r in rows)
-    assert jobs <= 3 * len(tables) + 1, jobs
+    assert jobs <= 3 * len(tables), jobs
+
+
+def test_verdict_collect_runs_no_job(spark, tmp_path):
+    """The verdicts of migrate and of an empty compareDb are local
+    relations: collecting them on the caller thread runs no Spark job,
+    and their schema is VERDICT_SCHEMA, rows sorted by table name."""
+    from mysqldatasynctool_spark.operators.compare import VERDICT_SCHEMA, compare_tables
+
+    schema = spark.createDataFrame([], VERDICT_SCHEMA).schema
+    tables = ["region", "nation"]
+    _, verdict = migrate_directory(spark, SF_SMALL, str(tmp_path / "dest"), tables=tables)
+    rows, jobs = _caller_jobs(spark, verdict.collect)
+    assert jobs == 0
+    assert verdict.schema == schema
+    assert [r.table_name for r in rows] == sorted(tables)
+    assert all(r.is_ok == "YES" for r in rows)
+    empty = compare_tables(spark, {}, {})
+    rows, jobs = _caller_jobs(spark, empty.collect)
+    assert rows == [] and jobs == 0
+    assert empty.schema == schema
 
 
 def test_compare_detects_corruption_and_missing(spark, tmp_path):

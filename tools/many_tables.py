@@ -12,7 +12,8 @@ defaults, and prints one JSON line: `tables`, `wall_s`,
 `jobs_per_table`, `failed`. Jobs are counted as the id gap between two
 tagged probe jobs around the timed call (job ids are global and
 monotonic; the per-table pool threads carry no job group), so the
-count includes the verdict collect. It is evidence, not a benchmark:
+count also covers the verdict collect, which runs none (the verdict
+is a local relation). It is evidence, not a benchmark:
 one run, no steal correction.
 """
 
