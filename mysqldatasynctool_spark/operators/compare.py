@@ -14,15 +14,19 @@ timestamps via floor-epoch seconds) is engine-portable, so the same
 checksum is computable in DuckDB ('0x…'::BIGINT parses the hex) and
 in MySQL (CONV()) — a dest-engine-independent verification.
 
-Scale note: the checksum is a single scan + partial-aggregated SUM —
-one shuffled row per table, no sort, no collect of data rows. At
-100 TB this runs at full scan bandwidth; the reference's count-only
-compare had the same cost but far weaker guarantees.
+Scale note: compareDb (``compare_tables``) is eager and runs as one
+grouped scan — every distinct frame of both sides is read once, each
+task partial-aggregates one (count, SUM) row per frame it read, and
+one shuffle brings them together; no sort, no collect of data rows,
+and the verdict comes back as a local relation. At 100 TB this runs
+at full scan bandwidth; the reference's count-only compare had the
+same cost but far weaker guarantees.
 """
 
 from __future__ import annotations
 
 import uuid
+from decimal import Decimal
 from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
@@ -148,51 +152,42 @@ def compare_tables(
     src_tables: dict[str, DataFrame],
     dest_tables: dict[str, DataFrame],
 ) -> DataFrame:
-    """Per-table verdict, reference-compatible columns plus checksum.
+    """Per-table verdict, reference-compatible columns plus checksum,
+    as a local relation sorted by table name.
 
-    Missing destination tables get DestIsExist='NO' like the
-    reference's failed-dest-query path (compare.go:122-126).
+    Eager: the call runs the whole compare as ONE grouped aggregate
+    over a union of one ``(k, digest)`` branch per distinct frame, so
+    a frame serving both sides (by identity) is read once, and the
+    shuffle carries one row per branch per task — 2 jobs under AQE
+    whatever the table count. Collecting the returned verdict runs no
+    job (``verdict_frame``). A table missing from dest gets NULL dest
+    columns and DestIsExist='NO' like the reference's failed-dest-query
+    path (compare.go:122-126); one present only in dest gets NULL src
+    columns; an empty table summarizes to (0, 0).
     """
     if not src_tables:
         # zero tables copied (empty source / all failed): report an
         # empty verdict rather than crashing the run summary
         return verdict_frame(spark, [])
+    keys: dict[int, int] = {}
+    branches = []
+    for df in [*src_tables.values(), *dest_tables.values()]:
+        k = keys.setdefault(id(df), len(keys))
+        if k == len(branches):
+            branches.append(df.select(F.lit(k).alias("k"), row_digest_long(df).alias("d")))
+    agg = reduce(DataFrame.unionByName, branches).groupBy("k").agg(*_summary_cols(F.col("d")))
+    # a frame without rows forms no group: (0, 0) like a global aggregate
+    got = {r.k: (r.cnt, r.checksum) for r in agg.collect()}
 
-    def summaries(tables: dict[str, DataFrame], side: str) -> DataFrame:
-        rows = [
-            df.select(row_digest_long(df).alias("d")).agg(
-                F.lit(t).alias("table_name"), *_summary_cols(F.col("d"))
-            )
-            for t, df in tables.items()
-        ]
-        return reduce(DataFrame.unionByName, rows).select(
-            "table_name",
-            F.col("cnt").alias(f"{side}_cnt"),
-            F.col("checksum").alias(f"{side}_checksum"),
-        )
+    def summary(tables: dict[str, DataFrame], t: str) -> tuple:
+        return got.get(keys[id(tables[t])], (0, Decimal(0))) if t in tables else (None, None)
 
-    src = summaries(src_tables, "src")
-    if dest_tables:
-        joined = src.join(summaries(dest_tables, "dest"), "table_name", "full_outer")
-    else:
-        joined = src.withColumn("dest_cnt", F.lit(None).cast("long")).withColumn(
-            "dest_checksum", F.lit(None).cast("decimal(38,0)")
-        )
-    return joined.select(
-        "table_name",
-        "src_cnt",
-        "dest_cnt",
-        "src_checksum",
-        "dest_checksum",
-        F.when(F.col("dest_cnt").isNull(), "NO").otherwise("YES").alias("dest_is_exist"),
-        F.when(
-            F.col("src_cnt").eqNullSafe(F.col("dest_cnt"))
-            & F.col("src_checksum").eqNullSafe(F.col("dest_checksum")),
-            "YES",
-        )
-        .otherwise("NO")
-        .alias("is_ok"),
-    ).orderBy("table_name")
+    rows = []
+    for t in sorted(src_tables.keys() | dest_tables.keys()):
+        s, d = summary(src_tables, t), summary(dest_tables, t)
+        exists = "NO" if d[0] is None else "YES"
+        rows.append((t, s[0], d[0], s[1], d[1], exists, "YES" if s == d else "NO"))
+    return verdict_frame(spark, rows)
 
 
 # --- oracle-backed query -------------------------------------------------

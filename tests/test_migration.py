@@ -182,8 +182,8 @@ def test_composite_predicates_tile_keyspace(spark):
     assert covered == total
 
 
-def _caller_jobs(spark, fn):
-    """(fn(), number of Spark jobs fn ran on the calling thread)."""
+def _caller_job_ids(spark, fn):
+    """(fn(), ids of the Spark jobs fn ran on the calling thread)."""
     import uuid
 
     from mysqldatasynctool_spark.plans.layout import job_group
@@ -191,7 +191,31 @@ def _caller_jobs(spark, fn):
     tag = f"caller_{uuid.uuid4().hex}"
     with job_group(spark, tag):
         out = fn()
-    return out, len(spark.sparkContext.statusTracker().getJobIdsForGroup(tag))
+    return out, spark.sparkContext.statusTracker().getJobIdsForGroup(tag)
+
+
+def _caller_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn ran on the calling thread)."""
+    out, ids = _caller_job_ids(spark, fn)
+    return out, len(ids)
+
+
+def _input_records(spark, job_ids) -> int:
+    """Input records read by the stages of ``job_ids``, each stage
+    counted once (a reused shuffle stage is skipped by a later job)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store, tracker = jsc.statusStore(), spark.sparkContext.statusTracker()
+    stages = {s for j in job_ids for s in tracker.getJobInfo(j).stageIds}
+    total = 0
+    for s in stages:
+        try:
+            st = store.lastStageAttempt(s)
+        except Exception:  # noqa: BLE001 — skipped stage, never ran
+            continue
+        if st.status().toString() not in ("SKIPPED", "PENDING"):
+            total += st.inputRecords()
+    return total
 
 
 def test_sample_boundaries_pages_with_ceil(spark):
@@ -320,14 +344,6 @@ def test_sql_lit_typed_boundaries():
     assert _sql_lit(True) == "TRUE"
     with pytest.raises(ValueError):
         _sql_lit(None)
-
-
-def test_compare_tables_empty_input(spark):
-    from mysqldatasynctool_spark.operators.compare import compare_tables
-
-    verdict = compare_tables(spark, {}, {})
-    assert verdict.count() == 0
-    assert "is_ok" in verdict.columns
 
 
 def test_ddl_string_pk_gets_keyable_type():
@@ -571,9 +587,9 @@ def test_migrate_directory_jobs_per_table(spark, tmp_path):
 
 
 def test_verdict_collect_runs_no_job(spark, tmp_path):
-    """The verdicts of migrate and of an empty compareDb are local
-    relations: collecting them on the caller thread runs no Spark job,
-    and their schema is VERDICT_SCHEMA, rows sorted by table name."""
+    """The verdicts of migrate and of compareDb, empty or not, are
+    local relations: collecting them on the caller thread runs no Spark
+    job, and their schema is VERDICT_SCHEMA, rows sorted by table name."""
     from mysqldatasynctool_spark.operators.compare import VERDICT_SCHEMA, compare_tables
 
     schema = spark.createDataFrame([], VERDICT_SCHEMA).schema
@@ -588,10 +604,26 @@ def test_verdict_collect_runs_no_job(spark, tmp_path):
     rows, jobs = _caller_jobs(spark, empty.collect)
     assert rows == [] and jobs == 0
     assert empty.schema == schema
+    # compareDb over frames read with a given schema (no inference job):
+    # one grouped scan of at most 2 jobs, each distinct frame read once
+    # even when it serves both sides, and a local-relation verdict
+    frames = {}
+    for t in ["region", "nation", "supplier"]:
+        given = load(spark, SF_SMALL, t).schema
+        frames[t] = spark.read.schema(given).parquet(f"{SF_SMALL}/{t}.parquet")
+    n_rows = sum(df.count() for df in frames.values())
+    verdict, jobs = _caller_job_ids(spark, lambda: compare_tables(spark, frames, frames))
+    assert len(jobs) <= 2, jobs
+    assert _input_records(spark, jobs) == n_rows
+    rows, jobs = _caller_jobs(spark, verdict.collect)
+    assert jobs == 0
+    assert verdict.schema == schema
+    assert [r.table_name for r in rows] == sorted(frames)
+    assert all(r.is_ok == "YES" and r.src_cnt > 0 for r in rows)
 
 
 def test_compare_detects_corruption_and_missing(spark, tmp_path):
-    from mysqldatasynctool_spark.operators.compare import compare_tables
+    from mysqldatasynctool_spark.operators.compare import compare_tables, table_summary
 
     nation = load(spark, SF, "nation")
     corrupted = nation.withColumn(
@@ -609,6 +641,29 @@ def test_compare_detects_corruption_and_missing(spark, tmp_path):
     assert by_name["nation"].is_ok == "NO"
     assert by_name["region"].dest_is_exist == "NO"
     assert by_name["region"].is_ok == "NO"
+    # a dest-only table, an empty table on both sides, and each row's
+    # (cnt, checksum) equal to what table_summary observes on its frame
+    supplier, part = load(spark, SF, "supplier"), load(spark, SF, "part")
+    src = {"nation": nation, "empty": nation.filter("false"), "part": part}
+    dest = {"nation": corrupted, "empty": nation.filter("false"), "supplier": supplier}
+    by_name = {r.table_name: r for r in compare_tables(spark, src, dest).collect()}
+    assert list(by_name) == sorted(by_name)
+    only_dest = by_name["supplier"]
+    assert (only_dest.src_cnt, only_dest.src_checksum) == (None, None)
+    assert (only_dest.dest_is_exist, only_dest.is_ok) == ("YES", "NO")
+    empty = by_name["empty"]
+    assert (empty.src_cnt, empty.src_checksum, empty.dest_cnt, empty.dest_checksum) == (0, 0, 0, 0)
+    assert (empty.dest_is_exist, empty.is_ok) == ("YES", "YES")
+
+    def observed(df):
+        observed_df, obs = table_summary(df, "t")
+        observed_df.write.format("noop").mode("overwrite").save()
+        return obs.get["cnt"], obs.get["checksum"]
+
+    for side, tables in (("src", src), ("dest", dest)):
+        for t, df in tables.items():
+            row = by_name[t]
+            assert (row[f"{side}_cnt"], row[f"{side}_checksum"]) == observed(df), (t, side)
 
 
 def test_migration_queries_match_oracle(spark, duck):

@@ -8,9 +8,11 @@ Usage:
 Seeds N parquet tables under a fresh /tmp directory with pyarrow (2-6
 columns of int/double/string, a few hundred rows each), runs
 `migrate_directory` once to warm up and once timed with `SyncConfig`'s
-defaults, and prints one JSON line: `tables`, `wall_s`,
-`jobs_per_table`, `failed`. Jobs are counted as the id gap between two
-tagged probe jobs around the timed call (job ids are global and
+defaults, then times a compareDb (`load` of every source and
+destination table, `compare_tables`, verdict collect) and prints one
+JSON line: `tables`, `wall_s`, `jobs_per_table`, `compare_s`,
+`compare_jobs`, `failed`. Jobs are counted as the id gap between two
+tagged probe jobs around each timed call (job ids are global and
 monotonic; the per-table pool threads carry no job group), so the
 count also covers the verdict collect, which runs none (the verdict
 is a local relation). It is evidence, not a benchmark:
@@ -31,8 +33,11 @@ import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from mysqldatasynctool_spark.catalog import discover_parquet_tables  # noqa: E402
 from mysqldatasynctool_spark.migrate import migrate_directory  # noqa: E402
+from mysqldatasynctool_spark.operators.compare import compare_tables  # noqa: E402
 from mysqldatasynctool_spark.session import get_spark  # noqa: E402
+from mysqldatasynctool_spark.sources.fixtures import load  # noqa: E402
 
 
 def seed_tables(root: str, n: int, seed: int) -> None:
@@ -90,12 +95,25 @@ def main() -> None:
         bad = sum(r.is_ok != "YES" for r in verdict.collect())
         wall = time.monotonic() - t0
         jobs = probe() - before - 1
+        names = discover_parquet_tables(src)
+        before = probe()
+        t0 = time.monotonic()
+        verdict = compare_tables(
+            spark,
+            {t: load(spark, src, t) for t in names},
+            {t: load(spark, f"{root}/dest", t) for t in names},
+        )
+        bad += sum(r.is_ok != "YES" for r in verdict.collect())
+        compare_s = time.monotonic() - t0
+        compare_jobs = probe() - before - 1
     finally:
         shutil.rmtree(root, ignore_errors=True)
     print(json.dumps({
         "tables": args.tables,
         "wall_s": round(wall, 3),
         "jobs_per_table": round(jobs / args.tables, 3),
+        "compare_s": round(compare_s, 3),
+        "compare_jobs": compare_jobs,
         "failed": sum(not r.ok for r in reports) + bad,
     }))
 
