@@ -40,6 +40,18 @@ from ..functions.text import (
     tokens_col,
 )
 from ..sources.fixtures import load
+from .similarity import (
+    _E_CTE,
+    _assign_cells,
+    _bucket_expr,
+    _cell_assign_prelude_sql,
+    _dot,
+    _in_cell,
+    _lsh_bits_sql,
+    _vecs,
+    _with_norm,
+    lsh_dims_for,
+)
 
 JACCARD_THRESHOLD = 0.2
 SIMHASH_BITS = 32
@@ -579,50 +591,66 @@ WHERE bit_count(xor(CAST(a.simhash AS BIGINT), CAST(b.simhash AS BIGINT))) <= 3
 """
 
 
+#: cosine at or above which two embeddings are near-duplicates
+EMBEDDING_DUP_COS = 0.4
+
+
+def _embedding_dups(emb: DataFrame, key: str | None = None) -> DataFrame:
+    """The near-dup core of the three embedding entries: every pair
+    ``ida < idb`` of the normed frame ``emb`` (vec_id, v, vnorm[, key])
+    whose 6-dp cosine is at least EMBEDDING_DUP_COS, paired within
+    ``key`` (the LSH bucket or the k-means cell) or, with no key,
+    across the whole corpus. Norms come once per vector from
+    ``_with_norm``, so each pair pays a single interpreted dot.
+    Returns (ida, idb, cosine)."""
+    keys = [key] if key else []
+    a, b = (
+        emb.select(
+            *keys,
+            F.col("vec_id").alias(f"id{s}"),
+            F.col("v").alias(f"v{s}"),
+            F.col("vnorm").alias(f"n{s}"),
+        )
+        for s in "ab"
+    )
+    return (
+        (a.join(b, key) if key else a.crossJoin(b))
+        .filter(F.col("ida") < F.col("idb"))
+        .withColumn(
+            "cosine",
+            F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
+        )
+        .filter(F.col("cosine") >= EMBEDDING_DUP_COS)
+        .select("ida", "idb", "cosine")
+    )
+
+
+def _embedding_dups_sql(src: str, on: str = "") -> str:
+    """The SQL twin of ``_embedding_dups``: pairs of CTE ``src`` (vec_id,
+    v, vnorm) under the extra join condition ``on``."""
+    return f"""SELECT ida, idb, cosine FROM (
+    SELECT a.vec_id AS ida, b.vec_id AS idb,
+           ROUND(list_dot_product(a.v, b.v) / (a.vnorm * b.vnorm), 6) AS cosine
+    FROM {src} a JOIN {src} b ON {on}a.vec_id < b.vec_id
+  ) WHERE cosine >= {EMBEDDING_DUP_COS}"""
+
+
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup, all-pairs: cosine ≥ 0.4 (double-precision
-    sequential dot product — identical in IEEE engines).
+    """Embedding near-dup, all-pairs: cosine ≥ EMBEDDING_DUP_COS
+    (double-precision sequential dot product — identical in IEEE
+    engines).
 
     GROUND TRUTH, TEST SCALE ONLY (like dedup_ngram_jaccard): the
     crossJoin is O(N²) and exists to validate the bucketed production
     twin, ``dedup_embedding_lsh`` below — use that at corpus scale.
     """
-    from .similarity import _dot as dot
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    # norms once per vector (pre-join) — the pairing loop then does a
-    # single interpreted dot per pair instead of three
-    emb = emb.withColumn("n", F.sqrt(dot(F.col("v"), F.col("v"))))
-    a = emb.select(F.col("vec_id").alias("ida"), F.col("v").alias("va"), F.col("n").alias("na"))
-    b = emb.select(F.col("vec_id").alias("idb"), F.col("v").alias("vb"), F.col("n").alias("nb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("ida") < F.col("idb"))
-        .withColumn(
-            "cosine",
-            F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
-        )
-        .filter(F.col("cosine") >= 0.4)
-        .select("ida", "idb", "cosine")
-        .orderBy("ida", "idb")
-    )
+    emb = _with_norm(_vecs(spark, sf_dir))
+    return _embedding_dups(emb).orderBy("ida", "idb")
 
 
-DEDUP_EMBEDDING_COSINE_ORACLE = """
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS n
-  FROM embeddings
-),
-p AS (
-  SELECT a.vec_id AS ida, b.vec_id AS idb,
-         ROUND(list_dot_product(a.v, b.v) / (a.n * b.n), 6) AS cosine
-  FROM e a JOIN e b ON a.vec_id < b.vec_id
-)
-SELECT ida, idb, cosine FROM p
-WHERE cosine >= 0.4
+DEDUP_EMBEDDING_COSINE_ORACLE = f"""
+WITH {_E_CTE}
+{_embedding_dups_sql("e")}
 ORDER BY ida, idb
 """
 
@@ -642,53 +670,19 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact bucketed semantics, so the result is hash-checkable even
     though recall < 1 vs the all-pairs truth.
     """
-    from .similarity import _bucket_expr, _dot as dot, lsh_dims_for
-
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
+    emb = _vecs(spark, sf_dir)
     # parquet count() is footer-metadata work, not a scan — the price
     # of a corpus-size-adaptive bucket key
     dims = lsh_dims_for(emb.count())
-    emb = emb.withColumn("n", F.sqrt(dot(F.col("v"), F.col("v")))).withColumn(
-        "bucket", _bucket_expr(F.col("v"), dims)
-    )
-    a = emb.select(
-        "bucket", F.col("vec_id").alias("ida"), F.col("v").alias("va"), F.col("n").alias("na")
-    )
-    b = emb.select(
-        "bucket", F.col("vec_id").alias("idb"), F.col("v").alias("vb"), F.col("n").alias("nb")
-    )
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("ida") < F.col("idb"))
-        .withColumn(
-            "cosine",
-            F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
-        )
-        .filter(F.col("cosine") >= 0.4)
-        .select("ida", "idb", "cosine")
-        .orderBy("ida", "idb")
-    )
+    emb = _with_norm(emb).withColumn("bucket", _bucket_expr(F.col("v"), dims))
+    return _embedding_dups(emb, "bucket").orderBy("ida", "idb")
 
 
 def _embedding_lsh_oracle() -> str:
-    from .similarity import _lsh_bits_sql
-
     return f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS n
-  FROM embeddings
-),
-b AS (SELECT vec_id, v, n, {_lsh_bits_sql()} AS bucket FROM e),
-p AS (
-  SELECT a.vec_id AS ida, b2.vec_id AS idb,
-         ROUND(list_dot_product(a.v, b2.v) / (a.n * b2.n), 6) AS cosine
-  FROM b a JOIN b b2 ON a.bucket = b2.bucket AND a.vec_id < b2.vec_id
-)
-SELECT ida, idb, cosine FROM p
-WHERE cosine >= 0.4
+WITH {_E_CTE},
+b AS (SELECT vec_id, v, vnorm, {_lsh_bits_sql()} AS bucket FROM e)
+{_embedding_dups_sql("b", "a.bucket = b.bucket AND ")}
 ORDER BY ida, idb
 """
 
@@ -1034,9 +1028,9 @@ FROM marked GROUP BY doc_id ORDER BY doc_id
 def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023): cluster the
     embedding space into k-means cells, then WITHIN each cell drop
-    every vector that has a high-cosine (≥ 0.4) neighbor with a lower
-    vec_id — one deterministic representative survives per duplicate
-    neighborhood. The data-adaptive complement of
+    every vector that has a high-cosine (≥ EMBEDDING_DUP_COS) neighbor
+    with a lower vec_id — one deterministic representative survives
+    per duplicate neighborhood. The data-adaptive complement of
     ``dedup_embedding_lsh`` (random-hyperplane buckets): cells follow
     the corpus's own density, which is the paper's point.
 
@@ -1047,36 +1041,12 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell — the cell id is the ONLY shuffle key; O(Σ cell²), never N².
     Output: every vector with its cell and a keep/drop verdict.
     """
-    from .similarity import _assign_cells, _dot as dot, _vecs
-
     with_cells, _ = _assign_cells(
         spark, _vecs(spark, sf_dir), probes=1, cache_key=sf_dir
     )
-    corpus = with_cells.select(
-        "vec_id", "v", "vnorm", F.element_at("cells", 1).alias("cell")
-    )
-    a = corpus.select(
-        "cell",
-        F.col("vec_id").alias("ida"),
-        F.col("v").alias("va"),
-        F.col("vnorm").alias("na"),
-    )
-    b = corpus.select(
-        "cell",
-        F.col("vec_id").alias("idb"),
-        F.col("v").alias("vb"),
-        F.col("vnorm").alias("nb"),
-    )
+    corpus = _in_cell(with_cells)
     dropped = (
-        a.join(b, "cell")
-        .filter(F.col("ida") < F.col("idb"))
-        .withColumn(
-            "cosine",
-            F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
-        )
-        .filter(F.col("cosine") >= 0.4)
-        .select(F.col("idb").alias("vec_id"))
-        .distinct()
+        _embedding_dups(corpus, "cell").select(F.col("idb").alias("vec_id")).distinct()
     )
     return (
         corpus.join(dropped.withColumn("dropped", F.lit(1)), "vec_id", "left_outer")
@@ -1092,15 +1062,13 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semantic_cells_oracle() -> str:
     # the cell prelude is the SQL twin of similarity._assign_cells,
     # shared with every single-cell _assign_cells consumer's oracle
-    from .similarity import _cell_assign_prelude_sql
-
     return f"""
 {_cell_assign_prelude_sql()},
 corpus AS (SELECT e.vec_id, e.v, e.vnorm, a.cell FROM e JOIN assign a USING (vec_id)),
 dropped AS (
-  SELECT DISTINCT b.vec_id
-  FROM corpus a JOIN corpus b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE ROUND(list_dot_product(a.v, b.v) / (a.vnorm * b.vnorm), 6) >= 0.4
+  SELECT DISTINCT idb AS vec_id FROM (
+  {_embedding_dups_sql("corpus", "a.cell = b.cell AND ")}
+  )
 )
 SELECT c.vec_id, c.cell, d.vec_id IS NULL AS keep
 FROM corpus c LEFT JOIN dropped d ON c.vec_id = d.vec_id

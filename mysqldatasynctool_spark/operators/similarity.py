@@ -25,12 +25,17 @@ operators/multimodal.py.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..sources.fixtures import load
 
 TOP_K = 5
+#: the query panel: every QUERY_EVERY-th vector (by vec_id) queries
+#: the corpus, in every entry of the family and in every oracle
+QUERY_EVERY = 50
 #: default dimensions whose sign bit forms the LSH bucket key
 #: (1-based; element_at/list indexing is 1-based in both Spark and
 #: DuckDB). 4 bits → 16 buckets, sized for fixture-scale corpora —
@@ -42,9 +47,9 @@ LSH_TARGET_BUCKET = 10_000
 EMBED_DIM = 64
 
 
-def lsh_dims_for(n_vectors: int, target_bucket: int = LSH_TARGET_BUCKET) -> tuple[int, ...]:
+def lsh_dims_for(n_vectors: int) -> tuple[int, ...]:
     """Sign-bit dimensions sized to the corpus: enough bits that the
-    expected bucket holds ~``target_bucket`` vectors (the 'add bits at
+    expected bucket holds ~LSH_TARGET_BUCKET vectors (the 'add bits at
     production N' rule as code, not comment). Bits are spread evenly
     across the embedding dimensions; floor 4 bits (the fixture-scale
     default, reproducing the committed oracle output), cap at one bit
@@ -57,7 +62,8 @@ def lsh_dims_for(n_vectors: int, target_bucket: int = LSH_TARGET_BUCKET) -> tupl
     """
     import math
 
-    bits = max(4, math.ceil(math.log2(max(1, n_vectors) / target_bucket)) if n_vectors > target_bucket else 4)
+    over = n_vectors / LSH_TARGET_BUCKET
+    bits = max(4, math.ceil(math.log2(over))) if over > 1 else 4
     bits = min(bits, EMBED_DIM)
     if bits == 4:
         return LSH_DIMS
@@ -99,8 +105,96 @@ def _with_norm(df: DataFrame, vcol: str = "v", out: str = "vnorm") -> DataFrame:
     return df.withColumn(out, F.sqrt(_dot(F.col(vcol), F.col(vcol))))
 
 
+# --- the vector-search core ------------------------------------------
+# Every brute-force and ANN top-k entry below is the same four steps:
+# take the query panel, pair it with its candidates (self excluded),
+# score each pair by cosine, keep the per-query top k. Each step is
+# written once here, and once more as SQL for the oracles.
+
+
+def _query_panel(emb: DataFrame, *extra) -> DataFrame:
+    """The query panel of a normed frame (vec_id, v, vnorm, ...): every
+    QUERY_EVERY-th vector as (qid, qv, qnorm, *extra)."""
+    return emb.filter(F.col("vec_id") % QUERY_EVERY == 0).select(
+        F.col("vec_id").alias("qid"),
+        F.col("v").alias("qv"),
+        F.col("vnorm").alias("qnorm"),
+        *extra,
+    )
+
+
+def _pairs(emb: DataFrame, queries: DataFrame, on=None) -> DataFrame:
+    """Candidate (query, corpus vector) pairs, self excluded: an
+    equi-join on the bucket or cell keys ``on``, or with no keys the
+    brute-force broadcast of the panel against every corpus row."""
+    if on is None:
+        return emb.join(F.broadcast(queries), F.col("vec_id") != F.col("qid"))
+    return emb.join(queries, on).filter(F.col("vec_id") != F.col("qid"))
+
+
+def _pair_cosine() -> Column:
+    """Cosine of a pair's query ``qv`` and corpus ``v``: ONE
+    sequential-fold dot over the two precomputed norms (unrounded; the
+    ranked entries round it at 6 dp)."""
+    return _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("vnorm"))
+
+
+def _topk(df: DataFrame, k: int, *order: Column, col: str = "rank") -> DataFrame:
+    """Per-query top-k: ``col`` numbers each qid's rows in ``order``
+    and rows past ``k`` drop — at scale a TakeOrdered per query key,
+    never a global sort."""
+    w = W.partitionBy("qid").orderBy(*order)
+    return df.withColumn(col, F.row_number().over(w)).filter(F.col(col) <= k)
+
+
+def _nearest(pairs: DataFrame, k: int = TOP_K, col: str = "rank") -> DataFrame:
+    """Each query's k nearest candidates: the pair ``cosine`` rounded
+    at 6 dp, ranked descending with ties by ascending vec_id."""
+    scored = pairs.withColumn("cosine", F.round(_pair_cosine(), 6))
+    return _topk(scored, k, F.desc("cosine"), F.asc("vec_id"), col=col)
+
+
+#: the oracles' corpus CTE ``e``: each vector with its sequential-fold
+#: norm, the SQL twin of ``_with_norm(_vecs(...))``
+_EMB_SQL = """SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
+  FROM embeddings"""
+_E_CTE = f"e AS (\n  {_EMB_SQL}\n)"
+#: the SQL twin of the query panel's filter
+_PANEL_SQL = f"vec_id % {QUERY_EVERY} = 0"
+
+
+def _pair_cos_sql(src: str) -> str:
+    """The SQL twin of ``_pair_cosine``: panel row ``q`` against the
+    corpus row ``src``."""
+    return f"list_dot_product(q.qv, {src}.v) / (q.qnorm * {src}.vnorm)"
+
+
+def _topk_sql(src: str, extra: str = "") -> str:
+    """The SQL twin of ``_nearest``'s ranking over CTE ``src`` (qid,
+    neighbor_id, cosine, *extra): the ``ranked`` CTE, then each
+    query's TOP_K rows ordered by qid, rank."""
+    return f"""ranked AS (
+  SELECT qid{extra}, neighbor_id, cosine,
+         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC) AS rank
+  FROM {src}
+)
+SELECT qid{extra}, neighbor_id, cosine, rank FROM ranked
+WHERE rank <= {TOP_K}
+ORDER BY qid, rank"""
+
+
+def _panel_cte(src: str = "e", extra: str = "", name: str = "q") -> str:
+    """The SQL twin of ``_query_panel``: CTE ``name`` over ``src``."""
+    return (
+        f"{name} AS (SELECT vec_id AS qid, v AS qv, vnorm AS qnorm{extra} "
+        f"FROM {src} WHERE {_PANEL_SQL})"
+    )
+
+
 def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k: every 50th vector queries the full corpus.
+    """Exact cosine top-k: every QUERY_EVERY-th vector queries the
+    full corpus.
 
     Physical shape: broadcast the (small) query set against the corpus
     scan, per-corpus-row score (ONE dot per pair — norms precomputed
@@ -108,47 +202,22 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query key, never a global sort.
     """
     emb = _with_norm(_vecs(spark, sf_dir))
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("vnorm").alias("qnorm"),
-    )
-    scored = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("qid"))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("vnorm")), 6),
-        )
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        _nearest(_pairs(emb, _query_panel(emb)))
         .select("qid", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
         .orderBy("qid", "rank")
     )
 
 
 SIMILARITY_TOPK_ORACLE = f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
-),
-q AS (SELECT vec_id AS qid, v AS qv, vnorm AS qnorm FROM e WHERE vec_id % 50 = 0),
+WITH {_E_CTE},
+{_panel_cte()},
 scored AS (
   SELECT q.qid, e.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.qv, e.v) / (q.qnorm * e.vnorm), 6) AS cosine
+         ROUND({_pair_cos_sql("e")}, 6) AS cosine
   FROM q JOIN e ON e.vec_id <> q.qid
 ),
-ranked AS (
-  SELECT qid, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT qid, neighbor_id, cosine, rank FROM ranked
-WHERE rank <= {TOP_K}
-ORDER BY qid, rank
+{_topk_sql("scored")}
 """
 
 
@@ -168,6 +237,13 @@ def _lsh_bits_sql(dims: tuple[int, ...] = LSH_DIMS) -> str:
     )
 
 
+def _bucketed(spark: SparkSession, sf_dir: str, dims: tuple[int, ...] = LSH_DIMS) -> DataFrame:
+    """The normed corpus (vec_id, label, v, vnorm) with its sign-bit
+    LSH ``bucket`` over ``dims``: the candidate side of every
+    single-probe bucketed entry."""
+    return _with_norm(_vecs(spark, sf_dir)).withColumn("bucket", _bucket_expr(F.col("v"), dims))
+
+
 def similarity_lsh_bucketed(
     spark: SparkSession, sf_dir: str, dims: tuple[int, ...] = LSH_DIMS
 ) -> DataFrame:
@@ -175,31 +251,14 @@ def similarity_lsh_bucketed(
     query's bucket (single probe). Recall < 1 by design; the oracle
     replicates the same bucketed semantics, so results match exactly.
 
-    ``dims`` defaults to the fixture-scale 4-bit key (16 buckets —
-    this is what the committed oracle mirrors); production callers
-    pass ``lsh_dims_for(corpus_size)`` so bucket count tracks N and
-    join parallelism / skew stay bounded."""
-    emb = _with_norm(_vecs(spark, sf_dir)).withColumn(
-        "bucket", _bucket_expr(F.col("v"), dims)
-    )
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("vnorm").alias("qnorm"),
-        "bucket",
-    )
-    scored = (
-        emb.join(queries, "bucket")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("vnorm")), 6),
-        )
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    ``dims`` defaults to the fixture-scale 4-bit key (16 buckets),
+    which the oracle mirrors; the registry runs this entry with that
+    default. The bucket count stays fixed whatever the corpus size:
+    ``lsh_dims_for`` sizes a key to N, and in this package only
+    ``dedup.dedup_embedding_lsh`` calls it."""
+    emb = _bucketed(spark, sf_dir, dims)
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        _nearest(_pairs(emb, _query_panel(emb, "bucket"), "bucket"))
         .select("qid", "bucket", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
         .orderBy("qid", "rank")
     )
@@ -211,27 +270,22 @@ def similarity_lsh_bucketed(
 LSH_N_TABLES = 3
 
 
-def lsh_tables_for(
-    n_vectors: int | None = None,
-    dims: tuple[int, ...] | None = None,
-    n_tables: int = LSH_N_TABLES,
-) -> list:
-    """The L independent sign-bit hash tables for multi-table LSH:
-    table 0 is the base dimension set (``dims`` or ``lsh_dims_for``
-    at the given corpus size — so the multi-table candidate set is a
-    strict superset of the single-table variants), and each further
-    table shifts every dimension by ``t·(stride // L)`` within the
-    base stride, giving L disjoint, evenly-spread hyperplane sets.
+def lsh_tables_for(dims: tuple[int, ...]) -> list:
+    """The LSH_N_TABLES independent sign-bit hash tables for
+    multi-table LSH: table 0 is the base dimension set ``dims`` (so the
+    multi-table candidate set is a strict superset of the single-table
+    variants), and each further table shifts every dimension by
+    ``t·(stride // L)`` within the base stride, giving L disjoint,
+    evenly-spread hyperplane sets.
 
     >>> lsh_tables_for(dims=(1, 9, 17, 25))
     [(1, 9, 17, 25), (3, 11, 19, 27), (5, 13, 21, 29)]
     """
-    base = dims if dims is not None else lsh_dims_for(n_vectors or 0)
-    stride = base[1] - base[0] if len(base) > 1 else 1
-    shift = max(1, stride // n_tables)
+    stride = dims[1] - dims[0] if len(dims) > 1 else 1
+    shift = max(1, stride // LSH_N_TABLES)
     return [
-        tuple((d - 1 + t * shift) % EMBED_DIM + 1 for d in base)
-        for t in range(n_tables)
+        tuple((d - 1 + t * shift) % EMBED_DIM + 1 for d in dims)
+        for t in range(LSH_N_TABLES)
     ]
 
 
@@ -275,8 +329,8 @@ def similarity_lsh_multiprobe(
     100 TB: the corpus side explodes ×L (the standard multi-table
     space/recall trade — L bucketed layouts, each an equi-join key
     (tbl, bucket)); probes multiply only the per-query candidate
-    volume; bit count still tracks N via ``lsh_dims_for``, table
-    count via LSH_N_TABLES.
+    volume; the bit count is the fixed ``dims`` (``lsh_dims_for``
+    would size it to N), the table count LSH_N_TABLES.
     """
     tables = lsh_tables_for(dims=dims)
     n_bits = len(dims)
@@ -290,14 +344,9 @@ def similarity_lsh_multiprobe(
             for t, tdims in enumerate(tables)
         ]
     )
-    corpus = emb.select(
-        "vec_id", "v", "vnorm", F.explode(tbl_keys).alias("tb")
-    ).select(
-        "vec_id",
-        "v",
-        "vnorm",
-        F.col("tb.tbl").alias("tbl"),
-        F.col("tb.bucket").alias("bucket"),
+    tb = [F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket")]
+    corpus = emb.select("vec_id", "v", "vnorm", F.explode(tbl_keys).alias("tb")).select(
+        "vec_id", "v", "vnorm", *tb
     )
     probe_keys = []
     for t, tdims in enumerate(tables):
@@ -309,39 +358,17 @@ def similarity_lsh_multiprobe(
             )
             for i in range(1, n_bits + 1)
         )
-    queries = (
-        emb.filter(F.col("vec_id") % 50 == 0)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("vnorm").alias("qnorm"),
-            F.explode(F.array(*probe_keys)).alias("tb"),
-        )
-        .select(
-            "qid",
-            "qv",
-            "qnorm",
-            F.col("tb.tbl").alias("tbl"),
-            F.col("tb.bucket").alias("bucket"),
-        )
+    queries = _query_panel(emb, F.explode(F.array(*probe_keys)).alias("tb")).select(
+        "qid", "qv", "qnorm", *tb
     )
+    cosine = F.round(_pair_cosine(), 6).alias("cosine")
     pairs = (
-        corpus.join(queries, ["tbl", "bucket"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("vnorm")),
-                6,
-            ).alias("cosine"),
-        )
+        _pairs(corpus, queries, ["tbl", "bucket"])
+        .select("qid", F.col("vec_id").alias("neighbor_id"), cosine)
         .distinct()
     )
-    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        _topk(pairs, TOP_K, F.desc("cosine"), F.asc("neighbor_id"))
         .select("qid", "neighbor_id", "cosine", "rank")
         .orderBy("qid", "rank")
     )
@@ -374,58 +401,36 @@ def _lsh_multiprobe_oracle(dims: tuple[int, ...] = LSH_DIMS) -> str:
         ["q.bucket"] + [_flip_bit_sql(i, n_bits) for i in range(1, n_bits + 1)]
     )
     return f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
-),
+WITH {_E_CTE},
 b AS (
   {b_arms}
 ),
-q0 AS (SELECT vec_id AS qid, v AS qv, vnorm AS qnorm, tbl, bucket FROM b WHERE vec_id % 50 = 0),
+{_panel_cte("b", ", tbl, bucket", "q0")},
 q AS (
   SELECT qid, qv, qnorm, tbl, unnest([{probe_list}]) AS probe
   FROM q0 q
 ),
 pairs AS (
   SELECT DISTINCT q.qid, b.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.qv, b.v) / (q.qnorm * b.vnorm), 6) AS cosine
+         ROUND({_pair_cos_sql("b")}, 6) AS cosine
   FROM q JOIN b ON b.tbl = q.tbl AND b.bucket = q.probe AND b.vec_id <> q.qid
 ),
-ranked AS (
-  SELECT qid, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM pairs
-)
-SELECT qid, neighbor_id, cosine, rank FROM ranked
-WHERE rank <= {TOP_K}
-ORDER BY qid, rank
+{_topk_sql("pairs")}
 """
 
 
 def _lsh_oracle() -> str:
     bits = _lsh_bits_sql()
     return f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
-),
+WITH {_E_CTE},
 b AS (SELECT vec_id, v, vnorm, {bits} AS bucket FROM e),
-q AS (SELECT vec_id AS qid, v AS qv, vnorm AS qnorm, bucket FROM b WHERE vec_id % 50 = 0),
+{_panel_cte("b", ", bucket")},
 scored AS (
   SELECT q.qid, b.bucket, b.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.qv, b.v) / (q.qnorm * b.vnorm), 6) AS cosine
+         ROUND({_pair_cos_sql("b")}, 6) AS cosine
   FROM q JOIN b ON b.bucket = q.bucket AND b.vec_id <> q.qid
 ),
-ranked AS (
-  SELECT qid, bucket, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT qid, bucket, neighbor_id, cosine, rank FROM ranked
-WHERE rank <= {TOP_K}
-ORDER BY qid, rank
+{_topk_sql("scored", ", bucket")}
 """
 
 
@@ -556,17 +561,16 @@ def _seq_norm(vals) -> float:
     return math.sqrt(sum(x * x for x in vals))
 
 
-def _lloyd_refine(
-    spark: SparkSession, emb: DataFrame, seeds: list, iters: int = LLOYD_ITERS
-) -> list:
+def _lloyd_refine(spark: SparkSession, emb: DataFrame, seeds: list) -> list:
     """Spherical k-means (cosine Lloyd) refinement of the md5-rank
     seed centroids — the training step ``similarity_kmeans_step``
     proves one iteration of, folded into the shared seeding.
 
-    Per iteration: (a) ASSIGN — one Arrow-batched numpy matmul pass
-    assigns every vector to its argmax-cosine centroid (ties by
-    ascending centroid id, matching the oracle's ``ORDER BY sim DESC,
-    cid ASC``); (b) UPDATE — each surviving cell's new centroid is the
+    Per iteration (LLOYD_ITERS of them): (a) ASSIGN — one
+    Arrow-batched numpy matmul pass assigns every vector to its
+    argmax-cosine centroid (ties by ascending centroid id, matching
+    the oracle's ``ORDER BY sim DESC, cid ASC``); (b) UPDATE — each
+    surviving cell's new centroid is the
     componentwise mean of its members' UNIT vectors (the spherical
     update, provably non-decreasing in mean cosine for a fixed
     assignment). Cells that lose all members drop out.
@@ -591,14 +595,14 @@ def _lloyd_refine(
     import numpy as np
 
     cur = [(int(r.vec_id), [float(x) for x in r.v]) for r in seeds]
-    if iters <= 0 or len(cur) <= 1:
+    if len(cur) <= 1:
         return cur
     # persist the normed input: every iteration re-reads it, and the
     # sequential-fold vnorm is interpreted (non-codegen) — recomputing
     # it per iteration measurably dominated training wall (x10 stress:
     # 16s -> ~6s for 3 iterations after this cache)
     src = _with_norm(emb.select("vec_id", "v")).persist()
-    for _ in range(iters):
+    for _ in range(LLOYD_ITERS):
         cent_ids = [c[0] for c in cur]
         b_ids = spark.sparkContext.broadcast(cent_ids)
         b_mat = spark.sparkContext.broadcast(
@@ -664,13 +668,13 @@ def _mean_update(units: DataFrame, keys: list, dim: int) -> list:
     )
 
 
-def _lloyd_chain_sql(iters: int = LLOYD_ITERS, out: str = "c") -> str:
+def _lloyd_chain_sql(out: str = "c") -> str:
     """DuckDB twin of ``_seed_sample`` + ``_lloyd_refine``: a CTE
-    chain ``ll_c0`` (the seeded sample) → per iteration ``ll_a{i}``
-    (argmax-cosine assignment, ties by ascending cid) → ``ll_c{i}``
-    (6-dp DECIMAL-exact spherical update, empty cells dropped) →
-    ``{out}`` with columns (cid, cv, cnorm). Expects a CTE ``e`` with
-    (vec_id, v, vnorm). Emitted WITHOUT the leading WITH so callers
+    chain ``ll_c0`` (the seeded sample) → per iteration (LLOYD_ITERS
+    of them) ``ll_a{i}`` (argmax-cosine assignment, ties by ascending
+    cid) → ``ll_c{i}`` (6-dp DECIMAL-exact spherical update, empty
+    cells dropped) → ``{out}`` with columns (cid, cv, cnorm). Expects a
+    CTE ``e`` with (vec_id, v, vnorm). Emitted WITHOUT the leading WITH so callers
     splice it into their own chain."""
     parts = [
         "ll_c0 AS (\n  "
@@ -683,7 +687,7 @@ def _lloyd_chain_sql(iters: int = LLOYD_ITERS, out: str = "c") -> str:
         + "\n)"
     ]
     prev = "ll_c0"
-    for i in range(1, iters + 1):
+    for i in range(1, LLOYD_ITERS + 1):
         parts.append(
             f"""ll_a{i} AS (
   SELECT vec_id, cid AS cell FROM (
@@ -727,11 +731,7 @@ def _cell_assign_prelude_sql() -> str:
     ``c`` → ``aff`` cosines → ``assign`` (vec_id, cell), argmax cosine
     with ties by ascending cid. Starts with WITH; callers append their
     own CTEs after a comma."""
-    return f"""WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
-),
+    return f"""WITH {_E_CTE},
 {_lloyd_chain_sql()},
 aff AS (
   SELECT e.vec_id, c.cid,
@@ -747,7 +747,7 @@ assign AS (
 )"""
 
 
-#: per-process cache of trained centroids, keyed by (sf_dir, iters):
+#: per-process cache of trained centroids, keyed by (sf_dir, LLOYD_ITERS):
 #: every registry caller trains on the same full-corpus _vecs(sf_dir),
 #: and both seeding and refinement are deterministic, so reusing the
 #: ≤4096-row result across the family is sound and saves 3 corpus
@@ -867,6 +867,12 @@ def _assign_cells(
     return with_cells, cents
 
 
+def _in_cell(with_cells: DataFrame) -> DataFrame:
+    """Each vector of an ``_assign_cells`` frame in its assignment
+    cell (``cells[0]``): the corpus side of every IVF entry."""
+    return with_cells.select("vec_id", "v", "vnorm", F.element_at("cells", 1).alias("cell"))
+
+
 #: default probe count for the standalone IVF entry (r11: was 1, which
 #: definitionally capped its recall row at the single-cell hit rate —
 #: 0.20-0.30 even with trained cells; 4 probes measure ~0.6 at sf0.01
@@ -922,15 +928,8 @@ def similarity_ivf_pandas(
     # the same frame: with shared expr-ids, downstream column pruning
     # dedups the right child against the left and strips every column
     # but the grouping key from the query-side pandas frame.
-    assigned = with_cells.select(
-        "vec_id", "v", "vnorm", F.element_at("cells", 1).alias("cell")
-    )
-    queries = with_cells.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("vnorm").alias("qnorm"),
-        F.explode("cells").alias("cell"),
-    )
+    assigned = _in_cell(with_cells)
+    queries = _query_panel(with_cells, F.explode("cells").alias("cell"))
     top_k = TOP_K
 
     def make_score():
@@ -972,11 +971,8 @@ def similarity_ivf_pandas(
     # merge per-cell candidate lists into the global per-query top-k
     # (probes * top_k candidate rows per query — tiny); with probes=1
     # this re-rank reproduces the in-cell ranks exactly
-    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= top_k)
-        .orderBy("qid", "rank")
+    return _topk(candidates, top_k, F.desc("cosine"), F.asc("neighbor_id")).orderBy(
+        "qid", "rank"
     )
 
 
@@ -992,11 +988,7 @@ def similarity_ivf_pandas(
 #: 6-dp-rounded cosines with ties by ascending neighbor id — the
 #: same rounding discipline as the bruteforce/LSH oracles.
 SIMILARITY_IVF_ORACLE = f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
-),
+WITH {_E_CTE},
 {_lloyd_chain_sql()},
 aff AS (
   SELECT e.vec_id,
@@ -1019,28 +1011,18 @@ q_probe AS (
   SELECT vec_id AS qid, cid AS cell FROM (
     SELECT vec_id, cid,
            ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid ASC) AS rn
-    FROM aff WHERE vec_id % 50 = 0
+    FROM aff WHERE {_PANEL_SQL}
   ) WHERE rn <= {IVF_PROBES}
 ),
-q AS (
-  SELECT vec_id AS qid, v AS qv, vnorm AS qnorm
-  FROM corpus WHERE vec_id % 50 = 0
-),
+{_panel_cte("corpus")},
 scored AS (
   SELECT qp.qid, cor.cell, cor.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.qv, cor.v) / (q.qnorm * cor.vnorm), 6) AS cosine
+         ROUND({_pair_cos_sql("cor")}, 6) AS cosine
   FROM q_probe qp
   JOIN corpus cor ON cor.cell = qp.cell AND cor.vec_id <> qp.qid
   JOIN q ON q.qid = qp.qid
 ),
-ranked AS (
-  SELECT qid, cell, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM scored
-)
-SELECT qid, cell, neighbor_id, cosine, rank FROM ranked
-WHERE rank <= {TOP_K}
-ORDER BY qid, rank
+{_topk_sql("scored", ", cell")}
 """
 
 
@@ -1077,9 +1059,7 @@ def similarity_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = _vecs(spark, sf_dir)
     with_cells, cents = _assign_cells(spark, emb, probes=1, cache_key=sf_dir)
-    assigned = with_cells.select(
-        "vec_id", "v", "vnorm", F.element_at("cells", 1).alias("cell")
-    )
+    assigned = _in_cell(with_cells)
     old = spark.createDataFrame(
         [(cid, cv) for cid, cv in cents], "cell long, cv array<double>"
     )
@@ -1274,25 +1254,8 @@ def similarity_dim_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
     def topk(vectors: DataFrame) -> DataFrame:
-        queries = vectors.filter(F.col("vec_id") % 50 == 0).select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.col("vnorm").alias("qnorm"),
-        )
-        scored = vectors.join(
-            F.broadcast(queries), F.col("vec_id") != F.col("qid")
-        ).withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("vnorm")),
-                6,
-            ),
-        )
-        w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("qid", F.col("vec_id").alias("neighbor_id"))
+        return _nearest(_pairs(vectors, _query_panel(vectors))).select(
+            "qid", F.col("vec_id").alias("neighbor_id")
         )
 
     # full is consumed twice (overlap semi-join + the per-query k
@@ -1321,6 +1284,20 @@ def similarity_dim_truncation_audit(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
+def _exact_k_cte(name: str, cos: str) -> str:
+    """CTE ``name`` (qid, neighbor_id): each panel query's TOP_K
+    nearest corpus vectors in ``e`` by the pair cosine ``cos``, rounded
+    at 6 dp, ties by ascending vec_id."""
+    return f"""{name} AS (
+  SELECT qid, neighbor_id FROM (
+    SELECT q.qid, e.vec_id AS neighbor_id,
+           ROW_NUMBER() OVER (
+             PARTITION BY q.qid ORDER BY ROUND({cos}, 6) DESC, e.vec_id ASC) AS rank
+    FROM q JOIN e ON e.vec_id <> q.qid
+  ) WHERE rank <= {TOP_K}
+)"""
+
+
 SIMILARITY_DIM_TRUNC_ORACLE = f"""
 WITH e AS (
   SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
@@ -1331,30 +1308,9 @@ WITH e AS (
                                CAST(embedding AS DOUBLE[])[1:{TRUNC_DIM}])) AS tnorm
   FROM embeddings
 ),
-q AS (SELECT vec_id AS qid, v AS qv, vnorm AS qnorm, tv AS qtv, tnorm AS qtnorm
-      FROM e WHERE vec_id % 50 = 0),
-full_k AS (
-  SELECT qid, neighbor_id FROM (
-    SELECT q.qid, e.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.qid
-             ORDER BY ROUND(list_dot_product(q.qv, e.v) / (q.qnorm * e.vnorm), 6)
-                        DESC,
-                      e.vec_id ASC) AS rank
-    FROM q JOIN e ON e.vec_id <> q.qid
-  ) WHERE rank <= {TOP_K}
-),
-trunc_k AS (
-  SELECT qid, neighbor_id FROM (
-    SELECT q.qid, e.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.qid
-             ORDER BY ROUND(list_dot_product(q.qtv, e.tv) / (q.qtnorm * e.tnorm), 6)
-                        DESC,
-                      e.vec_id ASC) AS rank
-    FROM q JOIN e ON e.vec_id <> q.qid
-  ) WHERE rank <= {TOP_K}
-)
+{_panel_cte(extra=", tv AS qtv, tnorm AS qtnorm")},
+{_exact_k_cte("full_k", _pair_cos_sql("e"))},
+{_exact_k_cte("trunc_k", "list_dot_product(q.qtv, e.tv) / (q.qtnorm * e.tnorm)")}
 SELECT f.qid,
        COUNT(*) AS k,
        CAST(COALESCE(SUM(CASE WHEN t.neighbor_id IS NOT NULL THEN 1 ELSE 0 END), 0)
@@ -1422,23 +1378,18 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays as the declared recall ground truth.
     """
     emb = _with_norm(_vecs(spark, sf_dir))
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("vnorm").alias("qnorm"),
+    return _mmr_select(_mmr_pool(_pairs(emb, _query_panel(emb))))
+
+
+def _mmr_pool(pairs: DataFrame) -> DataFrame:
+    """The MMR candidate pool shared by the bruteforce and ANN
+    variants: each candidate pair's relevance ``rel`` is its unrounded
+    cosine, and each query keeps its top MMR_POOL pairs by ``rel``
+    (vec_id tie-breaks) as ``(qid, vec_id, rel, v, vnorm)``."""
+    scored = pairs.withColumn("rel", _pair_cosine())
+    return _topk(scored, MMR_POOL, F.desc("rel"), F.asc("vec_id"), col="rn").select(
+        "qid", "vec_id", "rel", "v", "vnorm"
     )
-    scored = emb.join(
-        F.broadcast(queries), F.col("vec_id") != F.col("qid")
-    ).withColumn(
-        "rel", _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("vnorm"))
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("rel"), F.asc("vec_id"))
-    cand = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= MMR_POOL)
-        .select("qid", "vec_id", "rel", "v", "vnorm")
-    )
-    return _mmr_select(cand)
 
 
 def _mmr_select(cand: DataFrame) -> DataFrame:
@@ -1579,22 +1530,26 @@ def _mmr_select(cand: DataFrame) -> DataFrame:
     )
 
 
-def _mmr_oracle(cand_cte: str) -> str:
-    """Recursive-CTE replay of the greedy MMR loop over an arbitrary
-    candidate-pool CTE (the only piece that differs between the
-    bruteforce baseline and the ANN production path)."""
+def _mmr_oracle(src: str, on: str = "") -> str:
+    """Recursive-CTE replay of the greedy MMR loop. The candidate
+    pool, the SQL twin of ``_mmr_pool``, pairs the panel with
+    ``src`` under the join condition ``on``: the whole corpus ``e``
+    for the bruteforce baseline, the query's LSH bucket in ``b`` for
+    the ANN production path."""
+    rel = _pair_cos_sql(src)
     return f"""
 WITH RECURSIVE e AS MATERIALIZED (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                               CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
+  {_EMB_SQL}
 ),
 b AS (SELECT vec_id, v, vnorm, {_lsh_bits_sql()} AS bucket FROM e),
-q AS (SELECT vec_id AS qid, v AS qv, vnorm AS qnorm, bucket FROM b
-      WHERE vec_id % 50 = 0),
+{_panel_cte("b", ", bucket")},
 cand AS MATERIALIZED (
-{cand_cte}
+  SELECT qid, vec_id, rel, v, vnorm FROM (
+    SELECT q.qid, {src}.vec_id, {rel} AS rel, {src}.v, {src}.vnorm,
+           ROW_NUMBER() OVER (
+             PARTITION BY q.qid ORDER BY {rel} DESC, {src}.vec_id ASC) AS rn
+    FROM q JOIN {src} ON {on}{src}.vec_id <> q.qid
+  ) WHERE rn <= {MMR_POOL}
 ),
 simt AS MATERIALIZED (
   SELECT a.qid, a.vec_id AS ia, b.vec_id AS ib,
@@ -1644,31 +1599,6 @@ ORDER BY qid, rank
 """
 
 
-#: bruteforce candidate pool: every corpus vector scored per query
-_MMR_CAND_BRUTEFORCE = f"""  SELECT qid, vec_id, rel, v, vnorm FROM (
-    SELECT q.qid, e.vec_id,
-           list_dot_product(q.qv, e.v) / (q.qnorm * e.vnorm) AS rel,
-           e.v, e.vnorm,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.qid
-             ORDER BY list_dot_product(q.qv, e.v) / (q.qnorm * e.vnorm) DESC,
-                      e.vec_id ASC) AS rn
-    FROM q JOIN e ON e.vec_id <> q.qid
-  ) WHERE rn <= {MMR_POOL}"""
-
-#: ANN candidate pool: only the query's sign-bit LSH bucket is scored
-_MMR_CAND_LSH = f"""  SELECT qid, vec_id, rel, v, vnorm FROM (
-    SELECT q.qid, b.vec_id,
-           list_dot_product(q.qv, b.v) / (q.qnorm * b.vnorm) AS rel,
-           b.v, b.vnorm,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.qid
-             ORDER BY list_dot_product(q.qv, b.v) / (q.qnorm * b.vnorm) DESC,
-                      b.vec_id ASC) AS rn
-    FROM q JOIN b ON b.bucket = q.bucket AND b.vec_id <> q.qid
-  ) WHERE rn <= {MMR_POOL}"""
-
-
 def similarity_mmr_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN→MMR: the composed production funnel the MMR docstring
     promises — candidate generation via the sign-bit LSH bucket
@@ -1683,42 +1613,20 @@ def similarity_mmr_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is shared code. A query alone in its bucket simply
     yields no rows — mirrored by the oracle's equi-join.
 
-    100 TB: the bucket key is the partition key (``lsh_dims_for``
-    scales bit count with N, capping bucket size); per-query state
+    100 TB: the bucket key is the partition key (the fixed 4-bit
+    LSH_DIMS key; ``lsh_dims_for`` would size it to N); per-query state
     never exceeds MMR_POOL rows into the Arrow stage. This entry is
     what retires the bruteforce path from production — that twin
     stays only as the declared recall baseline.
     """
-    emb = _with_norm(_vecs(spark, sf_dir)).withColumn(
-        "bucket", _bucket_expr(F.col("v"))
-    )
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("vnorm").alias("qnorm"),
-        "bucket",
-    )
-    scored = (
-        emb.join(queries, "bucket")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn(
-            "rel",
-            _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("vnorm")),
-        )
-    )
-    w = W.partitionBy("qid").orderBy(F.desc("rel"), F.asc("vec_id"))
-    cand = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= MMR_POOL)
-        .select("qid", "vec_id", "rel", "v", "vnorm")
-    )
-    return _mmr_select(cand)
+    emb = _bucketed(spark, sf_dir)
+    return _mmr_select(_mmr_pool(_pairs(emb, _query_panel(emb, "bucket"), "bucket")))
 
 
 QUERIES["similarity_mmr_rerank"] = similarity_mmr_rerank
-ORACLES["similarity_mmr_rerank"] = _mmr_oracle(_MMR_CAND_BRUTEFORCE)
+ORACLES["similarity_mmr_rerank"] = _mmr_oracle("e")
 QUERIES["similarity_mmr_ann"] = similarity_mmr_ann
-ORACLES["similarity_mmr_ann"] = _mmr_oracle(_MMR_CAND_LSH)
+ORACLES["similarity_mmr_ann"] = _mmr_oracle("b", "b.bucket = q.bucket AND ")
 
 
 def similarity_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1763,10 +1671,7 @@ def similarity_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_found"),
             )
         )
-    out = reports[0]
-    for r in reports[1:]:
-        out = out.unionByName(r)
-    return out.select(
+    return reduce(DataFrame.unionByName, reports).select(
         "method",
         "n_truth",
         "n_found",
@@ -1775,41 +1680,32 @@ def similarity_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_recall_oracle() -> str:
-    truth = SIMILARITY_TOPK_ORACLE.replace("ORDER BY qid, rank", "")
-    lsh = _lsh_oracle().replace("ORDER BY qid, rank", "")
-    mp = _lsh_multiprobe_oracle().replace("ORDER BY qid, rank", "")
-    ivf = SIMILARITY_IVF_ORACLE.replace("ORDER BY qid, rank", "")
-    pq = _ivfpq_oracle().replace("ORDER BY qid, rank", "")
+    """One recall arm per method, mirroring the Spark side's loop: the
+    method oracle's (qid, neighbor_id) pairs joined to the bruteforce
+    truth pairs and counted."""
+    methods = {
+        "ivf_pandas": SIMILARITY_IVF_ORACLE,
+        "ivfpq": _ivfpq_oracle(),
+        "lsh_bucketed": _lsh_oracle(),
+        "lsh_multiprobe": _lsh_multiprobe_oracle(),
+    }
+    unordered = lambda sql: sql.replace("ORDER BY qid, rank", "")  # noqa: E731
+    found = "".join(
+        f"""m{i} AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_found FROM truth
+      JOIN (SELECT qid, neighbor_id FROM ({unordered(sql)})) USING (qid, neighbor_id)),
+"""
+        for i, sql in enumerate(methods.values())
+    )
+    arms = "\nUNION ALL\n".join(
+        f"""SELECT '{name}' AS method, t.n_truth, m{i}.n_found,
+       CAST((1000000 * m{i}.n_found) // t.n_truth AS BIGINT) AS recall_ppm
+FROM t, m{i}"""
+        for i, name in enumerate(methods)
+    )
     return f"""
-WITH truth AS ({truth}),
-lshp AS (SELECT qid, neighbor_id FROM ({lsh})),
-mpp AS (SELECT qid, neighbor_id FROM ({mp})),
-ivfp AS (SELECT qid, neighbor_id FROM ({ivf})),
-pqp AS (SELECT qid, neighbor_id FROM ({pq})),
-t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth),
-l AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_found FROM truth
-      JOIN lshp USING (qid, neighbor_id)),
-m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_found FROM truth
-      JOIN mpp USING (qid, neighbor_id)),
-i AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_found FROM truth
-      JOIN ivfp USING (qid, neighbor_id)),
-p AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_found FROM truth
-      JOIN pqp USING (qid, neighbor_id))
-SELECT 'ivf_pandas' AS method, t.n_truth, i.n_found,
-       CAST((1000000 * i.n_found) // t.n_truth AS BIGINT) AS recall_ppm
-FROM t, i
-UNION ALL
-SELECT 'ivfpq', t.n_truth, p.n_found,
-       CAST((1000000 * p.n_found) // t.n_truth AS BIGINT)
-FROM t, p
-UNION ALL
-SELECT 'lsh_bucketed', t.n_truth, l.n_found,
-       CAST((1000000 * l.n_found) // t.n_truth AS BIGINT)
-FROM t, l
-UNION ALL
-SELECT 'lsh_multiprobe', t.n_truth, m.n_found,
-       CAST((1000000 * m.n_found) // t.n_truth AS BIGINT)
-FROM t, m
+WITH truth AS ({unordered(SIMILARITY_TOPK_ORACLE)}),
+{found}t AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth)
+{arms}
 ORDER BY method
 """
 
@@ -2091,8 +1987,8 @@ def ivfpq_probes_for(sf_dir: str) -> int:
     return _ivfpq_probes(len(cents))
 
 
-#: per-process cache of trained PQ codebooks, keyed by (sf_dir, iters)
-#: — same determinism argument as _TRAINED_CENTS
+#: per-process cache of trained PQ codebooks, keyed by
+#: (sf_dir, CB_LLOYD_ITERS) — same determinism argument as _TRAINED_CENTS
 _TRAINED_CB: dict = {}
 
 #: LIVE cached index-state frames, bounded to one per (dataset, kind):
@@ -2154,7 +2050,6 @@ def _pq_train_blocks(
     spark: SparkSession,
     normed: DataFrame,
     seeds: list,
-    iters: int = CB_LLOYD_ITERS,
     cache_key: str | None = None,
 ) -> list:
     """Per-block Lloyd training of the PQ codebook (classic PQ trains
@@ -2162,9 +2057,9 @@ def _pq_train_blocks(
     md5-rank book's quantization error dominated the ADC ordering —
     r10 measured ivfpq recall 0.40 with it, ~0.90 trained).
 
-    Per iteration: ONE Arrow pass assigns every normalized vector a
-    code per block (``_pq_codes``: argmin L2, ties by ascending
-    codeword id), then ``_mean_update`` over ONE union-of-blocks
+    Per iteration (CB_LLOYD_ITERS of them): ONE Arrow pass assigns
+    every normalized vector a code per block (``_pq_codes``: argmin
+    L2, ties by ascending codeword id), then ``_mean_update`` over ONE union-of-blocks
     groupBy((block, code)) computes the 6-dp DECIMAL-exact
     componentwise means. Codewords that lose all members drop out.
     SQL twin: ``_pq_chain_sql``.
@@ -2177,7 +2072,7 @@ def _pq_train_blocks(
     """
     import numpy as np
 
-    ck = (cache_key, iters) if cache_key else None
+    ck = (cache_key, CB_LLOYD_ITERS) if cache_key else None
     if ck and ck in _TRAINED_CB:
         return _TRAINED_CB[ck]
     pd_, pb_ = PQ_BLOCK_DIM, PQ_BLOCKS
@@ -2190,9 +2085,8 @@ def _pq_train_blocks(
         blocks.append((ids, mat))
     # every iteration re-reads nv, which comes from the interpreted
     # fold-norm, so cache it across iterations
-    if iters > 0:
-        normed = normed.persist()
-    for _ in range(max(0, iters)):
+    normed = normed.persist()
+    for _ in range(CB_LLOYD_ITERS):
         b_state = spark.sparkContext.broadcast(blocks)
 
         def _enc(batches):
@@ -2223,9 +2117,7 @@ def _pq_train_blocks(
             )
             for b in range(pb_)
         ]
-        allb = per_block[0]
-        for p in per_block[1:]:
-            allb = allb.unionByName(p)
+        allb = reduce(DataFrame.unionByName, per_block)
         fresh: dict = {b: [] for b in range(pb_)}
         for b, cid, bv in _mean_update(allb, ["block", "code"], pd_):
             fresh[b].append((cid, bv))
@@ -2233,14 +2125,13 @@ def _pq_train_blocks(
             ([cid for cid, _ in fresh[b]], np.array([bv for _, bv in fresh[b]]))
             for b in range(pb_)
         ]
-    if iters > 0:
-        normed.unpersist()
+    normed.unpersist()
     if ck:
         _TRAINED_CB[ck] = blocks
     return blocks
 
 
-def _pq_chain_sql(iters: int = CB_LLOYD_ITERS) -> str:
+def _pq_chain_sql() -> str:
     """DuckDB twin of the seeded + per-block-Lloyd-trained PQ
     codebook: ``pq_c0`` (the shared md5-rank seed, normalized) → per
     block b: slice → per iteration: argmin-L2 assignment (ties by
@@ -2261,7 +2152,7 @@ def _pq_chain_sql(iters: int = CB_LLOYD_ITERS) -> str:
             f"pq_b{b}_0 AS (SELECT cid, cv[{lo}:{hi}] AS bv FROM pq_c0)"
         )
         prev = f"pq_b{b}_0"
-        for t in range(1, max(0, iters) + 1):
+        for t in range(1, CB_LLOYD_ITERS + 1):
             parts.append(
                 f"""pq_a{b}_{t} AS (
   SELECT vec_id, cid AS code FROM (
@@ -2389,9 +2280,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         with_cells = with_cells.persist()
         _PERSISTED_WITH_CELLS[pkey] = with_cells
-    assigned = with_cells.select(
-        "vec_id", "v", "vnorm", F.element_at("cells", 1).alias("cell")
-    )
+    assigned = _in_cell(with_cells)
     # L2-normalize before ANY PQ step: on unit vectors L2-squared is
     # 2 - 2*cosine, so the ADC shortlist order is MONOTONE in the
     # cosine the exact re-rank optimizes — without this, the L2/cosine
@@ -2454,7 +2343,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _PERSISTED_WITH_CELLS[ckey] = codes
 
-    qpanel = with_cells.filter(F.col("vec_id") % 50 == 0)
+    qpanel = with_cells.filter(F.col("vec_id") % QUERY_EVERY == 0)
     # qnorm re-derived via the sequential fold (NOT the numpy vnorm
     # riding with_cells) — closes the r10-advice gap in the end-to-end
     # ADC bit-identity claim
@@ -2493,12 +2382,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # probe cells are distinct per query and each corpus vector lives
     # in exactly one cell, so (qid, vec_id) pairs are already unique
-    cand = (
-        assigned.select("vec_id", "cell")
-        .join(q_cells, "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .join(codes, "vec_id")
-    )
+    cand = _pairs(assigned.select("vec_id", "cell"), q_cells, "cell").join(codes, "vec_id")
     adc = None
     for b in range(PQ_BLOCKS):
         db = F.broadcast(
@@ -2508,32 +2392,20 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cand = cand.join(db, ["qid", f"code{b}"])
         adc = F.col(f"d2_{b}") if adc is None else adc + F.col(f"d2_{b}")
-    w_adc = W.partitionBy("qid").orderBy(F.asc("adc"), F.asc("vec_id"))
-    shortlist = (
-        cand.select("qid", "vec_id", adc.alias("adc"))
-        .withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= shortlist)
-        .select("qid", "vec_id")
-    )
+    shortlist = _topk(
+        cand.select("qid", "vec_id", adc.alias("adc")),
+        shortlist,
+        F.asc("adc"),
+        F.asc("vec_id"),
+        col="rn",
+    ).select("qid", "vec_id")
     # exact re-rank of the shortlist only
     corpus = assigned.select("vec_id", "v", "vnorm")
-    rerank = (
-        shortlist.join(corpus, "vec_id")
-        .join(
-            F.broadcast(queries.select("qid", "qv", "qnorm")), "qid"
-        )
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("vnorm")),
-                6,
-            ),
-        )
+    rerank = shortlist.join(corpus, "vec_id").join(
+        F.broadcast(queries.select("qid", "qv", "qnorm")), "qid"
     )
-    w = W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
-        rerank.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        _nearest(rerank)
         .select("qid", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
         .orderBy("qid", "rank")
     )
@@ -2546,12 +2418,7 @@ def _ivfpq_oracle() -> str:
 WITH e AS MATERIALIZED (
   SELECT vec_id, v, vnorm,
          list_transform(v, x -> x / vnorm) AS nv
-  FROM (
-    SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-           sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                 CAST(embedding AS DOUBLE[]))) AS vnorm
-    FROM embeddings
-  )
+  FROM ({_EMB_SQL})
 ),
 {_lloyd_chain_sql(out="ll_ivf")},
 c AS (SELECT cid AS ccid, cv AS ccv, cnorm AS ccnorm FROM ll_ivf),
@@ -2582,7 +2449,7 @@ q_probe AS (
     SELECT vec_id, ccid,
            ROW_NUMBER() OVER (PARTITION BY vec_id
                               ORDER BY sim DESC, ccid ASC) AS rn
-    FROM cell_aff WHERE vec_id % 50 = 0
+    FROM cell_aff WHERE {_PANEL_SQL}
   ) WHERE rn <= (SELECT LEAST(k, GREATEST({IVFPQ_PROBES_MIN},
                               ({IVFPQ_COVERAGE_PCT} * k + 99) // 100))
                  FROM ncells)
@@ -2603,8 +2470,7 @@ codes AS MATERIALIZED (
     FROM code_aff
   ) WHERE rn = 1
 ),
-q AS (SELECT vec_id AS qid, v AS qv, vnorm AS qnorm, nv AS qnv
-      FROM e WHERE vec_id % 50 = 0),
+{_panel_cte(extra=", nv AS qnv")},
 d2q AS MATERIALIZED (
   SELECT q.qid, cw.b, cw.cid,
          list_dot_product({q_sl}, {q_sl})
@@ -2640,18 +2506,12 @@ shortlist AS (
 ),
 rerank AS (
   SELECT s.qid, s.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.qv, e.v) / (q.qnorm * e.vnorm), 6) AS cosine
+         ROUND({_pair_cos_sql("e")}, 6) AS cosine
   FROM shortlist s
   JOIN e ON e.vec_id = s.vec_id
   JOIN q ON q.qid = s.qid
-)
-SELECT qid, neighbor_id, cosine, rank FROM (
-  SELECT qid, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM rerank
-) WHERE rank <= {TOP_K}
-ORDER BY qid, rank
+),
+{_topk_sql("rerank")}
 """
 
 
@@ -2677,7 +2537,7 @@ def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEXICAL and SEMANTIC rankings, the capstone that composes the two
     retrieval halves this engine ships (BM25 posting-list scoring from
     the text family; multi-table multi-probe embedding LSH from the
-    similarity family). Per query document (the shared ``% 50`` panel;
+    similarity family). Per query document (the shared QUERY_EVERY panel;
     ``documents.doc_id`` ≡ ``embeddings.vec_id`` in the fixtures):
 
     1. lexical: the query doc's top-RRF_KW_PER_DOC TF-IDF keywords
@@ -2710,7 +2570,7 @@ def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf, df_, n_docs, idf = bm25_index(spark, sf_dir)
     # the query panel's keywords, by the text_tfidf selection rule
     kw_scored = (
-        tf.filter(F.col("doc_id") % 50 == 0)
+        tf.filter(F.col("doc_id") % QUERY_EVERY == 0)
         .join(df_, "token")
         .withColumn(
             "tfidf",
@@ -2727,14 +2587,13 @@ def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= RRF_KW_PER_DOC)
         .select(F.col("doc_id").alias("qid"), "token", idf.alias("idf"))
     )
-    wl = W.partitionBy("qid").orderBy(F.desc("bm25"), F.asc("doc_id"))
-    lex = (
-        bm25_scores(tf, n_docs, qt)
-        .filter(F.col("doc_id") != F.col("qid"))
-        .withColumn("lex_rank", F.row_number().over(wl))
-        .filter(F.col("lex_rank") <= RRF_LEX_TOPK)
-        .select("qid", "doc_id", "lex_rank")
-    )
+    lex = _topk(
+        bm25_scores(tf, n_docs, qt).filter(F.col("doc_id") != F.col("qid")),
+        RRF_LEX_TOPK,
+        F.desc("bm25"),
+        F.asc("doc_id"),
+        col="lex_rank",
+    ).select("qid", "doc_id", "lex_rank")
     sem = similarity_lsh_multiprobe(spark, sf_dir).select(
         "qid",
         F.col("neighbor_id").alias("doc_id"),
@@ -2744,16 +2603,9 @@ def similarity_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     contrib = lambda rank_col: F.coalesce(  # noqa: E731
         F.round(F.lit(1.0) / (F.lit(RRF_K) + F.col(rank_col)), 9), F.lit(0.0)
     ).cast("decimal(18,9)")
-    wf = W.partitionBy("qid").orderBy(F.desc("rrf"), F.asc("doc_id"))
+    rrf = F.round((contrib("lex_rank") + contrib("sem_rank")).cast("double"), 6)
     return (
-        fused.withColumn(
-            "rrf",
-            F.round(
-                (contrib("lex_rank") + contrib("sem_rank")).cast("double"), 6
-            ),
-        )
-        .withColumn("rank", F.row_number().over(wf))
-        .filter(F.col("rank") <= RRF_TOPK)
+        _topk(fused.withColumn("rrf", rrf), RRF_TOPK, F.desc("rrf"), F.asc("doc_id"))
         .select("qid", "doc_id", "rrf", "lex_rank", "sem_rank", "rank")
         .orderBy("qid", "rank")
     )
@@ -2786,7 +2638,7 @@ kw AS (
              ORDER BY ROUND(t.tf * ROUND(ln((SELECT n_docs FROM scal) * 1.0 / d.df), 6), 6) DESC,
                       t.token ASC) AS rk
     FROM tfd t JOIN dfv d USING (token)
-    WHERE t.doc_id % 50 = 0
+    WHERE t.doc_id % {QUERY_EVERY} = 0
   ) WHERE rk <= {RRF_KW_PER_DOC}
 ),
 qt AS (
@@ -3428,15 +3280,11 @@ def _incremental_index_oracle() -> str:
     # cache-ordered two-call contract
     return f"""
 WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
+  {_EMB_SQL}
   WHERE vec_id % {INCR_INDEX_MOD} <> 0
 ),
 en AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
+  {_EMB_SQL}
   WHERE vec_id % {INCR_INDEX_MOD} = 0
 ),
 {_lloyd_chain_sql()},
@@ -3500,8 +3348,9 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (recall < 1 by design; the oracle replicates the same bucketed
     semantics so results match exactly).
 
-    100 TB: one bucket equi-join (shuffle keyed on the 4-bit bucket;
-    production passes ``lsh_dims_for(N)`` so bucket count tracks N),
+    100 TB: one bucket equi-join (shuffle keyed on the fixed 4-bit
+    LSH_DIMS bucket; ``lsh_dims_for`` would size the key to N, as
+    ``dedup.dedup_embedding_lsh`` does, but this entry does not),
     per-pair scoring is one sequential-fold dot, and the threshold
     filter is applied BEFORE any window/sort — output size is
     data-dependent by definition, which is exactly why the operator
@@ -3510,24 +3359,10 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: SURVEY.md §2B similarity row (ABSENT in the reference —
     the radius complement of the top-k family).
     """
-    emb = _with_norm(_vecs(spark, sf_dir)).withColumn(
-        "bucket", _bucket_expr(F.col("v"), LSH_DIMS)
-    )
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("vnorm").alias("qnorm"),
-        "bucket",
-    )
+    emb = _bucketed(spark, sf_dir)
     return (
-        emb.join(queries, "bucket")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("vnorm")), 6
-            ),
-        )
+        _pairs(emb, _query_panel(emb, "bucket"), "bucket")
+        .withColumn("cosine", F.round(_pair_cosine(), 6))
         .filter(F.col("cosine") >= RANGE_SEARCH_MIN_COS)
         .select("qid", F.col("vec_id").alias("neighbor_id"), "cosine")
         .orderBy("qid", F.desc("cosine"), "neighbor_id")
@@ -3535,16 +3370,12 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SIMILARITY_RANGE_SEARCH_ORACLE = f"""
-WITH e AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))) AS vnorm
-  FROM embeddings
-),
+WITH {_E_CTE},
 b AS (SELECT vec_id, v, vnorm, {_lsh_bits_sql()} AS bucket FROM e),
-q AS (SELECT vec_id AS qid, v AS qv, vnorm AS qnorm, bucket FROM b WHERE vec_id % 50 = 0),
+{_panel_cte("b", ", bucket")},
 scored AS (
   SELECT q.qid, b.vec_id AS neighbor_id,
-         ROUND(list_dot_product(q.qv, b.v) / (q.qnorm * b.vnorm), 6) AS cosine
+         ROUND({_pair_cos_sql("b")}, 6) AS cosine
   FROM q JOIN b USING (bucket) WHERE b.vec_id <> q.qid
 )
 SELECT qid, neighbor_id, cosine FROM scored
@@ -3590,35 +3421,9 @@ def similarity_knn_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and n_neighbors derives from it (Σ votes.n ≡ COUNT(kept rows)
     # per qid — exact integer identity), so the bucket join + top-K
     # window also run once.
-    emb = (
-        _with_norm(_vecs(spark, sf_dir))
-        .withColumn("bucket", _bucket_expr(F.col("v"), LSH_DIMS))
-        .localCheckpoint(eager=True)
-    )
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("vnorm").alias("qnorm"),
-        F.col("label").alias("qlabel"),
-        "bucket",
-    )
-    ranked = (
-        emb.join(queries, "bucket")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("vnorm")), 6
-            ),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-            ),
-        )
-        .filter(F.col("rn") <= KNN_VOTE_K)
-    )
+    emb = _bucketed(spark, sf_dir).localCheckpoint(eager=True)
+    queries = _query_panel(emb, F.col("label").alias("qlabel"), "bucket")
+    ranked = _nearest(_pairs(emb, queries, "bucket"), KNN_VOTE_K, "rn")
     votes = (
         ranked.groupBy("qid", "qlabel", "label")
         .agg(F.count("*").alias("n"))
@@ -3660,13 +3465,12 @@ WITH e AS (
   FROM embeddings
 ),
 b AS (SELECT vec_id, v, vnorm, label, {_lsh_bits_sql()} AS bucket FROM e),
-q AS (SELECT vec_id AS qid, v AS qv, vnorm AS qnorm, label AS qlabel, bucket
-      FROM b WHERE vec_id % 50 = 0),
+{_panel_cte("b", ", label AS qlabel, bucket")},
 ranked AS (
   SELECT q.qid, q.qlabel, b.label,
          ROW_NUMBER() OVER (
            PARTITION BY q.qid
-           ORDER BY ROUND(list_dot_product(q.qv, b.v) / (q.qnorm * b.vnorm), 6) DESC,
+           ORDER BY ROUND({_pair_cos_sql("b")}, 6) DESC,
                     b.vec_id ASC) AS rn
   FROM q JOIN b USING (bucket) WHERE b.vec_id <> q.qid
 ),

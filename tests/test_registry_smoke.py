@@ -75,3 +75,23 @@ def test_heavy_tier_names_exist():
         elif func == "test_matches_oracle" and param[:-1] not in queries:
             stale.append(entry)
     assert not stale, f"stale heavy-tier entries: {sorted(stale)}"
+
+
+def test_every_oracle_binds_in_duckdb(duck):
+    """Every oracle parses, binds and plans in DuckDB over the sf0.001
+    fixture views (``EXPLAIN``, no Spark, no execution). The oracles
+    of the heavy-tier entries are otherwise only run in the heavy
+    tier, so a broken splice of a shared SQL piece into one of them
+    would pass the default tier."""
+    import duckdb
+
+    import __spark_entry__ as e
+
+    duck.execute("SET schema 'sf0_001'")
+    failed = {}
+    for name, sql in sorted(e.oracle_sql().items()):
+        try:
+            duck.execute(f"EXPLAIN {sql}").fetchall()
+        except duckdb.Error as exc:
+            failed[name] = str(exc).splitlines()[0]
+    assert not failed, failed
