@@ -45,9 +45,10 @@ from .similarity import (
     _assign_cells,
     _bucket_expr,
     _cell_assign_prelude_sql,
-    _dot,
     _in_cell,
     _lsh_bits_sql,
+    _pair_cos_sql,
+    _pair_cosine,
     _vecs,
     _with_norm,
     lsh_dims_for,
@@ -616,10 +617,7 @@ def _embedding_dups(emb: DataFrame, key: str | None = None) -> DataFrame:
     return (
         (a.join(b, key) if key else a.crossJoin(b))
         .filter(F.col("ida") < F.col("idb"))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
-        )
+        .withColumn("cosine", F.round(_pair_cosine("va", "na", "vb", "nb"), 6))
         .filter(F.col("cosine") >= EMBEDDING_DUP_COS)
         .select("ida", "idb", "cosine")
     )
@@ -630,7 +628,7 @@ def _embedding_dups_sql(src: str, on: str = "") -> str:
     v, vnorm) under the extra join condition ``on``."""
     return f"""SELECT ida, idb, cosine FROM (
     SELECT a.vec_id AS ida, b.vec_id AS idb,
-           ROUND(list_dot_product(a.v, b.v) / (a.vnorm * b.vnorm), 6) AS cosine
+           ROUND({_pair_cos_sql("b", "a.v", "a.vnorm")}, 6) AS cosine
     FROM {src} a JOIN {src} b ON {on}a.vec_id < b.vec_id
   ) WHERE cosine >= {EMBEDDING_DUP_COS}"""
 
@@ -1106,8 +1104,9 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return substring_span_report(load(spark, sf_dir, "documents"))
 
 
-def substring_span_report(docs: DataFrame, width: int = SPAN_TOKENS) -> DataFrame:
-    """Core of ``dedup_substring_spans`` over any (doc_id, text) frame.
+def substring_span_report(docs: DataFrame) -> DataFrame:
+    """Core of ``dedup_substring_spans`` over any (doc_id, text) frame,
+    windows of SPAN_TOKENS tokens.
 
     The h-window exchange is the operator's dominant shuffle (one row
     per token instance), so its row is kept minimal: no position
@@ -1119,7 +1118,7 @@ def substring_span_report(docs: DataFrame, width: int = SPAN_TOKENS) -> DataFram
     parity is untouched)."""
     from ..functions.text import ngram_rows
 
-    spans = ngram_rows(docs, width, out_col="_span").select(
+    spans = ngram_rows(docs, SPAN_TOKENS, out_col="_span").select(
         "doc_id", F.unhex(F.md5(F.col("_span"))).alias("h")
     )
     wh = W.partitionBy("h")
@@ -1138,8 +1137,8 @@ def substring_span_report(docs: DataFrame, width: int = SPAN_TOKENS) -> DataFram
     )
 
 
-def _substring_spans_oracle(width: int = SPAN_TOKENS) -> str:
-    leads = ", ".join(f"lead(t, {k}) OVER w" for k in range(1, width))
+def _substring_spans_oracle() -> str:
+    leads = ", ".join(f"lead(t, {k}) OVER w" for k in range(1, SPAN_TOKENS))
     return rf"""
 WITH tok AS (
   SELECT doc_id, u.t, u.pos FROM (
@@ -1149,7 +1148,7 @@ WITH tok AS (
 spans AS (
   SELECT doc_id,
          md5(concat_ws(' ', t, {leads})) AS h,
-         lead(t, {width - 1}) OVER w AS _last
+         lead(t, {SPAN_TOKENS - 1}) OVER w AS _last
   FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
 ),
 flagged AS (

@@ -132,11 +132,14 @@ def _pairs(emb: DataFrame, queries: DataFrame, on=None) -> DataFrame:
     return emb.join(queries, on).filter(F.col("vec_id") != F.col("qid"))
 
 
-def _pair_cosine() -> Column:
+def _pair_cosine(
+    qv: str = "qv", qnorm: str = "qnorm", v: str = "v", vnorm: str = "vnorm"
+) -> Column:
     """Cosine of a pair's query ``qv`` and corpus ``v``: ONE
     sequential-fold dot over the two precomputed norms (unrounded; the
-    ranked entries round it at 6 dp)."""
-    return _dot(F.col("qv"), F.col("v")) / (F.col("qnorm") * F.col("vnorm"))
+    ranked entries round it at 6 dp). The embedding dedup entries name
+    their two sides' columns."""
+    return _dot(F.col(qv), F.col(v)) / (F.col(qnorm) * F.col(vnorm))
 
 
 def _topk(df: DataFrame, k: int, *order: Column, col: str = "rank") -> DataFrame:
@@ -164,24 +167,34 @@ _E_CTE = f"e AS (\n  {_EMB_SQL}\n)"
 _PANEL_SQL = f"vec_id % {QUERY_EVERY} = 0"
 
 
-def _pair_cos_sql(src: str) -> str:
-    """The SQL twin of ``_pair_cosine``: panel row ``q`` against the
-    corpus row ``src``."""
-    return f"list_dot_product(q.qv, {src}.v) / (q.qnorm * {src}.vnorm)"
+def _pair_cos_sql(
+    src: str, qv: str = "q.qv", qnorm: str = "q.qnorm", v: str = "v", vnorm: str = "vnorm"
+) -> str:
+    """The SQL twin of ``_pair_cosine``: by default the panel row ``q``
+    against the corpus row ``src``; the dedup pairs, the MMR pool's
+    self-similarity and the cell affinities name their own sides."""
+    return f"list_dot_product({qv}, {src}.{v}) / ({qnorm} * {src}.{vnorm})"
 
 
-def _topk_sql(src: str, extra: str = "") -> str:
-    """The SQL twin of ``_nearest``'s ranking over CTE ``src`` (qid,
-    neighbor_id, cosine, *extra): the ``ranked`` CTE, then each
-    query's TOP_K rows ordered by qid, rank."""
-    return f"""ranked AS (
-  SELECT qid{extra}, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM {src}
-)
-SELECT qid{extra}, neighbor_id, cosine, rank FROM ranked
-WHERE rank <= {TOP_K}
-ORDER BY qid, rank"""
+#: the cell-affinity cosine of corpus row ``e`` against centroid ``c``
+_CELL_COS_SQL = _pair_cos_sql("c", "e.v", "e.vnorm", "cv", "cnorm")
+
+
+def _topk_sql(cols: str, src: str, k, order: str, col: str = "rank") -> str:
+    """The SQL twin of ``_topk``: rows ``cols`` of ``src`` numbered per
+    qid in ``order`` as ``col``, rows past ``k`` dropped."""
+    return f"""SELECT {cols}, {col} FROM (
+    SELECT {cols}, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY {order}) AS {col}
+    FROM {src}
+  ) WHERE {col} <= {k}"""
+
+
+def _nearest_sql(src: str, extra: str = "") -> str:
+    """The SQL twin of ``_nearest`` over CTE ``src`` (qid, *extra,
+    neighbor_id, cosine): each query's TOP_K rows ordered by qid,
+    rank."""
+    cols = f"qid{extra}, neighbor_id, cosine"
+    return _topk_sql(cols, src, TOP_K, "cosine DESC, neighbor_id ASC") + "\nORDER BY qid, rank"
 
 
 def _panel_cte(src: str = "e", extra: str = "", name: str = "q") -> str:
@@ -216,8 +229,8 @@ scored AS (
   SELECT q.qid, e.vec_id AS neighbor_id,
          ROUND({_pair_cos_sql("e")}, 6) AS cosine
   FROM q JOIN e ON e.vec_id <> q.qid
-),
-{_topk_sql("scored")}
+)
+{_nearest_sql("scored")}
 """
 
 
@@ -237,26 +250,23 @@ def _lsh_bits_sql(dims: tuple[int, ...] = LSH_DIMS) -> str:
     )
 
 
-def _bucketed(spark: SparkSession, sf_dir: str, dims: tuple[int, ...] = LSH_DIMS) -> DataFrame:
+def _bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The normed corpus (vec_id, label, v, vnorm) with its sign-bit
-    LSH ``bucket`` over ``dims``: the candidate side of every
+    LSH ``bucket`` over LSH_DIMS: the candidate side of every
     single-probe bucketed entry."""
-    return _with_norm(_vecs(spark, sf_dir)).withColumn("bucket", _bucket_expr(F.col("v"), dims))
+    return _with_norm(_vecs(spark, sf_dir)).withColumn("bucket", _bucket_expr(F.col("v")))
 
 
-def similarity_lsh_bucketed(
-    spark: SparkSession, sf_dir: str, dims: tuple[int, ...] = LSH_DIMS
-) -> DataFrame:
+def similarity_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via sign-bit LSH buckets: per-query top-k restricted to the
     query's bucket (single probe). Recall < 1 by design; the oracle
     replicates the same bucketed semantics, so results match exactly.
 
-    ``dims`` defaults to the fixture-scale 4-bit key (16 buckets),
-    which the oracle mirrors; the registry runs this entry with that
-    default. The bucket count stays fixed whatever the corpus size:
-    ``lsh_dims_for`` sizes a key to N, and in this package only
-    ``dedup.dedup_embedding_lsh`` calls it."""
-    emb = _bucketed(spark, sf_dir, dims)
+    The key is the fixed 4-bit LSH_DIMS (16 buckets), which the oracle
+    mirrors, whatever the corpus size: ``lsh_dims_for`` sizes a key to
+    N, and in this package only ``dedup.dedup_embedding_lsh`` calls
+    it."""
+    emb = _bucketed(spark, sf_dir)
     return (
         _nearest(_pairs(emb, _query_panel(emb, "bucket"), "bucket"))
         .select("qid", "bucket", F.col("vec_id").alias("neighbor_id"), "cosine", "rank")
@@ -304,13 +314,11 @@ def _flip_bit(bucket: Column, i: int, n_bits: int) -> Column:
     return F.concat(*parts)
 
 
-def similarity_lsh_multiprobe(
-    spark: SparkSession, sf_dir: str, dims: tuple[int, ...] = LSH_DIMS
-) -> DataFrame:
+def similarity_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-TABLE multi-probe sign-bit LSH — the production recall
     configuration (r10 verdict: single-table multi-probe measured
     0.48, short of shippable): LSH_N_TABLES independent hyperplane
-    tables (``lsh_tables_for`` — table 0 is the single-probe ``dims``,
+    tables (``lsh_tables_for`` — table 0 is the single-probe LSH_DIMS,
     so candidates are a strict superset of both single-table
     variants), and within EACH table a query probes its own bucket
     plus every bucket at Hamming distance 1 (a near neighbor across
@@ -329,11 +337,11 @@ def similarity_lsh_multiprobe(
     100 TB: the corpus side explodes ×L (the standard multi-table
     space/recall trade — L bucketed layouts, each an equi-join key
     (tbl, bucket)); probes multiply only the per-query candidate
-    volume; the bit count is the fixed ``dims`` (``lsh_dims_for``
+    volume; the bit count is the fixed LSH_DIMS (``lsh_dims_for``
     would size it to N), the table count LSH_N_TABLES.
     """
-    tables = lsh_tables_for(dims=dims)
-    n_bits = len(dims)
+    tables = lsh_tables_for(LSH_DIMS)
+    n_bits = len(LSH_DIMS)
     emb = _with_norm(_vecs(spark, sf_dir))
     tbl_keys = F.array(
         *[
@@ -385,14 +393,14 @@ def _flip_bit_sql(i: int, n_bits: int) -> str:
     return " || ".join(parts)
 
 
-def _lsh_multiprobe_oracle(dims: tuple[int, ...] = LSH_DIMS) -> str:
+def _lsh_multiprobe_oracle() -> str:
     """DuckDB twin of the multi-table multi-probe path: per table a
     UNION ALL arm computes that table's sign-bit bucket; queries
     unnest their (own + Hamming-1) probe keys per table; candidate
     pairs are DISTINCT-ed across tables before ranking — mirroring
     the Spark plan 1:1."""
-    tables = lsh_tables_for(dims=dims)
-    n_bits = len(dims)
+    tables = lsh_tables_for(LSH_DIMS)
+    n_bits = len(LSH_DIMS)
     b_arms = "\n  UNION ALL ".join(
         f"SELECT vec_id, v, vnorm, {t} AS tbl, {_lsh_bits_sql(tdims)} AS bucket FROM e"
         for t, tdims in enumerate(tables)
@@ -414,8 +422,8 @@ pairs AS (
   SELECT DISTINCT q.qid, b.vec_id AS neighbor_id,
          ROUND({_pair_cos_sql("b")}, 6) AS cosine
   FROM q JOIN b ON b.tbl = q.tbl AND b.bucket = q.probe AND b.vec_id <> q.qid
-),
-{_topk_sql("pairs")}
+)
+{_nearest_sql("pairs")}
 """
 
 
@@ -429,8 +437,8 @@ scored AS (
   SELECT q.qid, b.bucket, b.vec_id AS neighbor_id,
          ROUND({_pair_cos_sql("b")}, 6) AS cosine
   FROM q JOIN b ON b.bucket = q.bucket AND b.vec_id <> q.qid
-),
-{_topk_sql("scored", ", bucket")}
+)
+{_nearest_sql("scored", ", bucket")}
 """
 
 
@@ -694,7 +702,7 @@ def _lloyd_chain_sql(out: str = "c") -> str:
     SELECT e.vec_id, c.cid,
            ROW_NUMBER() OVER (
              PARTITION BY e.vec_id
-             ORDER BY list_dot_product(e.v, c.cv) / (e.vnorm * c.cnorm) DESC,
+             ORDER BY {_CELL_COS_SQL} DESC,
                       c.cid ASC) AS rn
     FROM e CROSS JOIN {prev} c
   ) WHERE rn = 1
@@ -735,7 +743,7 @@ def _cell_assign_prelude_sql() -> str:
 {_lloyd_chain_sql()},
 aff AS (
   SELECT e.vec_id, c.cid,
-         list_dot_product(e.v, c.cv) / (e.vnorm * c.cnorm) AS sim
+         {_CELL_COS_SQL} AS sim
   FROM e CROSS JOIN c
 ),
 assign AS (
@@ -747,7 +755,7 @@ assign AS (
 )"""
 
 
-#: per-process cache of trained centroids, keyed by (sf_dir, LLOYD_ITERS):
+#: per-process cache of trained centroids, keyed by sf_dir:
 #: every registry caller trains on the same full-corpus _vecs(sf_dir),
 #: and both seeding and refinement are deterministic, so reusing the
 #: ≤4096-row result across the family is sound and saves 3 corpus
@@ -764,19 +772,18 @@ def _trained_cents(
 ) -> list:
     """Return the trained IVF centroid list for ``emb`` — from the
     per-process cache when warm, else md5-rank seed + Lloyd refine
-    (caching under ``(cache_key, LLOYD_ITERS)``). Split out of
+    (caching under ``cache_key``). Split out of
     ``_assign_cells`` (r15) so callers that need the TRAINED CELL
     COUNT before assignment (the probe budget derives from it) don't
     duplicate the cache discipline."""
-    ck = (cache_key, LLOYD_ITERS) if cache_key else None
-    if ck and ck in _TRAINED_CENTS:
-        return _TRAINED_CENTS[ck]
+    if cache_key in _TRAINED_CENTS:
+        return _TRAINED_CENTS[cache_key]
     if n is None:
         n = emb.count()
     seeds = _seed_sample(emb.select("vec_id", "v"), _ivf_k(n), IVF_SEED_SALT)
     cents = _lloyd_refine(spark, emb, seeds)
-    if ck:
-        _TRAINED_CENTS[ck] = cents
+    if cache_key:
+        _TRAINED_CENTS[cache_key] = cents
     return cents
 
 
@@ -993,7 +1000,7 @@ WITH {_E_CTE},
 aff AS (
   SELECT e.vec_id,
          c.cid,
-         list_dot_product(e.v, c.cv) / (e.vnorm * c.cnorm) AS sim
+         {_CELL_COS_SQL} AS sim
   FROM e CROSS JOIN c
 ),
 assign AS (
@@ -1021,8 +1028,8 @@ scored AS (
   FROM q_probe qp
   JOIN corpus cor ON cor.cell = qp.cell AND cor.vec_id <> qp.qid
   JOIN q ON q.qid = qp.qid
-),
-{_topk_sql("scored", ", cell")}
+)
+{_nearest_sql("scored", ", cell")}
 """
 
 
@@ -1288,14 +1295,12 @@ def _exact_k_cte(name: str, cos: str) -> str:
     """CTE ``name`` (qid, neighbor_id): each panel query's TOP_K
     nearest corpus vectors in ``e`` by the pair cosine ``cos``, rounded
     at 6 dp, ties by ascending vec_id."""
-    return f"""{name} AS (
-  SELECT qid, neighbor_id FROM (
-    SELECT q.qid, e.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.qid ORDER BY ROUND({cos}, 6) DESC, e.vec_id ASC) AS rank
+    scored = f"""(
+    SELECT q.qid, e.vec_id AS neighbor_id, ROUND({cos}, 6) AS cosine
     FROM q JOIN e ON e.vec_id <> q.qid
-  ) WHERE rank <= {TOP_K}
-)"""
+  )"""
+    top = _topk_sql("qid, neighbor_id", scored, TOP_K, "cosine DESC, neighbor_id ASC")
+    return f"{name} AS (\n  {top}\n)"
 
 
 SIMILARITY_DIM_TRUNC_ORACLE = f"""
@@ -1310,7 +1315,7 @@ WITH e AS (
 ),
 {_panel_cte(extra=", tv AS qtv, tnorm AS qtnorm")},
 {_exact_k_cte("full_k", _pair_cos_sql("e"))},
-{_exact_k_cte("trunc_k", "list_dot_product(q.qtv, e.tv) / (q.qtnorm * e.tnorm)")}
+{_exact_k_cte("trunc_k", _pair_cos_sql("e", "q.qtv", "q.qtnorm", "tv", "tnorm"))}
 SELECT f.qid,
        COUNT(*) AS k,
        CAST(COALESCE(SUM(CASE WHEN t.neighbor_id IS NOT NULL THEN 1 ELSE 0 END), 0)
@@ -1536,7 +1541,10 @@ def _mmr_oracle(src: str, on: str = "") -> str:
     ``src`` under the join condition ``on``: the whole corpus ``e``
     for the bruteforce baseline, the query's LSH bucket in ``b`` for
     the ANN production path."""
-    rel = _pair_cos_sql(src)
+    pairs = (
+        f"(SELECT q.qid, {src}.vec_id, {_pair_cos_sql(src)} AS rel, {src}.v, {src}.vnorm"
+        f" FROM q JOIN {src} ON {on}{src}.vec_id <> q.qid)"
+    )
     return f"""
 WITH RECURSIVE e AS MATERIALIZED (
   {_EMB_SQL}
@@ -1544,16 +1552,11 @@ WITH RECURSIVE e AS MATERIALIZED (
 b AS (SELECT vec_id, v, vnorm, {_lsh_bits_sql()} AS bucket FROM e),
 {_panel_cte("b", ", bucket")},
 cand AS MATERIALIZED (
-  SELECT qid, vec_id, rel, v, vnorm FROM (
-    SELECT q.qid, {src}.vec_id, {rel} AS rel, {src}.v, {src}.vnorm,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.qid ORDER BY {rel} DESC, {src}.vec_id ASC) AS rn
-    FROM q JOIN {src} ON {on}{src}.vec_id <> q.qid
-  ) WHERE rn <= {MMR_POOL}
+  {_topk_sql("qid, vec_id, rel, v, vnorm", pairs, MMR_POOL, "rel DESC, vec_id ASC", "rn")}
 ),
 simt AS MATERIALIZED (
   SELECT a.qid, a.vec_id AS ia, b.vec_id AS ib,
-         list_dot_product(a.v, b.v) / (a.vnorm * b.vnorm) AS sim
+         {_pair_cos_sql("b", "a.v", "a.vnorm")} AS sim
   FROM cand a JOIN cand b ON a.qid = b.qid AND a.vec_id <> b.vec_id
 ),
 sel(qid, rank, vec_id, mmr_score, sel_ids) AS (
@@ -1978,7 +1981,7 @@ def ivfpq_probes_for(sf_dir: str) -> int:
     """The effective probe budget for a dataset this process has
     trained an index for. Raises if no index state exists — callers
     that want training should run similarity_ivfpq_topk first."""
-    cents = _TRAINED_CENTS.get((sf_dir, LLOYD_ITERS))
+    cents = _TRAINED_CENTS.get(sf_dir)
     if cents is None:
         raise ValueError(
             f"no trained index state for {sf_dir!r} — run "
@@ -1987,8 +1990,8 @@ def ivfpq_probes_for(sf_dir: str) -> int:
     return _ivfpq_probes(len(cents))
 
 
-#: per-process cache of trained PQ codebooks, keyed by
-#: (sf_dir, CB_LLOYD_ITERS) — same determinism argument as _TRAINED_CENTS
+#: per-process cache of trained PQ codebooks, keyed by sf_dir — same
+#: determinism argument as _TRAINED_CENTS
 _TRAINED_CB: dict = {}
 
 #: LIVE cached index-state frames, bounded to one per (dataset, kind):
@@ -2072,9 +2075,8 @@ def _pq_train_blocks(
     """
     import numpy as np
 
-    ck = (cache_key, CB_LLOYD_ITERS) if cache_key else None
-    if ck and ck in _TRAINED_CB:
-        return _TRAINED_CB[ck]
+    if cache_key in _TRAINED_CB:
+        return _TRAINED_CB[cache_key]
     pd_, pb_ = PQ_BLOCK_DIM, PQ_BLOCKS
     blocks = []
     for b in range(pb_):
@@ -2126,8 +2128,8 @@ def _pq_train_blocks(
             for b in range(pb_)
         ]
     normed.unpersist()
-    if ck:
-        _TRAINED_CB[ck] = blocks
+    if cache_key:
+        _TRAINED_CB[cache_key] = blocks
     return blocks
 
 
@@ -2262,7 +2264,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _ivfpq_probes): a cold call trains here (the training would have
     # happened two lines down regardless); a warm call reads the cached
     # centroids without sizing the corpus.
-    ivf_cents = _TRAINED_CENTS.get((sf_dir, LLOYD_ITERS))
+    ivf_cents = _TRAINED_CENTS.get(sf_dir)
     if ivf_cents is None:
         ivf_cents = _trained_cents(spark, emb, n=_n(), cache_key=sf_dir)
     n_cells = len(ivf_cents)
@@ -2305,7 +2307,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already in _TRAINED_CB) runs neither the seeding scan nor
     # training; _pq_train_blocks keeps its own identical cache check
     # for direct callers
-    trained = _TRAINED_CB.get((sf_dir, CB_LLOYD_ITERS))
+    trained = _TRAINED_CB.get(sf_dir)
     if trained is None:
         cents = _seed_sample(
             normed.select("vec_id", F.col("nv").alias("v")),
@@ -2414,6 +2416,7 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfpq_oracle() -> str:
     sl = "e.nv[1 + {d} * cw.b : {d} * (cw.b + 1)]".format(d=PQ_BLOCK_DIM)
     q_sl = "q.qnv[1 + {d} * cw.b : {d} * (cw.b + 1)]".format(d=PQ_BLOCK_DIM)
+    shortlist_k = f"(SELECT GREATEST({IVFPQ_SHORTLIST_MIN}, (9 * k + 3) // 4) FROM ncells)"
     return f"""
 WITH e AS MATERIALIZED (
   SELECT vec_id, v, vnorm,
@@ -2424,7 +2427,7 @@ WITH e AS MATERIALIZED (
 c AS (SELECT cid AS ccid, cv AS ccv, cnorm AS ccnorm FROM ll_ivf),
 cell_aff AS MATERIALIZED (
   SELECT e.vec_id, c.ccid,
-         list_dot_product(e.v, c.ccv) / (e.vnorm * c.ccnorm) AS sim
+         {_pair_cos_sql("c", "e.v", "e.vnorm", "ccv", "ccnorm")} AS sim
   FROM e CROSS JOIN c
 ),
 assign_cell AS MATERIALIZED (
@@ -2496,13 +2499,7 @@ adc AS (
   GROUP BY cand.qid, cand.vec_id
 ),
 shortlist AS (
-  SELECT qid, vec_id FROM (
-    SELECT qid, vec_id,
-           ROW_NUMBER() OVER (PARTITION BY qid
-                              ORDER BY adc ASC, vec_id ASC) AS rn
-    FROM adc
-  ) WHERE rn <= (SELECT GREATEST({IVFPQ_SHORTLIST_MIN}, (9 * k + 3) // 4)
-                 FROM ncells)
+  {_topk_sql("qid, vec_id", "adc", shortlist_k, "adc ASC, vec_id ASC", "rn")}
 ),
 rerank AS (
   SELECT s.qid, s.vec_id AS neighbor_id,
@@ -2510,8 +2507,8 @@ rerank AS (
   FROM shortlist s
   JOIN e ON e.vec_id = s.vec_id
   JOIN q ON q.qid = s.qid
-),
-{_topk_sql("rerank")}
+)
+{_nearest_sql("rerank")}
 """
 
 
@@ -2659,17 +2656,13 @@ pt AS (
   JOIN dld l ON l.doc_id = t.doc_id
   WHERE t.doc_id <> q.qid
 ),
+bm25 AS (
+  SELECT qid, doc_id,
+         ROUND(CAST(SUM(CAST(score AS DECIMAL(18,6))) AS DOUBLE), 6) AS bm25
+  FROM pt GROUP BY qid, doc_id
+),
 lex AS (
-  SELECT qid, doc_id, lex_rank FROM (
-    SELECT qid, doc_id,
-           ROW_NUMBER() OVER (PARTITION BY qid
-                              ORDER BY bm25 DESC, doc_id ASC) AS lex_rank
-    FROM (
-      SELECT qid, doc_id,
-             ROUND(CAST(SUM(CAST(score AS DECIMAL(18,6))) AS DOUBLE), 6) AS bm25
-      FROM pt GROUP BY qid, doc_id
-    )
-  ) WHERE lex_rank <= {RRF_LEX_TOPK}
+  {_topk_sql("qid, doc_id", "bm25", RRF_LEX_TOPK, "bm25 DESC, doc_id ASC", "lex_rank")}
 ),
 sem AS (
   SELECT qid, neighbor_id AS doc_id, rank AS sem_rank FROM ({mp})
@@ -2685,12 +2678,7 @@ fused AS (
   FROM lex l FULL OUTER JOIN sem s
     ON l.qid = s.qid AND l.doc_id = s.doc_id
 )
-SELECT qid, doc_id, rrf, lex_rank, sem_rank, rank FROM (
-  SELECT qid, doc_id, rrf, lex_rank, sem_rank,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY rrf DESC, doc_id ASC) AS rank
-  FROM fused
-) WHERE rank <= {RRF_TOPK}
+{_topk_sql("qid, doc_id, rrf, lex_rank, sem_rank", "fused", RRF_TOPK, "rrf DESC, doc_id ASC")}
 ORDER BY qid, rank
 """
 
@@ -3292,7 +3280,7 @@ assign_b AS (
   SELECT vec_id, cid AS cell FROM (
     SELECT e.vec_id, c.cid,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-             ORDER BY list_dot_product(e.v, c.cv) / (e.vnorm * c.cnorm) DESC,
+             ORDER BY {_CELL_COS_SQL} DESC,
                       c.cid ASC) AS rn
     FROM e CROSS JOIN c
   ) WHERE rn = 1
@@ -3301,7 +3289,7 @@ assign_n AS (
   SELECT vec_id, cid AS cell FROM (
     SELECT en.vec_id, c.cid,
            ROW_NUMBER() OVER (PARTITION BY en.vec_id
-             ORDER BY list_dot_product(en.v, c.cv) / (en.vnorm * c.cnorm) DESC,
+             ORDER BY {_pair_cos_sql("c", "en.v", "en.vnorm", "cv", "cnorm")} DESC,
                       c.cid ASC) AS rn
     FROM en CROSS JOIN c
   ) WHERE rn = 1
@@ -3466,24 +3454,19 @@ WITH e AS (
 ),
 b AS (SELECT vec_id, v, vnorm, label, {_lsh_bits_sql()} AS bucket FROM e),
 {_panel_cte("b", ", label AS qlabel, bucket")},
-ranked AS (
-  SELECT q.qid, q.qlabel, b.label,
-         ROW_NUMBER() OVER (
-           PARTITION BY q.qid
-           ORDER BY ROUND({_pair_cos_sql("b")}, 6) DESC,
-                    b.vec_id ASC) AS rn
+scored AS (
+  SELECT q.qid, q.qlabel, b.label, b.vec_id, ROUND({_pair_cos_sql("b")}, 6) AS cosine
   FROM q JOIN b USING (bucket) WHERE b.vec_id <> q.qid
 ),
-kept AS (SELECT * FROM ranked WHERE rn <= {KNN_VOTE_K}),
+kept AS ({_topk_sql("qid, qlabel, label", "scored", KNN_VOTE_K, "cosine DESC, vec_id ASC", "rn")}),
 votes AS (
   SELECT qid, qlabel, label, CAST(COUNT(*) AS BIGINT) AS n
   FROM kept GROUP BY qid, qlabel, label
 ),
 pred AS (
   SELECT qid, qlabel AS true_label, label AS pred_label, n AS votes FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY n DESC, label ASC) AS vr
-    FROM votes
-  ) WHERE vr = 1
+    {_topk_sql("qid, qlabel, label, n", "votes", 1, "n DESC, label ASC", "vr")}
+  )
 ),
 sizes AS (SELECT qid, CAST(COUNT(*) AS BIGINT) AS n_neighbors FROM kept GROUP BY qid)
 SELECT p.qid, p.true_label, p.pred_label, p.votes, s.n_neighbors,

@@ -140,7 +140,7 @@ def test_ivfpq_probe_policy():
     S.reset_trained_state()
     with pytest.raises(ValueError, match="no trained index state"):
         S.ivfpq_probes_for(key)
-    S._TRAINED_CENTS[(key, S.LLOYD_ITERS)] = [(i, [0.0]) for i in range(100)]
+    S._TRAINED_CENTS[key] = [(i, [0.0]) for i in range(100)]
     assert S.ivfpq_probes_for(key) == _ivfpq_probes(100)
     S.reset_trained_state()
     with pytest.raises(ValueError, match="no trained index state"):
